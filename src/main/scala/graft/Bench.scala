@@ -69,7 +69,7 @@ object Bench {
     d
   }
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")

@@ -11,10 +11,10 @@ import org.apache.spark.sql.{SparkSession, functions => F}
   *
   * Two modes:
   *
-  *  - ONE-SHOT (`args: fixturePath numWorkers maxReps [nParts] [pack]`):
+  *  - ONE-SHOT (`args: fixturePath numWorkers maxReps [nParts]`):
   *    start the cluster, warm, run convergence reps, print one
   *    GRAFT_CLUSTER_RESULT marker line, exit. Used by the parent as the
-  *    fallback path and by ad-hoc A/Bs.
+  *    fallback path.
   *
   *  - SERVE (`args: fixturePath numWorkers serve ctlDir [nParts]`): start
   *    the cluster, warm ONCE, then stay alive answering file-protocol
@@ -71,23 +71,16 @@ object BenchCluster {
         if (args.length > 4) args(4).toInt else 64)
     else
       oneshot(fixturePath, workers, args(2).toInt,
-        if (args.length > 3) args(3).toInt else 64,
-        // explicit pack/nopack override for A/Bs; default = the engine's
-        // default path (packShuffle ON since r8), which is what the
-        // cluster legs exist to evidence
-        if (args.length > 4 && args(4) == "pack") Some(true)
-        else if (args.length > 4 && args(4) == "nopack") Some(false)
-        else None)
+        if (args.length > 3) args(3).toInt else 64)
   }
 
-  private def encoder(s: SparkSession, fixturePath: String, nParts: Int,
-                      pack: Option[Boolean]): () => (Double, Long) = {
+  private def encoder(s: SparkSession, fixturePath: String,
+                      nParts: Int): () => (Double, Long) = {
     import org.apache.spark.sql.Encoders
     // 64 planned parts ~= 3-8M tokens (12-30 MB) per encode task at the
     // parent-chosen >=200M-token job: few scheduling waves, real per-task
     // work — the shape a 1000-executor run would use per core
-    val opts = EncodeOptions(numParts = nParts, sampleMod = 16,
-      packShuffle = pack.getOrElse(EncodeOptions.default.packShuffle))
+    val opts = EncodeOptions(numParts = nParts, sampleMod = 16)
     val ds = s.read.parquet(fixturePath).as[TokenRow](Encoders.product[TokenRow])
     val plan = Planner.plan(ds, opts)
     val comp = TokenCompressor(opts)
@@ -116,7 +109,7 @@ object BenchCluster {
                     nParts: Int): Unit = {
     val s = makeSession(workers)
     try {
-      val once = encoder(s, fixturePath, nParts, pack = None)
+      val once = encoder(s, fixturePath, nParts)
       val t00 = System.nanoTime()
       def spent: Double = (System.nanoTime() - t00) / 1e9
       // lifetime bound: even if the parent dies without sending quit, the
@@ -150,10 +143,10 @@ object BenchCluster {
   }
 
   private def oneshot(fixturePath: String, workers: Int, maxReps: Int,
-                      nParts: Int, pack: Option[Boolean]): Unit = {
+                      nParts: Int): Unit = {
     val s = makeSession(workers)
     try {
-      val once = encoder(s, fixturePath, nParts, pack)
+      val once = encoder(s, fixturePath, nParts)
       // JIT + page-cache warmup in THIS cluster's executor JVMs — at the
       // parent-chosen job size one full pass pushes the encode kernel far
       // past C2 thresholds on every executor. The rep budget clock starts

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named SparkEntry queries to
   * `<outDir>/<query>_<suffix>.txt` — the round-9 plan evidence under
   * plans/r09/. Queries whose construction has
   * side effects (stream ingest, table writes) run them at the given sf,
-  * so use a small sf. Session config mirrors Bench.session.
+  * so use a small sf. The session is the bench's ([[Bench.session]]), so
+  * the plans are the ones the bench runs at that core count.
   *
   * usage: runMain graft.PlanDump <sfDir> <cores> <outDir> <suffix> <query...|all>
   */
@@ -19,21 +18,7 @@ object PlanDump {
     val names =
       if (args(4) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args.drop(4).toSeq
-    val shuffleDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_plandump_shuffle"
-      else s"${sys.props("java.io.tmpdir")}/graft_plandump_shuffle"
-    new java.io.File(shuffleDir).mkdirs()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 8).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", shuffleDir)
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (1 * 1024 * 1024).toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Bench.session(cores)
     new java.io.File(outDir).mkdirs()
     try {
       names.foreach { name =>

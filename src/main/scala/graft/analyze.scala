@@ -18,25 +18,16 @@ object Analyzer {
     */
   val BitmapRangeCap: Long = 1L << 22
 
-  /** A/B kill-switch for the round-8 stats kernel split (JVM-wide, read
-    * once): set GRAFT_STATS_LEGACY=1 to measure the single-pass hash-set
-    * path this replaced. StatsEquivalenceSpec pins new == legacy.
-    */
-  private val useLegacy: Boolean = sys.env.contains("GRAFT_STATS_LEGACY")
-
-  def stats(tokens: Array[Int]): BlockStats =
-    if (useLegacy) statsLegacy(tokens) else statsFast(tokens)
-
   /** JFR profile of the peak encode leg put ~25% of Java CPU samples in
     * this collector — almost all of it the per-token hash-set probe for
     * the distinct count. Split into (a) a branch-light min/max/runs/delta
     * scan and (b) a distinct pass that uses a dense bitmap whenever the
     * value range is small (every tokenizer vocab is), falling back to the
     * hash set only for wide-range data. Field semantics are EXACTLY the
-    * legacy collector's (pinned by StatsEquivalenceSpec) so codec
-    * selection cannot drift.
+    * legacy collector's (pinned by StatsEquivalenceSpec, which keeps that
+    * collector as its reference) so codec selection cannot drift.
     */
-  private[graft] def statsFast(tokens: Array[Int]): BlockStats = {
+  def stats(tokens: Array[Int]): BlockStats = {
     val n = tokens.length
     if (n == 0) return BlockStats(0, 0, 0, 0, 0, distinctExact = true, 0)
     var mn = Int.MaxValue
@@ -87,40 +78,9 @@ object Analyzer {
     finishStats(tokens, n, mn, mx, runs, distinct, distinctExact, maxDeltaZz)
   }
 
-  private[graft] def statsLegacy(tokens: Array[Int]): BlockStats = {
-    val n = tokens.length
-    if (n == 0) return BlockStats(0, 0, 0, 0, 0, distinctExact = true, 0)
-    var mn = Int.MaxValue
-    var mx = Int.MinValue
-    var runs = 1
-    var i = 0
-    var prev = tokens(0)
-    var maxDeltaZz = 0L
-    val seen = new IntSet(math.min(n, 1 << 12))
-    var distinctExact = true
-    while (i < n) {
-      val v = tokens(i)
-      if (v < mn) mn = v
-      if (v > mx) mx = v
-      if (i > 0 && v != prev) runs += 1
-      if (i > 0) {
-        val zz = Bits.zigzag(v - prev) // 32-bit wraparound delta, like Delta's wire law
-        if (zz > maxDeltaZz) maxDeltaZz = zz
-      }
-      prev = v
-      if (distinctExact) {
-        seen.add(v)
-        if (seen.size > DistinctCap) distinctExact = false
-      }
-      i += 1
-    }
-    val distinct = if (distinctExact) seen.size else DistinctCap + 1
-    finishStats(tokens, n, mn, mx, runs, distinct, distinctExact, maxDeltaZz)
-  }
-
-  private def finishStats(tokens: Array[Int], n: Int, mn: Int, mx: Int,
-                          runs: Int, distinct: Int, distinctExact: Boolean,
-                          maxDeltaZz: Long): BlockStats = {
+  private[graft] def finishStats(tokens: Array[Int], n: Int, mn: Int, mx: Int,
+                                 runs: Int, distinct: Int, distinctExact: Boolean,
+                                 maxDeltaZz: Long): BlockStats = {
     var i = 0
 
     // single-round pair gain on a leading sample, scaled to the full block

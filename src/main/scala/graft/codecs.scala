@@ -326,13 +326,6 @@ object DictCodec extends TableCodec {
   val MaxDict = 1 << 20
   type Table = Array[Int] // sorted distinct values
 
-  /** A/B kill-switch for the round-8 dict kernels (bitmap train +
-    * dense-LUT encode): GRAFT_DICT_LEGACY=1 restores the sort-dedupe /
-    * binary-search paths (JVM-wide, read once). DictKernelSpec pins the
-    * two byte-identical.
-    */
-  private val useLegacy: Boolean = sys.env.contains("GRAFT_DICT_LEGACY")
-
   override def applicable(s: BlockStats): Boolean = s.distinctExact
   def estimate(s: BlockStats): Long =
     if (!s.distinctExact) Long.MaxValue
@@ -358,7 +351,7 @@ object DictCodec extends TableCodec {
       i += 1
     }
     val range = mx.toLong - mn.toLong
-    if (!useLegacy && range < Analyzer.BitmapRangeCap) {
+    if (range < Analyzer.BitmapRangeCap) {
       val bm = new Array[Long]((range >>> 6).toInt + 1)
       i = 0
       while (i < tokens.length) {
@@ -442,7 +435,6 @@ object DictCodec extends TableCodec {
   private val lutCache = new ThreadLocal[(Array[Int], Array[Int])]
 
   private def lutFor(dict: Array[Int], nTokens: Int): Array[Int] = {
-    if (useLegacy) return null
     val span = dict(dict.length - 1).toLong - dict(0).toLong
     if (span >= LutSpanCap) return null
     val e = lutCache.get()

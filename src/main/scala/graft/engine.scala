@@ -22,8 +22,7 @@ object Zframe {
   // the round-8 JFR profile. One reusable context per task thread (keyed by
   // level for the compressor) produces byte-identical frames — zstd-jni's
   // one-shots delegate to the same ZSTD_compress2 path with content size on
-  // (pinned byte-identical by EngineSpec). GRAFT_ZSTD_ONESHOT=1 is the A/B
-  // kill-switch back to the static calls (JVM-wide, read once).
+  // (pinned byte-identical by EngineSpec).
   // Lifetime note (ADVICE r8): these thread-locals (and DictCodec's one-slot
   // LUT cache) are BOUNDED per pool thread — one compress + one decompress
   // context (~KBs native) and at most one ≤4 MiB int[] — and deliberately
@@ -32,7 +31,6 @@ object Zframe {
   // zstd-jni's finalizers at thread death. The per-partition dict contexts
   // in BlockEncoder.TableCache ARE closed eagerly via task-completion
   // listeners (unbounded count per task, unlike these).
-  private val useOneShot: Boolean = sys.env.contains("GRAFT_ZSTD_ONESHOT")
   private val cctxCache =
     new ThreadLocal[(Int, com.github.luben.zstd.ZstdCompressCtx)]
   private val plainDctx =
@@ -58,9 +56,7 @@ object Zframe {
   /** Returns (framedOrPlain, outerName). Frames only when it shrinks. */
   def frame(bytes: Array[Byte], level: Int): (Array[Byte], String) = {
     if (level <= 0 || !available || bytes.length < 64) return (bytes, "none")
-    val z =
-      if (useOneShot) com.github.luben.zstd.Zstd.compress(bytes, level)
-      else cctxFor(level).compress(bytes)
+    val z = cctxFor(level).compress(bytes)
     if (z.length < bytes.length) (z, "zstd") else (bytes, "none")
   }
 
@@ -75,6 +71,9 @@ object Zframe {
     val zd = cctx.compress(bytes)
     if (zd.length < z.length) (zd, "zstdd") else (z, outer)
   }
+
+  /** Target size of a trained shared dictionary (capped by sample mass). */
+  val DictBytes: Int = 1 << 16
 
   /** Train one shared dictionary from sampled codec-byte blocks. The blocks
     * are re-chunked to ~8 KiB samples (ZDICT wants many small samples; the
@@ -109,8 +108,7 @@ object Zframe {
     case "none" => bytes
     case "zstd" =>
       val n = com.github.luben.zstd.Zstd.getFrameContentSize(bytes)
-      if (useOneShot) com.github.luben.zstd.Zstd.decompress(bytes, n.toInt)
-      else plainDctx.get().decompress(bytes, n.toInt)
+      plainDctx.get().decompress(bytes, n.toInt)
     case "zstdd" =>
       require(zdict != null && zdict.nonEmpty,
         "outer frame 'zstdd' requires the block's zdict column")
@@ -280,7 +278,7 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     val slotOf = targetIds.zipWithIndex.toMap
     val keyOfPart: Array[Int] =
       Array.tabulate(plan.numParts)(p => slotOf.get(p).map(probes).getOrElse(0))
-    // DEFAULT-ON shuffle-byte reduction (r7 verdict item 4): FOR-pack each
+    // Shuffle-byte reduction (r7 verdict item 4): FOR-pack each
     // row's token array to binary on the map side (~2.5-3x fewer bytes
     // than LE int32 before lz4 even sees them) via the codegen [[ForPack]]
     // expression — the scan→route→pack map stage stays ONE WholeStageCodegen
@@ -291,28 +289,20 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     // (tools/ab_packshuffle_20260818.jsonl) has pack winning even through
     // localhost (less ser/deser + transport-lz4 work); on a real cluster
     // the exchange's wire bytes are the bottleneck it trades cheap CPU
-    // against. packShuffle=false keeps the unpacked exchange for A/Bs.
-    val keyed = filtered
+    // against.
+    val routed = filtered
       .withColumn("route_key",
         org.apache.spark.sql.functions.element_at(
           org.apache.spark.sql.functions.lit(keyOfPart), col("part_id") + 1))
-    val routedDf =
-      if (o.packShuffle)
-        keyed
-          .withColumn("packed",
-            GraftColumns.of(ForPack(GraftColumns.expr(col("tokens")))))
-          .select("part_id", "doc_id", "packed", "n_tok", "source", "route_key")
-          .repartition(targetIds.length, col("route_key"))
-          .sortWithinPartitions(col("part_id"), col("doc_id"))
-          .withColumn("tokens", GraftColumns.of(ForUnpack(
-            GraftColumns.expr(col("packed")), GraftColumns.expr(col("n_tok")))))
-          .select("part_id", "doc_id", "tokens", "n_tok", "source")
-      else
-        keyed
-          .repartition(targetIds.length, col("route_key"))
-          .sortWithinPartitions(col("part_id"), col("doc_id"))
-          .select("part_id", "doc_id", "tokens", "n_tok", "source")
-    val routed = routedDf.as[(Int, String, Array[Int], Int, String)]
+      .withColumn("packed",
+        GraftColumns.of(ForPack(GraftColumns.expr(col("tokens")))))
+      .select("part_id", "doc_id", "packed", "n_tok", "source", "route_key")
+      .repartition(targetIds.length, col("route_key"))
+      .sortWithinPartitions(col("part_id"), col("doc_id"))
+      .withColumn("tokens", GraftColumns.of(ForUnpack(
+        GraftColumns.expr(col("packed")), GraftColumns.expr(col("n_tok")))))
+      .select("part_id", "doc_id", "tokens", "n_tok", "source")
+      .as[(Int, String, Array[Int], Int, String)]
     routed.mapPartitions { it =>
       BlockEncoder.encodePartition(
         it.map(r => (r._1, TokenRow(r._2, r._3, r._4, r._5))), o)
@@ -485,7 +475,7 @@ object BlockEncoder {
             cache.zdSamples = scala.collection.mutable.ArrayBuffer.empty
           cache.zdSamples += codecBytes
           if (cache.zdSamples.length >= opts.zdictBlocks) {
-            cache.zdict = Zframe.trainDict(cache.zdSamples.toSeq, opts.zdictBytes)
+            cache.zdict = Zframe.trainDict(cache.zdSamples.toSeq, Zframe.DictBytes)
             cache.zdSamples = null
             if (cache.zdict.nonEmpty) {
               cache.zcctx = new com.github.luben.zstd.ZstdCompressCtx()

@@ -304,7 +304,7 @@ object PackKernels {
 }
 
 /** Map-side FOR-pack of a row's token array for the range exchange
-  * (EncodeOptions.packShuffle): ~2.5-3x fewer shuffle bytes before
+  * (`TokenCompressor.encodeWithPlan`): ~2.5-3x fewer shuffle bytes before
   * transport compression. Replaces the former Scala UDF (verdict r6 item
   * 6), whose per-row catalyst→scala converter forced early Tungsten
   * deserialization and broke the scan→route→pack codegen span — that CPU

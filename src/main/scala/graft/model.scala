@@ -84,23 +84,6 @@ final case class EncodedBlock(
   *                     quality-guarded and retrained at least every
   *                     `retrainEvery` blocks
   * @param retrainEvery upper bound on blocks encoded from one trained table
-  * @param packShuffle  FOR-pack each row's token array to binary before the
-  *                     range exchange (~2.5-3x fewer shuffle bytes before
-  *                     transport compression); rows stay rows so the
-  *                     spillable shuffle/sort path is unchanged. Pack and
-  *                     unpack are codegen expressions ([[ForPack]] /
-  *                     [[ForUnpack]]) — the former Scala UDF's converter
-  *                     barrier cost 74->61 MTok/s at 8 cores locally
-  *                     (verdict r6 item 6). Default ON (r7 verdict item 4):
-  *                     with the codegen kernels the knob WINS even on a
-  *                     no-network box — the 6-round interleaved A/B
-  *                     (tools/ab_packshuffle_20260818.jsonl) has pack
-  *                     decisively faster on both encode and decode legs
-  *                     (fewer serialized exchange bytes = less ser/deser +
-  *                     lz4 work even through localhost) — and it is designed
-  *                     to win harder on clusters where the wire, not the
-  *                     CPU, is the shuffle bottleneck. Set false to A/B the
-  *                     unpacked exchange (numbers in BENCH.md)
   * @param zdictBlocks  >0 trains one shared zstd dictionary per partition
   *                     over the codec bytes of its first `zdictBlocks`
   *                     blocks, then frames subsequent blocks with it when
@@ -112,7 +95,6 @@ final case class EncodedBlock(
   *                     (thousands of blocks/partition at production scale);
   *                     default OFF to keep the latency-oriented encode path
   *                     free of the training stall
-  * @param zdictBytes   target dictionary size in bytes (capped by sample mass)
   * @param zdictAuto    when true (and zdictBlocks == 0), [[ResumableEncodeJob]]
   *                     probes a deterministic sample at table creation with
   *                     the REAL block encoder ([[ZdictProbe]]) and enables
@@ -129,9 +111,7 @@ final case class EncodeOptions(
     strictSizeBound: Boolean = false,
     tableReuse: Boolean = true,
     retrainEvery: Int = 16,
-    packShuffle: Boolean = true,
     zdictBlocks: Int = 0,
-    zdictBytes: Int = 1 << 16,
     zdictAuto: Boolean = false
 ) extends Serializable
 

@@ -54,6 +54,42 @@ class EngineSpec extends AnyFunSuite {
     blocks.unpersist()
   }
 
+  /** One XXH64 over every block's identity, codec choice, size and bytes,
+    * blocks in (part_id, block_id) order. enc_micros is left out: it is
+    * wall time and differs from run to run.
+    */
+  private def encodeFingerprint(opts: EncodeOptions): (Long, Array[EncodedBlock]) = {
+    val blocks = TokenCompressor(opts).encode(Fixtures.tokenTable(spark, 2000L))
+      .collect().sortBy(b => (b.part_id, b.block_id))
+    val buf = new java.io.ByteArrayOutputStream
+    val out = new java.io.DataOutputStream(buf)
+    blocks.foreach { b =>
+      out.writeInt(b.part_id)
+      out.writeLong(b.block_id)
+      out.writeUTF(b.codec)
+      out.writeUTF(b.outer)
+      out.writeLong(b.encoded_bytes)
+      out.writeLong(b.checksum)
+      Seq(b.payload, b.symtab, b.zdict).foreach(a => out.writeLong(Checksum.xxh64(a)))
+    }
+    out.flush()
+    (Checksum.xxh64(buf.toByteArray), blocks)
+  }
+
+  test("golden encode fingerprint: default options and shared zstd dictionary") {
+    // The constants pin the bytes on disk. A refactor must leave them as
+    // they are; changing them is a format change.
+    val (plain, _) = encodeFingerprint(EncodeOptions.default)
+    assert(plain == 280524036720682404L, s"default-options fingerprint $plain")
+    // small blocks over few parts, so each partition encodes enough blocks
+    // to train its dict and some blocks frame with it; the dict reaches
+    // 32 KiB here, so a smaller dictionary-size cap changes the value
+    val (zd, zdBlocks) = encodeFingerprint(
+      EncodeOptions(numParts = 4, blockTokens = 1 << 14, zdictBlocks = 8))
+    assert(zdBlocks.exists(_.outer == "zstdd"), "the zdict leg must frame with a dict")
+    assert(zd == -5067933873068753789L, s"zdict fingerprint $zd")
+  }
+
   test("compressed size beats the zstd-of-plain-bytes comparator") {
     import spark.implicits._
     val input = Fixtures.tokenTable(spark, NDocs)
@@ -206,20 +242,12 @@ class EngineSpec extends AnyFunSuite {
     assert(all.length == 1000 && all.distinct.length == 1000)
   }
 
-  test("packShuffle mode round-trips bit-identically (network-bound-cluster knob)") {
-    import org.apache.spark.sql.Encoders
+  test("packed shuffle round-trips bit-identically") {
     val input = Fixtures.tokenTable(spark, 500L)
-    val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 13, packShuffle = true)
-    val comp = TokenCompressor(opts)
+    val comp = TokenCompressor(EncodeOptions(numParts = 4, blockTokens = 1 << 13))
     val back = comp.decode(comp.encode(input))
       .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
     assert(back == input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
-    // packed and unpacked paths produce identical block payloads (same
-    // routing, same sort, same codec decisions)
-    val a = comp.encode(input).collect().map(b => (b.part_id, b.block_id, b.checksum)).toSet
-    val b = TokenCompressor(opts.copy(packShuffle = false)).encode(input)
-      .collect().map(b => (b.part_id, b.block_id, b.checksum)).toSet
-    assert(a == b)
   }
 
   test("null doc_id fails FAST at the routing expression, not in row decode") {

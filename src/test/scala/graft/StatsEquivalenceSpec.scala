@@ -3,18 +3,49 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the round-8 split stats kernel (bitmap distinct + branch-light
-  * scan, Analyzer.statsFast) to the original single-pass hash-set
-  * collector (Analyzer.statsLegacy) field by field, so the codec cost
-  * model can never see different inputs depending on which kernel ran.
+  * scan, Analyzer.stats) to the original single-pass hash-set collector
+  * (statsLegacy, kept here as the reference) field by field, so the codec
+  * cost model sees exactly the inputs it was tuned on.
   * Every BlockStats field participates in codec selection or a wire-law
   * bound, so "equivalent" here must mean equal, not approximately equal.
   */
 class StatsEquivalenceSpec extends AnyFunSuite {
   private val rnd = new scala.util.Random(0xC0DEC)
 
+  private def statsLegacy(tokens: Array[Int]): BlockStats = {
+    val n = tokens.length
+    if (n == 0) return BlockStats(0, 0, 0, 0, 0, distinctExact = true, 0)
+    var mn = Int.MaxValue
+    var mx = Int.MinValue
+    var runs = 1
+    var i = 0
+    var prev = tokens(0)
+    var maxDeltaZz = 0L
+    val seen = new IntSet(math.min(n, 1 << 12))
+    var distinctExact = true
+    while (i < n) {
+      val v = tokens(i)
+      if (v < mn) mn = v
+      if (v > mx) mx = v
+      if (i > 0 && v != prev) runs += 1
+      if (i > 0) {
+        val zz = Bits.zigzag(v - prev) // 32-bit wraparound delta, like Delta's wire law
+        if (zz > maxDeltaZz) maxDeltaZz = zz
+      }
+      prev = v
+      if (distinctExact) {
+        seen.add(v)
+        if (seen.size > Analyzer.DistinctCap) distinctExact = false
+      }
+      i += 1
+    }
+    val distinct = if (distinctExact) seen.size else Analyzer.DistinctCap + 1
+    Analyzer.finishStats(tokens, n, mn, mx, runs, distinct, distinctExact, maxDeltaZz)
+  }
+
   private def check(tokens: Array[Int], label: String): Unit = {
-    val a = Analyzer.statsFast(tokens)
-    val b = Analyzer.statsLegacy(tokens)
+    val a = Analyzer.stats(tokens)
+    val b = statsLegacy(tokens)
     assert(a == b, s"stats kernels disagree on $label: fast=$a legacy=$b")
   }
 

@@ -94,8 +94,27 @@ for pat, key in baseline_checks:
     elif abs(float(m.group(1)) - float(d[key])) > 1e-9:
         bad.append(f"{key}: BASELINE.md cites {m.group(1)}, "
                    f"BENCH_LOCAL.json says {d[key]}")
+# entry-point gate: every `runMain graft.<Name>` the docs tell a reader to
+# run must name an object with a `main` under src/main/scala, so deleting a
+# tool cannot leave its usage behind.
+mains = set()
+for f in (root / "src/main/scala").rglob("*.scala"):
+    for obj, body in re.findall(r"^object (\w+)\b(.*?)(?=^object |\Z)",
+                                f.read_text(), re.M | re.S):
+        if re.search(r"\bdef main\(", body):
+            mains.add(obj)
+docs = ["README.md", "BENCH.md", "PLANS.md", ".claude/skills/verify/SKILL.md"]
+n_runmain = 0
+for doc in docs:
+    for name in re.findall(r"runMain graft\.(\w+)", open(root / doc).read()):
+        n_runmain += 1
+        if name not in mains:
+            bad.append(f"{doc}: `runMain graft.{name}` names no object with a main "
+                       "under src/main/scala")
 if bad:
-    print("STALE BENCH.md/BASELINE.md:\n  " + "\n  ".join(bad)); sys.exit(1)
+    print("STALE BENCH.md/BASELINE.md/entry points:\n  " + "\n  ".join(bad))
+    sys.exit(1)
 print(f"BENCH.md matches BENCH_LOCAL.json ({len(checks)} fields, "
       f"{oracle_n} queries); BASELINE.md citations verified "
-      f"({len(baseline_checks)} fields)")
+      f"({len(baseline_checks)} fields); {n_runmain} runMain usages name "
+      f"existing mains")
