@@ -610,18 +610,17 @@ object SparkEntry {
       // verification stage: exact 5-gram jaccard on LSH candidates, checked
       // for full recall over planted pairs AND zero decoy survivors (the
       // verify stage must reject any decoy candidate LSH lets through)
-      val cands = TextOps.minhashDupPairs(withTextDecoys(docsWithNearDups(s, dir)),
-          minJaccard = 0.5, maxBucket = 4096)
+      // one cached texts frame feeds the signature stage and both verify
+      // joins, so documents is scanned once per query
+      val texts = TextOps.SigCache.persist(withTextDecoys(docsWithNearDups(s, dir)))
+      val cands = TextOps.minhashDupPairs(texts, minJaccard = 0.5, maxBucket = 4096)
         .where(plantedOrDecoy("doc_a", "doc_b", 2000000L, 3000000L))
-      val texts = withTextDecoys(docsWithNearDups(s, dir))
       GraftFunctions.register(s) // native codegen verify kernel (idempotent)
       cands
-        .join(texts.withColumnRenamed("doc_id", "doc_a")
-          .withColumnRenamed("text", "text_a"), "doc_a")
-        .join(texts.withColumnRenamed("doc_id", "doc_b")
-          .withColumnRenamed("text", "text_b"), "doc_b")
+        .join(texts.as("ta"), col("doc_a") === col("ta.doc_id"))
+        .join(texts.as("tb"), col("doc_b") === col("tb.doc_id"))
         .where(call_function("ngram_jaccard",
-          col("text_a"), col("text_b"), lit(5)) >= 0.8)
+          col("ta.text"), col("tb.text"), lit(5)) >= 0.8)
         .select(col("doc_a"), col("doc_b"))
         .orderBy("doc_a")
     }),

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import scala.jdk.CollectionConverters._
@@ -24,7 +25,47 @@ final case class PartLineage(
     checksum_xor: Long,
     codecs: Map[String, Long],
     wall_micros: Long
-)
+) {
+  /** Lineage of this part's blocks plus `o`'s (disjoint block sets): counts
+    * sum, checksums xor-fold, codec counts merge by sum; keeps this part_id.
+    */
+  def merge(o: PartLineage): PartLineage = PartLineage(
+    part_id,
+    n_blocks + o.n_blocks,
+    n_docs + o.n_docs,
+    n_tokens + o.n_tokens,
+    raw_bytes + o.raw_bytes,
+    encoded_bytes + o.encoded_bytes,
+    checksum_xor ^ o.checksum_xor,
+    (codecs.keySet ++ o.codecs.keySet)
+      .map(k => k -> (codecs.getOrElse(k, 0L) + o.codecs.getOrElse(k, 0L))).toMap,
+    wall_micros + o.wall_micros)
+}
+
+/** Lineage counted by the tasks that write the blocks: each block folds
+  * into its part's [[PartLineage]] (per-codec block counts included). Fed
+  * inside the write job's result stage ([[ManifestIO.writeBlocks]]), where
+  * Spark merges one update per output partition and drops failed
+  * attempts' updates (countFailedValues = false): a retried or
+  * speculative task counts exactly once.
+  */
+final class LineageAccumulator
+    extends AccumulatorV2[EncodedBlock, Map[Int, PartLineage]] {
+  private var parts = Map.empty[Int, PartLineage]
+
+  private def fold(m: Map[Int, PartLineage]): Unit = m.foreach { case (k, l) =>
+    parts = parts.updated(k, parts.get(k).fold(l)(_ merge l))
+  }
+
+  def isZero: Boolean = parts.isEmpty
+  def copy(): LineageAccumulator = { val c = new LineageAccumulator; c.parts = parts; c }
+  def reset(): Unit = parts = Map.empty
+  def add(b: EncodedBlock): Unit = fold(Map(b.part_id -> PartLineage(b.part_id, 1L,
+    b.n_docs, b.n_tokens, b.raw_bytes, b.encoded_bytes, b.checksum,
+    Map(b.codec -> 1L), b.enc_micros)))
+  def merge(o: AccumulatorV2[EncodedBlock, Map[Int, PartLineage]]): Unit = fold(o.value)
+  def value: Map[Int, PartLineage] = parts
+}
 
 /** One committed snapshot of the encoded table. `streamBatchId` is the
   * highest streaming micro-batch folded in (None for pure-batch tables);
@@ -51,7 +92,15 @@ final case class Snapshot(
     compactedBatchId: Option[Long] = None,
     compactedRuns: Seq[Int] = Nil,
     compactedRunBytes: Seq[Long] = Nil
-)
+) {
+  /** `opts` with the table's recorded zdict probe decision replayed — the
+    * one rule every writer (run, migrate, appendBatch, compact) applies.
+    */
+  def replayZdict(opts: EncodeOptions): EncodeOptions =
+    if (zdictEnabled.contains(true))
+      opts.copy(zdictBlocks = math.max(opts.zdictBlocks, 8))
+    else opts
+}
 
 /** Iceberg-style append-only snapshot log over partitioned Parquet.
   *
@@ -74,6 +123,20 @@ object ManifestIO {
 
   def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Write `blocks` with `write` in ONE job and return their lineage,
+    * counted by the writing tasks ([[LineageAccumulator]]): no payload
+    * persist, no second pass. The tap fuses with the encode's typed map,
+    * in the write's result stage — `write` must not shuffle after it.
+    */
+  def writeBlocks(blocks: Dataset[EncodedBlock])(
+      write: DataFrame => Unit): Map[Int, PartLineage] = {
+    val acc = new LineageAccumulator
+    blocks.sparkSession.sparkContext.register(acc, "graft.lineage")
+    write(blocks.mapPartitions(_.map { b => acc.add(b); b })(
+      Encoders.product[EncodedBlock]).toDF())
+    acc.value
+  }
 
   /** Stream-batch dirs with batch id in [minBatch, maxBatch], from ONE
     * `stream_batches/` listing. `appendBatch` accepts arbitrary —
@@ -304,11 +367,7 @@ object ResumableEncodeJob {
       s0
     }
     // the recorded probe decision (this run's or an earlier run's) wins
-    val effOpts =
-      if (base.zdictEnabled.contains(true))
-        opts.copy(zdictBlocks = math.max(opts.zdictBlocks, 8))
-      else opts
-    val compressor = TokenCompressor(effOpts)
+    val compressor = TokenCompressor(base.replayZdict(opts))
     val plan = base.plan
     val pending = (0 until plan.numParts).filterNot(base.committed)
     if (pending.isEmpty) return base
@@ -321,20 +380,12 @@ object ResumableEncodeJob {
       if (f.exists(d)) f.delete(d, true)
     }
 
-    // one encode pass feeds BOTH the parquet write and the lineage
-    // aggregation (r9 — same law appendBatch already applied): the former
-    // read-back of the just-written files cost an extra listing + scan per
-    // run, and the persisted blocks provably describe what was encoded
-    val blocks = compressor.encodeWithPlan(input, plan, Some(batch)).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lineage =
-      try {
-        blocks.write
-          .mode(SaveMode.Append)
-          .partitionBy("part_id")
-          .parquet(ManifestIO.dataDir(table).toString)
-        lineageOf(blocks)
-      } finally { blocks.unpersist(); () }
+    // one job: the writing tasks count the lineage of what they write
+    val lineage = ManifestIO.writeBlocks(
+      compressor.encodeWithPlan(input, plan, Some(batch)))(
+      _.write.mode(SaveMode.Append)
+        .partitionBy("part_id")
+        .parquet(ManifestIO.dataDir(table).toString))
 
     // parts in the batch with zero rows still count as committed
     val next = Snapshot(
@@ -347,64 +398,6 @@ object ResumableEncodeJob {
     )
     ManifestIO.write(spark, table, next)
     next
-  }
-
-  /** Lineage from the committed files themselves, in ONE job: a two-level
-    * aggregation ((part_id, codec) partials, then per-part rollup with the
-    * codec map + xor-of-checksums via the bit_xor aggregate — no
-    * collect_list of checksums ever materializes) and a single collect of
-    * one small row per part. The read is column-pruned (payload never
-    * touched) and schema-explicit so a zero-block batch (only _SUCCESS on
-    * disk) yields empty lineage instead of a schema-inference failure.
-    */
-  private def lineageFor(spark: SparkSession, table: String,
-                         batch: Set[Int]): Map[Int, PartLineage] = {
-    import org.apache.spark.sql.Encoders
-    val written = spark.read
-      .schema(Encoders.product[EncodedBlock].schema)
-      .parquet(ManifestIO.dataDir(table).toString)
-      .where(col("part_id").isin(batch.toSeq: _*))
-    lineageOf(written)
-  }
-
-  /** The lineage aggregation alone, over any block DataFrame (the written
-    * files or the persisted encode output — identical rows either way).
-    */
-  private def lineageOf(written: org.apache.spark.sql.DataFrame): Map[Int, PartLineage] = {
-    written
-      .groupBy("part_id", "codec")
-      .agg(
-        count(lit(1)).as("n_blocks"),
-        sum("n_docs").as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        sum("raw_bytes").as("raw_bytes"),
-        sum("encoded_bytes").as("encoded_bytes"),
-        sum("enc_micros").as("wall_micros"),
-        expr("bit_xor(checksum)").as("ckx"))
-      .groupBy("part_id")
-      .agg(
-        sum("n_blocks").as("n_blocks"),
-        sum("n_docs").as("n_docs"),
-        sum("n_tokens").as("n_tokens"),
-        sum("raw_bytes").as("raw_bytes"),
-        sum("encoded_bytes").as("encoded_bytes"),
-        sum("wall_micros").as("wall_micros"),
-        expr("bit_xor(ckx)").as("checksum_xor"),
-        map_from_entries(collect_list(struct(col("codec"), col("n_blocks"))))
-          .as("codecs"))
-      .collect().map { r =>
-        r.getAs[Int]("part_id") -> PartLineage(
-          r.getAs[Int]("part_id"),
-          r.getAs[Long]("n_blocks"),
-          r.getAs[Long]("n_docs"),
-          r.getAs[Long]("n_tokens"),
-          r.getAs[Long]("raw_bytes"),
-          r.getAs[Long]("encoded_bytes"),
-          r.getAs[Long]("checksum_xor"),
-          r.getAs[Map[String, Long]]("codecs"),
-          r.getAs[Long]("wall_micros")
-        )
-      }.toMap
   }
 
   /** Resumable table-level codec-policy migration: re-encode SRC's
@@ -443,17 +436,12 @@ object ResumableEncodeJob {
 
     val srcBlocks = readBlocks(spark, srcTable)
       .where(col("part_id").isin(batch.toSeq: _*))
-      .as[EncodedBlock](org.apache.spark.sql.Encoders.product[EncodedBlock])
-    // one recompress pass feeds the write AND the lineage agg (see run())
-    val out = TokenCompressor(opts).recompress(srcBlocks).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lineage =
-      try {
-        out.write.mode(SaveMode.Append)
-          .partitionBy("part_id")
-          .parquet(ManifestIO.dataDir(dstTable).toString)
-        lineageOf(out)
-      } finally { out.unpersist(); () }
+      .as[EncodedBlock](Encoders.product[EncodedBlock])
+    val lineage = ManifestIO.writeBlocks(
+      TokenCompressor(base.replayZdict(opts)).recompress(srcBlocks))(
+      _.write.mode(SaveMode.Append)
+        .partitionBy("part_id")
+        .parquet(ManifestIO.dataDir(dstTable).toString))
 
     val next = Snapshot(
       base.version + 1,
@@ -474,7 +462,6 @@ object ResumableEncodeJob {
     */
   def readBlocks(spark: SparkSession, table: String,
                  asOfVersion: Option[Int] = None): Dataset[EncodedBlock] = {
-    import org.apache.spark.sql.Encoders
     val snap = asOfVersion
       .map(v => ManifestIO.at(spark, table, v)
         .getOrElse(throw new IllegalStateException(s"no snapshot v$v in $table")))

@@ -23,7 +23,8 @@ object StreamingEncode {
 
   /** Append one micro-batch of token rows as encoded blocks. Blocks are
     * routed with the table's persistent partition plan (from snapshot v0)
-    * so stream and batch writes cluster identically.
+    * so stream and batch writes cluster identically, packed into at most
+    * `defaultParallelism` write tasks (same blocks, far fewer tasks/files).
     */
   def appendBatch(
       batch: Dataset[TokenRow],
@@ -39,59 +40,23 @@ object StreamingEncode {
       s0
     }
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
-    val comp = TokenCompressor(opts)
-    // one encode pass feeds BOTH the parquet write and the lineage metrics
-    // (persist instead of re-reading the batch directory back: one fewer
-    // job per micro-batch, and the metrics provably describe what was
-    // encoded, not what a concurrent reader sees on disk)
-    val blocks = comp.encodeWithPlan(batch, base.plan, None).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // batch-scoped directory: deterministic overwrite on retry
-      val dir = s"$table/stream_batches/batch=$batchId"
-      blocks.write.mode(SaveMode.Overwrite).parquet(dir)
-      // ONE aggregation job serves both the lineage totals and the
-      // per-codec counts (r9: the totals agg and the codec groupBy were
-      // two separate jobs over the persisted blocks; grouped partials sum
-      // and xor-fold driver-side to the identical totals). An empty
-      // micro-batch (replay after checkpoint recovery) collects zero
-      // groups and every total stays 0.
-      val perCodec = blocks.groupBy("codec").agg(
-        count(lit(1)).as("blocks"), sum("n_docs").as("docs"),
-        sum("n_tokens").as("toks"), sum("raw_bytes").as("raw"),
-        sum("encoded_bytes").as("enc"),
-        expr("bit_xor(checksum)").as("ckx"),
-        sum("enc_micros").as("micros")).collect()
-      val newCodecs = perCodec.iterator
-        .map(r => r.getAs[String]("codec") -> r.getAs[Long]("blocks")).toMap
-      def ln(name: String): Long =
-        if (name == "ckx") perCodec.foldLeft(0L)(_ ^ _.getAs[Long]("ckx"))
-        else perCodec.iterator.map(_.getAs[Long](name)).sum
-      // stream lineage carries the SAME fields as batch parts (round-2
-      // verdict item 6): xor-of-checksums folds associatively across
-      // batches, codec counts merge by sum, wall_micros accumulates the
-      // per-block encode time like ManifestIO.lineageFor
-      val lineage = base.lineage.updated(-1,
-        base.lineage.get(-1).map { l =>
-          l.copy(
-            n_blocks = l.n_blocks + ln("blocks"),
-            n_docs = l.n_docs + ln("docs"),
-            n_tokens = l.n_tokens + ln("toks"),
-            raw_bytes = l.raw_bytes + ln("raw"),
-            encoded_bytes = l.encoded_bytes + ln("enc"),
-            checksum_xor = l.checksum_xor ^ ln("ckx"),
-            codecs = (l.codecs.keySet ++ newCodecs.keySet).map(k =>
-              k -> (l.codecs.getOrElse(k, 0L) + newCodecs.getOrElse(k, 0L))).toMap,
-            wall_micros = l.wall_micros + ln("micros"))
-        }.getOrElse(PartLineage(-1, ln("blocks"), ln("docs"),
-          ln("toks"), ln("raw"), ln("enc"),
-          ln("ckx"), newCodecs, ln("micros"))))
-      ManifestIO.write(spark, table,
-        base.copy(version = base.version + 1,
-          committedAtMillis = System.currentTimeMillis(),
-          lineage = lineage,
-          streamBatchId = Some(batchId)))
-    } finally blocks.unpersist()
+    val tasks = math.min(base.plan.numParts, spark.sparkContext.defaultParallelism)
+    val blocks = TokenCompressor(base.replayZdict(opts))
+      .encodeWithPlan(batch, base.plan, None, tasks)
+    // batch-scoped directory: deterministic overwrite on retry
+    val dir = s"$table/stream_batches/batch=$batchId"
+    val written =
+      ManifestIO.writeBlocks(blocks)(_.write.mode(SaveMode.Overwrite).parquet(dir))
+    // stream lineage folds every batch into part -1 (an empty micro-batch,
+    // e.g. a replay after checkpoint recovery, adds zeros)
+    val added = written.values.foldLeft(
+      PartLineage(-1, 0L, 0L, 0L, 0L, 0L, 0L, Map.empty, 0L))(_ merge _)
+    ManifestIO.write(spark, table,
+      base.copy(version = base.version + 1,
+        committedAtMillis = System.currentTimeMillis(),
+        lineage = base.lineage.updated(-1,
+          base.lineage.get(-1).fold(added)(_ merge added)),
+        streamBatchId = Some(batchId)))
   }
 
   /** Start the ingestion stream over a directory of token parquet files. */
@@ -231,13 +196,8 @@ object StreamingEncode {
       .select(cols.toIndexedSeq: _*)
       .as[EncodedBlock](Encoders.product[EncodedBlock])
     val run = base.version + 1
-    // replay the table's recorded zdict probe decision, like every batch run
-    val effOpts =
-      if (base.zdictEnabled.contains(true))
-        opts.copy(zdictBlocks = math.max(opts.zdictBlocks, 8))
-      else opts
-    TokenCompressor(effOpts)
-      .encodeWithPlan(TokenCompressor(effOpts).decode(tail), base.plan, None)
+    val comp = TokenCompressor(base.replayZdict(opts))
+    comp.encodeWithPlan(comp.decode(tail), base.plan, None)
       .toDF()
       .write.mode(SaveMode.Overwrite)
       .partitionBy("part_id")

@@ -187,7 +187,9 @@ object TextOps {
     * count pass and group pass of [[boundedBuckets]] must share one
     * expensive text→signature computation. (SimSearch.lshBanded does NOT
     * use this registry: its projection is cheap to recompute and its stage
-    * would be corpus-sized.) The registry unpersists the oldest beyond a
+    * would be corpus-sized. The `dd_ngram_jaccard` query also parks its
+    * text frame here, so the signature stage and its two verify joins
+    * share one documents scan.) The registry unpersists the oldest beyond a
     * small window so a long-lived session calling dedup repeatedly cannot
     * accumulate unbounded cached blocks; [[clear]] releases everything
     * eagerly once a caller has fully consumed its operator's output.

@@ -79,6 +79,68 @@ class StreamingSpec extends AnyFunSuite {
     assert(sl.codecs == batchCodecs)
   }
 
+  test("packed append: same blocks as the batch table, few tasks, one write job") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("graft_stream_packed").toString
+    // 12 parts on local[4]: every packed write task holds 3 parts, and
+    // small blocks make each part several blocks long, so a table cache or
+    // zstd dict leaking across a part boundary would change block bytes
+    val opts = EncodeOptions(numParts = 12, blockTokens = 1 << 13, zdictBlocks = 2)
+    val input = Fixtures.tokenTable(spark, 600L)
+    val batchSnap = ResumableEncodeJob.run(input, s"$root/batch_table", opts)
+    assert(batchSnap.plan.numParts == 12)
+    val stream = s"$root/stream_table"
+    // seed v0 with the batch table's plan so the append plans nothing
+    ManifestIO.write(spark, stream,
+      Snapshot(0, System.currentTimeMillis(), batchSnap.plan, Set.empty, Map.empty))
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.add(qe.optimizedPlan.toString + qe.executedPlan.toString); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try StreamingEncode.appendBatch(input, stream, opts, 0L)
+    finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    assert(jobs.get() <= 2, s"appendBatch ran ${jobs.get()} jobs")
+    assert(!plans.isEmpty, "the batch write's plan must be observed")
+    plans.forEach(p => assert(!p.contains("InMemory"), s"cached relation in write plan:\n$p"))
+
+    val batchDir = new java.io.File(s"$stream/stream_batches/batch=0")
+    val files = batchDir.list().count(_.endsWith(".parquet"))
+    assert(files <= sc.defaultParallelism, s"$files parquet files for one append")
+
+    def fingerprint(bs: Array[EncodedBlock]) =
+      bs.map(b => (b.part_id, b.codec, b.outer, b.n_docs, b.checksum,
+        Checksum.xxh64(b.payload), Checksum.xxh64(b.symtab),
+        Checksum.xxh64(b.zdict), b.encoded_bytes)).toSeq.sorted
+    val batchBlocks = ResumableEncodeJob.readBlocks(spark, s"$root/batch_table").collect()
+    val streamBlocks = StreamingEncode.readCommittedBlocks(spark, stream).collect()
+    assert(batchBlocks.map(_.part_id).distinct.length == 12)
+    val (fs, fb) = (fingerprint(streamBlocks), fingerprint(batchBlocks))
+    assert(fs == fb, s"stream-only: ${fs.diff(fb).take(3)}; batch-only: ${fb.diff(fs).take(3)}")
+
+    // lineage counted by the writing tasks == lineage re-read from the files
+    assert(ManifestIO.latest(spark, stream).get.lineage(-1) ==
+      LineageOracle.ofStream(StreamingEncode.readCommittedBlocks(spark, stream).toDF()))
+  }
+
   test("watermarked event-time window stream converges to the batch aggregation") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

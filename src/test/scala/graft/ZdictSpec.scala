@@ -152,4 +152,25 @@ class ZdictSpec extends AnyFunSuite {
     val m = ResumableEncodeJob.migrate(spark, s"$dir/m", s"$dir/m2", opts)
     assert(m.zdictEnabled.contains(true))
   }
+
+  test("stream append to a zdict-enabled table frames with the shared dict") {
+    import org.apache.spark.sql.Encoders
+    val dir = java.nio.file.Files.createTempDirectory("zdict_append").toString
+    val opts = EncodeOptions(codecPolicy = "plain", numParts = 4,
+      blockTokens = 1 << 12, zdictAuto = true)
+    val motif = spark.createDataset(motifRows(8192))(Encoders.product[TokenRow])
+    val s0 = ResumableEncodeJob.run(motif, s"$dir/t", opts)
+    assert(s0.zdictEnabled.contains(true))
+    // the appended rows span every part at 32 blocks each: 8 train the
+    // dict, the rest may frame with it — but only if the append replays
+    // the recorded decision
+    StreamingEncode.appendBatch(motif, s"$dir/t", opts.copy(zdictAuto = false), 0L)
+    val appended = spark.read.parquet(s"$dir/t/stream_batches/batch=0")
+      .as[EncodedBlock](Encoders.product[EncodedBlock]).collect()
+    assert(appended.count(_.outer == "zstdd") > 0,
+      "append must replay the table's recorded zdict decision")
+    val back = StreamingEncode.readDecoded(spark, s"$dir/t")
+      .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
+    assert(back == motif.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
+  }
 }
