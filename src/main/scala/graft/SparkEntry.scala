@@ -262,9 +262,9 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "stream_tail_read" -> ((s, dir) => {
-      // mid-ingest visibility (round 6): a committed stream batch NOT yet
-      // compacted must be readable by the range reader — pre-fix this
-      // returned empty while readDecoded returned the rows
+      // mid-ingest visibility: a committed stream batch NOT yet compacted
+      // is part of what the snapshot makes visible (ManifestIO.blocks), so
+      // the range reader returns its rows
       val tmp = scratchDir("graft_tail_q")
       val input = TokenTables.fromLineitem(s, dir)
       StreamingEncode.appendBatch(input, tmp, EncodeOptions(numParts = encParts(s)), batchId = 0L)

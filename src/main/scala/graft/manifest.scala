@@ -100,6 +100,20 @@ final case class Snapshot(
     if (zdictEnabled.contains(true))
       opts.copy(zdictBlocks = math.max(opts.zdictBlocks, 8))
     else opts
+
+  /** The next version: every field carries forward, so a commit changes
+    * only what its writer changes (`next.copy(...)`) — the one commit rule
+    * for run, migrate, appendBatch, compact, mergeRuns and IvfIndex.build.
+    */
+  def next: Snapshot =
+    copy(version = version + 1, committedAtMillis = System.currentTimeMillis())
+}
+
+object Snapshot {
+  /** Version 0 of a table: its partition plan, no part committed yet. */
+  def initial(plan: PartitionPlan, zdictEnabled: Option[Boolean] = None): Snapshot =
+    Snapshot(0, System.currentTimeMillis(), plan, Set.empty, Map.empty,
+      zdictEnabled = zdictEnabled)
 }
 
 /** Iceberg-style append-only snapshot log over partitioned Parquet.
@@ -108,7 +122,12 @@ final case class Snapshot(
   * table format is emulated with the same commit semantics Iceberg uses: an
   * immutable versioned metadata file per snapshot, made visible by a single
   * atomic rename — readers either see the whole snapshot or none of it.
-  * Layout: `data/part_id=K/` parquet files + `snapshots/vNNNNN.json`.
+  * Layout: `data/part_id=K/` parquet files (batch parts),
+  * `compacted/run=V/part_id=K/` (compacted stream runs),
+  * `stream_batches/batch=B/` (the uncompacted stream tail) and
+  * `snapshots/vNNNNN.json`. This object owns that layout: which block
+  * files a snapshot makes visible ([[blocks]]) and how versions are
+  * listed, read and committed.
   *
   * Uses the Hadoop FileSystem API so the same code runs on HDFS/object
   * stores on a real cluster, not just local files.
@@ -138,19 +157,36 @@ object ManifestIO {
     acc.value
   }
 
-  /** Stream-batch dirs with batch id in [minBatch, maxBatch], from ONE
-    * `stream_batches/` listing. `appendBatch` accepts arbitrary —
-    * possibly sparse or time-derived — batch ids, so the per-id
-    * `fs.exists` probe over the full id range this replaces was unbounded
-    * in the id GAP, not the batch count (ADVICE r6). Sorted by id for a
-    * deterministic union order downstream.
+  /** One schema-explicit relation over block dirs of one layout. The
+    * encoder schema lets a committed-but-empty table read back empty (no
+    * footers to infer from) and surfaces a column that older files lack
+    * as null.
     */
-  def streamBatchDirs(spark: SparkSession, table: String,
-                      minBatch: Long, maxBatch: Long): Seq[String] = {
-    if (minBatch > maxBatch) return Seq.empty
+  def scan(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    spark.read.schema(Encoders.product[EncodedBlock].schema).parquet(dirs: _*)
+
+  /** One relation per compacted run. A multi-root read of `run=V` dirs next
+    * to other roots fails Hive-style partition inference
+    * (CONFLICTING_DIRECTORY_STRUCTURES); per-run roots keep it at part_id.
+    */
+  def runScans(spark: SparkSession, table: String, runs: Seq[Int]): Seq[DataFrame] =
+    runs.map(r => scan(spark, Seq(compactedDir(table, r).toString)))
+
+  /** The committed stream tail of `snap`: the batch dirs with id in
+    * (compactedBatchId, streamBatchId], from ONE `stream_batches/` listing,
+    * sorted by id. Bounding by the snapshot keeps commit-then-visible: a
+    * bare glob would pick up the dir of a crashed foreachBatch attempt that
+    * never committed, and batches at or below the watermark stay invisible
+    * even while their dirs still exist (a crash between a compaction commit
+    * and its cleanup). `appendBatch` accepts sparse, e.g. time-derived,
+    * ids, so a per-id `exists` probe would be unbounded in the id gap.
+    */
+  def tailDirs(spark: SparkSession, table: String, snap: Snapshot): Seq[String] = {
+    val minBatch = snap.compactedBatchId.fold(0L)(_ + 1)
+    val maxBatch = snap.streamBatchId.getOrElse(-1L)
     val f = fs(spark, table)
     val root = new Path(table, "stream_batches")
-    if (!f.exists(root)) return Seq.empty
+    if (minBatch > maxBatch || !f.exists(root)) return Seq.empty
     f.listStatus(root).toSeq
       .flatMap { st =>
         val n = st.getPath.getName
@@ -163,24 +199,69 @@ object ManifestIO {
       .sortBy(_._1).map(_._2)
   }
 
-  def latest(spark: SparkSession, table: String): Option[Snapshot] = {
-    val f = fs(spark, table)
+  /** Every block `snap` makes visible in `table`, restricted to `parts`
+    * when given — the only reader of a table's block files:
+    *  - batch data, `data/part_id=K` for K committed;
+    *  - each compacted run, committed as a whole dir by the run list;
+    *  - the stream tail ([[tailDirs]]) as ONE relation (its batch dirs
+    *    share a layout; part_id is a file column there, so pruning falls
+    *    to Parquet row-group stats).
+    * A file no snapshot names is never read. Relations combine by name
+    * (partitioned reads put part_id last).
+    */
+  def blocks(spark: SparkSession, table: String, snap: Snapshot,
+             parts: Option[Seq[Int]] = None): Dataset[EncodedBlock] = {
+    val enc = Encoders.product[EncodedBlock]
+    val committed = parts.fold(snap.committed.toSeq)(_.filter(snap.committed))
+    val data =
+      if (committed.nonEmpty && fs(spark, table).exists(dataDir(table)))
+        Seq(scan(spark, Seq(dataDir(table).toString))
+          .where(col("part_id").isin(committed: _*)))
+      else Nil
+    val tail = tailDirs(spark, table, snap)
+    val stream = runScans(spark, table, snap.compactedRuns) ++
+      (if (tail.isEmpty) Nil else Seq(scan(spark, tail)))
+    (data ++ parts.fold(stream)(p => stream.map(_.where(col("part_id").isin(p: _*)))))
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.emptyDataset(enc).toDF())
+      .select(enc.schema.fieldNames.toIndexedSeq.map(col): _*)
+      .as(enc)
+  }
+
+  private def snapshotPath(table: String, version: Int) =
+    new Path(snapshotsDir(table), f"v$version%05d.json")
+
+  /** Committed snapshot versions, from one listing (none when absent). */
+  private def versions(f: FileSystem, table: String): Seq[Int] = {
     val dir = snapshotsDir(table)
-    if (!f.exists(dir)) return None
-    val versions = f.listStatus(dir).toSeq
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq
       .map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.endsWith(".json"))
       .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
-    if (versions.isEmpty) None
-    else {
-      val v = versions.max
-      val in = f.open(new Path(dir, f"v$v%05d.json"))
-      val bytes =
-        try org.apache.commons.io.IOUtils.toByteArray(in)
-        finally in.close()
-      Some(fromJson(mapper.readTree(bytes)))
-    }
   }
+
+  private def read(f: FileSystem, table: String, version: Int): Snapshot = {
+    val in = f.open(snapshotPath(table, version))
+    val bytes =
+      try org.apache.commons.io.IOUtils.toByteArray(in)
+      finally in.close()
+    fromJson(mapper.readTree(bytes))
+  }
+
+  def latest(spark: SparkSession, table: String): Option[Snapshot] = {
+    val f = fs(spark, table)
+    val vs = versions(f, table)
+    if (vs.isEmpty) None else Some(read(f, table, vs.max))
+  }
+
+  /** The latest snapshot, or `init` committed as v0 when there is none. */
+  def latestOrInit(spark: SparkSession, table: String)(init: => Snapshot): Snapshot =
+    latest(spark, table).getOrElse {
+      val s0 = init
+      write(spark, table, s0)
+      s0
+    }
 
   /** Expire old snapshot metadata, Iceberg's expire-snapshots analog for
     * this table's growth axis: the DATA dirs are already bounded (parts
@@ -196,38 +277,29 @@ object ManifestIO {
   def expireSnapshots(spark: SparkSession, table: String, keepLast: Int = 1): Int = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val f = fs(spark, table)
-    val dir = snapshotsDir(table)
-    if (!f.exists(dir)) return 0
-    val versioned = f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
-      .sorted
-    val expired = versioned.dropRight(keepLast)
-    expired.foreach(v => f.delete(new Path(dir, f"v$v%05d.json"), false))
+    val expired = versions(f, table).sorted.dropRight(keepLast)
+    expired.foreach(v => f.delete(snapshotPath(table, v), false))
     expired.length
   }
 
   /** Time travel: load a specific committed snapshot version. */
   def at(spark: SparkSession, table: String, version: Int): Option[Snapshot] = {
     val f = fs(spark, table)
-    val p = new Path(snapshotsDir(table), f"v$version%05d.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val bytes =
-        try org.apache.commons.io.IOUtils.toByteArray(in)
-        finally in.close()
-      Some(fromJson(mapper.readTree(bytes)))
-    }
+    if (f.exists(snapshotPath(table, version))) Some(read(f, table, version))
+    else None
   }
+
+  /** `asOfVersion`'s snapshot when given, else the latest. */
+  def resolve(spark: SparkSession, table: String,
+              asOfVersion: Option[Int]): Option[Snapshot] =
+    asOfVersion.fold(latest(spark, table))(at(spark, table, _))
 
   def write(spark: SparkSession, table: String, s: Snapshot): Unit = {
     val f = fs(spark, table)
     val dir = snapshotsDir(table)
     f.mkdirs(dir)
     val tmp = new Path(dir, f".v${s.version}%05d.json.tmp")
-    val dst = new Path(dir, f"v${s.version}%05d.json")
+    val dst = snapshotPath(table, s.version)
     // optimistic concurrency: a snapshot version is immutable once
     // committed. On HDFS/object stores rename-to-existing fails atomically;
     // the local filesystem's rename OVERWRITES, so a losing concurrent
@@ -349,7 +421,7 @@ object ResumableEncodeJob {
   ): Snapshot = {
     val spark = input.sparkSession
 
-    val base = ManifestIO.latest(spark, table).getOrElse {
+    val base = ManifestIO.latestOrInit(spark, table) {
       val plan = Planner.plan(input, opts)
       // zdict auto-probe runs ONCE, at table creation: CollectLimit pulls
       // the sample from O(1) input partitions (not a corpus scan), and the
@@ -361,43 +433,14 @@ object ResumableEncodeJob {
           Some(ZdictProbe.decide(
             input.limit(ZdictProbe.SampleDocs).collect(), opts)._1)
         else None
-      val s0 = Snapshot(0, System.currentTimeMillis(), plan, Set.empty,
-        Map.empty, zdictEnabled = zd)
-      ManifestIO.write(spark, table, s0)
-      s0
+      Snapshot.initial(plan, zd)
     }
-    // the recorded probe decision (this run's or an earlier run's) wins
-    val compressor = TokenCompressor(base.replayZdict(opts))
-    val plan = base.plan
-    val pending = (0 until plan.numParts).filterNot(base.committed)
+    val pending = (0 until base.plan.numParts).filterNot(base.committed)
     if (pending.isEmpty) return base
     val batch = pending.take(maxPartsPerRun).toSet
-
-    // deterministic cleanup of any uncommitted leftovers for this batch
-    val f = ManifestIO.fs(spark, table)
-    batch.foreach { pid =>
-      val d = new Path(ManifestIO.dataDir(table), s"part_id=$pid")
-      if (f.exists(d)) f.delete(d, true)
-    }
-
-    // one job: the writing tasks count the lineage of what they write
-    val lineage = ManifestIO.writeBlocks(
-      compressor.encodeWithPlan(input, plan, Some(batch)))(
-      _.write.mode(SaveMode.Append)
-        .partitionBy("part_id")
-        .parquet(ManifestIO.dataDir(table).toString))
-
-    // parts in the batch with zero rows still count as committed
-    val next = Snapshot(
-      base.version + 1,
-      System.currentTimeMillis(),
-      plan,
-      base.committed ++ batch,
-      base.lineage ++ lineage,
-      zdictEnabled = base.zdictEnabled
-    )
-    ManifestIO.write(spark, table, next)
-    next
+    // the recorded probe decision (this run's or an earlier run's) wins
+    commitParts(spark, table, base, batch)(TokenCompressor(base.replayZdict(opts))
+      .encodeWithPlan(input, base.plan, Some(batch)))
   }
 
   /** Resumable table-level codec-policy migration: re-encode SRC's
@@ -406,6 +449,8 @@ object ResumableEncodeJob {
     * [[TokenCompressor.recompress]] path — raw tokens never shuffle, DST
     * inherits SRC's partition plan, and an interrupted migration resumes
     * from its last committed snapshot exactly like an interrupted encode.
+    * Each part takes every block SRC makes visible in it (batch data,
+    * compacted runs and the stream tail).
     */
   def migrate(
       spark: SparkSession,
@@ -416,81 +461,50 @@ object ResumableEncodeJob {
   ): Snapshot = {
     val srcSnap = ManifestIO.latest(spark, srcTable)
       .getOrElse(throw new IllegalStateException(s"no snapshot in $srcTable"))
-    val base = ManifestIO.latest(spark, dstTable).getOrElse {
-      // the zdict probe decision is a property of the DATA, so a policy
-      // migration inherits it from SRC rather than re-probing
-      val s0 = Snapshot(0, System.currentTimeMillis(), srcSnap.plan, Set.empty,
-        Map.empty, zdictEnabled = srcSnap.zdictEnabled)
-      ManifestIO.write(spark, dstTable, s0)
-      s0
-    }
+    // the zdict probe decision is a property of the DATA, so a policy
+    // migration inherits it from SRC rather than re-probing
+    val base = ManifestIO.latestOrInit(spark, dstTable)(
+      Snapshot.initial(srcSnap.plan, srcSnap.zdictEnabled))
     val pending = srcSnap.committed.toSeq.sorted.filterNot(base.committed)
     if (pending.isEmpty) return base
-    val batch = pending.take(maxPartsPerRun).toSet
+    val batch = pending.take(maxPartsPerRun)
+    commitParts(spark, dstTable, base, batch.toSet)(TokenCompressor(base.replayZdict(opts))
+      .recompress(ManifestIO.blocks(spark, srcTable, srcSnap, Some(batch))))
+  }
 
-    val f = ManifestIO.fs(spark, dstTable)
+  /** Commit `batch`'s parts: delete their uncommitted leftovers (a crashed
+    * predecessor's files), write `blocks` into `data/part_id=K` in one job
+    * whose tasks count the lineage, then commit the next version. Parts of
+    * the batch with zero rows still count as committed.
+    */
+  private def commitParts(spark: SparkSession, table: String, base: Snapshot,
+                          batch: Set[Int])(blocks: => Dataset[EncodedBlock]): Snapshot = {
+    val f = ManifestIO.fs(spark, table)
     batch.foreach { pid =>
-      val d = new Path(ManifestIO.dataDir(dstTable), s"part_id=$pid")
+      val d = new Path(ManifestIO.dataDir(table), s"part_id=$pid")
       if (f.exists(d)) f.delete(d, true)
     }
-
-    val srcBlocks = readBlocks(spark, srcTable)
-      .where(col("part_id").isin(batch.toSeq: _*))
-      .as[EncodedBlock](Encoders.product[EncodedBlock])
-    val lineage = ManifestIO.writeBlocks(
-      TokenCompressor(base.replayZdict(opts)).recompress(srcBlocks))(
+    val lineage = ManifestIO.writeBlocks(blocks)(
       _.write.mode(SaveMode.Append)
         .partitionBy("part_id")
-        .parquet(ManifestIO.dataDir(dstTable).toString))
-
-    val next = Snapshot(
-      base.version + 1,
-      System.currentTimeMillis(),
-      srcSnap.plan,
-      base.committed ++ batch,
-      base.lineage ++ lineage,
-      zdictEnabled = base.zdictEnabled
-    )
-    ManifestIO.write(spark, dstTable, next)
+        .parquet(ManifestIO.dataDir(table).toString))
+    val next = base.next.copy(
+      committed = base.committed ++ batch, lineage = base.lineage ++ lineage)
+    ManifestIO.write(spark, table, next)
     next
   }
 
-  /** Read the encoded table back as blocks. `asOfVersion` time-travels to
+  /** Read the encoded table back as blocks — every block the snapshot
+    * makes visible ([[ManifestIO.blocks]]). `asOfVersion` time-travels to
     * an older snapshot (Iceberg semantics: a snapshot's part set is
     * immutable once committed, so old reads stay consistent while new
     * parts land).
     */
   def readBlocks(spark: SparkSession, table: String,
                  asOfVersion: Option[Int] = None): Dataset[EncodedBlock] = {
-    val snap = asOfVersion
-      .map(v => ManifestIO.at(spark, table, v)
-        .getOrElse(throw new IllegalStateException(s"no snapshot v$v in $table")))
-      .orElse(ManifestIO.latest(spark, table))
-      .getOrElse(throw new IllegalStateException(s"no snapshot in $table"))
-    val committed = snap.committed.toSeq
-    // schema-explicit: a committed-but-empty table (zero input rows) has no
-    // parquet footers to infer from and must read back as empty, not throw;
-    // a stream-only table (compacted runs, no batch write) has no data/ dir
-    val dataDir = ManifestIO.dataDir(table)
-    val batch =
-      if (ManifestIO.fs(spark, table).exists(dataDir))
-        spark.read
-          .schema(Encoders.product[EncodedBlock].schema)
-          .parquet(dataDir.toString)
-          .where(col("part_id").isin(committed: _*))
-      else
-        spark.emptyDataset[EncodedBlock](Encoders.product[EncodedBlock]).toDF()
-    // stream-compaction runs are committed as whole directories (the run id
-    // rides in the snapshot), independent of the batch parts' committed set.
-    // partitionBy pushed part_id to the directory key; column order is
-    // pinned per branch before the positional union
-    val cols = Encoders.product[EncodedBlock].schema.fieldNames.map(col)
-    val df = snap.compactedRuns.foldLeft(batch.select(cols.toSeq: _*)) { (acc, run) =>
-      acc.unionAll(spark.read
-        .schema(Encoders.product[EncodedBlock].schema)
-        .parquet(ManifestIO.compactedDir(table, run).toString)
-        .select(cols.toSeq: _*))
-    }
-    df.as[EncodedBlock](Encoders.product[EncodedBlock])
+    val snap = ManifestIO.resolve(spark, table, asOfVersion).getOrElse(
+      throw new IllegalStateException(
+        s"no snapshot ${asOfVersion.fold("")(v => s"v$v ")}in $table"))
+    ManifestIO.blocks(spark, table, snap)
   }
 }

@@ -23,7 +23,11 @@ object RangeReader {
     }
   }
 
-  /** Blocks possibly containing rows in [fromDoc, toDoc] (inclusive). */
+  /** Blocks possibly containing rows in [fromDoc, toDoc] (inclusive): the
+    * snapshot's visible blocks in the candidate parts ([[ManifestIO.blocks]]
+    * — batch data, compacted runs and the committed stream tail), then the
+    * block zone-map filter on [first_doc_id, last_doc_id].
+    */
   def rangeBlocks(
       spark: SparkSession,
       table: String,
@@ -32,56 +36,8 @@ object RangeReader {
   ): Dataset[EncodedBlock] = {
     val snap = ManifestIO.latest(spark, table)
       .getOrElse(throw new IllegalStateException(s"no snapshot in $table"))
-    val cand = candidateParts(snap.plan, fromDoc, toDoc)
-    val parts = cand.filter(snap.committed)
-    // a stream-only table has no batch data/ dir at all — its blocks live
-    // in compacted runs + the committed stream-batch tail, both unioned in
-    val dataDir = ManifestIO.dataDir(table)
-    val batch =
-      if (ManifestIO.fs(spark, table).exists(dataDir))
-        spark.read
-          .schema(Encoders.product[EncodedBlock].schema)
-          .parquet(dataDir.toString)
-          .where(col("part_id").isin(parts: _*))
-      else
-        spark.emptyDataset[EncodedBlock](Encoders.product[EncodedBlock]).toDF()
-    // compacted stream runs carry the same part_id dir layout and block
-    // zone maps, so the identical three-level pruning applies — their
-    // commit unit is the run dir (snapshot list), not the batch part set.
-    // Column order is pinned per branch before the positional union
-    // (partitioned reads append part_id last)
-    val cols = Encoders.product[EncodedBlock].schema.fieldNames.map(col)
-    val withRuns = snap.compactedRuns.foldLeft(batch.select(cols.toIndexedSeq: _*)) { (acc, run) =>
-      acc.unionAll(spark.read
-        .schema(Encoders.product[EncodedBlock].schema)
-        .parquet(ManifestIO.compactedDir(table, run).toString)
-        .where(col("part_id").isin(cand: _*))
-        .select(cols.toIndexedSeq: _*))
-    }
-    // the committed stream-batch TAIL (batches past the compaction
-    // watermark): without it a mid-ingest table silently returned
-    // incomplete ranges that StreamingEncode.readDecoded does return.
-    // Batch dirs are snapshot-bounded via ONE directory listing (the
-    // (watermark, streamBatchId] filter keeps the commit-then-visible law
-    // — a bare glob would pick up a crashed foreachBatch attempt; a
-    // per-id exists() probe was unbounded for sparse ids) and
-    // unpartitioned, so part_id pruning falls to parquet column zone
-    // maps; the tail is bounded by ingest-since-last-compaction, not
-    // table size.
-    val tailDirs = ManifestIO.streamBatchDirs(spark, table,
-      snap.compactedBatchId.map(_ + 1).getOrElse(0L),
-      snap.streamBatchId.getOrElse(-1L))
-    val all = tailDirs.foldLeft(withRuns) { (acc, dir) =>
-      acc.unionAll(spark.read
-        .schema(Encoders.product[EncodedBlock].schema)
-        .parquet(dir)
-        .where(col("part_id").isin(cand: _*))
-        .select(cols.toIndexedSeq: _*))
-    }
-    all
+    ManifestIO.blocks(spark, table, snap, Some(candidateParts(snap.plan, fromDoc, toDoc)))
       .where(col("last_doc_id") >= fromDoc && col("first_doc_id") <= toDoc)
-      .select(cols.toIndexedSeq: _*)
-      .as[EncodedBlock](Encoders.product[EncodedBlock])
   }
 
   /** Point lookup: the decoded row(s) for one doc_id — a degenerate range

@@ -331,15 +331,9 @@ object SimSearch {
               iters: Int = 4): Array[Array[Double]] = {
       val spark = corpus.sparkSession
       val cents = ivfCentroids(corpus, kCells, iters)
-      val next = ManifestIO.latest(spark, table) match {
-        case Some(s) => s.copy(version = s.version + 1,
-          committedAtMillis = System.currentTimeMillis(),
-          ivfCentroids = Some(cents))
-        case None => Snapshot(0, System.currentTimeMillis(),
-          PartitionPlan(Array.empty, Array.empty, Array.empty, 0),
-          Set.empty, Map.empty, None, Some(cents))
-      }
-      ManifestIO.write(spark, table, next)
+      val next = ManifestIO.latest(spark, table).fold(Snapshot.initial(
+        PartitionPlan(Array.empty, Array.empty, Array.empty, 0)))(_.next)
+      ManifestIO.write(spark, table, next.copy(ivfCentroids = Some(cents)))
       cents
     }
 
@@ -348,9 +342,7 @@ object SimSearch {
       */
     def load(spark: org.apache.spark.sql.SparkSession, table: String,
              asOfVersion: Option[Int] = None): Option[Array[Array[Double]]] =
-      asOfVersion.map(v => ManifestIO.at(spark, table, v))
-        .getOrElse(ManifestIO.latest(spark, table))
-        .flatMap(_.ivfCentroids)
+      ManifestIO.resolve(spark, table, asOfVersion).flatMap(_.ivfCentroids)
 
     /** IVF top-k against the PERSISTED index — no training job. */
     def topK(corpus: DataFrame, queries: DataFrame, table: String,

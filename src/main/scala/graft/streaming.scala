@@ -33,12 +33,8 @@ object StreamingEncode {
       batchId: Long
   ): Unit = {
     val spark = batch.sparkSession
-    val base = ManifestIO.latest(spark, table).getOrElse {
-      val plan = Planner.plan(batch, opts)
-      val s0 = Snapshot(0, System.currentTimeMillis(), plan, Set.empty, Map.empty)
-      ManifestIO.write(spark, table, s0)
-      s0
-    }
+    val base = ManifestIO.latestOrInit(spark, table)(
+      Snapshot.initial(Planner.plan(batch, opts)))
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
     val tasks = math.min(base.plan.numParts, spark.sparkContext.defaultParallelism)
     val blocks = TokenCompressor(base.replayZdict(opts))
@@ -51,12 +47,9 @@ object StreamingEncode {
     // e.g. a replay after checkpoint recovery, adds zeros)
     val added = written.values.foldLeft(
       PartLineage(-1, 0L, 0L, 0L, 0L, 0L, 0L, Map.empty, 0L))(_ merge _)
-    ManifestIO.write(spark, table,
-      base.copy(version = base.version + 1,
-        committedAtMillis = System.currentTimeMillis(),
-        lineage = base.lineage.updated(-1,
-          base.lineage.get(-1).fold(added)(_ merge added)),
-        streamBatchId = Some(batchId)))
+    ManifestIO.write(spark, table, base.next.copy(
+      lineage = base.lineage.updated(-1, base.lineage.get(-1).fold(added)(_ merge added)),
+      streamBatchId = Some(batchId)))
   }
 
   /** Start the ingestion stream over a directory of token parquet files. */
@@ -80,48 +73,9 @@ object StreamingEncode {
       .start()
   }
 
-  /** Read back everything the stream has COMMITTED, as encoded blocks:
-    * the compacted runs (batches folded into the `compacted/run=V` part
-    * layout) plus the still-uncompacted batch tail. Batch directories are
-    * derived from the snapshot's streamBatchId — a bare glob would also
-    * pick up a half-written directory from a crashed foreachBatch attempt
-    * that never committed its snapshot, breaking the commit-then-visible
-    * law the batch readers obey. Batches at or below compactedBatchId are
-    * skipped even if their dirs still exist (a crash between compaction
-    * commit and batch-dir cleanup leaves them; the next compaction sweeps).
-    */
-  def readCommittedBlocks(spark: SparkSession, table: String): Dataset[EncodedBlock] = {
-    val snap = ManifestIO.latest(spark, table)
-      .getOrElse(throw new IllegalStateException(s"no snapshot in $table"))
-    val maxBatch = snap.streamBatchId.getOrElse(-1L)
-    val minBatch = snap.compactedBatchId.map(_ + 1).getOrElse(0L)
-    val runDirs = snap.compactedRuns
-      .map(r => ManifestIO.compactedDir(table, r).toString)
-    // one stream_batches listing, id-range filtered (a per-id exists()
-    // probe over minBatch..maxBatch is unbounded for sparse batch ids)
-    val batchDirs = ManifestIO.streamBatchDirs(spark, table, minBatch, maxBatch)
-    // one scan per dir with an explicit basePath: a single multi-path scan
-    // would run Hive-style partition inference across `run=V` / `batch=B`
-    // parents and reject the mix as conflicting structures; per-dir reads
-    // keep inference scoped to the part_id level. Column order is pinned
-    // before the positional union (partitioned reads append part_id last)
-    val cols = Encoders.product[EncodedBlock].schema.fieldNames.map(col)
-    val base = spark.emptyDataset[EncodedBlock](Encoders.product[EncodedBlock]).toDF()
-    val blocks = (runDirs ++ batchDirs)
-      .map(d => spark.read
-        .schema(Encoders.product[EncodedBlock].schema)
-        .option("basePath", d)
-        .parquet(d)
-        .select(cols.toIndexedSeq: _*))
-      .reduceOption(_ unionAll _)
-      .getOrElse(base)
-    blocks.select(cols.toIndexedSeq: _*)
-      .as[EncodedBlock](Encoders.product[EncodedBlock])
-  }
-
-  /** Everything the stream has committed, decoded to token rows. */
+  /** Everything the table has committed, decoded to token rows. */
   def readDecoded(spark: SparkSession, table: String): Dataset[TokenRow] =
-    TokenCompressor(EncodeOptions.default).decode(readCommittedBlocks(spark, table))
+    TokenCompressor(EncodeOptions.default).decode(ResumableEncodeJob.readBlocks(spark, table))
 
   /** Fold the committed stream-batch tail into the table's part_id layout.
     *
@@ -184,16 +138,12 @@ object StreamingEncode {
       }
     }
 
-    val pendingDirs = ManifestIO.streamBatchDirs(spark, table, minBatch, maxBatch)
+    val pendingDirs = ManifestIO.tailDirs(spark, table, base)
     // nothing new to fold, but a crashed predecessor may have left the run
     // list un-merged — the tiering pass is idempotent and cheap when level
     if (pendingDirs.isEmpty) return mergeRuns(spark, table, base)
 
-    val cols = Encoders.product[EncodedBlock].schema.fieldNames.map(col)
-    val tail = spark.read
-      .schema(Encoders.product[EncodedBlock].schema)
-      .parquet(pendingDirs: _*)
-      .select(cols.toIndexedSeq: _*)
+    val tail = ManifestIO.scan(spark, pendingDirs)
       .as[EncodedBlock](Encoders.product[EncodedBlock])
     val run = base.version + 1
     val comp = TokenCompressor(base.replayZdict(opts))
@@ -203,9 +153,7 @@ object StreamingEncode {
       .partitionBy("part_id")
       .parquet(ManifestIO.compactedDir(table, run).toString)
 
-    val next = base.copy(
-      version = run,
-      committedAtMillis = System.currentTimeMillis(),
+    val next = base.next.copy(
       compactedBatchId = Some(maxBatch),
       compactedRuns = base.compactedRuns :+ run,
       compactedRunBytes = runSizes(fs, table, base) :+
@@ -247,29 +195,21 @@ object StreamingEncode {
   private def mergeRuns(spark: SparkSession, table: String,
                         snap0: Snapshot): Snapshot = {
     val fs = ManifestIO.fs(spark, table)
-    val cols = Encoders.product[EncodedBlock].schema.fieldNames.map(col)
     var snap = snap0
     var sizes = runSizes(fs, table, snap)
     while (snap.compactedRuns.length >= 2 &&
       sizes.last * 2 >= sizes(sizes.length - 2)) {
       val srcRuns = snap.compactedRuns.takeRight(2)
       val target = snap.version + 1
-      srcRuns
-        .map(r => spark.read
-          .schema(Encoders.product[EncodedBlock].schema)
-          .option("basePath", ManifestIO.compactedDir(table, r).toString)
-          .parquet(ManifestIO.compactedDir(table, r).toString)
-          .select(cols.toIndexedSeq: _*))
-        .reduce(_ unionAll _)
+      ManifestIO.runScans(spark, table, srcRuns)
+        .reduce(_ unionByName _)
         .repartition(col("part_id"))
         .sortWithinPartitions("part_id", "first_doc_id")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("part_id")
         .parquet(ManifestIO.compactedDir(table, target).toString)
       val merged = dirBytes(fs, ManifestIO.compactedDir(table, target))
-      snap = snap.copy(
-        version = target,
-        committedAtMillis = System.currentTimeMillis(),
+      snap = snap.next.copy(
         compactedRuns = snap.compactedRuns.dropRight(2) :+ target,
         compactedRunBytes = sizes.dropRight(2) :+ merged)
       ManifestIO.write(spark, table, snap)

@@ -35,7 +35,7 @@ class CompactionSpec extends AnyFunSuite {
     StreamingEncode.appendBatch(batchRows(600, 900), table, opts, batchId = 2L)
 
     val before = decodedMap(table)
-    val streamBlocks = StreamingEncode.readCommittedBlocks(spark, table).count()
+    val streamBlocks = ResumableEncodeJob.readBlocks(spark, table).count()
 
     val snap = StreamingEncode.compact(spark, table,
       opts.copy(blockTokens = 1 << 16))
@@ -49,7 +49,7 @@ class CompactionSpec extends AnyFunSuite {
 
     // content identical, block count collapsed (bigger blocks, one layout)
     assert(decodedMap(table) == before)
-    val compactBlocks = StreamingEncode.readCommittedBlocks(spark, table).count()
+    val compactBlocks = ResumableEncodeJob.readBlocks(spark, table).count()
     assert(compactBlocks < streamBlocks,
       s"expected fewer blocks after compaction: $compactBlocks vs $streamBlocks")
 

@@ -54,7 +54,7 @@ class LineageRetrySpec extends AnyFunSuite {
     val stream = ManifestIO.latest(spark, s"$dir/stream").get
     assert(stream.lineage(-1).n_docs == LineageRetryChild.Docs)
     assert(stream.lineage(-1) == LineageOracle.ofStream(
-      StreamingEncode.readCommittedBlocks(spark, s"$dir/stream").toDF()))
+      ResumableEncodeJob.readBlocks(spark, s"$dir/stream").toDF()))
   }
 }
 

@@ -122,6 +122,27 @@ class PlanShapeSpec extends AnyFunSuite {
       s"pack must run map-side and unpack reduce-side:\n$p")
   }
 
+  test("rangeBlocks: one scan each for batch data, a compacted run and the whole stream tail") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val table = java.nio.file.Files.createTempDirectory("graft_scans").toString
+    val opts = EncodeOptions(numParts = 4)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    ResumableEncodeJob.run(rows(0, 200), table, opts)
+    StreamingEncode.appendBatch(rows(200, 260), table, opts, batchId = 0L)
+    StreamingEncode.compact(spark, table, opts)
+    StreamingEncode.appendBatch(rows(260, 320), table, opts, batchId = 1L)
+    StreamingEncode.appendBatch(rows(320, 380), table, opts, batchId = 2L)
+    val snap = ManifestIO.latest(spark, table).get
+    assert(snap.compactedRuns.size == 1 && snap.committed.nonEmpty)
+    val df = RangeReader.rangeBlocks(spark, table, "", "￿").toDF()
+    val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 3, s"expected data + run + tail scans:\n${df.queryExecution.sparkPlan}")
+    // the tail relation covers both uncompacted batch dirs
+    assert(scans.map(_.relation.location.rootPaths.size).sorted == Seq(1, 1, 2))
+  }
+
   test("incrementalPairs: committed sigs scanned once in place, cand side broadcast") {
     val table = java.nio.file.Files.createTempDirectory("graft_idx_plan").toString
     MinhashIndex.commit(docsDf, table)

@@ -199,4 +199,38 @@ class ResumeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       ManifestIO.expireSnapshots(spark, dir, keepLast = 0))
   }
+
+  test("every commit carries the snapshot forward: stream watermark and IVF centroids survive a resumed run") {
+    import org.apache.spark.sql.Encoders
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_carry").toString
+    val opts = EncodeOptions(numParts = 8)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    val input = rows(0, 2000)
+    val s1 = ResumableEncodeJob.run(input, dir, opts, maxPartsPerRun = 4)
+    assert(s1.committed.size == 4)
+    StreamingEncode.appendBatch(rows(2000, 2200), dir, opts, batchId = 0L)
+    val corpus = (0 until 32).map(i =>
+      (i.toLong, Array.tabulate(8)(d => math.sin(i * 8 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cents = SimSearch.IvfIndex.build(corpus, dir, kCells = 4, iters = 2)
+
+    val s2 = ResumableEncodeJob.run(input, dir, opts)
+    assert(s2.committed.size == s2.plan.numParts)
+    assert(s2.streamBatchId.contains(0L), "the resumed run dropped the stream watermark")
+    assert(s2.lineage.get(-1).exists(_.n_docs == 200L))
+    assert(s2.ivfCentroids.exists(_.zip(cents).forall { case (a, b) => a.sameElements(b) }),
+      "the resumed run dropped the IVF centroids")
+
+    val ids = (0L until 2200L).map(i => Fixtures.row(42L, i).doc_id).sorted
+    val got = RangeReader.readRange(spark, dir, ids.head, ids.last)
+      .collect().map(_.doc_id).sorted.toSeq
+    val complete = got == ids
+    assert(complete, s"range read saw ${got.size} of ${ids.size}")
+
+    // the carried watermark still makes a replayed batch a no-op
+    StreamingEncode.appendBatch(rows(2000, 2200), dir, opts, batchId = 0L)
+    assert(ManifestIO.latest(spark, dir).get.version == s2.version)
+  }
 }

@@ -131,14 +131,14 @@ class StreamingSpec extends AnyFunSuite {
         Checksum.xxh64(b.payload), Checksum.xxh64(b.symtab),
         Checksum.xxh64(b.zdict), b.encoded_bytes)).toSeq.sorted
     val batchBlocks = ResumableEncodeJob.readBlocks(spark, s"$root/batch_table").collect()
-    val streamBlocks = StreamingEncode.readCommittedBlocks(spark, stream).collect()
+    val streamBlocks = ResumableEncodeJob.readBlocks(spark, stream).collect()
     assert(batchBlocks.map(_.part_id).distinct.length == 12)
     val (fs, fb) = (fingerprint(streamBlocks), fingerprint(batchBlocks))
     assert(fs == fb, s"stream-only: ${fs.diff(fb).take(3)}; batch-only: ${fb.diff(fs).take(3)}")
 
     // lineage counted by the writing tasks == lineage re-read from the files
     assert(ManifestIO.latest(spark, stream).get.lineage(-1) ==
-      LineageOracle.ofStream(StreamingEncode.readCommittedBlocks(spark, stream).toDF()))
+      LineageOracle.ofStream(ResumableEncodeJob.readBlocks(spark, stream).toDF()))
   }
 
   test("watermarked event-time window stream converges to the batch aggregation") {
