@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -42,29 +42,79 @@ final case class PartLineage(
     wall_micros + o.wall_micros)
 }
 
-/** Lineage counted by the tasks that write the blocks: each block folds
-  * into its part's [[PartLineage]] (per-codec block counts included). Fed
-  * inside the write job's result stage ([[ManifestIO.writeBlocks]]), where
-  * Spark merges one update per output partition and drops failed
-  * attempts' updates (countFailedValues = false): a retried or
-  * speculative task counts exactly once.
+/** One block file a snapshot makes visible — an entry of its zone map:
+  * the path relative to the table root (tables copy as a directory tree),
+  * the part_id span of its blocks and the [first, last] doc_id span (UTF-8
+  * order) of its blocks. `bounds` is None for a file listed from a table
+  * written before snapshots carried their files.
   */
-final class LineageAccumulator
-    extends AccumulatorV2[EncodedBlock, Map[Int, PartLineage]] {
-  private var parts = Map.empty[Int, PartLineage]
-
-  private def fold(m: Map[Int, PartLineage]): Unit = m.foreach { case (k, l) =>
-    parts = parts.updated(k, parts.get(k).fold(l)(_ merge l))
+final case class ZoneFile(
+    path: String,
+    minPart: Int,
+    maxPart: Int,
+    bounds: Option[(String, String)] = None
+) {
+  /** The layout dir the file lives under: `data`, `compacted/run=V` or
+    * `stream_batches` — one relation per root.
+    */
+  def root: String = path.split('/') match {
+    case Array("compacted", run, _*) => s"compacted/$run"
+    case a => a(0)
   }
 
-  def isZero: Boolean = parts.isEmpty
-  def copy(): LineageAccumulator = { val c = new LineageAccumulator; c.parts = parts; c }
-  def reset(): Unit = parts = Map.empty
-  def add(b: EncodedBlock): Unit = fold(Map(b.part_id -> PartLineage(b.part_id, 1L,
-    b.n_docs, b.n_tokens, b.raw_bytes, b.encoded_bytes, b.checksum,
-    Map(b.codec -> 1L), b.enc_micros)))
-  def merge(o: AccumulatorV2[EncodedBlock, Map[Int, PartLineage]]): Unit = fold(o.value)
-  def value: Map[Int, PartLineage] = parts
+  def isTail: Boolean = root == ManifestIO.TailRoot
+
+  /** Whether the file can hold a block of one of `parts` whose doc_id span
+    * meets [from, to] (open bounds always can).
+    */
+  def overlaps(parts: Option[Seq[Int]], range: Option[(String, String)]): Boolean =
+    parts.forall(_.exists(p => p >= minPart && p <= maxPart)) &&
+      (for ((from, to) <- range; (first, last) <- bounds)
+        yield DocIdOrder.lteq(first, to) && DocIdOrder.gteq(last, from)).getOrElse(true)
+}
+
+/** What the tasks of one block write counted: lineage per part, and the
+  * [first, last] doc_id span per (task partition id, part_id) — Spark names
+  * a task's files `part-<partition id>-…`, which maps spans to files.
+  */
+final case class WriteTally(
+    lineage: Map[Int, PartLineage],
+    spans: Map[(Int, Int), (String, String)])
+
+/** Lineage and file spans counted by the tasks that write the blocks: each
+  * block folds into its part's [[PartLineage]] (per-codec block counts
+  * included) and its task's span. Fed inside the write job's result stage
+  * ([[ManifestIO.writeBlocks]]), where Spark merges one update per output
+  * partition and drops failed attempts' updates (countFailedValues =
+  * false): a retried or speculative task counts exactly once.
+  */
+final class LineageAccumulator extends AccumulatorV2[EncodedBlock, WriteTally] {
+  private var parts = Map.empty[Int, PartLineage]
+  private var spans = Map.empty[(Int, Int), (String, String)]
+
+  private def fold(t: WriteTally): Unit = {
+    t.lineage.foreach { case (k, l) =>
+      parts = parts.updated(k, parts.get(k).fold(l)(_ merge l))
+    }
+    t.spans.foreach { case (k, (lo, hi)) =>
+      spans = spans.updated(k, spans.get(k).fold((lo, hi)) { case (a, b) =>
+        (DocIdOrder.min(a, lo), DocIdOrder.max(b, hi))
+      })
+    }
+  }
+
+  def isZero: Boolean = parts.isEmpty && spans.isEmpty
+  def copy(): LineageAccumulator = {
+    val c = new LineageAccumulator; c.parts = parts; c.spans = spans; c
+  }
+  def reset(): Unit = { parts = Map.empty; spans = Map.empty }
+  def add(b: EncodedBlock): Unit = fold(WriteTally(
+    Map(b.part_id -> PartLineage(b.part_id, 1L, b.n_docs, b.n_tokens, b.raw_bytes,
+      b.encoded_bytes, b.checksum, Map(b.codec -> 1L), b.enc_micros)),
+    Map((org.apache.spark.TaskContext.getPartitionId(), b.part_id) ->
+      (b.first_doc_id, b.last_doc_id))))
+  def merge(o: AccumulatorV2[EncodedBlock, WriteTally]): Unit = fold(o.value)
+  def value: WriteTally = WriteTally(parts, spans)
 }
 
 /** One committed snapshot of the encoded table. `streamBatchId` is the
@@ -91,7 +141,11 @@ final case class Snapshot(
     // merge policy never has to walk the filesystem
     compactedBatchId: Option[Long] = None,
     compactedRuns: Seq[Int] = Nil,
-    compactedRunBytes: Seq[Long] = Nil
+    compactedRunBytes: Seq[Long] = Nil,
+    // the zone map: every block file this version makes visible, written
+    // by the commit that adds or drops files (None = a snapshot from before
+    // the field existed; [[ManifestIO.visible]] lists such a table)
+    files: Option[Seq[ZoneFile]] = None
 ) {
   /** `opts` with the table's recorded zdict probe decision replayed — the
     * one rule every writer (run, migrate, appendBatch, compact) applies.
@@ -113,7 +167,7 @@ object Snapshot {
   /** Version 0 of a table: its partition plan, no part committed yet. */
   def initial(plan: PartitionPlan, zdictEnabled: Option[Boolean] = None): Snapshot =
     Snapshot(0, System.currentTimeMillis(), plan, Set.empty, Map.empty,
-      zdictEnabled = zdictEnabled)
+      zdictEnabled = zdictEnabled, files = Some(Nil))
 }
 
 /** Iceberg-style append-only snapshot log over partitioned Parquet.
@@ -126,8 +180,8 @@ object Snapshot {
   * `compacted/run=V/part_id=K/` (compacted stream runs),
   * `stream_batches/batch=B/` (the uncompacted stream tail) and
   * `snapshots/vNNNNN.json`. This object owns that layout: which block
-  * files a snapshot makes visible ([[blocks]]) and how versions are
-  * listed, read and committed.
+  * files a snapshot makes visible (its zone map, [[visible]]), how they
+  * are read ([[blocks]]) and how versions are listed, read and committed.
   *
   * Uses the Hadoop FileSystem API so the same code runs on HDFS/object
   * stores on a real cluster, not just local files.
@@ -136,96 +190,151 @@ object ManifestIO {
   private def mapper = new ObjectMapper()
 
   def snapshotsDir(table: String) = new Path(table, "snapshots")
-  def dataDir(table: String) = new Path(table, "data")
-  def compactedDir(table: String, run: Int) =
-    new Path(table, s"compacted/run=$run")
+  def dataDir(table: String) = new Path(table, DataRoot)
+  def runRoot(run: Int) = s"compacted/run=$run"
+  def compactedDir(table: String, run: Int) = new Path(table, runRoot(run))
 
   def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Write `blocks` with `write` in ONE job and return their lineage,
-    * counted by the writing tasks ([[LineageAccumulator]]): no payload
-    * persist, no second pass. The tap fuses with the encode's typed map,
-    * in the write's result stage — `write` must not shuffle after it.
+  /** Layout roots: batch data `data/part_id=K/`, and the uncompacted
+    * stream tail `stream_batches/batch=B/`.
     */
-  def writeBlocks(blocks: Dataset[EncodedBlock])(
-      write: DataFrame => Unit): Map[Int, PartLineage] = {
+  val DataRoot = "data"
+  val TailRoot = "stream_batches"
+
+  /** Write `blocks` into `dir` (under `part_id=K` subdirs when
+    * `partitioned`) in ONE job and return their lineage, counted by the
+    * writing tasks ([[LineageAccumulator]]), and the zone entries of the
+    * files written: the tasks fold each file's spans, and one listing per
+    * written dir maps task partition ids to file names. No payload
+    * persist, no second pass, no footer read. The tap fuses with the
+    * encode's typed map, in the write's result stage — `blocks` must not
+    * shuffle after it.
+    */
+  def writeBlocks(blocks: Dataset[EncodedBlock], table: String, dir: Path,
+                  mode: SaveMode, partitioned: Boolean): (Map[Int, PartLineage], Seq[ZoneFile]) = {
+    val spark = blocks.sparkSession
     val acc = new LineageAccumulator
-    blocks.sparkSession.sparkContext.register(acc, "graft.lineage")
-    write(blocks.mapPartitions(_.map { b => acc.add(b); b })(
-      Encoders.product[EncodedBlock]).toDF())
-    acc.value
-  }
-
-  /** One schema-explicit relation over block dirs of one layout. The
-    * encoder schema lets a committed-but-empty table read back empty (no
-    * footers to infer from) and surfaces a column that older files lack
-    * as null.
-    */
-  def scan(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    spark.read.schema(Encoders.product[EncodedBlock].schema).parquet(dirs: _*)
-
-  /** One relation per compacted run. A multi-root read of `run=V` dirs next
-    * to other roots fails Hive-style partition inference
-    * (CONFLICTING_DIRECTORY_STRUCTURES); per-run roots keep it at part_id.
-    */
-  def runScans(spark: SparkSession, table: String, runs: Seq[Int]): Seq[DataFrame] =
-    runs.map(r => scan(spark, Seq(compactedDir(table, r).toString)))
-
-  /** The committed stream tail of `snap`: the batch dirs with id in
-    * (compactedBatchId, streamBatchId], from ONE `stream_batches/` listing,
-    * sorted by id. Bounding by the snapshot keeps commit-then-visible: a
-    * bare glob would pick up the dir of a crashed foreachBatch attempt that
-    * never committed, and batches at or below the watermark stay invisible
-    * even while their dirs still exist (a crash between a compaction commit
-    * and its cleanup). `appendBatch` accepts sparse, e.g. time-derived,
-    * ids, so a per-id `exists` probe would be unbounded in the id gap.
-    */
-  def tailDirs(spark: SparkSession, table: String, snap: Snapshot): Seq[String] = {
-    val minBatch = snap.compactedBatchId.fold(0L)(_ + 1)
-    val maxBatch = snap.streamBatchId.getOrElse(-1L)
+    spark.sparkContext.register(acc, "graft.lineage")
+    val w = blocks.mapPartitions(_.map { b => acc.add(b); b })(
+      Encoders.product[EncodedBlock]).toDF().write.mode(mode)
+    (if (partitioned) w.partitionBy("part_id") else w).parquet(dir.toString)
+    val tally = acc.value
+    val rel = relativize(spark, table)
     val f = fs(spark, table)
-    val root = new Path(table, "stream_batches")
-    if (minBatch > maxBatch || !f.exists(root)) return Seq.empty
-    f.listStatus(root).toSeq
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch="))
-          n.stripPrefix("batch=").toLongOption
-            .filter(b => b >= minBatch && b <= maxBatch)
-            .map(b => (b, st.getPath.toString))
-        else None
+    // one entry per (written dir, task): the task's part and doc_id spans
+    val perTask = tally.spans.toSeq.groupBy { case ((split, part), _) =>
+      (if (partitioned) new Path(dir, s"part_id=$part") else dir, split)
+    }
+    val files = perTask.groupBy(_._1._1).toSeq.flatMap { case (d, tasks) =>
+      val listed = f.listStatus(d).toSeq.map(_.getPath)
+      tasks.flatMap { case ((_, split), spans) =>
+        val parts = spans.map(_._1._2)
+        val span = spans.map(_._2).reduce((a, b) =>
+          (DocIdOrder.min(a._1, b._1), DocIdOrder.max(a._2, b._2)))
+        listed.filter(_.getName.startsWith(f"part-$split%05d-"))
+          .map(p => ZoneFile(rel(p), parts.min, parts.max, Some(span)))
       }
-      .sortBy(_._1).map(_._2)
+    }
+    (tally.lineage, files.sortBy(_.path))
   }
 
-  /** Every block `snap` makes visible in `table`, restricted to `parts`
-    * when given — the only reader of a table's block files:
-    *  - batch data, `data/part_id=K` for K committed;
-    *  - each compacted run, committed as a whole dir by the run list;
-    *  - the stream tail ([[tailDirs]]) as ONE relation (its batch dirs
-    *    share a layout; part_id is a file column there, so pruning falls
-    *    to Parquet row-group stats).
-    * A file no snapshot names is never read. Relations combine by name
-    * (partitioned reads put part_id last).
+  /** A file's path relative to the table root, as zone entries name it. */
+  private def relativize(spark: SparkSession, table: String): Path => String = {
+    val root = fs(spark, table).makeQualified(new Path(table)).toUri.getPath + "/"
+    p => p.toUri.getPath.stripPrefix(root)
+  }
+
+  /** The block files `snap` makes visible: its zone map or, for a snapshot
+    * written before snapshots carried one, one listing per layout into the
+    * same entries with open doc_id bounds — batch data of the committed
+    * parts, each compacted run, and the stream tail's batch dirs with id in
+    * (compactedBatchId, streamBatchId]. Bounding by the snapshot keeps
+    * commit-then-visible either way: a file no snapshot names (a crashed
+    * attempt's) is never read.
     */
-  def blocks(spark: SparkSession, table: String, snap: Snapshot,
-             parts: Option[Seq[Int]] = None): Dataset[EncodedBlock] = {
+  def visible(spark: SparkSession, table: String, snap: Snapshot): Seq[ZoneFile] =
+    snap.files.getOrElse {
+      val f = fs(spark, table)
+      val rel = relativize(spark, table)
+      // like Spark's file index, skip hidden names at any level (a crashed
+      // write's `_temporary/` tree, checksum files)
+      def list(dir: Path): Seq[Path] =
+        if (!f.exists(dir)) Nil
+        else {
+          val it = f.listFiles(dir, true)
+          Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+            .filter(p => p.getName.endsWith(".parquet") &&
+              rel(p).split('/').forall(c => !c.startsWith("_") && !c.startsWith(".")))
+            .toSeq
+        }
+      def entry(p: Path, lo: Int, hi: Int) = ZoneFile(rel(p), lo, hi)
+      def partOf(p: Path) = p.getParent.getName.stripPrefix("part_id=").toInt
+      val data = if (snap.committed.isEmpty) Nil else list(dataDir(table))
+        .filter(p => snap.committed(partOf(p))).map(p => entry(p, partOf(p), partOf(p)))
+      val runs = snap.compactedRuns.flatMap(r =>
+        list(compactedDir(table, r)).map(p => entry(p, partOf(p), partOf(p))))
+      val minBatch = snap.compactedBatchId.fold(0L)(_ + 1)
+      val maxBatch = snap.streamBatchId.getOrElse(-1L)
+      val tail = if (minBatch > maxBatch) Nil else list(new Path(table, TailRoot))
+        .filter(_.getParent.getName.stripPrefix("batch=").toLongOption
+          .exists(b => b >= minBatch && b <= maxBatch))
+        .map(entry(_, 0, snap.plan.numParts - 1))
+      data ++ runs ++ tail
+    }
+
+  /** The blocks of exactly `files` (entries of `snap`'s [[visible]] set),
+    * one schema-explicit relation per layout root over the exact file
+    * paths: no listing, no `exists`, no dir walk. Batch data and each
+    * compacted run read with `basePath` at their root, so part_id comes
+    * from the `part_id=K` dirs; tail files carry it as a column. The
+    * encoder schema lets an empty selection read back empty and surfaces a
+    * column that older files lack as null. A file the snapshot names that
+    * is gone (deleted by a later compaction or merge) fails the read with
+    * the snapshot's version — never a silently short result.
+    */
+  def scanFiles(spark: SparkSession, table: String, snap: Snapshot,
+                files: Seq[ZoneFile]): Dataset[EncodedBlock] = {
     val enc = Encoders.product[EncodedBlock]
-    val committed = parts.fold(snap.committed.toSeq)(_.filter(snap.committed))
-    val data =
-      if (committed.nonEmpty && fs(spark, table).exists(dataDir(table)))
-        Seq(scan(spark, Seq(dataDir(table).toString))
-          .where(col("part_id").isin(committed: _*)))
-      else Nil
-    val tail = tailDirs(spark, table, snap)
-    val stream = runScans(spark, table, snap.compactedRuns) ++
-      (if (tail.isEmpty) Nil else Seq(scan(spark, tail)))
-    (data ++ parts.fold(stream)(p => stream.map(_.where(col("part_id").isin(p: _*)))))
-      .reduceOption(_ unionByName _)
+    val rels = files.groupBy(_.root).toSeq.sortBy(_._1).map { case (root, zs) =>
+      val r = spark.read.schema(enc.schema)
+      try (if (root == TailRoot) r else r.option("basePath", new Path(table, root).toString))
+        .parquet(zs.map(z => new Path(table, z.path).toString): _*)
+      catch {
+        case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+          throw new IllegalStateException(s"snapshot v${snap.version} of $table names a " +
+            s"block file that no longer exists (a later compaction or run merge deletes the " +
+            s"files it folds): ${e.getMessage}", e)
+      }
+    }
+    rels.reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset(enc).toDF())
       .select(enc.schema.fieldNames.toIndexedSeq.map(col): _*)
       .as(enc)
+  }
+
+  /** Every block `snap` makes visible in `table` that can hold a doc of
+    * `parts` (when given) with doc_id in `range` (when given, inclusive) —
+    * the one reader of a table's block files. The zone map selects the
+    * files ([[ZoneFile.overlaps]]), [[scanFiles]] reads exactly those, and
+    * a row filter finishes the job inside files: the block zone filter on
+    * [first_doc_id, last_doc_id] for a range (which implies the part
+    * filter: a part's blocks hold only its own bucket's doc_ids), else the
+    * part filter where a selected file spans several parts (tail files).
+    */
+  def blocks(spark: SparkSession, table: String, snap: Snapshot,
+             parts: Option[Seq[Int]] = None,
+             range: Option[(String, String)] = None): Dataset[EncodedBlock] = {
+    val chosen = visible(spark, table, snap).filter(_.overlaps(parts, range))
+    val all = scanFiles(spark, table, snap, chosen)
+    (range, parts) match {
+      case (Some((from, to)), _) =>
+        all.where(col("last_doc_id") >= from && col("first_doc_id") <= to)
+      case (None, Some(p)) if chosen.exists(z => z.minPart != z.maxPart) =>
+        all.where(col("part_id").isin(p: _*))
+      case _ => all
+    }
   }
 
   private def snapshotPath(table: String, version: Int) =
@@ -255,12 +364,19 @@ object ManifestIO {
     if (vs.isEmpty) None else Some(read(f, table, vs.max))
   }
 
-  /** The latest snapshot, or `init` committed as v0 when there is none. */
-  def latestOrInit(spark: SparkSession, table: String)(init: => Snapshot): Snapshot =
-    latest(spark, table).getOrElse {
-      val s0 = init
-      write(spark, table, s0)
-      s0
+  /** The latest snapshot that has a partition plan. When there is none,
+    * `init`'s plan and zdict decision are committed — as v0 of a new table,
+    * or as the next version of a table whose snapshots carry no plan yet
+    * (one [[IvfIndex.build]] created), every other field carried forward.
+    */
+  def latestPlanned(spark: SparkSession, table: String)(init: => Snapshot): Snapshot =
+    latest(spark, table) match {
+      case Some(s) if s.plan.numParts > 0 => s
+      case prev =>
+        val s0 = init
+        val s = prev.fold(s0)(_.next.copy(plan = s0.plan, zdictEnabled = s0.zdictEnabled))
+        write(spark, table, s)
+        s
     }
 
   /** Expire old snapshot metadata, Iceberg's expire-snapshots analog for
@@ -339,21 +455,24 @@ object ManifestIO {
       val ia = root.putArray("ivf_centroids")
       cents.foreach { c => val row = ia.addArray(); c.foreach(row.add) }
     }
+    // lineage per part as an array in PartLineage field order
     val ln = root.putObject("lineage")
     s.lineage.toSeq.sortBy(_._1).foreach { case (k, l) =>
-      val o = ln.putObject(k.toString)
-      o.put("part_id", l.part_id)
-      o.put("n_blocks", l.n_blocks)
-      o.put("n_docs", l.n_docs)
-      o.put("n_tokens", l.n_tokens)
-      o.put("raw_bytes", l.raw_bytes)
-      o.put("encoded_bytes", l.encoded_bytes)
-      o.put("checksum_xor", l.checksum_xor)
-      o.put("wall_micros", l.wall_micros)
-      val c = o.putObject("codecs")
+      val a = ln.putArray(k.toString).add(l.part_id).add(l.n_blocks).add(l.n_docs)
+        .add(l.n_tokens).add(l.raw_bytes).add(l.encoded_bytes).add(l.checksum_xor)
+      val c = a.addObject()
       l.codecs.toSeq.sortBy(_._1).foreach { case (n, v) => c.put(n, v) }
+      a.add(l.wall_micros)
     }
-    root.toPrettyString
+    // zone entries as short arrays: [path, minPart, maxPart(, first, last)]
+    s.files.foreach { zs =>
+      val fa = root.putArray("files")
+      zs.foreach { z =>
+        val e = fa.addArray().add(z.path).add(z.minPart).add(z.maxPart)
+        z.bounds.foreach { case (first, last) => e.add(first).add(last) }
+      }
+    }
+    root.toString
   }
 
   def fromJson(root: JsonNode): Snapshot = {
@@ -368,18 +487,20 @@ object ManifestIO {
     )
     val lineage = root.get("lineage").fields().asScala.map { e =>
       val o = e.getValue
-      val codecs = o.get("codecs").fields().asScala
+      // an array in field order, or (older snapshots) an object by name
+      def f(i: Int, name: String): JsonNode = if (o.isArray) o.get(i) else o.get(name)
+      val codecs = f(7, "codecs").fields().asScala
         .map(c => c.getKey -> c.getValue.asLong).toMap
       e.getKey.toInt -> PartLineage(
-        o.get("part_id").asInt,
-        o.get("n_blocks").asLong,
-        o.get("n_docs").asLong,
-        o.get("n_tokens").asLong,
-        o.get("raw_bytes").asLong,
-        o.get("encoded_bytes").asLong,
-        o.get("checksum_xor").asLong,
+        f(0, "part_id").asInt,
+        f(1, "n_blocks").asLong,
+        f(2, "n_docs").asLong,
+        f(3, "n_tokens").asLong,
+        f(4, "raw_bytes").asLong,
+        f(5, "encoded_bytes").asLong,
+        f(6, "checksum_xor").asLong,
         codecs,
-        o.get("wall_micros").asLong
+        f(8, "wall_micros").asLong
       )
     }.toMap
     Snapshot(
@@ -396,7 +517,11 @@ object ManifestIO {
       Option(root.get("compacted_runs")).toSeq
         .flatMap(_.elements().asScala.map(_.asInt)),
       Option(root.get("compacted_run_bytes")).toSeq
-        .flatMap(_.elements().asScala.map(_.asLong))
+        .flatMap(_.elements().asScala.map(_.asLong)),
+      Option(root.get("files")).map(_.elements().asScala.map { e =>
+        ZoneFile(e.get(0).asText, e.get(1).asInt, e.get(2).asInt,
+          if (e.size > 3) Some((e.get(3).asText, e.get(4).asText)) else None)
+      }.toSeq)
     )
   }
 }
@@ -421,7 +546,7 @@ object ResumableEncodeJob {
   ): Snapshot = {
     val spark = input.sparkSession
 
-    val base = ManifestIO.latestOrInit(spark, table) {
+    val base = ManifestIO.latestPlanned(spark, table) {
       val plan = Planner.plan(input, opts)
       // zdict auto-probe runs ONCE, at table creation: CollectLimit pulls
       // the sample from O(1) input partitions (not a corpus scan), and the
@@ -463,33 +588,40 @@ object ResumableEncodeJob {
       .getOrElse(throw new IllegalStateException(s"no snapshot in $srcTable"))
     // the zdict probe decision is a property of the DATA, so a policy
     // migration inherits it from SRC rather than re-probing
-    val base = ManifestIO.latestOrInit(spark, dstTable)(
+    val base = ManifestIO.latestPlanned(spark, dstTable)(
       Snapshot.initial(srcSnap.plan, srcSnap.zdictEnabled))
-    val pending = srcSnap.committed.toSeq.sorted.filterNot(base.committed)
+    // SRC's parts: the committed batch parts and every part a compacted run
+    // or tail file can hold (a stream-only table commits no batch part)
+    val srcFiles = ManifestIO.visible(spark, srcTable, srcSnap)
+    val srcParts = srcSnap.committed ++ srcFiles.flatMap(z =>
+      math.max(z.minPart, 0) to math.min(z.maxPart, srcSnap.plan.numParts - 1))
+    val pending = srcParts.toSeq.sorted.filterNot(base.committed)
     if (pending.isEmpty) return base
     val batch = pending.take(maxPartsPerRun)
     commitParts(spark, dstTable, base, batch.toSet)(TokenCompressor(base.replayZdict(opts))
-      .recompress(ManifestIO.blocks(spark, srcTable, srcSnap, Some(batch))))
+      .recompress(ManifestIO.blocks(spark, srcTable, srcSnap.copy(files = Some(srcFiles)),
+        Some(batch))))
   }
 
   /** Commit `batch`'s parts: delete their uncommitted leftovers (a crashed
     * predecessor's files), write `blocks` into `data/part_id=K` in one job
-    * whose tasks count the lineage, then commit the next version. Parts of
-    * the batch with zero rows still count as committed.
+    * whose tasks count the lineage and zone entries, then commit the next
+    * version with the batch's entries replaced. Parts of the batch with
+    * zero rows still count as committed.
     */
   private def commitParts(spark: SparkSession, table: String, base: Snapshot,
                           batch: Set[Int])(blocks: => Dataset[EncodedBlock]): Snapshot = {
     val f = ManifestIO.fs(spark, table)
+    val kept = ManifestIO.visible(spark, table, base)
+      .filterNot(z => z.root == ManifestIO.DataRoot && batch(z.minPart))
     batch.foreach { pid =>
       val d = new Path(ManifestIO.dataDir(table), s"part_id=$pid")
       if (f.exists(d)) f.delete(d, true)
     }
-    val lineage = ManifestIO.writeBlocks(blocks)(
-      _.write.mode(SaveMode.Append)
-        .partitionBy("part_id")
-        .parquet(ManifestIO.dataDir(table).toString))
-    val next = base.next.copy(
-      committed = base.committed ++ batch, lineage = base.lineage ++ lineage)
+    val (lineage, files) = ManifestIO.writeBlocks(blocks, table,
+      ManifestIO.dataDir(table), SaveMode.Append, partitioned = true)
+    val next = base.next.copy(committed = base.committed ++ batch,
+      lineage = base.lineage ++ lineage, files = Some(kept ++ files))
     ManifestIO.write(spark, table, next)
     next
   }

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Selective reads over the encoded table: doc_id-range queries prune at
   * three levels before any payload is decoded —
-  *  1. partition dirs (`part_id=K`) via the plan's range buckets,
+  *  1. block files via the snapshot's zone map: the plan's range buckets
+  *     pick the candidate parts, each file's [first, last] doc_id span
+  *     the files within them,
   *  2. Parquet row groups via min/max stats on first/last_doc_id
   *     (PushedFilters), and
   *  3. per-row post-decode filter.
@@ -23,10 +24,12 @@ object RangeReader {
     }
   }
 
-  /** Blocks possibly containing rows in [fromDoc, toDoc] (inclusive): the
-    * snapshot's visible blocks in the candidate parts ([[ManifestIO.blocks]]
-    * — batch data, compacted runs and the committed stream tail), then the
-    * block zone-map filter on [first_doc_id, last_doc_id].
+  /** Blocks possibly containing rows in [fromDoc, toDoc] (inclusive):
+    * [[ManifestIO.blocks]] over the range — the snapshot's zone map picks
+    * the files of the candidate parts whose [first, last] doc_id span
+    * meets the range (batch data, compacted runs and the committed stream
+    * tail), and the block zone filter on [first_doc_id, last_doc_id]
+    * prunes inside them.
     */
   def rangeBlocks(
       spark: SparkSession,
@@ -36,13 +39,14 @@ object RangeReader {
   ): Dataset[EncodedBlock] = {
     val snap = ManifestIO.latest(spark, table)
       .getOrElse(throw new IllegalStateException(s"no snapshot in $table"))
-    ManifestIO.blocks(spark, table, snap, Some(candidateParts(snap.plan, fromDoc, toDoc)))
-      .where(col("last_doc_id") >= fromDoc && col("first_doc_id") <= toDoc)
+    ManifestIO.blocks(spark, table, snap,
+      Some(candidateParts(snap.plan, fromDoc, toDoc)), Some((fromDoc, toDoc)))
   }
 
   /** Point lookup: the decoded row(s) for one doc_id — a degenerate range
-    * read, so the same three-level pruning applies (one partition dir, the
-    * few blocks whose [first,last] bracket the id, then the row filter).
+    * read, so the same three-level pruning applies (the files whose zone
+    * span brackets the id, the few blocks whose [first,last] bracket it,
+    * then the row filter).
     */
   def lookup(spark: SparkSession, table: String, docId: String): Dataset[TokenRow] =
     readRange(spark, table, docId, docId)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -33,23 +34,24 @@ object StreamingEncode {
       batchId: Long
   ): Unit = {
     val spark = batch.sparkSession
-    val base = ManifestIO.latestOrInit(spark, table)(
+    val base = ManifestIO.latestPlanned(spark, table)(
       Snapshot.initial(Planner.plan(batch, opts)))
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
     val tasks = math.min(base.plan.numParts, spark.sparkContext.defaultParallelism)
     val blocks = TokenCompressor(base.replayZdict(opts))
       .encodeWithPlan(batch, base.plan, None, tasks)
+    val kept = ManifestIO.visible(spark, table, base)
     // batch-scoped directory: deterministic overwrite on retry
-    val dir = s"$table/stream_batches/batch=$batchId"
-    val written =
-      ManifestIO.writeBlocks(blocks)(_.write.mode(SaveMode.Overwrite).parquet(dir))
+    val (written, files) = ManifestIO.writeBlocks(blocks, table,
+      new Path(table, s"${ManifestIO.TailRoot}/batch=$batchId"), SaveMode.Overwrite,
+      partitioned = false)
     // stream lineage folds every batch into part -1 (an empty micro-batch,
     // e.g. a replay after checkpoint recovery, adds zeros)
     val added = written.values.foldLeft(
       PartLineage(-1, 0L, 0L, 0L, 0L, 0L, 0L, Map.empty, 0L))(_ merge _)
     ManifestIO.write(spark, table, base.next.copy(
       lineage = base.lineage.updated(-1, base.lineage.get(-1).fold(added)(_ merge added)),
-      streamBatchId = Some(batchId)))
+      streamBatchId = Some(batchId), files = Some(kept ++ files)))
   }
 
   /** Start the ingestion stream over a directory of token parquet files. */
@@ -117,63 +119,60 @@ object StreamingEncode {
     val fs = ManifestIO.fs(spark, table)
     // sweep leftovers from crashed predecessors: run dirs no snapshot
     // references, and batch dirs already below the watermark
-    val compactedRoot = new org.apache.hadoop.fs.Path(table, "compacted")
+    val compactedRoot = new Path(table, "compacted")
     if (fs.exists(compactedRoot)) {
       val live = base.compactedRuns.map(r => s"run=$r").toSet
       fs.listStatus(compactedRoot)
         .filterNot(st => live(st.getPath.getName))
         .foreach(st => fs.delete(st.getPath, true))
     }
-    // swept-batch cleanup lists the stream_batches directory ONCE and
-    // deletes entries below the watermark — a per-historical-id exists()
-    // probe would grow O(total batches ever ingested) forever (at one
-    // batch/minute, ~0.5M probes per compaction after a year)
-    val batchesRoot = new org.apache.hadoop.fs.Path(table, "stream_batches")
-    if (fs.exists(batchesRoot)) {
-      fs.listStatus(batchesRoot).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch=") &&
-          n.stripPrefix("batch=").toLongOption.exists(_ < minBatch))
-          fs.delete(st.getPath, true)
-      }
-    }
-
-    val pendingDirs = ManifestIO.tailDirs(spark, table, base)
+    sweepBatches(fs, table, minBatch)
     // nothing new to fold, but a crashed predecessor may have left the run
     // list un-merged — the tiering pass is idempotent and cheap when level
-    if (pendingDirs.isEmpty) return mergeRuns(spark, table, base)
+    if (maxBatch < minBatch) return mergeRuns(spark, table, base)
 
-    val tail = ManifestIO.scan(spark, pendingDirs)
-      .as[EncodedBlock](Encoders.product[EncodedBlock])
+    val (pending, kept) = ManifestIO.visible(spark, table, base).partition(_.isTail)
+    val tail = ManifestIO.scanFiles(spark, table, base, pending)
     val run = base.version + 1
+    val runDir = ManifestIO.compactedDir(table, run)
     val comp = TokenCompressor(base.replayZdict(opts))
-    comp.encodeWithPlan(comp.decode(tail), base.plan, None)
-      .toDF()
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("part_id")
-      .parquet(ManifestIO.compactedDir(table, run).toString)
+    val (_, files) = ManifestIO.writeBlocks(
+      comp.encodeWithPlan(comp.decode(tail), base.plan, None),
+      table, runDir, SaveMode.Overwrite, partitioned = true)
 
     val next = base.next.copy(
       compactedBatchId = Some(maxBatch),
       compactedRuns = base.compactedRuns :+ run,
-      compactedRunBytes = runSizes(fs, table, base) :+
-        dirBytes(fs, ManifestIO.compactedDir(table, run)))
+      compactedRunBytes = runSizes(fs, table, base) :+ dirBytes(fs, runDir),
+      files = Some(kept ++ files))
     ManifestIO.write(spark, table, next)
     // post-commit cleanup; leftovers are invisible (watermark) and swept
     // by the next compaction if this delete dies mid-way
-    pendingDirs.foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    sweepBatches(fs, table, maxBatch + 1)
     mergeRuns(spark, table, next)
   }
 
-  private def dirBytes(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): Long =
+  /** Delete the batch dirs with id below `watermark`, from ONE
+    * `stream_batches` listing — a per-historical-id exists() probe would
+    * grow O(total batches ever ingested) forever (at one batch/minute,
+    * ~0.5M probes per compaction after a year).
+    */
+  private def sweepBatches(fs: FileSystem, table: String, watermark: Long): Unit = {
+    val root = new Path(table, ManifestIO.TailRoot)
+    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("batch=") && n.stripPrefix("batch=").toLongOption.exists(_ < watermark))
+        fs.delete(st.getPath, true)
+    }
+  }
+
+  private def dirBytes(fs: FileSystem, p: Path): Long =
     fs.getContentSummary(p).getLength
 
   /** Per-run on-disk sizes, from the snapshot when recorded (every commit
     * since the field existed) or from the filesystem for older tables.
     */
-  private def runSizes(fs: org.apache.hadoop.fs.FileSystem, table: String,
+  private def runSizes(fs: FileSystem, table: String,
                        snap: Snapshot): Seq[Long] =
     if (snap.compactedRunBytes.length == snap.compactedRuns.length)
       snap.compactedRunBytes
@@ -201,17 +200,17 @@ object StreamingEncode {
       sizes.last * 2 >= sizes(sizes.length - 2)) {
       val srcRuns = snap.compactedRuns.takeRight(2)
       val target = snap.version + 1
-      ManifestIO.runScans(spark, table, srcRuns)
-        .reduce(_ unionByName _)
+      val targetDir = ManifestIO.compactedDir(table, target)
+      val srcRoots = srcRuns.map(ManifestIO.runRoot).toSet
+      val (src, kept) = ManifestIO.visible(spark, table, snap).partition(z => srcRoots(z.root))
+      val (_, files) = ManifestIO.writeBlocks(ManifestIO.scanFiles(spark, table, snap, src)
         .repartition(col("part_id"))
-        .sortWithinPartitions("part_id", "first_doc_id")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("part_id")
-        .parquet(ManifestIO.compactedDir(table, target).toString)
-      val merged = dirBytes(fs, ManifestIO.compactedDir(table, target))
+        .sortWithinPartitions("part_id", "first_doc_id"),
+        table, targetDir, SaveMode.Overwrite, partitioned = true)
       snap = snap.next.copy(
         compactedRuns = snap.compactedRuns.dropRight(2) :+ target,
-        compactedRunBytes = sizes.dropRight(2) :+ merged)
+        compactedRunBytes = sizes.dropRight(2) :+ dirBytes(fs, targetDir),
+        files = Some(kept ++ files))
       ManifestIO.write(spark, table, snap)
       srcRuns.foreach(r =>
         fs.delete(ManifestIO.compactedDir(table, r), true))

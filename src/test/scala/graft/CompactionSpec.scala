@@ -147,4 +147,20 @@ class CompactionSpec extends AnyFunSuite {
     assert(s2.compactedRuns.size == 1)
     assert(decodedMap(table).size == 400)
   }
+
+  test("time travel to a version whose tail compaction deleted fails, naming the version") {
+    val root = Files.createTempDirectory("graft_compact_tt").toString
+    val table = s"$root/t"
+    val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12)
+    StreamingEncode.appendBatch(batchRows(0, 300), table, opts, batchId = 0L)
+    val v = ManifestIO.latest(spark, table).get.version
+    assert(ResumableEncodeJob.readBlocks(spark, table, Some(v)).collect()
+      .map(_.n_docs.toLong).sum == 300L)
+    StreamingEncode.compact(spark, table, opts)
+    val e = intercept[IllegalStateException](
+      ResumableEncodeJob.readBlocks(spark, table, Some(v)).count())
+    assert(e.getMessage.contains(s"snapshot v$v "), e.getMessage)
+    // the latest version still reads every row
+    assert(decodedMap(table).size == 300)
+  }
 }

@@ -138,9 +138,14 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(snap.compactedRuns.size == 1 && snap.committed.nonEmpty)
     val df = RangeReader.rangeBlocks(spark, table, "", "￿").toDF()
     val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+    // one scan per layout with a selected file (a full span selects all)
+    val named = snap.files.get
+    assert(named.map(_.root).distinct.size == 3)
     assert(scans.size == 3, s"expected data + run + tail scans:\n${df.queryExecution.sparkPlan}")
-    // the tail relation covers both uncompacted batch dirs
-    assert(scans.map(_.relation.location.rootPaths.size).sorted == Seq(1, 1, 2))
+    // each scan's roots are exactly the .parquet files the snapshot names
+    val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toUri.getPath))
+    assert(roots.forall(_.endsWith(".parquet")), roots)
+    assert(roots.sorted == named.map(z => s"$table/${z.path}").sorted)
   }
 
   test("incrementalPairs: committed sigs scanned once in place, cand side broadcast") {

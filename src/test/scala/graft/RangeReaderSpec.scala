@@ -164,4 +164,68 @@ class RangeReaderSpec extends AnyFunSuite {
     val same = back == want
     assert(same, s"migrated ${back.size} rows of ${want.size}")
   }
+
+  private def mixedTable(name: String): String = {
+    import org.apache.spark.sql.Encoders
+    val table = s"${Files.createTempDirectory(name)}/t"
+    val opts = EncodeOptions(numParts = 8)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    ResumableEncodeJob.run(rows(0, 800), table, opts)
+    StreamingEncode.appendBatch(rows(800, 900), table, opts, batchId = 0L)
+    StreamingEncode.compact(spark, table, opts)
+    StreamingEncode.appendBatch(rows(900, 960), table, opts, batchId = 1L)
+    StreamingEncode.appendBatch(rows(960, 1000), table, opts, batchId = 2L)
+    table
+  }
+
+  test("a point lookup discovers exactly the files the zone map selects") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val table = mixedTable("graft_zone_lookup")
+    val snap = ManifestIO.latest(spark, table).get
+    val named = snap.files.get
+    assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
+    // one doc from each layout: batch data, the compacted run, the tail
+    Seq(17L, 850L, 930L, 990L).foreach { i =>
+      val id = Fixtures.row(42L, i).doc_id
+      val cands = RangeReader.candidateParts(snap.plan, id, id)
+      val selected = named.count(_.overlaps(Some(cands), Some((id, id))))
+      val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      val got = RangeReader.lookup(spark, table, id).collect()
+      val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
+      assert(got.length == 1 && got.head.doc_id == id)
+      assert(selected >= 1 && selected < named.size, s"doc $i: $selected of ${named.size} files")
+      assert(discovered == selected, s"doc $i: discovered $discovered files, zone map selects $selected")
+    }
+  }
+
+  test("a snapshot without a zone map reads every row; its next commit writes one") {
+    import org.apache.spark.sql.Encoders
+    val table = mixedTable("graft_zone_legacy")
+    LegacyTables.stripZoneMap(spark, table)
+    def check(step: String, n: Long): Unit = {
+      val want = (0L until n).map(i => Fixtures.row(42L, i).doc_id).sorted
+      val viaBlocks = ResumableEncodeJob.readBlocks(spark, table)
+        .collect().flatMap(_.doc_ids).sorted.toSeq
+      val viaDecoded = StreamingEncode.readDecoded(spark, table)
+        .collect().map(_.doc_id).sorted.toSeq
+      val viaRange = RangeReader.readRange(spark, table, want.head, want.last)
+        .collect().map(_.doc_id).sorted.toSeq
+      val wrong = Seq("readBlocks" -> viaBlocks, "readDecoded" -> viaDecoded,
+        "readRange" -> viaRange).collect { case (n, got) if got != want => s"$n ${got.size}" }
+      assert(wrong.isEmpty, s"$step: ${wrong.mkString(", ")} rows of ${want.size}")
+      val id = want(want.size / 3)
+      assert(RangeReader.lookup(spark, table, id).collect().map(_.doc_id).toSeq == Seq(id))
+    }
+    check("legacy snapshot", 1000)
+    // the first commit on the table lists its files once and records them
+    StreamingEncode.appendBatch(spark.range(1000, 1050)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow]),
+      table, EncodeOptions(numParts = 8), batchId = 3L)
+    val snap = ManifestIO.latest(spark, table).get
+    assert(snap.files.exists(_.exists(_.bounds.isEmpty)), "listed entries keep open bounds")
+    check("first commit after", 1050)
+    StreamingEncode.compact(spark, table, EncodeOptions(numParts = 8))
+    check("compaction after", 1050)
+  }
 }

@@ -148,6 +148,9 @@ class ResumeSpec extends AnyFunSuite {
     f.rename(new org.apache.hadoop.fs.Path(s"$tmp/data"),
       new org.apache.hadoop.fs.Path(dataDir))
     assert(!spark.read.parquet(dataDir).columns.contains("zdict"))
+    // a table that old also predates the snapshot zone map (the rewrite
+    // above renamed every file the zone map names)
+    LegacyTables.stripZoneMap(spark, dir)
     val blocks = ResumableEncodeJob.readBlocks(spark, dir)
     val back = TokenCompressor(EncodeOptions(numParts = 3)).decode(blocks)
       .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
@@ -232,5 +235,77 @@ class ResumeSpec extends AnyFunSuite {
     // the carried watermark still makes a replayed batch a no-op
     StreamingEncode.appendBatch(rows(2000, 2200), dir, opts, batchId = 0L)
     assert(ManifestIO.latest(spark, dir).get.version == s2.version)
+  }
+
+  test("migrate of a stream-only table carries every row, before and after compaction") {
+    import org.apache.spark.sql.Encoders
+    val root = Files.createTempDirectory("graft_mig_stream").toString
+    val src = s"$root/src"
+    val opts = EncodeOptions(numParts = 4)
+    val input = spark.range(0, 300)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    val want = input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
+    def migrated(dst: String) = {
+      ResumableEncodeJob.migrate(spark, src, dst, EncodeOptions(codecPolicy = "plain"))
+      StreamingEncode.readDecoded(spark, dst).collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
+    }
+    StreamingEncode.appendBatch(input, src, opts, batchId = 0L)
+    val tail = migrated(s"$root/dst_tail")
+    assert(tail.size == 300, s"migrated ${tail.size} of 300 tail rows")
+    assert(tail == want)
+    StreamingEncode.compact(spark, src, opts)
+    val run = migrated(s"$root/dst_run")
+    assert(run.size == 300, s"migrated ${run.size} of 300 compacted rows")
+    assert(run == want)
+  }
+
+  test("a table created by IvfIndex.build plans on its first run and keeps the centroids") {
+    import org.apache.spark.sql.Encoders
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_ivf_first").toString
+    val corpus = (0 until 32).map(i =>
+      (i.toLong, Array.tabulate(8)(d => math.cos(i * 8 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val cents = SimSearch.IvfIndex.build(corpus, dir, kCells = 4, iters = 2)
+    assert(ManifestIO.latest(spark, dir).get.plan.numParts == 0)
+    val input = spark.range(0, 300)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    val snap = ResumableEncodeJob.run(input, dir, EncodeOptions(numParts = 4))
+    assert(snap.plan.numParts > 0 && snap.committed.size == snap.plan.numParts)
+    assert(snap.ivfCentroids.exists(_.zip(cents).forall { case (a, b) => a.sameElements(b) }),
+      "the first run dropped the IVF centroids")
+    val back = StreamingEncode.readDecoded(spark, dir).collect()
+      .map(r => r.doc_id -> r.tokens.toSeq).toMap
+    assert(back.size == 300, s"read back ${back.size} of 300 rows")
+    assert(back == input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
+  }
+
+  test("snapshot JSON: the compact form round-trips; the older pretty form still reads") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val plan = PartitionPlan(Array("m"), Array(1, 1), Array(0, 1), 2)
+    val lin = PartLineage(1, 2, 10, 1000, 4000, 900, -7L, Map("rle" -> 1L, "dict" -> 1L), 555L)
+    val zones = Seq(
+      ZoneFile("data/part_id=1/part-00001-a.c000.snappy.parquet", 1, 1, Some(("n", "q"))),
+      ZoneFile("stream_batches/batch=0/part-00000-b.c000.snappy.parquet", 0, 1))
+    val snap = Snapshot(3, 1234567L, plan, Set(1), Map(1 -> lin), streamBatchId = Some(0L),
+      files = Some(zones))
+    val json = ManifestIO.toJson(snap)
+    assert(!json.contains("\n"), "snapshots are written compact")
+    val back = ManifestIO.fromJson(mapper.readTree(json))
+    assert(back.lineage == Map(1 -> lin) && back.files.contains(zones))
+    assert(back.streamBatchId.contains(0L) && back.committed == Set(1))
+    // the pretty-printed form with lineage objects, as older tables have it
+    val older = """{
+      |  "version" : 3, "committed_at" : 1234567,
+      |  "plan" : { "boundaries" : [ "m" ], "saltOf" : [ 1, 1 ],
+      |    "partOffset" : [ 0, 1 ], "numParts" : 2 },
+      |  "committed" : [ 1 ],
+      |  "lineage" : { "1" : { "part_id" : 1, "n_blocks" : 2, "n_docs" : 10,
+      |    "n_tokens" : 1000, "raw_bytes" : 4000, "encoded_bytes" : 900,
+      |    "checksum_xor" : -7, "wall_micros" : 555,
+      |    "codecs" : { "dict" : 1, "rle" : 1 } } }
+      |}""".stripMargin
+    val old = ManifestIO.fromJson(mapper.readTree(older))
+    assert(old.lineage == Map(1 -> lin) && old.files.isEmpty && old.plan.numParts == 2)
   }
 }
