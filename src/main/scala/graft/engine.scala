@@ -241,7 +241,9 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
   /** Encode restricted to the given part ids (resume path); `plan` fixes the
     * doc_id range boundaries so part ids are stable across runs.
     * `tasks` > 0 packs the parts into that many tasks (contiguous runs of
-    * parts); blocks are identical to one part per task, the default.
+    * parts, see [[TokenCompressor.writeTasks]] for the table writers'
+    * count); blocks, block ids included, are identical to one part per
+    * task, the default.
     */
   def encodeWithPlan(
       ds: Dataset[TokenRow],
@@ -346,6 +348,14 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
 object TokenCompressor {
   def apply(opts: EncodeOptions = EncodeOptions.default): TokenCompressor =
     new TokenCompressor(opts)
+
+  /** The one task-count rule of the table writers (`run`, `appendBatch`,
+    * `compact`): `parts` planned parts packed into at most one task per
+    * core. Blocks do not depend on it (part-local block ids, per-part
+    * table cache), only task and file counts do.
+    */
+  def writeTasks(spark: SparkSession, parts: Int): Int =
+    math.min(parts, spark.sparkContext.defaultParallelism)
 }
 
 /** Executor-side block encode/decode kernels (pure functions, no Spark
@@ -375,8 +385,10 @@ object BlockEncoder {
 
   /** Groups an iterator of (part_id, row), already sorted by (part_id,
     * doc_id), into blocks of ~opts.blockTokens tokens and encodes each.
-    * Lazy: holds at most one block of rows in memory. The table cache
-    * restarts at each part, so blocks depend only on their own part's rows.
+    * Lazy: holds at most one block of rows in memory. The table cache and
+    * the block sequence restart at each part, so blocks — block_id
+    * `(part_id << 40) | seq` included — depend only on their own part's
+    * rows, never on which task encodes them.
     */
   def encodePartition(
       it: Iterator[(Int, TokenRow)],
@@ -405,6 +417,7 @@ object BlockEncoder {
         release()
         cache = new TableCache
         cachePart = partId
+        blockSeq = 0L
       }
       val rows = scala.collection.mutable.ArrayBuffer.empty[TokenRow]
       var tok = 0L
@@ -414,8 +427,7 @@ object BlockEncoder {
         rows += r
         tok += r.tokens.length
       }
-      val taskPart = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
-      val bid = (taskPart.toLong << 40) | blockSeq
+      val bid = (partId.toLong << 40) | blockSeq
       blockSeq += 1
       encodeBlock(partId, bid, rows.toArray, opts, cache)
     }

@@ -534,7 +534,11 @@ object ManifestIO {
   */
 object ResumableEncodeJob {
 
-  /** @param maxPartsPerRun bound on partitions encoded by this invocation
+  /** Encodes the pending parts (at most `maxPartsPerRun` of them) in one
+    * write job, packed into at most one task per core
+    * ([[TokenCompressor.writeTasks]]).
+    *
+    * @param maxPartsPerRun bound on partitions encoded by this invocation
     *                       (tests use it to simulate interruption)
     * @return the latest snapshot after this run
     */
@@ -565,7 +569,8 @@ object ResumableEncodeJob {
     val batch = pending.take(maxPartsPerRun).toSet
     // the recorded probe decision (this run's or an earlier run's) wins
     commitParts(spark, table, base, batch)(TokenCompressor(base.replayZdict(opts))
-      .encodeWithPlan(input, base.plan, Some(batch)))
+      .encodeWithPlan(input, base.plan, Some(batch),
+        TokenCompressor.writeTasks(spark, batch.size)))
   }
 
   /** Resumable table-level codec-policy migration: re-encode SRC's

@@ -34,6 +34,11 @@ final case class TokenRow(
   */
 final case class EncodedBlock(
     part_id: Int,
+    // (part_id << 40) | seq, seq counting from 0 the blocks a task encodes
+    // from one contiguous run of the part's rows: independent of which task
+    // that is (write packing, resume batches, migrate's scan splits), and
+    // unique within a write that gives each part one run, as every
+    // encodeWithPlan write does
     block_id: Long,
     codec: String,
     outer: String, // "zstd" | "none" — entropy frame around the codec bytes

@@ -25,7 +25,8 @@ object StreamingEncode {
   /** Append one micro-batch of token rows as encoded blocks. Blocks are
     * routed with the table's persistent partition plan (from snapshot v0)
     * so stream and batch writes cluster identically, packed into at most
-    * `defaultParallelism` write tasks (same blocks, far fewer tasks/files).
+    * `defaultParallelism` write tasks ([[TokenCompressor.writeTasks]]; same
+    * blocks, far fewer tasks/files).
     */
   def appendBatch(
       batch: Dataset[TokenRow],
@@ -37,9 +38,8 @@ object StreamingEncode {
     val base = ManifestIO.latestPlanned(spark, table)(
       Snapshot.initial(Planner.plan(batch, opts)))
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
-    val tasks = math.min(base.plan.numParts, spark.sparkContext.defaultParallelism)
-    val blocks = TokenCompressor(base.replayZdict(opts))
-      .encodeWithPlan(batch, base.plan, None, tasks)
+    val blocks = TokenCompressor(base.replayZdict(opts)).encodeWithPlan(batch, base.plan,
+      None, TokenCompressor.writeTasks(spark, base.plan.numParts))
     val kept = ManifestIO.visible(spark, table, base)
     // batch-scoped directory: deterministic overwrite on retry
     val (written, files) = ManifestIO.writeBlocks(blocks, table,
@@ -88,7 +88,8 @@ object StreamingEncode {
     * paid thousands of times over). Compaction decodes the batches at or
     * below the current streamBatchId and re-encodes them with the table's
     * PERSISTENT plan (same routing law as every batch write → identical
-    * clustering, one exchange over just the compacted span, doc_id-sorted
+    * clustering, one exchange over just the compacted span into at most
+    * one task per core ([[TokenCompressor.writeTasks]]), doc_id-sorted
     * full-size blocks with table reuse re-amortized), writes the result to
     * an immutable `compacted/run=V` directory, then commits a snapshot
     * whose `compactedBatchId` watermark makes the run visible and the
@@ -137,7 +138,8 @@ object StreamingEncode {
     val runDir = ManifestIO.compactedDir(table, run)
     val comp = TokenCompressor(base.replayZdict(opts))
     val (_, files) = ManifestIO.writeBlocks(
-      comp.encodeWithPlan(comp.decode(tail), base.plan, None),
+      comp.encodeWithPlan(comp.decode(tail), base.plan, None,
+        TokenCompressor.writeTasks(spark, base.plan.numParts)),
       table, runDir, SaveMode.Overwrite, partitioned = true)
 
     val next = base.next.copy(

@@ -228,4 +228,41 @@ class RangeReaderSpec extends AnyFunSuite {
     StreamingEncode.compact(spark, table, EncodeOptions(numParts = 8))
     check("compaction after", 1050)
   }
+
+  test("zone entries of packed partitioned writes match the blocks in each file") {
+    import org.apache.spark.sql.Encoders
+    val table = s"${Files.createTempDirectory("graft_zone_packed")}/t"
+    // 8 parts on local[4]: every packed write task holds 2 parts, so one
+    // task writes several part_id=K dirs and its spans must be split per dir
+    val opts = EncodeOptions(numParts = 8)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    ResumableEncodeJob.run(rows(0, 800), table, opts)
+    StreamingEncode.appendBatch(rows(800, 900), table, opts, batchId = 0L)
+    StreamingEncode.appendBatch(rows(900, 1000), table, opts, batchId = 1L)
+    StreamingEncode.compact(spark, table, opts)
+    StreamingEncode.appendBatch(rows(1000, 1050), table, opts, batchId = 2L)
+    val snap = ManifestIO.latest(spark, table).get
+    val named = snap.files.get
+    assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
+    val tasks = named.filterNot(_.isTail).groupBy(z => (z.root, z.path.split('/').last.take(10)))
+    assert(tasks.exists(_._2.size >= 2), s"no task wrote two part dirs: ${named.map(_.path)}")
+
+    named.foreach { z =>
+      val bs = ManifestIO.scanFiles(spark, table, snap, Seq(z))
+        .select("part_id", "first_doc_id", "last_doc_id").collect()
+      assert(bs.nonEmpty, s"${z.path} holds no block")
+      val parts = bs.map(_.getInt(0))
+      val first = bs.map(_.getString(1)).min(DocIdOrder)
+      val last = bs.map(_.getString(2)).max(DocIdOrder)
+      assert((z.minPart, z.maxPart) == ((parts.min, parts.max)), s"${z.path} part span")
+      assert(z.bounds.contains((first, last)), s"${z.path}: ${z.bounds} vs ($first, $last)")
+    }
+    (0L until 1050L by 50).foreach { i =>
+      val want = Fixtures.row(42L, i)
+      val got = RangeReader.lookup(spark, table, want.doc_id).collect()
+      assert(got.length == 1 && got.head.doc_id == want.doc_id &&
+        got.head.tokens.sameElements(want.tokens), s"lookup of doc $i")
+    }
+  }
 }

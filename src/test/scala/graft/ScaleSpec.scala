@@ -24,22 +24,34 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("encodeWithPlan uses every shuffle partition (no 1/e idle tasks)") {
-    import org.apache.spark.sql.Encoders
     val ds = Fixtures.tokenTable(spark, 3000L)
     val opts = EncodeOptions(numParts = 16, blockTokens = 1 << 14)
     val plan = Planner.plan(ds, opts)
-    val blocks = TokenCompressor(opts).encodeWithPlan(ds, plan, None).toDF()
-    // every planned part produced blocks, and block ids show exactly one
-    // task partition per part (identity placement)
-    val parts = blocks.select("part_id").distinct().collect().map(_.getInt(0)).sorted
-    assert(parts.length == plan.numParts)
-    val taskOfPart = blocks
-      .select(col("part_id"), (col("block_id") / (1L << 40)).cast("int").as("task"))
-      .distinct().collect().map(r => (r.getInt(0), r.getInt(1)))
-    assert(taskOfPart.groupBy(_._1).forall(_._2.length == 1),
+    // (part, task) pairs, the task read from the encode output's own
+    // partition (block ids are part-local, so they cannot name it)
+    def placement(tasks: Int): Array[(Int, Int)] =
+      TokenCompressor(opts).encodeWithPlan(ds, plan, None, tasks).toDF()
+        .select(col("part_id"), spark_partition_id().as("task"))
+        .distinct().collect().map(r => (r.getInt(0), r.getInt(1)))
+
+    // unpacked: every planned part produced blocks, in exactly one task
+    // partition of its own (identity placement)
+    val unpacked = placement(0)
+    assert(unpacked.map(_._1).distinct.length == plan.numParts)
+    assert(unpacked.groupBy(_._1).forall(_._2.length == 1),
       "one task partition per planned part")
-    assert(taskOfPart.map(_._2).distinct.length == plan.numParts,
+    assert(unpacked.map(_._2).distinct.length == plan.numParts,
       "no two parts share a task partition")
+
+    // packed: 16 parts into 4 tasks, each one contiguous run of parts
+    val packed = placement(4)
+    assert(packed.map(_._1).distinct.length == plan.numParts)
+    assert(packed.groupBy(_._1).forall(_._2.length == 1), "a part never spans two tasks")
+    val runs = packed.groupBy(_._2).map { case (t, ps) => t -> ps.map(_._1).sorted }
+    assert(runs.keySet == (0 until 4).toSet, s"idle task: $runs")
+    runs.foreach { case (t, ps) =>
+      assert(ps.last - ps.head + 1 == ps.length, s"task $t holds non-contiguous parts $ps")
+    }
   }
 
   test("planner auto-sampling: bounded driver sample, same plan on small input") {
