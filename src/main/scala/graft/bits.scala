@@ -30,14 +30,6 @@ object Bits {
     out
   }
 
-  def bytesToIntsLE(b: Array[Byte]): Array[Int] = {
-    require(b.length % 4 == 0, s"byte length ${b.length} not multiple of 4")
-    val out = new Array[Int](b.length / 4)
-    var i = 0
-    while (i < out.length) { out(i) = readIntLE(b, i * 4); i += 1 }
-    out
-  }
-
   // ---------------- varint (LEB128, unsigned over Long) ----------------
 
   def varintSize(v: Long): Int = {
@@ -110,9 +102,10 @@ object Bits {
   }
 
   /** Random-access unpack: values [startIdx, startIdx+count) of a
-    * `width`-bit LSB-first packed stream that begins at byte `inPos`.
-    * Seeks directly to bit offset startIdx*width — the kernel behind
-    * decode-slice point lookups (O(result) work, not O(block)).
+    * `width`-bit LSB-first packed stream that begins at byte `inPos`, into
+    * out(from..). Seeks directly to bit offset startIdx*width — the kernel
+    * behind every fixed-stride decode (O(result) work, not O(block)); a
+    * full unpack is startIdx = 0.
     */
   def unpackRange(in: Array[Byte], inPos: Int, width: Int,
                   startIdx: Int, count: Int,
@@ -131,26 +124,6 @@ object Bits {
     val mask = if (width == 32) 0xffffffffL else (1L << width) - 1
     var i = 0
     while (i < count) {
-      while (accBits < width) {
-        acc |= (in(pos).toLong & 0xff) << accBits
-        pos += 1; accBits += 8
-      }
-      out(from + i) = (acc & mask).toInt
-      acc >>>= width; accBits -= width
-      i += 1
-    }
-  }
-
-  /** Unpacks n values of `width` bits from in(pos..) into out(from..). */
-  def unpack(in: Array[Byte], inPos: Int, n: Int, width: Int,
-             out: Array[Int], from: Int): Unit = {
-    if (width == 0) { java.util.Arrays.fill(out, from, from + n, 0); return }
-    var acc = 0L
-    var accBits = 0
-    var pos = inPos
-    val mask = if (width == 32) 0xffffffffL else (1L << width) - 1
-    var i = 0
-    while (i < n) {
       while (accBits < width) {
         acc |= (in(pos).toLong & 0xff) << accBits
         pos += 1; accBits += 8

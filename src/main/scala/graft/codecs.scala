@@ -9,6 +9,9 @@ import Bits._
   * 869-881): every codec is a pure reversible transform obeying
   * `decode(encode(x), x.length) == x` bit-identically — the reference's
   * round-trip law (/root/reference/src/test/common/EncodeToolsRunner.ts:103-129).
+  *
+  * Each codec has ONE decoder, [[decodeRange]]: random access is the
+  * primitive (FSST's premise), and a full decode is its [0, n) case.
   */
 trait TokenCodec extends Serializable {
   def id: Int
@@ -21,14 +24,41 @@ trait TokenCodec extends Serializable {
   def estimate(s: BlockStats): Long
 
   def encode(tokens: Array[Int]): Array[Byte]
-  def decode(bytes: Array[Byte], n: Int): Array[Int]
 
-  /** Decode ONLY tokens [from, until) of an n-token payload when the wire
-    * layout supports random access (fixed-stride codecs); None means the
-    * caller must decode fully (sequential codecs: rle, fsst). Powers
-    * point/range lookups that touch O(result) tokens instead of O(block).
+  /** Tokens [from, until) of an n-token payload. Every codec reads only
+    * what the range needs: fixed-stride layouts (plain, bitpack, for,
+    * dict) seek straight to `from`, rle skips ahead over run headers,
+    * delta scans its prefix but never the tail, and fsst resumes from its
+    * in-body sync points. Powers point/range lookups that touch O(result)
+    * tokens instead of O(block).
     */
-  def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = None
+  def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int]
+
+  final def decode(bytes: Array[Byte], n: Int): Array[Int] = decodeRange(bytes, n, 0, n)
+
+  /** Rejects a range outside [0, n) before any token is touched. */
+  protected final def checkRange(n: Int, from: Int, until: Int): Unit =
+    if (from < 0 || from > until || until > n)
+      throw new InvalidCodecException(s"$name: range [$from, $until) outside [0, $n)")
+
+  /** Width of a fixed-stride payload `[header ending in width:u8][count
+    * values packed at width]`, after checking in O(1) that the width is at
+    * most 32 and that the payload is exactly that long. A range read
+    * passes the declared count, so it rejects exactly what a full decode
+    * rejects, and no token loop can run off the end of `bytes`.
+    */
+  protected final def packedWidth(bytes: Array[Byte], header: Int, count: Int): Int = {
+    if (bytes.length < header)
+      throw new InvalidCodecException(
+        s"$name: ${bytes.length}-byte payload is shorter than its $header-byte header")
+    val w = bytes(header - 1) & 0xff
+    if (w > 32) throw new InvalidCodecException(s"$name: width $w > 32")
+    val size = header + (count.toLong * w + 7) / 8
+    if (bytes.length != size)
+      throw new InvalidCodecException(
+        s"$name: $count values at width $w take $size bytes, payload has ${bytes.length}")
+    w
+  }
 }
 
 /** Codecs whose encoding factors into (symbol table, body). The engine
@@ -39,23 +69,46 @@ trait TokenCodec extends Serializable {
   * row still carries its table — independently decodable, so pruned range
   * reads never need a second lookup. Training is also the dominant encode
   * CPU for fsst, so reuse buys throughput as well as ratio.
+  *
+  * A table codec implements one body decoder, [[decodeBody]], over a parsed
+  * table and a body at a byte offset. It serves both layouts: the inline
+  * `table ++ body` of [[encode]] ([[decodeRange]]) and the separate
+  * `symtab` column ([[decodeWithRange]]).
   */
 trait TableCodec extends TokenCodec {
   type Table <: AnyRef
 
   def train(tokens: Array[Int]): Table
   def tableBytes(t: Table): Array[Byte]
-  def tableFromBytes(b: Array[Byte]): Table
+
+  /** Parses a table at `cur.pos`, leaving `cur` just past it. */
+  def readTable(bytes: Array[Byte], cur: Cursor): Table
+
+  final def tableFromBytes(b: Array[Byte]): Table = readTable(b, new Cursor(0))
 
   /** Encode with an existing table; None when the table cannot express
     * this block (e.g. dictionary miss) — caller retrains.
     */
   def encodeWith(t: Table, tokens: Array[Int]): Option[Array[Byte]]
-  def decodeWith(tableB: Array[Byte], body: Array[Byte], n: Int): Array[Int]
 
-  /** Slice variant of decodeWith; None when the body is sequential. */
-  def decodeWithSlice(tableB: Array[Byte], body: Array[Byte], n: Int,
-                      from: Int, until: Int): Option[Array[Int]] = None
+  /** Tokens [from, until) of the n-token body that starts at byte `off`
+    * of `bytes` and runs to its end, decoded against table `t`.
+    */
+  def decodeBody(t: Table, bytes: Array[Byte], off: Int, n: Int,
+                 from: Int, until: Int): Array[Int]
+
+  final def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int] = {
+    val cur = new Cursor(0)
+    val t = readTable(bytes, cur)
+    decodeBody(t, bytes, cur.pos, n, from, until)
+  }
+
+  final def decodeWithRange(tableB: Array[Byte], body: Array[Byte], n: Int,
+                            from: Int, until: Int): Array[Int] =
+    decodeBody(tableFromBytes(tableB), body, 0, n, from, until)
+
+  final def decodeWith(tableB: Array[Byte], body: Array[Byte], n: Int): Array[Int] =
+    decodeWithRange(tableB, body, n, 0, n)
 
   /** Quick should-we-retrain heuristic given the cached table and the new
     * block's stats (avoids paying a doomed encodeWith attempt).
@@ -71,16 +124,14 @@ object PlainCodec extends TokenCodec {
   val id = 0; val name = "plain"
   def estimate(s: BlockStats): Long = 4L * s.n
   def encode(tokens: Array[Int]): Array[Byte] = intsToBytesLE(tokens)
-  def decode(bytes: Array[Byte], n: Int): Array[Int] = {
-    val out = bytesToIntsLE(bytes)
-    require(out.length == n, s"plain: expected $n ints, got ${out.length}")
-    out
-  }
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = {
+  def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int] = {
+    checkRange(n, from, until)
+    if (bytes.length != 4L * n)
+      throw new InvalidCodecException(s"plain: expected $n ints, got ${bytes.length} bytes")
     val out = new Array[Int](until - from)
     var i = from
     while (i < until) { out(i - from) = readIntLE(bytes, i * 4); i += 1 }
-    Some(out)
+    out
   }
 }
 
@@ -105,17 +156,12 @@ object BitPackCodec extends TokenCodec {
     pack(tokens, 0, tokens.length, w, out, 1)
     out
   }
-  def decode(bytes: Array[Byte], n: Int): Array[Int] = {
-    val w = bytes(0) & 0xff
-    val out = new Array[Int](n)
-    unpack(bytes, 1, n, w, out, 0)
-    out
-  }
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = {
-    val w = bytes(0) & 0xff
+  def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int] = {
+    checkRange(n, from, until)
+    val w = packedWidth(bytes, 1, n)
     val out = new Array[Int](until - from)
     unpackRange(bytes, 1, w, from, until - from, out, 0)
-    Some(out)
+    out
   }
 }
 
@@ -151,23 +197,15 @@ object ForCodec extends TokenCodec {
     pack(deltas, 0, deltas.length, w, out, 5)
     out
   }
-  def decode(bytes: Array[Byte], n: Int): Array[Int] = {
+  def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int] = {
+    checkRange(n, from, until)
+    val w = packedWidth(bytes, 5, n)
     val mn = readIntLE(bytes, 0)
-    val w = bytes(4) & 0xff
-    val out = new Array[Int](n)
-    unpack(bytes, 5, n, w, out, 0)
-    var i = 0
-    while (i < n) { out(i) += mn; i += 1 }
-    out
-  }
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = {
-    val mn = readIntLE(bytes, 0)
-    val w = bytes(4) & 0xff
     val out = new Array[Int](until - from)
     unpackRange(bytes, 5, w, from, until - from, out, 0)
     var i = 0
     while (i < out.length) { out(i) += mn; i += 1 }
-    Some(out)
+    out
   }
 }
 
@@ -179,7 +217,7 @@ object ForCodec extends TokenCodec {
   * timestamp-like token ids — where the step is tiny but the RANGE spans
   * the whole space, which defeats FOR (range-width) and bitpack
   * (magnitude-width). The prefix dependency makes decode sequential, but a
-  * slice still skips the TAIL: decodeSlice scans deltas only up to `until`
+  * range still skips the TAIL: decodeRange scans deltas only up to `until`
   * and materializes only [from, until).
   */
 object DeltaCodec extends TokenCodec {
@@ -205,37 +243,22 @@ object DeltaCodec extends TokenCodec {
     pack(zz, 0, zz.length, w, out, 5)
     out
   }
-  def decode(bytes: Array[Byte], n: Int): Array[Int] = {
-    val out = new Array[Int](n)
-    if (n == 0) return out
-    val w = bytes(4) & 0xff
-    var prev = readIntLE(bytes, 0)
-    out(0) = prev
-    val zz = new Array[Int](n - 1)
-    unpack(bytes, 5, n - 1, w, zz, 0)
-    var i = 1
-    while (i < n) {
-      prev = prev + unzigzag(zz(i - 1).toLong & 0xffffffffL)
-      out(i) = prev
-      i += 1
-    }
-    out
-  }
 
-  /** Prefix-bounded slice: the running sum needs every delta BEFORE `until`
+  /** Prefix-bounded: the running sum needs every delta BEFORE `until`
     * (O(until) scan — unavoidable for a prefix code), but the tail is never
     * unpacked and only [from, until) is materialized. A point lookup early
     * in a large block therefore touches O(position), not O(blockTokens).
     */
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = {
+  def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int] = {
+    checkRange(n, from, until)
+    val w = packedWidth(bytes, 5, math.max(n - 1, 0))
     val out = new Array[Int](until - from)
-    if (until - from == 0) return Some(out)
-    val w = bytes(4) & 0xff
+    if (until - from == 0) return out
     var prev = readIntLE(bytes, 0)
     if (from == 0) out(0) = prev
     if (until > 1) {
       val zz = new Array[Int](until - 1)
-      unpack(bytes, 5, until - 1, w, zz, 0)
+      unpackRange(bytes, 5, w, 0, until - 1, zz, 0)
       var i = 1
       while (i < until) {
         prev = prev + unzigzag(zz(i - 1).toLong & 0xffffffffL)
@@ -243,7 +266,7 @@ object DeltaCodec extends TokenCodec {
         i += 1
       }
     }
-    Some(out)
+    out
   }
 }
 
@@ -269,38 +292,24 @@ object RleCodec extends TokenCodec {
     }
     java.util.Arrays.copyOf(out, pos)
   }
-  def decode(bytes: Array[Byte], n: Int): Array[Int] = {
-    val out = new Array[Int](n)
-    val cur = new Cursor(0)
-    var i = 0
-    while (i < n) {
-      val v = unzigzag(readVarint(bytes, cur))
-      val run = readVarint(bytes, cur).toInt
-      if (run <= 0 || i + run > n)
-        throw new InvalidCodecException(
-          s"rle: malformed run length $run at token $i of $n")
-      java.util.Arrays.fill(out, i, i + run, v)
-      i += run
-    }
-    out
-  }
 
   /** Run headers allow skip-ahead: walk (value, runLen) pairs, fill only
     * the overlap with [from, until). Cost is O(runs up to `until`) varint
     * reads and O(slice) writes — rle is the most-selected codec in the
-    * bench mix, so point lookups on rle blocks no longer pay a full-block
+    * bench mix, so point lookups on rle blocks never pay a full-block
     * token materialization.
     */
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = {
+  def decodeRange(bytes: Array[Byte], n: Int, from: Int, until: Int): Array[Int] = {
+    checkRange(n, from, until)
     val out = new Array[Int](until - from)
     val cur = new Cursor(0)
     var i = 0
     while (i < until) {
       val v = unzigzag(readVarint(bytes, cur))
       val run = readVarint(bytes, cur).toInt
-      // a zero/negative run in a corrupt payload would pin i forever (the
-      // full decode at least terminates at the byte cursor) — fail loud
-      // like the other decoders instead of hanging the executor
+      // a zero/negative run in a corrupt payload would pin i forever, and
+      // one past n would write past the block — fail loud like the other
+      // decoders instead of hanging the executor
       if (run <= 0 || i + run > n)
         throw new InvalidCodecException(
           s"rle: malformed run length $run at token $i of $n")
@@ -312,7 +321,7 @@ object RleCodec extends TokenCodec {
       }
       i = end
     }
-    Some(out)
+    out
   }
 }
 
@@ -405,13 +414,7 @@ object DictCodec extends TableCodec {
     java.util.Arrays.copyOf(out, pos)
   }
 
-  def tableFromBytes(b: Array[Byte]): Array[Int] = {
-    val cur = new Cursor(0)
-    val dict = readTable(b, cur)
-    dict
-  }
-
-  private def readTable(bytes: Array[Byte], cur: Cursor): Array[Int] = {
+  def readTable(bytes: Array[Byte], cur: Cursor): Array[Int] = {
     val dictSize = readVarint(bytes, cur).toInt
     val dict = new Array[Int](dictSize)
     if (dictSize > 0) {
@@ -483,27 +486,16 @@ object DictCodec extends TableCodec {
     Some(out)
   }
 
-  def decodeWith(tableB: Array[Byte], body: Array[Byte], n: Int): Array[Int] = {
-    val dict = tableFromBytes(tableB)
-    val w = body(0) & 0xff
-    val codes = new Array[Int](n)
-    unpack(body, 1, n, w, codes, 0)
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) { out(i) = dict(codes(i)); i += 1 }
-    out
-  }
-
-  override def decodeWithSlice(tableB: Array[Byte], body: Array[Byte], n: Int,
-                               from: Int, until: Int): Option[Array[Int]] = {
-    // table parse is O(dict) — tiny next to the skipped code stream
-    val dict = tableFromBytes(tableB)
-    val w = body(0) & 0xff
+  /** Fixed-stride codes: seek to `from`, map only [from, until). */
+  def decodeBody(dict: Array[Int], bytes: Array[Byte], off: Int, n: Int,
+                 from: Int, until: Int): Array[Int] = {
+    checkRange(n, from, until)
+    val w = bytes(off) & 0xff
     val out = new Array[Int](until - from)
-    unpackRange(body, 1, w, from, until - from, out, 0)
+    unpackRange(bytes, off + 1, w, from, until - from, out, 0)
     var i = 0
     while (i < out.length) { out(i) = dict(out(i)); i += 1 }
-    Some(out)
+    out
   }
 
   def reusable(dict: Array[Int], s: BlockStats): Boolean =
@@ -521,29 +513,6 @@ object DictCodec extends TableCodec {
     System.arraycopy(t, 0, out, 0, t.length)
     System.arraycopy(b, 0, out, t.length, b.length)
     out
-  }
-
-  def decode(bytes: Array[Byte], n: Int): Array[Int] = {
-    val cur = new Cursor(0)
-    val dict = readTable(bytes, cur)
-    val w = bytes(cur.pos) & 0xff; cur.pos += 1
-    val codes = new Array[Int](n)
-    unpack(bytes, cur.pos, n, w, codes, 0)
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) { out(i) = dict(codes(i)); i += 1 }
-    out
-  }
-
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] = {
-    val cur = new Cursor(0)
-    val dict = readTable(bytes, cur)
-    val w = bytes(cur.pos) & 0xff; cur.pos += 1
-    val out = new Array[Int](until - from)
-    unpackRange(bytes, cur.pos, w, from, until - from, out, 0)
-    var i = 0
-    while (i < out.length) { out(i) = dict(out(i)); i += 1 }
-    Some(out)
   }
 }
 
@@ -575,11 +544,11 @@ object DictCodec extends TableCodec {
   *
   * The sync table records (merged position, output token position) every
   * ~[[SyncInterval]] output tokens, so range reads resume mid-stream:
-  * [[decodeSlice]]/[[decodeWithSlice]] binary-search the last sync at or
-  * before the slice, dict-decode only the merged codes between that sync
-  * and the slice end (the dict body is random-access), and expand with
-  * clipping — O(result + SyncInterval) work instead of a full-block decode,
-  * closing the last sequential-codec fallback in the engine's range reads.
+  * [[decodeBody]] binary-searches the last sync at or before the range,
+  * dict-decodes only the merged codes between that sync and the range end
+  * (the dict body is random-access), and expands with clipping —
+  * O(result + SyncInterval) work instead of a full-block decode. A full
+  * decode is the [0, n) range.
   */
 object FsstCodec extends TableCodec {
   val id = 5; val name = "fsst2"
@@ -639,12 +608,7 @@ object FsstCodec extends TableCodec {
     java.util.Arrays.copyOf(out, pos)
   }
 
-  def tableFromBytes(b: Array[Byte]): FsstTable = {
-    val cur = new Cursor(0)
-    tableFrom(b, cur)
-  }
-
-  private def tableFrom(bytes: Array[Byte], cur: Cursor): FsstTable = {
+  def readTable(bytes: Array[Byte], cur: Cursor): FsstTable = {
     val nSym = readVarint(bytes, cur).toInt
     val left = new Array[Int](nSym)
     val right = new Array[Int](nSym)
@@ -836,38 +800,22 @@ object FsstCodec extends TableCodec {
       w <= 32 && cur.pos + 1 + packedSize(mergedLen, w) == body.length
     } catch { case _: ArrayIndexOutOfBoundsException => false }
 
-  def decodeWith(tableB: Array[Byte], body: Array[Byte], n: Int): Array[Int] =
-    decodeWithImpl(tableB, body, n, acceptLegacy = false)
+  def decodeBody(t: FsstTable, bytes: Array[Byte], off: Int, n: Int,
+                 from: Int, until: Int): Array[Int] =
+    bodyRange(t, bytes, off, n, from, until, acceptLegacy = false)
 
-  private[graft] def decodeWithImpl(tableB: Array[Byte], body: Array[Byte],
-                                    n: Int, acceptLegacy: Boolean): Array[Int] = {
-    val t = tableFromBytes(tableB)
-    val h = parseBody(body, 0, n, acceptLegacy)
-    val dictB = java.util.Arrays.copyOfRange(body, h.dictOff, body.length)
-    val merged = DictCodec.decode(dictB, h.mergedLen)
-    expand(t.left, t.right, merged, n)
-  }
-
-  override def decodeWithSlice(tableB: Array[Byte], body: Array[Byte], n: Int,
-                               from: Int, until: Int): Option[Array[Int]] =
-    Some(sliceBody(tableFromBytes(tableB), body, 0, n, from, until,
-      acceptLegacy = false))
-
-  private[graft] def decodeWithSliceImpl(tableB: Array[Byte], body: Array[Byte],
-                                         n: Int, from: Int, until: Int,
-                                         acceptLegacy: Boolean): Option[Array[Int]] =
-    Some(sliceBody(tableFromBytes(tableB), body, 0, n, from, until, acceptLegacy))
-
-  /** Sync-point slice: last sync ≤ `from` bounds where expansion starts,
-    * first sync ≥ `until` bounds which merged codes are dict-decoded at
-    * all; symbols straddling the slice edges expand with clipping.
+  /** Sync-point range decode, shared with [[FsstLegacyCodec]]: last sync
+    * ≤ `from` bounds where expansion starts, first sync ≥ `until` bounds
+    * which merged codes are dict-decoded at all; symbols straddling the
+    * range edges expand with clipping (an explicit stack; symbols reference
+    * earlier symbols, depth bounded by MaxRounds).
     */
-  private def sliceBody(t: FsstTable, bytes: Array[Byte], bodyStart: Int,
-                        n: Int, from: Int, until: Int,
-                        acceptLegacy: Boolean): Array[Int] = {
+  private[graft] def bodyRange(t: FsstTable, bytes: Array[Byte], off: Int,
+                               n: Int, from: Int, until: Int,
+                               acceptLegacy: Boolean): Array[Int] = {
+    checkRange(n, from, until)
+    val h = parseBody(bytes, off, n, acceptLegacy)
     val out = new Array[Int](until - from)
-    if (until == from) return out
-    val h = parseBody(bytes, bodyStart, n, acceptLegacy)
     // start: greatest sync with outTok <= from ((0,0) is implicit)
     var lo = 0
     var hi = h.syncOut.length
@@ -885,8 +833,9 @@ object FsstCodec extends TableCodec {
       if (h.syncOut(mid) < until) lo2 = mid + 1 else hi = mid
     }
     val mEnd = if (lo2 < h.syncM.length) h.syncM(lo2) else h.mergedLen
-    val dictB = java.util.Arrays.copyOfRange(bytes, h.dictOff, bytes.length)
-    val codes = DictCodec.decodeSlice(dictB, h.mergedLen, m0, mEnd).get
+    val dictCur = new Cursor(h.dictOff)
+    val dict = DictCodec.readTable(bytes, dictCur)
+    val codes = DictCodec.decodeBody(dict, bytes, dictCur.pos, h.mergedLen, m0, mEnd)
     val symLen = lengthsOf(t)
     val stack = new Array[Int](64)
     var outPos = out0
@@ -894,7 +843,7 @@ object FsstCodec extends TableCodec {
     while (outPos < until && ci < codes.length) {
       val v = codes(ci)
       val len = if (v >= SymbolBase) symLen(v - SymbolBase) else 1
-      if (outPos + len <= from) outPos += len // fully before the slice: skip
+      if (outPos + len <= from) outPos += len // fully before the range: skip
       else {
         var top = 0
         stack(top) = v; top += 1
@@ -914,7 +863,10 @@ object FsstCodec extends TableCodec {
       ci += 1
     }
     require(outPos >= until,
-      s"fsst: slice [$from,$until) of $n exhausted codes at $outPos")
+      s"fsst: range [$from,$until) of $n exhausted codes at $outPos")
+    // a range ending at n must also use up every code and land exactly on n
+    require(until < n || (outPos == n && ci == codes.length),
+      s"fsst: expanded $outPos tokens from $ci of ${codes.length} codes, expected $n")
     out
   }
 
@@ -1014,58 +966,6 @@ object FsstCodec extends TableCodec {
     }
     (FsstTable(left, right), stream)
   }
-
-  def decode(bytes: Array[Byte], n: Int): Array[Int] =
-    decodeImpl(bytes, n, acceptLegacy = false)
-
-  private[graft] def decodeImpl(bytes: Array[Byte], n: Int,
-                                acceptLegacy: Boolean): Array[Int] = {
-    val cur = new Cursor(0)
-    val t = tableFrom(bytes, cur)
-    val h = parseBody(bytes, cur.pos, n, acceptLegacy)
-    val body = java.util.Arrays.copyOfRange(bytes, h.dictOff, bytes.length)
-    val merged = DictCodec.decode(body, h.mergedLen)
-    expand(t.left, t.right, merged, n)
-  }
-
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] =
-    decodeSliceImpl(bytes, n, from, until, acceptLegacy = false)
-
-  private[graft] def decodeSliceImpl(bytes: Array[Byte], n: Int, from: Int,
-                                     until: Int, acceptLegacy: Boolean): Option[Array[Int]] = {
-    val cur = new Cursor(0)
-    val t = tableFrom(bytes, cur)
-    Some(sliceBody(t, bytes, cur.pos, n, from, until, acceptLegacy))
-  }
-
-  /** Iterative symbol expansion with an explicit stack (symbols reference
-    * earlier symbols; depth bounded by MaxRounds).
-    */
-  private def expand(left: Array[Int], right: Array[Int],
-                     merged: Array[Int], n: Int): Array[Int] = {
-    val out = new Array[Int](n)
-    var o = 0
-    val stack = new Array[Int](64)
-    var i = 0
-    while (i < merged.length) {
-      var top = 0
-      stack(top) = merged(i); top += 1
-      while (top > 0) {
-        top -= 1
-        val v = stack(top)
-        if (v >= SymbolBase) {
-          val sym = v - SymbolBase
-          stack(top) = right(sym); top += 1
-          stack(top) = left(sym); top += 1
-        } else {
-          out(o) = v; o += 1
-        }
-      }
-      i += 1
-    }
-    require(o == n, s"fsst: expanded $o tokens, expected $n")
-    out
-  }
 }
 
 /** Decode-only dispatch target for blocks persisted under the PRE-versioned
@@ -1093,17 +993,11 @@ object FsstLegacyCodec extends TableCodec {
 
   def train(tokens: Array[Int]): Table = FsstCodec.train(tokens)
   def tableBytes(t: Table): Array[Byte] = FsstCodec.tableBytes(t)
-  def tableFromBytes(b: Array[Byte]): Table = FsstCodec.tableFromBytes(b)
+  def readTable(bytes: Array[Byte], cur: Cursor): Table = FsstCodec.readTable(bytes, cur)
 
-  def decode(bytes: Array[Byte], n: Int): Array[Int] =
-    FsstCodec.decodeImpl(bytes, n, acceptLegacy = true)
-  override def decodeSlice(bytes: Array[Byte], n: Int, from: Int, until: Int): Option[Array[Int]] =
-    FsstCodec.decodeSliceImpl(bytes, n, from, until, acceptLegacy = true)
-  def decodeWith(tableB: Array[Byte], body: Array[Byte], n: Int): Array[Int] =
-    FsstCodec.decodeWithImpl(tableB, body, n, acceptLegacy = true)
-  override def decodeWithSlice(tableB: Array[Byte], body: Array[Byte], n: Int,
-                               from: Int, until: Int): Option[Array[Int]] =
-    FsstCodec.decodeWithSliceImpl(tableB, body, n, from, until, acceptLegacy = true)
+  def decodeBody(t: Table, bytes: Array[Byte], off: Int, n: Int,
+                 from: Int, until: Int): Array[Int] =
+    FsstCodec.bodyRange(t, bytes, off, n, from, until, acceptLegacy = true)
 }
 
 /** Closed-world codec dispatch, the analog of the reference's enum→impl

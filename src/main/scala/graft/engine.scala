@@ -233,7 +233,6 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     * analyze → cost-model select → encode → zstd frame → xxhash64 checksum.
     */
   def encode(ds: Dataset[TokenRow]): Dataset[EncodedBlock] = {
-    val spark = ds.sparkSession
     val plan = Planner.plan(ds, opts)
     encodeWithPlan(ds, plan, None)
   }
@@ -269,9 +268,13 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     val withPart = ds.toDF().withColumn("part_id",
       GraftColumns.of(PartIdOf(GraftColumns.expr(col("doc_id")), new PlanRouting(plan))))
 
+    // a part set that covers every planned part (every first run) filters
+    // nothing; Spark would still push it below the projection and run
+    // part_id_of twice per row
     val filtered = onlyParts match {
-      case Some(parts) => withPart.where(col("part_id").isin(parts.toSeq: _*))
-      case None => withPart
+      case Some(parts) if (0 until plan.numParts).exists(p => !parts(p)) =>
+        withPart.where(col("part_id").isin(parts.toSeq: _*))
+      case _ => withPart
     }
 
     // identity placement (see Routing): route_key(p) is precomputed so
@@ -338,7 +341,6 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     * /root/reference/src/test/common/EncodeToolsRunner.ts:117-129).
     */
   def decode(blocks: Dataset[EncodedBlock], verify: Boolean = true): Dataset[TokenRow] = {
-    val spark = blocks.sparkSession
     blocks.flatMap { b =>
       BlockEncoder.decodeBlock(b, verify)
     }(Encoders.product[TokenRow])
@@ -568,8 +570,9 @@ object BlockEncoder {
   }
 
   /** Range-pushdown decode: only rows with doc_id in [fromDoc, toDoc]
-    * (UTF-8 byte order) leave this block, and for sliceable codecs only
-    * the needed tokens are materialized — fixed-stride codecs
+    * (UTF-8 byte order) leave this block, and only the needed tokens are
+    * materialized: every codec has one decoder, a range decode
+    * ([[TokenCodec.decodeRange]]) — fixed-stride codecs
     * (plain/bitpack/for/dict) touch O(result) tokens, rle skips ahead over
     * run headers (O(runs)), delta scans its prefix but never the tail, and
     * fsst resumes from its in-body sync points (O(result + 4 Ki)).
@@ -603,83 +606,73 @@ object BlockEncoder {
     var tokUntil = tokFrom
     while (i < end) { tokUntil += b.n_toks(i); i += 1 }
 
-    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict)
-    val codec = CodecRegistry.byName(b.codec)
-    val nAll = b.n_tokens.toInt
     // extend the slice to digest-interval boundaries so every returned
     // token sits in a fully-verified interval; legacy blocks (no subsums)
     // decode the requested span unverified
+    val nAll = b.n_tokens.toInt
     val I = Checksum.SliceDigestInterval
     val canVerify =
       b.subsums != null && b.subsums.length == (nAll + I - 1) / I && tokUntil > tokFrom
     val vFrom = if (canVerify) (tokFrom / I) * I else tokFrom
     val vUntil = if (canVerify) math.min(nAll, ((tokUntil + I - 1) / I) * I) else tokUntil
-    val sliced: Option[Array[Int]] =
-      if (b.symtab != null && b.symtab.nonEmpty) codec match {
-        case tc: TableCodec =>
-          tc.decodeWithSlice(b.symtab, codecBytes, nAll, vFrom, vUntil)
-        case _ => None
+    val flat = decodeTokens(b, vFrom, vUntil)
+    if (canVerify) {
+      var iv = vFrom / I
+      var p = 0
+      while (p < flat.length) {
+        val len = math.min(I, flat.length - p)
+        val d = Checksum.digestRange(flat, p, len)
+        require(d == b.subsums(iv),
+          s"slice digest mismatch in block ${b.block_id} (part ${b.part_id}), " +
+            s"interval $iv: stored ${b.subsums(iv)}, decoded $d")
+        iv += 1
+        p += len
       }
-      else codec.decodeSlice(codecBytes, nAll, vFrom, vUntil)
-
-    sliced match {
-      case Some(flat) =>
-        if (canVerify) {
-          var iv = vFrom / I
-          var p = 0
-          while (p < flat.length) {
-            val len = math.min(I, flat.length - p)
-            val d = Checksum.digestRange(flat, p, len)
-            require(d == b.subsums(iv),
-              s"slice digest mismatch in block ${b.block_id} (part ${b.part_id}), " +
-                s"interval $iv: stored ${b.subsums(iv)}, decoded $d")
-            iv += 1
-            p += len
-          }
-        }
-        val out = new Array[TokenRow](end - start)
-        var pos = tokFrom - vFrom
-        var r = start
-        while (r < end) {
-          val n = b.n_toks(r)
-          out(r - start) = TokenRow(b.doc_ids(r),
-            java.util.Arrays.copyOfRange(flat, pos, pos + n), n, b.sources(r))
-          pos += n
-          r += 1
-        }
-        out.iterator
-      case None =>
-        // no slice support: the FULL token stream is decoded anyway, so the
-        // block checksum verifies everything returned
-        decodeBlock(b, verify = true).slice(start, end)
     }
+    rows(b, flat, tokFrom - vFrom, start, end)
   }
 
   def decodeBlock(b: EncodedBlock, verify: Boolean): Iterator[TokenRow] = {
-    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict)
-    val flat =
-      if (b.symtab != null && b.symtab.nonEmpty)
-        CodecRegistry.byName(b.codec) match {
-          case tc: TableCodec => tc.decodeWith(b.symtab, codecBytes, b.n_tokens.toInt)
-          case other => throw new InvalidCodecException(
-            s"block ${b.block_id}: codec '${other.name}' cannot carry a symtab")
-        }
-      else CodecRegistry.decode(b.codec, codecBytes, b.n_tokens.toInt)
+    val flat = decodeTokens(b, 0, b.n_tokens.toInt)
     if (verify) {
       val ck = Checksum.blockChecksumFlat(b.n_toks, flat)
       require(ck == b.checksum,
         s"checksum mismatch in block ${b.block_id} (part ${b.part_id}): " +
           s"stored ${b.checksum}, decoded $ck")
     }
-    val out = new Array[TokenRow](b.n_docs)
-    var pos = 0
-    var i = 0
-    while (i < b.n_docs) {
-      val n = b.n_toks(i)
-      val toks = java.util.Arrays.copyOfRange(flat, pos, pos + n)
-      out(i) = TokenRow(b.doc_ids(i), toks, n, b.sources(i))
+    rows(b, flat, 0, 0, b.n_docs)
+  }
+
+  /** The one decode step: unframe the payload, dispatch on the block's
+    * codec (and its `symtab` column, which only a table codec may carry),
+    * and decode tokens [from, until) of the block's stream.
+    */
+  private def decodeTokens(b: EncodedBlock, from: Int, until: Int): Array[Int] = {
+    val codecBytes = Zframe.unframe(b.payload, b.outer, b.zdict)
+    val n = b.n_tokens.toInt
+    val codec = CodecRegistry.byName(b.codec)
+    if (b.symtab != null && b.symtab.nonEmpty) codec match {
+      case tc: TableCodec => tc.decodeWithRange(b.symtab, codecBytes, n, from, until)
+      case other => throw new InvalidCodecException(
+        s"block ${b.block_id}: codec '${other.name}' cannot carry a symtab")
+    }
+    else codec.decodeRange(codecBytes, n, from, until)
+  }
+
+  /** Rows [start, end) of a block, cut from `flat`; row `start` begins
+    * at `flat(pos0)`.
+    */
+  private def rows(b: EncodedBlock, flat: Array[Int], pos0: Int,
+                   start: Int, end: Int): Iterator[TokenRow] = {
+    val out = new Array[TokenRow](end - start)
+    var pos = pos0
+    var r = start
+    while (r < end) {
+      val n = b.n_toks(r)
+      out(r - start) = TokenRow(b.doc_ids(r),
+        java.util.Arrays.copyOfRange(flat, pos, pos + n), n, b.sources(r))
       pos += n
-      i += 1
+      r += 1
     }
     out.iterator
   }

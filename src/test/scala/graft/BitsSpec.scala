@@ -11,7 +11,9 @@ class BitsSpec extends AnyFunSuite {
   test("int32 LE round-trip") {
     for (_ <- 1 to 200) {
       val a = Array.fill(rnd.nextInt(200))(rnd.nextInt())
-      assert(Bits.bytesToIntsLE(Bits.intsToBytesLE(a)).sameElements(a))
+      val b = Bits.intsToBytesLE(a)
+      assert(b.length == 4 * a.length)
+      assert(Array.tabulate(a.length)(i => Bits.readIntLE(b, i * 4)).sameElements(a))
     }
   }
 
@@ -53,8 +55,16 @@ class BitsSpec extends AnyFunSuite {
       val written = Bits.pack(a, 0, n, w, out, 0)
       assert(written == Bits.packedSize(n, w), s"width $w size")
       val back = new Array[Int](n)
-      Bits.unpack(out, 0, n, w, back, 0)
+      Bits.unpackRange(out, 0, w, 0, n, back, 0)
       assert(back.sameElements(a), s"width $w mismatch")
+      // and from a random offset, into a random slot of the target
+      val from = rnd.nextInt(n)
+      val count = rnd.nextInt(n - from) + 1
+      val at = rnd.nextInt(4)
+      val part = new Array[Int](at + count)
+      Bits.unpackRange(out, 0, w, from, count, part, at)
+      assert(part.drop(at).sameElements(a.slice(from, from + count)),
+        s"width $w range [$from, ${from + count})")
     }
   }
 

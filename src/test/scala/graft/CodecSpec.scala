@@ -63,14 +63,36 @@ class CodecSpec extends AnyFunSuite {
   test("rle: malformed zero-length run fails loud instead of spinning") {
     // hand-built hostile payload: value zigzag(5)=10, run length 0 — a
     // corrupt stream must raise InvalidCodecException, not hang the
-    // executor (decodeSlice's skip-ahead advanced by run and would spin)
+    // executor (the skip-ahead advances by run and would spin)
     val hostile = Array[Byte](10, 0)
     intercept[InvalidCodecException](RleCodec.decode(hostile, 4))
-    intercept[InvalidCodecException](RleCodec.decodeSlice(hostile, 4, 1, 3))
+    intercept[InvalidCodecException](RleCodec.decodeRange(hostile, 4, 1, 3))
     // run overrunning the declared token count is equally malformed
     val overrun = RleCodec.encode(Array.fill(8)(7)) // one run of 8
     intercept[InvalidCodecException](RleCodec.decode(overrun, 4))
-    intercept[InvalidCodecException](RleCodec.decodeSlice(overrun, 4, 0, 4))
+    intercept[InvalidCodecException](RleCodec.decodeRange(overrun, 4, 0, 4))
+  }
+
+  test("fixed-stride decoders fail closed on a truncated payload or a width over 32") {
+    val toks = Array.tabulate(1000)(i => (i * 37) % 5000)
+    // codec -> offset of its width byte (plain has none)
+    val widthAt = Seq(PlainCodec -> -1, BitPackCodec -> 0, ForCodec -> 4, DeltaCodec -> 4)
+    for ((c, wAt) <- widthAt) {
+      val bytes = c.encode(toks)
+      val n = toks.length
+      assert(c.decode(bytes, n).sameElements(toks))
+      val truncated = java.util.Arrays.copyOf(bytes, bytes.length - 1)
+      val bad = if (wAt < 0) Seq(truncated)
+                else Seq(truncated, { val w = bytes.clone(); w(wAt) = 33; w })
+      for (b <- bad) {
+        // the checks read the declared n, so a range read rejects exactly
+        // what a full decode rejects — a typed error, never an AIOOBE
+        intercept[InvalidCodecException](c.decode(b, n))
+        intercept[InvalidCodecException](c.decodeRange(b, n, 0, 1))
+        intercept[InvalidCodecException](c.decodeRange(b, n, n - 10, n))
+      }
+      intercept[InvalidCodecException](c.decodeRange(bytes, n, 10, n + 1))
+    }
   }
 
   test("registry dispatch is closed-world (InvalidCodecException)") {
@@ -107,7 +129,7 @@ class CodecSpec extends AnyFunSuite {
     assert(enc.length < data.length * 4 / 8)
   }
 
-  test("decodeSlice == full decode slice for every sliceable codec and width") {
+  test("decodeRange == tokens.slice for every codec and width") {
     val rng = new scala.util.Random(41)
     val shapes: Seq[Array[Int]] = Seq(
       Array.fill(5000)(rng.nextInt(2)),            // 1-bit
@@ -130,44 +152,37 @@ class CodecSpec extends AnyFunSuite {
     val codecs: Seq[TokenCodec] =
       Seq(PlainCodec, BitPackCodec, ForCodec, DictCodec, RleCodec, DeltaCodec,
         FsstCodec)
+    // the oracle is the input itself: a full decode is the [0, n) range,
+    // so comparing a range with a full decode would compare a function
+    // with itself
+    def checkRanges(label: String, toks: Array[Int],
+                    decode: (Int, Int) => Array[Int]): Unit = {
+      val n = toks.length
+      val ranges = Seq((0, n), (0, 1), (n - 1, n), (n / 2, n / 2)) ++
+        (0 until 20).map { _ =>
+          val from = rng.nextInt(n)
+          (from, from + rng.nextInt(n - from) + 1)
+        }
+      for ((from, until) <- ranges)
+        assert(decode(from, until).toSeq == toks.slice(from, until).toSeq,
+          s"$label [$from,$until)")
+    }
     for (tokens <- shapes; c <- codecs if c.applicable(Analyzer.stats(tokens))) {
       if (c != BitPackCodec || tokens.forall(_ >= 0)) {
         val bytes = c.encode(tokens)
-        val full = c.decode(bytes, tokens.length)
-        (0 until 20).foreach { _ =>
-          val from = rng.nextInt(tokens.length)
-          val until = from + rng.nextInt(tokens.length - from) + 1
-          val sl = c.decodeSlice(bytes, tokens.length, from, until)
-          assert(sl.isDefined, s"${c.name} must support slices")
-          assert(sl.get.toSeq == full.slice(from, until).toSeq,
-            s"${c.name} [$from,$until)")
-        }
-        // boundary slices
-        assert(c.decodeSlice(bytes, tokens.length, 0, tokens.length).get.toSeq == full.toSeq)
-        assert(c.decodeSlice(bytes, tokens.length, 0, 1).get.toSeq == full.take(1).toSeq)
-        assert(c.decodeSlice(bytes, tokens.length,
-          tokens.length - 1, tokens.length).get.toSeq == full.takeRight(1).toSeq)
+        checkRanges(c.name, tokens, c.decodeRange(bytes, tokens.length, _, _))
       }
     }
-    // dict split path slices too
+    // the split-table layouts (table column + body column) range too
     val toks = Array.fill(4000)(rng.nextInt(500) * 3)
     val dict = DictCodec.train(toks)
     val tb = DictCodec.tableBytes(dict)
     val body = DictCodec.encodeWith(dict, toks).get
-    val sl = DictCodec.decodeWithSlice(tb, body, toks.length, 100, 300)
-    assert(sl.get.toSeq == toks.slice(100, 300).toSeq)
-    // fsst split path: the sync table lets the table-reuse body slice too
+    checkRanges("dict split", toks, DictCodec.decodeWithRange(tb, body, toks.length, _, _))
     val ft = FsstCodec.train(toks)
     val ftb = FsstCodec.tableBytes(ft)
     val fbody = FsstCodec.encodeWith(ft, toks).get
-    val ffull = FsstCodec.decodeWith(ftb, fbody, toks.length)
-    assert(ffull.toSeq == toks.toSeq)
-    (0 until 20).foreach { _ =>
-      val from = rng.nextInt(toks.length)
-      val until = from + rng.nextInt(toks.length - from) + 1
-      val fsl = FsstCodec.decodeWithSlice(ftb, fbody, toks.length, from, until)
-      assert(fsl.get.toSeq == toks.slice(from, until).toSeq, s"fsst [$from,$until)")
-    }
+    checkRanges("fsst split", toks, FsstCodec.decodeWithRange(ftb, fbody, toks.length, _, _))
   }
 
   test("fsst sync points: large block slices without full decode, bit-exact") {
@@ -187,13 +202,13 @@ class CodecSpec extends AnyFunSuite {
     // slices across sync boundaries, including deep-in-block point reads
     Seq((0, 10), (4090, 4200), (20000, 20001), (toks.length - 5, toks.length),
       (8191, 8193), (12288, 16384)).foreach { case (f, u) =>
-      val sl = FsstCodec.decodeSlice(bytes, toks.length, f, u)
-      assert(sl.isDefined && sl.get.toSeq == toks.slice(f, u).toSeq, s"[$f,$u)")
+      val sl = FsstCodec.decodeRange(bytes, toks.length, f, u)
+      assert(sl.toSeq == toks.slice(f, u).toSeq, s"[$f,$u)")
     }
     (0 until 30).foreach { _ =>
       val f = rng.nextInt(toks.length)
       val u = f + rng.nextInt(toks.length - f) + 1
-      assert(FsstCodec.decodeSlice(bytes, toks.length, f, u).get.toSeq ==
+      assert(FsstCodec.decodeRange(bytes, toks.length, f, u).toSeq ==
         toks.slice(f, u).toSeq, s"[$f,$u)")
     }
   }
@@ -232,13 +247,13 @@ class CodecSpec extends AnyFunSuite {
     assert(FsstLegacyCodec.decodeWith(tb, legacy, toks.length).toSeq == toks.toSeq)
     Seq((0, 10), (4090, 4200), (20000, 20001), (toks.length - 5, toks.length))
       .foreach { case (f, u) =>
-        val sl = FsstLegacyCodec.decodeWithSlice(tb, legacy, toks.length, f, u)
-        assert(sl.get.toSeq == toks.slice(f, u).toSeq, s"legacy [$f,$u)")
+        val sl = FsstLegacyCodec.decodeWithRange(tb, legacy, toks.length, f, u)
+        assert(sl.toSeq == toks.slice(f, u).toSeq, s"legacy [$f,$u)")
       }
     // inline path (standalone encode layout = table ++ body)
     val inlineLegacy = tb ++ legacy
     assert(FsstLegacyCodec.decode(inlineLegacy, toks.length).toSeq == toks.toSeq)
-    assert(FsstLegacyCodec.decodeSlice(inlineLegacy, toks.length, 5000, 5100).get.toSeq ==
+    assert(FsstLegacyCodec.decodeRange(inlineLegacy, toks.length, 5000, 5100).toSeq ==
       toks.slice(5000, 5100).toSeq)
     // the legacy codec also decodes CURRENT bodies (rounds 6-7 persisted
     // the sync-table layout under "fsst" too)

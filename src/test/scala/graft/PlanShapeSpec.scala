@@ -122,6 +122,20 @@ class PlanShapeSpec extends AnyFunSuite {
       s"pack must run map-side and unpack reduce-side:\n$p")
   }
 
+  test("a first run filters no parts; a resumed partial run keeps its part filter") {
+    val ds = Fixtures.tokenTable(spark, 400L)
+    val opts = EncodeOptions(numParts = 12, blockTokens = 1 << 12)
+    val plan = Planner.plan(ds, opts)
+    assert(plan.numParts > 10, "the partial run must filter on more parts than Spark's IN→INSET threshold")
+    def partFilters(parts: Set[Int]): Seq[String] =
+      planOf(TokenCompressor(opts).encodeWithPlan(ds, plan, Some(parts)).toDF())
+        .linesIterator.filter(l => l.contains("INSET") && l.contains("part_id_of")).toSeq
+    val all = (0 until plan.numParts).toSet
+    // every part planned: no filter, so part_id_of runs once per row
+    assert(partFilters(all).isEmpty, s"first run filters parts:\n${partFilters(all)}")
+    assert(partFilters(all - 5).nonEmpty, "a resumed partial run lost its part filter")
+  }
+
   test("rangeBlocks: one scan each for batch data, a compacted run and the whole stream tail") {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.execution.FileSourceScanExec
