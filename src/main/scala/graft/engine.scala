@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, lit}
 import org.apache.spark.TaskContext
 
 /** Optional zstd entropy frame around codec bytes — the analog of the
@@ -195,7 +196,7 @@ object ZdictProbe {
   *
   * `df.repartition(n, col)` hash-partitions (murmur3 % n), so distinct part
   * ids collide while ~1/e of tasks sit idle, partially undoing the planner's
-  * salted balance. Instead of dropping to RDD partitionBy (which would
+  * salted balance. Instead of an RDD custom partitioner (which would
   * deserialize rows out of Tungsten format), we route on a probe key chosen
   * so Spark's own HashPartitioning lands part slot k exactly on shuffle
   * partition k: probeKeys(k) is the smallest int x with
@@ -216,6 +217,22 @@ object Routing {
       x += 1
     }
     keys
+  }
+
+  /** `df` (which has a part_id column) in `tasks` shuffle partitions
+    * (`tasks` <= 0: one per part), `parts` (default: all `numParts`) in
+    * contiguous runs: part slot k of the sorted parts lands exactly on
+    * partition k * tasks / parts, via a `route_key` column of probe keys.
+    */
+  def pack(df: DataFrame, numParts: Int, parts: Option[Set[Int]], tasks: Int): DataFrame = {
+    val targetIds = parts.map(_.toArray.sorted).getOrElse((0 until numParts).toArray)
+    val nTasks = if (tasks <= 0) targetIds.length else math.min(tasks, targetIds.length)
+    val probes = probeKeys(nTasks)
+    val slotOf = targetIds.zipWithIndex.toMap
+    val keyOfPart: Array[Int] = Array.tabulate(numParts)(p =>
+      slotOf.get(p).fold(0)(k => probes((k.toLong * nTasks / targetIds.length).toInt)))
+    df.withColumn("route_key", element_at(lit(keyOfPart), col("part_id") + 1))
+      .repartition(nTasks, col("route_key"))
   }
 }
 
@@ -252,7 +269,6 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
   ): Dataset[EncodedBlock] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, udf}
     val o = opts
 
     // part_id as a NATIVE column expression over doc_id only (PartIdOf:
@@ -277,18 +293,6 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
       case _ => withPart
     }
 
-    // identity placement (see Routing): route_key(p) is precomputed so
-    // HashPartitioning(route_key) sends part slot k to partition
-    // k * nTasks / nSlots — no collisions, no idle tasks
-    val targetIds: Array[Int] =
-      onlyParts.map(_.toArray.sorted).getOrElse((0 until plan.numParts).toArray)
-    val nTasks =
-      if (tasks <= 0) targetIds.length else math.min(tasks, targetIds.length)
-    val probes = Routing.probeKeys(nTasks)
-    val slotOf = targetIds.zipWithIndex.toMap
-    val keyOfPart: Array[Int] = Array.tabulate(plan.numParts)(p =>
-      slotOf.get(p).map(k => probes((k.toLong * nTasks / targetIds.length).toInt))
-        .getOrElse(0))
     // Shuffle-byte reduction (r7 verdict item 4): FOR-pack each
     // row's token array to binary on the map side (~2.5-3x fewer bytes
     // than LE int32 before lz4 even sees them) via the codegen [[ForPack]]
@@ -300,15 +304,11 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     // (tools/ab_packshuffle_20260818.jsonl) has pack winning even through
     // localhost (less ser/deser + transport-lz4 work); on a real cluster
     // the exchange's wire bytes are the bottleneck it trades cheap CPU
-    // against.
-    val routed = filtered
-      .withColumn("route_key",
-        org.apache.spark.sql.functions.element_at(
-          org.apache.spark.sql.functions.lit(keyOfPart), col("part_id") + 1))
-      .withColumn("packed",
-        GraftColumns.of(ForPack(GraftColumns.expr(col("tokens")))))
-      .select("part_id", "doc_id", "packed", "n_tok", "source", "route_key")
-      .repartition(nTasks, col("route_key"))
+    // against. Identity placement: see [[Routing.pack]].
+    val packed = filtered
+      .withColumn("packed", GraftColumns.of(ForPack(GraftColumns.expr(col("tokens")))))
+      .select("part_id", "doc_id", "packed", "n_tok", "source")
+    val routed = Routing.pack(packed, plan.numParts, onlyParts, tasks)
       .sortWithinPartitions(col("part_id"), col("doc_id"))
       .withColumn("tokens", GraftColumns.of(ForUnpack(
         GraftColumns.expr(col("packed")), GraftColumns.expr(col("n_tok")))))
@@ -320,12 +320,12 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     }(Encoders.product[EncodedBlock])
   }
 
-  /** Narrow re-encode of an existing encoded table under this compressor's
-    * policy — the compaction/migration path. NO exchange: each task decodes
-    * its blocks and re-blocks the rows in place, preserving part ids (the
-    * table's clustering already reflects the persisted plan). At 10^12
-    * sequences a codec-policy migration is therefore pure CPU + IO — raw
-    * token arrays never cross the network.
+  /** Narrow re-encode of encoded blocks under this compressor's policy:
+    * NO exchange, each task decodes its blocks and re-blocks the rows in
+    * place. It needs each part's blocks in one doc_id-ordered run (block
+    * ids restart per run), so [[ResumableEncodeJob.migrate]] re-encodes
+    * through [[encodeWithPlan]] instead; this serves the bench's
+    * `recompress_mtok_s_local24` leg.
     */
   def recompress(blocks: Dataset[EncodedBlock], verify: Boolean = true): Dataset[EncodedBlock] = {
     val o = opts

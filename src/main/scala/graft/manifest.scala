@@ -54,9 +54,7 @@ final case class ZoneFile(
     maxPart: Int,
     bounds: Option[(String, String)] = None
 ) {
-  /** The layout dir the file lives under: `data`, `compacted/run=V` or
-    * `stream_batches` — one relation per root.
-    */
+  /** The layout dir of the file: `data`, `compacted/run=V` or `stream_batches`. */
   def root: String = path.split('/') match {
     case Array("compacted", run, _*) => s"compacted/$run"
     case a => a(0)
@@ -71,50 +69,53 @@ final case class ZoneFile(
     parts.forall(_.exists(p => p >= minPart && p <= maxPart)) &&
       (for ((from, to) <- range; (first, last) <- bounds)
         yield DocIdOrder.lteq(first, to) && DocIdOrder.gteq(last, from)).getOrElse(true)
+
+  /** The entry of a file holding this entry's blocks and `o`'s. */
+  def cover(o: ZoneFile): ZoneFile = ZoneFile(path,
+    math.min(minPart, o.minPart), math.max(maxPart, o.maxPart),
+    for ((a, b) <- bounds; (c, d) <- o.bounds) yield (DocIdOrder.min(a, c), DocIdOrder.max(b, d)))
 }
 
 /** What the tasks of one block write counted: lineage per part, and the
-  * [first, last] doc_id span per (task partition id, part_id) — Spark names
-  * a task's files `part-<partition id>-…`, which maps spans to files.
+  * zone entry (its path still unnamed) of each task partition id's file —
+  * Spark names a task's file `part-<partition id>-…`.
   */
 final case class WriteTally(
     lineage: Map[Int, PartLineage],
-    spans: Map[(Int, Int), (String, String)])
+    files: Map[Int, ZoneFile])
 
 /** Lineage and file spans counted by the tasks that write the blocks: each
   * block folds into its part's [[PartLineage]] (per-codec block counts
-  * included) and its task's span. Fed inside the write job's result stage
-  * ([[ManifestIO.writeBlocks]]), where Spark merges one update per output
-  * partition and drops failed attempts' updates (countFailedValues =
-  * false): a retried or speculative task counts exactly once.
+  * included) and its task's zone entry. Fed inside the write job's result
+  * stage ([[ManifestIO.writeBlocks]]), where Spark merges one update per
+  * output partition and drops failed attempts' updates (countFailedValues
+  * = false): a retried or speculative task counts exactly once.
   */
 final class LineageAccumulator extends AccumulatorV2[EncodedBlock, WriteTally] {
   private var parts = Map.empty[Int, PartLineage]
-  private var spans = Map.empty[(Int, Int), (String, String)]
+  private var files = Map.empty[Int, ZoneFile]
 
   private def fold(t: WriteTally): Unit = {
     t.lineage.foreach { case (k, l) =>
       parts = parts.updated(k, parts.get(k).fold(l)(_ merge l))
     }
-    t.spans.foreach { case (k, (lo, hi)) =>
-      spans = spans.updated(k, spans.get(k).fold((lo, hi)) { case (a, b) =>
-        (DocIdOrder.min(a, lo), DocIdOrder.max(b, hi))
-      })
+    t.files.foreach { case (k, z) =>
+      files = files.updated(k, files.get(k).fold(z)(_ cover z))
     }
   }
 
-  def isZero: Boolean = parts.isEmpty && spans.isEmpty
+  def isZero: Boolean = parts.isEmpty && files.isEmpty
   def copy(): LineageAccumulator = {
-    val c = new LineageAccumulator; c.parts = parts; c.spans = spans; c
+    val c = new LineageAccumulator; c.parts = parts; c.files = files; c
   }
-  def reset(): Unit = { parts = Map.empty; spans = Map.empty }
+  def reset(): Unit = { parts = Map.empty; files = Map.empty }
   def add(b: EncodedBlock): Unit = fold(WriteTally(
     Map(b.part_id -> PartLineage(b.part_id, 1L, b.n_docs, b.n_tokens, b.raw_bytes,
       b.encoded_bytes, b.checksum, Map(b.codec -> 1L), b.enc_micros)),
-    Map((org.apache.spark.TaskContext.getPartitionId(), b.part_id) ->
-      (b.first_doc_id, b.last_doc_id))))
+    Map(org.apache.spark.TaskContext.getPartitionId() ->
+      ZoneFile("", b.part_id, b.part_id, Some((b.first_doc_id, b.last_doc_id))))))
   def merge(o: AccumulatorV2[EncodedBlock, WriteTally]): Unit = fold(o.value)
-  def value: WriteTally = WriteTally(parts, spans)
+  def value: WriteTally = WriteTally(parts, files)
 }
 
 /** One committed snapshot of the encoded table. `streamBatchId` is the
@@ -170,18 +171,22 @@ object Snapshot {
       zdictEnabled = zdictEnabled, files = Some(Nil))
 }
 
-/** Iceberg-style append-only snapshot log over partitioned Parquet.
+/** Iceberg-style append-only snapshot log over Parquet block files.
   *
   * No Iceberg runtime jar ships in this sandbox (see SURVEY.md §7.0), so the
   * table format is emulated with the same commit semantics Iceberg uses: an
   * immutable versioned metadata file per snapshot, made visible by a single
   * atomic rename — readers either see the whole snapshot or none of it.
-  * Layout: `data/part_id=K/` parquet files (batch parts),
-  * `compacted/run=V/part_id=K/` (compacted stream runs),
-  * `stream_batches/batch=B/` (the uncompacted stream tail) and
-  * `snapshots/vNNNNN.json`. This object owns that layout: which block
-  * files a snapshot makes visible (its zone map, [[visible]]), how they
-  * are read ([[blocks]]) and how versions are listed, read and committed.
+  * Layout: every commit writes its blocks, part_id a column, into ONE fresh
+  * dir named for its version V — `data/version=V/` (batch parts),
+  * `compacted/run=V/` (compacted stream runs) or `stream_batches/batch=B/`
+  * (the uncompacted stream tail) — beside `snapshots/vNNNNN.json`; each
+  * write task writes one file of a contiguous run of parts. The snapshot's
+  * zone map ([[visible]]) is the only partition index. This object owns
+  * that layout: which block files a snapshot makes visible, how they are
+  * read ([[blocks]]) and how versions are listed, read and committed.
+  * Older tables keep `data/part_id=K/` and `compacted/run=V/part_id=K/`
+  * dirs of files without the column, read through the same relation.
   *
   * Uses the Hadoop FileSystem API so the same code runs on HDFS/object
   * stores on a real cluster, not just local files.
@@ -197,48 +202,43 @@ object ManifestIO {
   def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Layout roots: batch data `data/part_id=K/`, and the uncompacted
-    * stream tail `stream_batches/batch=B/`.
+  /** Layout roots: batch data `data/version=V/`, and the uncompacted stream
+    * tail `stream_batches/batch=B/`.
     */
   val DataRoot = "data"
   val TailRoot = "stream_batches"
 
-  /** Write `blocks` into `dir` (under `part_id=K` subdirs when
-    * `partitioned`) in ONE job and return their lineage, counted by the
-    * writing tasks ([[LineageAccumulator]]), and the zone entries of the
-    * files written: the tasks fold each file's spans, and one listing per
-    * written dir maps task partition ids to file names. No payload
-    * persist, no second pass, no footer read. The tap fuses with the
-    * encode's typed map, in the write's result stage — `blocks` must not
-    * shuffle after it.
+  /** Write `blocks` into the fresh dir `dir` in ONE job and return their
+    * lineage, counted by the writing tasks ([[LineageAccumulator]]), and
+    * the zone entries of the files written: each task folds its blocks'
+    * part and doc_id spans, and one listing of `dir` maps task partition
+    * ids to file names. No payload persist, no second pass, no footer
+    * read, no write-side sort. The tap fuses with the encode's typed map,
+    * in the write's result stage — `blocks` must not shuffle after it.
     */
-  def writeBlocks(blocks: Dataset[EncodedBlock], table: String, dir: Path,
-                  mode: SaveMode, partitioned: Boolean): (Map[Int, PartLineage], Seq[ZoneFile]) = {
+  def writeBlocks(blocks: Dataset[EncodedBlock], table: String,
+                  dir: Path): (Map[Int, PartLineage], Seq[ZoneFile]) = {
     val spark = blocks.sparkSession
     val acc = new LineageAccumulator
     spark.sparkContext.register(acc, "graft.lineage")
-    val w = blocks.mapPartitions(_.map { b => acc.add(b); b })(
-      Encoders.product[EncodedBlock]).toDF().write.mode(mode)
-    (if (partitioned) w.partitionBy("part_id") else w).parquet(dir.toString)
+    blocks.mapPartitions(_.map { b => acc.add(b); b })(Encoders.product[EncodedBlock])
+      .toDF().write.mode(SaveMode.Overwrite).parquet(dir.toString)
     val tally = acc.value
     val rel = relativize(spark, table)
-    val f = fs(spark, table)
-    // one entry per (written dir, task): the task's part and doc_id spans
-    val perTask = tally.spans.toSeq.groupBy { case ((split, part), _) =>
-      (if (partitioned) new Path(dir, s"part_id=$part") else dir, split)
-    }
-    val files = perTask.groupBy(_._1._1).toSeq.flatMap { case (d, tasks) =>
-      val listed = f.listStatus(d).toSeq.map(_.getPath)
-      tasks.flatMap { case ((_, split), spans) =>
-        val parts = spans.map(_._1._2)
-        val span = spans.map(_._2).reduce((a, b) =>
-          (DocIdOrder.min(a._1, b._1), DocIdOrder.max(a._2, b._2)))
-        listed.filter(_.getName.startsWith(f"part-$split%05d-"))
-          .map(p => ZoneFile(rel(p), parts.min, parts.max, Some(span)))
-      }
+    val listed =
+      if (tally.files.isEmpty) Nil else fs(spark, table).listStatus(dir).toSeq.map(_.getPath)
+    val files = tally.files.toSeq.flatMap { case (split, z) =>
+      listed.filter(_.getName.startsWith(f"part-$split%05d-")).map(p => z.copy(path = rel(p)))
     }
     (tally.lineage, files.sortBy(_.path))
   }
+
+  /** Delete the entries of `dir` whose name `drop` accepts, from one
+    * listing (none when `dir` is absent).
+    */
+  def sweep(f: FileSystem, dir: Path)(drop: String => Boolean): Unit =
+    if (f.exists(dir)) f.listStatus(dir).filter(st => drop(st.getPath.getName))
+      .foreach(st => f.delete(st.getPath, true))
 
   /** A file's path relative to the table root, as zone entries name it. */
   private def relativize(spark: SparkSession, table: String): Path => String = {
@@ -247,12 +247,13 @@ object ManifestIO {
   }
 
   /** The block files `snap` makes visible: its zone map or, for a snapshot
-    * written before snapshots carried one, one listing per layout into the
-    * same entries with open doc_id bounds — batch data of the committed
-    * parts, each compacted run, and the stream tail's batch dirs with id in
-    * (compactedBatchId, streamBatchId]. Bounding by the snapshot keeps
-    * commit-then-visible either way: a file no snapshot names (a crashed
-    * attempt's) is never read.
+    * written before snapshots carried one (whose tables keep `part_id=K`
+    * dirs), one listing per layout into the same entries with open doc_id
+    * bounds — batch data of the committed parts, each compacted run, and
+    * the stream tail's batch dirs with id in (compactedBatchId,
+    * streamBatchId]. Bounding by the snapshot keeps commit-then-visible
+    * either way: a file no snapshot names (a crashed attempt's) is never
+    * read.
     */
   def visible(spark: SparkSession, table: String, snap: Snapshot): Seq[ZoneFile] =
     snap.files.getOrElse {
@@ -269,48 +270,45 @@ object ManifestIO {
               rel(p).split('/').forall(c => !c.startsWith("_") && !c.startsWith(".")))
             .toSeq
         }
-      def entry(p: Path, lo: Int, hi: Int) = ZoneFile(rel(p), lo, hi)
       def partOf(p: Path) = p.getParent.getName.stripPrefix("part_id=").toInt
-      val data = if (snap.committed.isEmpty) Nil else list(dataDir(table))
-        .filter(p => snap.committed(partOf(p))).map(p => entry(p, partOf(p), partOf(p)))
-      val runs = snap.compactedRuns.flatMap(r =>
-        list(compactedDir(table, r)).map(p => entry(p, partOf(p), partOf(p))))
+      def inPart(p: Path) = ZoneFile(rel(p), partOf(p), partOf(p))
+      val data = if (snap.committed.isEmpty) Nil
+        else list(dataDir(table)).filter(p => snap.committed(partOf(p))).map(inPart)
+      val runs = snap.compactedRuns.flatMap(r => list(compactedDir(table, r)).map(inPart))
       val minBatch = snap.compactedBatchId.fold(0L)(_ + 1)
       val maxBatch = snap.streamBatchId.getOrElse(-1L)
       val tail = if (minBatch > maxBatch) Nil else list(new Path(table, TailRoot))
         .filter(_.getParent.getName.stripPrefix("batch=").toLongOption
           .exists(b => b >= minBatch && b <= maxBatch))
-        .map(entry(_, 0, snap.plan.numParts - 1))
+        .map(p => ZoneFile(rel(p), 0, snap.plan.numParts - 1))
       data ++ runs ++ tail
     }
 
-  /** The blocks of exactly `files` (entries of `snap`'s [[visible]] set),
-    * one schema-explicit relation per layout root over the exact file
-    * paths: no listing, no `exists`, no dir walk. Batch data and each
-    * compacted run read with `basePath` at their root, so part_id comes
-    * from the `part_id=K` dirs; tail files carry it as a column. The
-    * encoder schema lets an empty selection read back empty and surfaces a
-    * column that older files lack as null. A file the snapshot names that
-    * is gone (deleted by a later compaction or merge) fails the read with
-    * the snapshot's version — never a silently short result.
+  /** The blocks of exactly `files` (entries of `snap`'s [[visible]] set):
+    * ONE schema-explicit relation over the exact file paths — no listing,
+    * no `exists`, no dir walk. Files in `part_id=K` dirs (written before
+    * the zone map was the only partition index) lack the part_id column
+    * and take K from their path. The encoder schema lets an empty selection
+    * read back empty and surfaces a column that older files lack as null.
+    * A file the snapshot names that is gone (deleted by a later compaction
+    * or merge) fails the read with the snapshot's version — never a
+    * silently short result.
     */
   def scanFiles(spark: SparkSession, table: String, snap: Snapshot,
                 files: Seq[ZoneFile]): Dataset[EncodedBlock] = {
     val enc = Encoders.product[EncodedBlock]
-    val rels = files.groupBy(_.root).toSeq.sortBy(_._1).map { case (root, zs) =>
-      val r = spark.read.schema(enc.schema)
-      try (if (root == TailRoot) r else r.option("basePath", new Path(table, root).toString))
-        .parquet(zs.map(z => new Path(table, z.path).toString): _*)
+    if (files.isEmpty) return spark.emptyDataset(enc)
+    val rel =
+      try spark.read.schema(enc.schema).parquet(files.map(z => new Path(table, z.path).toString): _*)
       catch {
         case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
           throw new IllegalStateException(s"snapshot v${snap.version} of $table names a " +
             s"block file that no longer exists (a later compaction or run merge deletes the " +
             s"files it folds): ${e.getMessage}", e)
       }
-    }
-    rels.reduceOption(_ unionByName _)
-      .getOrElse(spark.emptyDataset(enc).toDF())
-      .select(enc.schema.fieldNames.toIndexedSeq.map(col): _*)
+    (if (!files.exists(_.path.contains("/part_id="))) rel
+     else rel.withColumn("part_id", coalesce(col("part_id"),
+       regexp_extract(col("_metadata.file_path"), "/part_id=(\\d+)/", 1).cast("int"))))
       .as(enc)
   }
 
@@ -321,7 +319,7 @@ object ManifestIO {
     * a row filter finishes the job inside files: the block zone filter on
     * [first_doc_id, last_doc_id] for a range (which implies the part
     * filter: a part's blocks hold only its own bucket's doc_ids), else the
-    * part filter where a selected file spans several parts (tail files).
+    * part filter (a file holds a run of parts).
     */
   def blocks(spark: SparkSession, table: String, snap: Snapshot,
              parts: Option[Seq[Int]] = None,
@@ -331,8 +329,7 @@ object ManifestIO {
     (range, parts) match {
       case (Some((from, to)), _) =>
         all.where(col("last_doc_id") >= from && col("first_doc_id") <= to)
-      case (None, Some(p)) if chosen.exists(z => z.minPart != z.maxPart) =>
-        all.where(col("part_id").isin(p: _*))
+      case (None, Some(p)) => all.where(col("part_id").isin(p: _*))
       case _ => all
     }
   }
@@ -380,9 +377,9 @@ object ManifestIO {
     }
 
   /** Expire old snapshot metadata, Iceberg's expire-snapshots analog for
-    * this table's growth axis: the DATA dirs are already bounded (parts
-    * rewrite in place with stale-file cleanup; compaction deletes folded
-    * batch dirs and merged runs), but `snapshots/` gains one JSON per
+    * this table's growth axis: the DATA dirs are already bounded (each
+    * part is written once and crashed attempts are swept; compaction deletes
+    * folded batch dirs and merged runs), but `snapshots/` gains one JSON per
     * commit forever — at one streaming commit a minute that is ~0.5M
     * files/year of metadata and an O(versions) listing in [[latest]].
     * Deletes every snapshot JSON older than the newest `keepLast`
@@ -575,12 +572,13 @@ object ResumableEncodeJob {
 
   /** Resumable table-level codec-policy migration: re-encode SRC's
     * committed parts into DST under `opts`, part-batched with the same
-    * commit/cleanup discipline as [[run]]. The per-part work is the NARROW
-    * [[TokenCompressor.recompress]] path — raw tokens never shuffle, DST
-    * inherits SRC's partition plan, and an interrupted migration resumes
-    * from its last committed snapshot exactly like an interrupted encode.
-    * Each part takes every block SRC makes visible in it (batch data,
-    * compacted runs and the stream tail).
+    * commit/cleanup discipline as [[run]], through compaction's recipe:
+    * each part's blocks — every block SRC makes visible in it (batch data,
+    * compacted runs and the stream tail) — decode and re-encode under
+    * DST's plan, inherited from SRC, so every part is re-blocked in doc_id
+    * order with fresh part-local block ids. An interrupted migration
+    * resumes from its last committed snapshot exactly like an interrupted
+    * encode.
     */
   def migrate(
       spark: SparkSession,
@@ -603,28 +601,28 @@ object ResumableEncodeJob {
     val pending = srcParts.toSeq.sorted.filterNot(base.committed)
     if (pending.isEmpty) return base
     val batch = pending.take(maxPartsPerRun)
-    commitParts(spark, dstTable, base, batch.toSet)(TokenCompressor(base.replayZdict(opts))
-      .recompress(ManifestIO.blocks(spark, srcTable, srcSnap.copy(files = Some(srcFiles)),
-        Some(batch))))
+    val comp = TokenCompressor(base.replayZdict(opts))
+    commitParts(spark, dstTable, base, batch.toSet)(comp.encodeWithPlan(
+      comp.decode(ManifestIO.blocks(spark, srcTable, srcSnap.copy(files = Some(srcFiles)),
+        Some(batch))),
+      base.plan, Some(batch.toSet), TokenCompressor.writeTasks(spark, batch.size)))
   }
 
-  /** Commit `batch`'s parts: delete their uncommitted leftovers (a crashed
-    * predecessor's files), write `blocks` into `data/part_id=K` in one job
-    * whose tasks count the lineage and zone entries, then commit the next
-    * version with the batch's entries replaced. Parts of the batch with
-    * zero rows still count as committed.
+  /** Commit `batch`'s parts: sweep every `data/` subdir that holds no file
+    * `base` makes visible (a crashed attempt's; `run` and `migrate` never
+    * drop a data entry, so no older snapshot names one either), write
+    * `blocks` into the fresh `data/version=V` of the next version in one job
+    * whose tasks count the lineage and zone entries, then commit that
+    * version with the entries added. Parts of the batch with zero rows
+    * still count as committed.
     */
   private def commitParts(spark: SparkSession, table: String, base: Snapshot,
                           batch: Set[Int])(blocks: => Dataset[EncodedBlock]): Snapshot = {
-    val f = ManifestIO.fs(spark, table)
     val kept = ManifestIO.visible(spark, table, base)
-      .filterNot(z => z.root == ManifestIO.DataRoot && batch(z.minPart))
-    batch.foreach { pid =>
-      val d = new Path(ManifestIO.dataDir(table), s"part_id=$pid")
-      if (f.exists(d)) f.delete(d, true)
-    }
+    val live = kept.filter(_.root == ManifestIO.DataRoot).map(_.path.split('/')(1)).toSet
+    ManifestIO.sweep(ManifestIO.fs(spark, table), ManifestIO.dataDir(table))(n => !live(n))
     val (lineage, files) = ManifestIO.writeBlocks(blocks, table,
-      ManifestIO.dataDir(table), SaveMode.Append, partitioned = true)
+      new Path(ManifestIO.dataDir(table), s"version=${base.version + 1}"))
     val next = base.next.copy(committed = base.committed ++ batch,
       lineage = base.lineage ++ lineage, files = Some(kept ++ files))
     ManifestIO.write(spark, table, next)

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Selective reads over the encoded table: doc_id-range queries prune at
   * three levels before any payload is decoded —
-  *  1. block files via the snapshot's zone map: the plan's range buckets
-  *     pick the candidate parts, each file's [first, last] doc_id span
-  *     the files within them,
+  *  1. block files via the snapshot's zone map, the table's only partition
+  *     index: the plan's range buckets pick the candidate parts, and a file
+  *     is read only when its part span and its [first, last] doc_id span
+  *     both meet them (one relation over exactly those files),
   *  2. Parquet row groups via min/max stats on first/last_doc_id
   *     (PushedFilters), and
   *  3. per-row post-decode filter.

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming ingestion into the encoded table: a file stream of
@@ -43,8 +42,7 @@ object StreamingEncode {
     val kept = ManifestIO.visible(spark, table, base)
     // batch-scoped directory: deterministic overwrite on retry
     val (written, files) = ManifestIO.writeBlocks(blocks, table,
-      new Path(table, s"${ManifestIO.TailRoot}/batch=$batchId"), SaveMode.Overwrite,
-      partitioned = false)
+      new Path(table, s"${ManifestIO.TailRoot}/batch=$batchId"))
     // stream lineage folds every batch into part -1 (an empty micro-batch,
     // e.g. a replay after checkpoint recovery, adds zeros)
     val added = written.values.foldLeft(
@@ -79,11 +77,12 @@ object StreamingEncode {
   def readDecoded(spark: SparkSession, table: String): Dataset[TokenRow] =
     TokenCompressor(EncodeOptions.default).decode(ResumableEncodeJob.readBlocks(spark, table))
 
-  /** Fold the committed stream-batch tail into the table's part_id layout.
+  /** Fold the committed stream-batch tail into full-size, part-clustered
+    * blocks.
     *
     * A long-running ingest accumulates one directory of micro-batch-sized
     * blocks per trigger — at 10^12 sequences that is millions of small
-    * files with no directory-level pruning and block sizes far below
+    * files, each spanning every part, and block sizes far below
     * [[EncodeOptions.blockTokens]] (worse codec ratios, per-block overhead
     * paid thousands of times over). Compaction decodes the batches at or
     * below the current streamBatchId and re-encodes them with the table's
@@ -101,9 +100,10 @@ object StreamingEncode {
     *
     * Incremental by construction: each run compacts only (previous
     * watermark, streamBatchId], so steady-state cost tracks ingest rate,
-    * not table size. Every run keeps the part_id dir layout, so
-    * reader-side pruning is unaffected; the run COUNT is kept
-    * logarithmic in table size by [[mergeRuns]]'s size-tiered policy.
+    * not table size. Each file of a run holds one contiguous run of parts
+    * and its zone entry records that span, so reader-side pruning matches
+    * batch data; the run COUNT is kept logarithmic in table size by
+    * [[mergeRuns]]'s size-tiered policy.
     *
     * @return the committed snapshot, or the current one when there is
     *         nothing to compact
@@ -120,13 +120,8 @@ object StreamingEncode {
     val fs = ManifestIO.fs(spark, table)
     // sweep leftovers from crashed predecessors: run dirs no snapshot
     // references, and batch dirs already below the watermark
-    val compactedRoot = new Path(table, "compacted")
-    if (fs.exists(compactedRoot)) {
-      val live = base.compactedRuns.map(r => s"run=$r").toSet
-      fs.listStatus(compactedRoot)
-        .filterNot(st => live(st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, true))
-    }
+    val live = base.compactedRuns.map(r => s"run=$r").toSet
+    ManifestIO.sweep(fs, new Path(table, "compacted"))(n => !live(n))
     sweepBatches(fs, table, minBatch)
     // nothing new to fold, but a crashed predecessor may have left the run
     // list un-merged — the tiering pass is idempotent and cheap when level
@@ -140,7 +135,7 @@ object StreamingEncode {
     val (_, files) = ManifestIO.writeBlocks(
       comp.encodeWithPlan(comp.decode(tail), base.plan, None,
         TokenCompressor.writeTasks(spark, base.plan.numParts)),
-      table, runDir, SaveMode.Overwrite, partitioned = true)
+      table, runDir)
 
     val next = base.next.copy(
       compactedBatchId = Some(maxBatch),
@@ -159,14 +154,9 @@ object StreamingEncode {
     * grow O(total batches ever ingested) forever (at one batch/minute,
     * ~0.5M probes per compaction after a year).
     */
-  private def sweepBatches(fs: FileSystem, table: String, watermark: Long): Unit = {
-    val root = new Path(table, ManifestIO.TailRoot)
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch=") && n.stripPrefix("batch=").toLongOption.exists(_ < watermark))
-        fs.delete(st.getPath, true)
-    }
-  }
+  private def sweepBatches(fs: FileSystem, table: String, watermark: Long): Unit =
+    ManifestIO.sweep(fs, new Path(table, ManifestIO.TailRoot))(n =>
+      n.startsWith("batch=") && n.stripPrefix("batch=").toLongOption.exists(_ < watermark))
 
   private def dirBytes(fs: FileSystem, p: Path): Long =
     fs.getContentSummary(p).getLength
@@ -183,11 +173,13 @@ object StreamingEncode {
   /** Size-tiered run merging (LSM/Lucene-style): while the newest run has
     * grown to at least HALF its predecessor's size, the two are folded
     * into one — a pure block PASSTHROUGH (one shuffle of already-encoded
-    * payload bytes, re-clustered by part_id and doc_id-sorted within each
-    * part; no decode, no codec CPU). The invariant afterwards is
-    * geometric run sizes (each run >2x the next newer), so the run count
-    * — and with it every reader's union-branch count and file-listing
-    * fan-out — stays O(log table/ingest) instead of growing one per
+    * payload bytes, placed like an encode's parts ([[Routing.pack]]:
+    * contiguous runs of parts, at most one task per core) and sorted by
+    * (part_id, first_doc_id) within each task; no decode, no codec CPU), so
+    * each merged file holds one contiguous part span. The invariant
+    * afterwards is geometric run sizes (each run >2x the next newer), so
+    * the run count — and with it the reader's zone-map size and file
+    * count — stays O(log table/ingest) instead of growing one per
     * compaction forever, and each byte is rewritten O(log N) times total.
     * Each merge is its own atomic snapshot commit; a crash leaves either
     * an unreferenced target dir (swept) or committed-but-undeleted source
@@ -205,10 +197,12 @@ object StreamingEncode {
       val targetDir = ManifestIO.compactedDir(table, target)
       val srcRoots = srcRuns.map(ManifestIO.runRoot).toSet
       val (src, kept) = ManifestIO.visible(spark, table, snap).partition(z => srcRoots(z.root))
-      val (_, files) = ManifestIO.writeBlocks(ManifestIO.scanFiles(spark, table, snap, src)
-        .repartition(col("part_id"))
-        .sortWithinPartitions("part_id", "first_doc_id"),
-        table, targetDir, SaveMode.Overwrite, partitioned = true)
+      val numParts = snap.plan.numParts
+      val merged = Routing.pack(ManifestIO.scanFiles(spark, table, snap, src).toDF(),
+          numParts, None, TokenCompressor.writeTasks(spark, numParts))
+        .sortWithinPartitions("part_id", "first_doc_id")
+        .drop("route_key").as(Encoders.product[EncodedBlock])
+      val (_, files) = ManifestIO.writeBlocks(merged, table, targetDir)
       snap = snap.next.copy(
         compactedRuns = snap.compactedRuns.dropRight(2) :+ target,
         compactedRunBytes = sizes.dropRight(2) :+ dirBytes(fs, targetDir),

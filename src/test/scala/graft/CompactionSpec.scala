@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoders
 import java.nio.file.Files
 
-/** Stream-batch compaction: micro-batch block dirs fold into the table's
-  * part_id layout (one immutable `compacted/run=V` dir per invocation)
+/** Stream-batch compaction: micro-batch block dirs fold into full-size,
+  * part-clustered blocks (one immutable `compacted/run=V` dir per invocation)
   * behind the same atomic-snapshot commit every other writer uses. Content
   * is preserved exactly; block sizes and clustering recover to batch-encode
   * quality; crashes at any point leave no duplicate or missing rows.
@@ -22,6 +22,15 @@ class CompactionSpec extends AnyFunSuite {
       .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
 
   private def fs(table: String) = ManifestIO.fs(spark, table)
+  private def append(table: String, from: Long, to: Long, opts: EncodeOptions, b: Long): Unit = {
+    StreamingEncode.appendBatch(batchRows(from, to), table, opts, b)
+    TableInvariants.assertSound(spark, table)
+  }
+  private def compact(table: String, opts: EncodeOptions): Snapshot = {
+    val snap = StreamingEncode.compact(spark, table, opts)
+    TableInvariants.assertSound(spark, table)
+    snap
+  }
   private def batchDir(table: String, b: Long) =
     new org.apache.hadoop.fs.Path(s"$table/stream_batches/batch=$b")
 
@@ -30,22 +39,25 @@ class CompactionSpec extends AnyFunSuite {
     val table = s"$root/t"
     // small blockTokens + 3 micro-batches → many undersized stream blocks
     val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12)
-    StreamingEncode.appendBatch(batchRows(0, 300), table, opts, batchId = 0L)
-    StreamingEncode.appendBatch(batchRows(300, 600), table, opts, batchId = 1L)
-    StreamingEncode.appendBatch(batchRows(600, 900), table, opts, batchId = 2L)
+    append(table, 0, 300, opts, 0L)
+    append(table, 300, 600, opts, 1L)
+    append(table, 600, 900, opts, 2L)
 
     val before = decodedMap(table)
     val streamBlocks = ResumableEncodeJob.readBlocks(spark, table).count()
 
-    val snap = StreamingEncode.compact(spark, table,
+    val snap = compact(table,
       opts.copy(blockTokens = 1 << 16))
     assert(snap.compactedBatchId.contains(2L))
     assert(snap.compactedRuns.nonEmpty)
-    // source batch dirs are gone; the run dir carries the part_id layout
+    // source batch dirs are gone; the run dir holds one file per write task
     (0L to 2L).foreach(b => assert(!fs(table).exists(batchDir(table, b))))
     val runDir = ManifestIO.compactedDir(table, snap.compactedRuns.last)
     assert(fs(table).exists(runDir))
-    assert(fs(table).listStatus(runDir).exists(_.getPath.getName.startsWith("part_id=")))
+    val runFiles = fs(table).listStatus(runDir).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+    assert(runFiles.nonEmpty && runFiles.length <= TokenCompressor.writeTasks(spark, 4),
+      s"run dir files: ${runFiles.toSeq}")
+    assert(fs(table).listStatus(runDir).forall(_.isFile), "the run dir has subdirs")
 
     // content identical, block count collapsed (bigger blocks, one layout)
     assert(decodedMap(table) == before)
@@ -59,7 +71,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(hit.length == 1 && hit.head.tokens.toSeq == before(probe))
 
     // nothing pending → no-op, no new snapshot
-    val again = StreamingEncode.compact(spark, table, opts)
+    val again = compact(table, opts)
     assert(again.version == snap.version)
   }
 
@@ -67,20 +79,24 @@ class CompactionSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_compact2").toString
     val table = s"$root/t"
     val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12)
-    StreamingEncode.appendBatch(batchRows(0, 250), table, opts, batchId = 0L)
-    val s1 = StreamingEncode.compact(spark, table, opts)
+    append(table, 0, 250, opts, 0L)
+    val s1 = compact(table, opts)
 
-    StreamingEncode.appendBatch(batchRows(250, 500), table, opts, batchId = 1L)
+    append(table, 250, 500, opts, 1L)
     // mixed state: one compacted run + one live batch dir
     assert(decodedMap(table).size == 500)
 
-    val s2 = StreamingEncode.compact(spark, table, opts)
+    val s2 = compact(table, opts)
     assert(s2.compactedBatchId.contains(1L))
     // equal-size runs trip the size-tiered policy: the tail run merges
     // with s1's run into ONE passthrough-merged run
     assert(s2.compactedRuns.length == 1)
     assert(s2.compactedRuns != s1.compactedRuns)
     assert(s2.compactedRunBytes.length == 1)
+    // the merged run: one contiguous part span per file, none overlapping
+    val spans = s2.files.get.map(z => (z.minPart, z.maxPart)).sorted
+    assert(spans.length <= TokenCompressor.writeTasks(spark, 4) &&
+      spans.zip(spans.drop(1)).forall { case (a, b) => a._2 < b._1 }, s"merged run spans $spans")
     assert(!fs(table).exists(batchDir(table, 1L)))
     assert(!fs(table).exists(ManifestIO.compactedDir(table, s1.compactedRuns.head)),
       "merged-away source run dir must be deleted")
@@ -95,14 +111,14 @@ class CompactionSpec extends AnyFunSuite {
     // one big run, then a stream of small tails: tails merge among
     // themselves but must NOT cascade into the big run until they grow to
     // half its size
-    StreamingEncode.appendBatch(batchRows(0, 2000), table, opts, batchId = 0L)
-    val big = StreamingEncode.compact(spark, table, opts)
+    append(table, 0, 2000, opts, 0L)
+    val big = compact(table, opts)
     assert(big.compactedRuns.length == 1)
     var from = 2000L
     var batch = 1L
     for (_ <- 1 to 3) {
-      StreamingEncode.appendBatch(batchRows(from, from + 100), table, opts, batch)
-      StreamingEncode.compact(spark, table, opts)
+      append(table, from, from + 100, opts, batch)
+      compact(table, opts)
       from += 100; batch += 1
     }
     val snap = ManifestIO.latest(spark, table).get
@@ -125,13 +141,13 @@ class CompactionSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_compact3").toString
     val table = s"$root/t"
     val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12)
-    StreamingEncode.appendBatch(batchRows(0, 200), table, opts, batchId = 0L)
+    append(table, 0, 200, opts, 0L)
 
     // a compaction that died after writing its run dir but before commit:
     // the dir exists, no snapshot references it
     val orphan = ManifestIO.compactedDir(table, 99)
     fs(table).mkdirs(orphan)
-    val s1 = StreamingEncode.compact(spark, table, opts)
+    val s1 = compact(table, opts)
     assert(!fs(table).exists(orphan), "unreferenced run dir must be swept")
     assert(s1.compactedRuns == Seq(s1.version))
 
@@ -140,8 +156,8 @@ class CompactionSpec extends AnyFunSuite {
     // next compaction deletes it without recompacting
     fs(table).mkdirs(batchDir(table, 0L))
     assert(decodedMap(table).size == 200, "watermarked batch dir must be invisible")
-    StreamingEncode.appendBatch(batchRows(200, 400), table, opts, batchId = 1L)
-    val s2 = StreamingEncode.compact(spark, table, opts)
+    append(table, 200, 400, opts, 1L)
+    val s2 = compact(table, opts)
     assert(!fs(table).exists(batchDir(table, 0L)), "leftover dir must be swept")
     // the equal-size tail run size-tier-merges with s1's run
     assert(s2.compactedRuns.size == 1)
@@ -152,11 +168,11 @@ class CompactionSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_compact_tt").toString
     val table = s"$root/t"
     val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 12)
-    StreamingEncode.appendBatch(batchRows(0, 300), table, opts, batchId = 0L)
+    append(table, 0, 300, opts, 0L)
     val v = ManifestIO.latest(spark, table).get.version
     assert(ResumableEncodeJob.readBlocks(spark, table, Some(v)).collect()
       .map(_.n_docs.toLong).sum == 300L)
-    StreamingEncode.compact(spark, table, opts)
+    compact(table, opts)
     val e = intercept[IllegalStateException](
       ResumableEncodeJob.readBlocks(spark, table, Some(v)).count())
     assert(e.getMessage.contains(s"snapshot v$v "), e.getMessage)

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.TaskContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.internal.io.FileNameSpec
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.hadoop.mapreduce.TaskAttemptContext
@@ -45,13 +44,13 @@ class LineageRetrySpec extends AnyFunSuite {
     // the injected failure fired once in each of the two write jobs
     val failed = new java.io.File(s"$dir/failed").listFiles()
     assert(failed != null && failed.length == 2, s"injected failures: ${failed.toSeq}\n$tail")
-    // the batch write is packed: its failed attempt had written several parts
-    val failedDirs = failed.toSeq.map(f => java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq)
-    val failedParts = failedDirs.flatten.filter(_.startsWith("part_id=")).distinct
-    assert(failedParts.length >= 2, s"parts of the failed batch attempt: $failedDirs")
+    // the batch write is packed: task 0, the one that failed, wrote one
+    // file holding several parts
+    val batch = ManifestIO.latest(spark, s"$dir/batch").get
+    val task0 = batch.files.get.filter(_.path.split('/').last.startsWith("part-00000-"))
+    assert(task0.length == 1 && task0.head.minPart < task0.head.maxPart, s"task 0's files: $task0")
 
     val schema = Encoders.product[EncodedBlock].schema
-    val batch = ManifestIO.latest(spark, s"$dir/batch").get
     assert(batch.lineage.nonEmpty)
     assert(batch.lineage == LineageOracle.of(
       spark.read.schema(schema).parquet(ManifestIO.dataDir(s"$dir/batch").toString)))
@@ -66,7 +65,7 @@ class LineageRetrySpec extends AnyFunSuite {
 /** Child-JVM body of [[LineageRetrySpec]]: one batch `run` and one stream
   * `appendBatch`, each of whose write jobs loses attempt 0 of partition 0
   * at task commit. Both pack 4 parts into 2 tasks, so the failed batch
-  * attempt wrote two part dirs. usage: LineageRetryChild <dir>
+  * attempt wrote a file of two parts. usage: LineageRetryChild <dir>
   */
 object LineageRetryChild {
   val Docs = 400L
@@ -94,28 +93,18 @@ object LineageRetryChild {
 
 /** Fails attempt 0 of partition 0 in `commitTask` — the task has already
   * written its files, so its accumulator updates are complete when it
-  * dies — and records one marker file per failed job, listing the
-  * partition dirs (`part_id=K`) the failed attempt wrote files into.
+  * dies — and records one marker file per failed job.
   */
 class FailFirstCommitProtocol(jobId: String, path: String,
                               dynamicPartitionOverwrite: Boolean)
     extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
-  // per task: the committer is deserialized into every task
-  @transient private lazy val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  override def newTaskTempFile(ctx: TaskAttemptContext, dir: Option[String],
-                               spec: FileNameSpec): String = {
-    dir.foreach(dirs.add)
-    super.newTaskTempFile(ctx, dir, spec)
-  }
-
   override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage = {
     val tc = TaskContext.get()
     if (tc != null && tc.partitionId() == 0 && tc.attemptNumber() == 0) {
       val marks = java.nio.file.Paths.get(
         System.getProperty(FailFirstCommitProtocol.MarkerDirProperty))
       java.nio.file.Files.createDirectories(marks)
-      java.nio.file.Files.write(marks.resolve(jobId), dirs.asScala.toSeq.sorted.asJava)
+      java.nio.file.Files.createFile(marks.resolve(jobId))
       throw new java.io.IOException("injected commitTask failure, attempt 0")
     }
     super.commitTask(ctx)

@@ -62,12 +62,17 @@ class PlacementSpec extends AnyFunSuite {
     val input = Fixtures.tokenTable(spark, 600L)
     val plan = Planner.plan(input, opts)
     val cores = spark.sparkContext.defaultParallelism
-    def assertPacked(what: String, jobs: Int, writes: Seq[Int]): Unit = {
+    def assertPacked(what: String, jobs: Int, writes: Seq[Int], files: Seq[ZoneFile]): Unit = {
       // the exchange's map stage (its own job under AQE) and the write
       assert(jobs <= 2, s"$what ran $jobs jobs")
       assert(writes.length == 1, s"$what: ${writes.length} stages wrote files")
       assert(writes.head == math.min(plan.numParts, cores),
         s"$what: the write stage ran ${writes.head} tasks on $cores cores")
+      // one file per task, each one contiguous part span, none overlapping
+      assert(files.length == writes.head, s"$what wrote ${files.map(_.path)}")
+      val spans = files.map(z => (z.minPart, z.maxPart)).sorted
+      assert(spans.zip(spans.drop(1)).forall { case (a, b) => a._2 < b._1 },
+        s"$what: overlapping part spans $spans")
     }
 
     val unpacked = fingerprint(TokenCompressor(opts).encode(input).collect())
@@ -84,13 +89,18 @@ class PlacementSpec extends AnyFunSuite {
     val packed = s"$root/packed"
     ManifestIO.write(spark, packed, Snapshot.initial(plan))
     val (snap, jobs, writes) = watchWrites(ResumableEncodeJob.run(input, packed, opts))
+    TableInvariants.assertSound(spark, packed)
     assert(snap.committed.size == plan.numParts)
-    assertPacked("run", jobs, writes)
+    assertPacked("run", jobs, writes, snap.files.get)
     assertSame("packed run", blocksOf(packed))
 
     // resumed in batches of 5, 5 and 2 parts, each packed on its own
     val resumed = s"$root/resumed"
-    val last = (1 to 3).map(_ => ResumableEncodeJob.run(input, resumed, opts, maxPartsPerRun = 5)).last
+    val last = (1 to 3).map { _ =>
+      val s = ResumableEncodeJob.run(input, resumed, opts, maxPartsPerRun = 5)
+      TableInvariants.assertSound(spark, resumed)
+      s
+    }.last
     assert(last.committed.size == plan.numParts && last.version == 3)
     assert(last.plan.boundaries.toSeq == plan.boundaries.toSeq)
     assertSame("resumed run", blocksOf(resumed))
@@ -99,9 +109,11 @@ class PlacementSpec extends AnyFunSuite {
     val stream = s"$root/stream"
     ManifestIO.write(spark, stream, Snapshot.initial(plan))
     StreamingEncode.appendBatch(input, stream, opts, 0L)
+    TableInvariants.assertSound(spark, stream)
     val (compacted, cJobs, cWrites) = watchWrites(StreamingEncode.compact(spark, stream, opts))
+    TableInvariants.assertSound(spark, stream)
     assert(compacted.compactedRuns.length == 1)
-    assertPacked("compact", cJobs, cWrites)
+    assertPacked("compact", cJobs, cWrites, compacted.files.get.filterNot(_.isTail))
     assertSame("compaction", blocksOf(stream))
   }
 }

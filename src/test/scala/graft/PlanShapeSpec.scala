@@ -136,7 +136,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(partFilters(all - 5).nonEmpty, "a resumed partial run lost its part filter")
   }
 
-  test("rangeBlocks: one scan each for batch data, a compacted run and the whole stream tail") {
+  test("rangeBlocks: one scan over batch data, a compacted run and the stream tail") {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.execution.FileSourceScanExec
     val table = java.nio.file.Files.createTempDirectory("graft_scans").toString
@@ -152,14 +152,63 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(snap.compactedRuns.size == 1 && snap.committed.nonEmpty)
     val df = RangeReader.rangeBlocks(spark, table, "", "￿").toDF()
     val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
-    // one scan per layout with a selected file (a full span selects all)
+    // one scan over every layout (a full span selects every file)
     val named = snap.files.get
     assert(named.map(_.root).distinct.size == 3)
-    assert(scans.size == 3, s"expected data + run + tail scans:\n${df.queryExecution.sparkPlan}")
-    // each scan's roots are exactly the .parquet files the snapshot names
-    val roots = scans.flatMap(_.relation.location.rootPaths.map(_.toUri.getPath))
+    assert(scans.size == 1, s"expected one scan:\n${df.queryExecution.sparkPlan}")
+    // its roots are exactly the .parquet files the snapshot names
+    val roots = scans.head.relation.location.rootPaths.map(_.toUri.getPath)
     assert(roots.forall(_.endsWith(".parquet")), roots)
     assert(roots.sorted == named.map(z => s"$table/${z.path}").sorted)
+  }
+
+  test("table writes: no sort under WriteFiles in run, appendBatch, compact, mergeRuns or migrate") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.WriteFilesExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = java.nio.file.Files.createTempDirectory("graft_write_plans").toString
+    val (table, dst) = (s"$root/t", s"$root/m")
+    val opts = EncodeOptions(numParts = 8)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    object Plans extends AdaptiveSparkPlanHelper
+    // the node each write's WriteFiles consumes, codegen wrapper removed
+    def writeInputs[T](body: => T): Seq[SparkPlan] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+          Plans.collect(qe.executedPlan) { case w: WriteFilesExec => w.child }.foreach {
+            case c: WholeStageCodegenExec => got.add(c.child)
+            case c => got.add(c)
+          }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.register(l)
+      try body
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(l)
+      }
+      got.toArray(Array.empty[SparkPlan]).toSeq
+    }
+    def assertUnsorted(what: String, writes: Int)(body: => Any): Unit = {
+      val in = writeInputs(body)
+      assert(in.length == writes, s"$what: ${in.length} writes")
+      in.foreach(p => assert(!p.isInstanceOf[SortExec], s"$what sorts before WriteFiles:\n$p"))
+    }
+    assertUnsorted("run", 1)(ResumableEncodeJob.run(rows(0, 400), table, opts))
+    assertUnsorted("appendBatch", 1)(StreamingEncode.appendBatch(rows(400, 500), table, opts, 0L))
+    assertUnsorted("compact", 1)(StreamingEncode.compact(spark, table, opts))
+    StreamingEncode.appendBatch(rows(500, 600), table, opts, 1L)
+    // the second run is as large as the first: compaction, then the merge
+    assertUnsorted("compact + mergeRuns", 2) {
+      assert(StreamingEncode.compact(spark, table, opts).compactedRuns.length == 1)
+    }
+    assertUnsorted("migrate", 1)(ResumableEncodeJob.migrate(spark, table, dst,
+      EncodeOptions(codecPolicy = "plain")))
   }
 
   test("incrementalPairs: committed sigs scanned once in place, cand side broadcast") {

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.collection.parallel.CollectionConverters._
 
 /** Resumability (north_rule): an interrupted run continues from the last
   * committed snapshot, re-encoding only uncommitted partitions, and the
@@ -18,8 +19,10 @@ class ResumeSpec extends AnyFunSuite {
 
     // interrupted run: 5 parts per invocation
     val s1 = ResumableEncodeJob.run(input, s"$dir/t1", opts, maxPartsPerRun = 5)
+    TableInvariants.assertSound(spark, s"$dir/t1")
     assert(s1.committed.size == 5 && s1.version == 1)
     val s2 = ResumableEncodeJob.run(input, s"$dir/t1", opts, maxPartsPerRun = 5)
+    TableInvariants.assertSound(spark, s"$dir/t1")
     assert(s2.committed.size == 10 && s2.version == 2)
     // only 5 new parts were encoded in run 2
     assert((s2.committed -- s1.committed).size == 5)
@@ -29,6 +32,7 @@ class ResumeSpec extends AnyFunSuite {
       assert(s2.lineage(p) == s1.lineage(p), s"lineage of committed part $p changed")
     }
     val s3 = ResumableEncodeJob.run(input, s"$dir/t1", opts)
+    TableInvariants.assertSound(spark, s"$dir/t1")
     assert(s3.committed.size == s3.plan.numParts)
     // idempotent once complete
     val s4 = ResumableEncodeJob.run(input, s"$dir/t1", opts)
@@ -36,6 +40,7 @@ class ResumeSpec extends AnyFunSuite {
 
     // uninterrupted run for comparison
     val u = ResumableEncodeJob.run(input, s"$dir/t2", opts)
+    TableInvariants.assertSound(spark, s"$dir/t2")
     assert(u.committed == s3.committed)
 
     // decoded tables identical to the input (and hence to each other)
@@ -71,20 +76,24 @@ class ResumeSpec extends AnyFunSuite {
     val opts = EncodeOptions(numParts = 4)
     val input = Fixtures.tokenTable(spark, 200L)
     val s1 = ResumableEncodeJob.run(input, s"$dir/t", opts, maxPartsPerRun = 2)
-    // simulate a crashed job that left files for an uncommitted part
-    val pending = (0 until s1.plan.numParts).filterNot(s1.committed).head
-    val staleDir = new java.io.File(s"$dir/t/data/part_id=$pending")
+    TableInvariants.assertSound(spark, s"$dir/t")
+    // simulate a crashed job that left a file in a data dir no snapshot
+    // names: a valid-but-stale parquet, copied from a committed one
+    val staleDir = new java.io.File(s"$dir/t/data/version=${s1.version + 1}")
     staleDir.mkdirs()
     val stale = new java.io.File(staleDir, "part-stale.parquet")
-    // a valid-but-stale parquet: copy one from a committed part
-    val committedDir = new java.io.File(s"$dir/t/data/part_id=${s1.committed.head}")
-    val src = committedDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val src = new java.io.File(s"$dir/t/${s1.files.get.head.path}")
     Files.copy(src.toPath, stale.toPath)
 
     val s2 = ResumableEncodeJob.run(input, s"$dir/t", opts)
+    TableInvariants.assertSound(spark, s"$dir/t")
     assert(s2.committed.size == s2.plan.numParts)
     val dec = TokenCompressor(opts).decode(ResumableEncodeJob.readBlocks(spark, s"$dir/t"))
     assert(dec.count() == 200L, "stale file must not produce duplicate rows")
+    // the data dirs are exactly those the zone map names
+    val named = s2.files.get.map(_.path.split('/')(1)).toSet
+    assert(new java.io.File(s"$dir/t/data").list().toSet == named)
+    assert(!stale.exists())
   }
 
   test("zero-row input commits an empty snapshot and reads back empty") {
@@ -92,6 +101,7 @@ class ResumeSpec extends AnyFunSuite {
     val empty = spark.createDataset(Seq.empty[TokenRow])(Encoders.product[TokenRow])
     val dir = java.nio.file.Files.createTempDirectory("graft_empty_tbl").toString
     val snap = ResumableEncodeJob.run(empty, dir, EncodeOptions(numParts = 4))
+    TableInvariants.assertSound(spark, dir)
     assert(snap.version == 1, "first batch must COMMIT even with zero blocks")
     assert(snap.committed == (0 until snap.plan.numParts).toSet)
     assert(snap.lineage.isEmpty)
@@ -107,15 +117,19 @@ class ResumeSpec extends AnyFunSuite {
     val src = java.nio.file.Files.createTempDirectory("graft_mig_src").toString
     val dst = java.nio.file.Files.createTempDirectory("graft_mig_dst").toString
     ResumableEncodeJob.run(input, src, EncodeOptions(numParts = 6, blockTokens = 1 << 13))
+    TableInvariants.assertSound(spark, src)
     // interrupted migration: 2 parts per run -> 3 runs to converge
     val s1 = ResumableEncodeJob.migrate(spark, src, dst,
       EncodeOptions(codecPolicy = "plain"), maxPartsPerRun = 2)
+    TableInvariants.assertSound(spark, dst)
     assert(s1.committed.size == 2)
     val s2 = ResumableEncodeJob.migrate(spark, src, dst,
       EncodeOptions(codecPolicy = "plain"), maxPartsPerRun = 2)
+    TableInvariants.assertSound(spark, dst)
     assert(s2.committed.size == 4)
     val s3 = ResumableEncodeJob.migrate(spark, src, dst,
       EncodeOptions(codecPolicy = "plain"))
+    TableInvariants.assertSound(spark, dst)
     assert(s3.committed.size == 6)
     // idempotent once converged
     assert(ResumableEncodeJob.migrate(spark, src, dst,
@@ -129,6 +143,27 @@ class ResumeSpec extends AnyFunSuite {
     val srcSnap = ManifestIO.latest(spark, src).get
     assert(s3.lineage.values.map(_.n_tokens).sum == srcSnap.lineage.values.map(_.n_tokens).sum)
     assert(s3.lineage.values.flatMap(_.codecs.keys).toSet == Set("plain"))
+  }
+
+  test("migrate re-blocks each part in doc_id order: every doc looks up, block ids stay unique") {
+    import org.apache.spark.sql.Encoders
+    val root = Files.createTempDirectory("graft_mig_order").toString
+    val (src, dst) = (s"$root/src", s"$root/dst")
+    val opts = EncodeOptions(numParts = 8)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    // every part of SRC holds batch data and two stream batches' blocks
+    ResumableEncodeJob.run(rows(0, 800), src, opts)
+    StreamingEncode.appendBatch(rows(800, 1000), src, opts, batchId = 0L)
+    StreamingEncode.appendBatch(rows(1000, 1200), src, opts, batchId = 1L)
+    ResumableEncodeJob.migrate(spark, src, dst, EncodeOptions(codecPolicy = "plain"))
+    TableInvariants.assertSound(spark, dst)
+    val ids = ResumableEncodeJob.readBlocks(spark, dst).collect().map(b => (b.part_id, b.block_id))
+    assert(ids.distinct.length == ids.length,
+      s"${ids.length} blocks, ${ids.distinct.length} distinct (part_id, block_id)")
+    val missed = (0L until 1200L).map(Fixtures.row(42L, _).doc_id).par
+      .filterNot(id => RangeReader.lookup(spark, dst, id).collect().map(_.doc_id).toSeq == Seq(id))
+    assert(missed.isEmpty, s"${missed.size} of 1200 lookups missed, e.g. ${missed.take(3)}")
   }
 
   test("pre-zdict block tables (no zdict column) read back and decode") {
@@ -165,6 +200,7 @@ class ResumeSpec extends AnyFunSuite {
     val input = Fixtures.tokenTable(spark, 100L)
     val dir = java.nio.file.Files.createTempDirectory("graft_conflict").toString
     val snap = ResumableEncodeJob.run(input, dir, EncodeOptions(numParts = 2))
+    TableInvariants.assertSound(spark, dir)
     // a racing committer writing the SAME version must fail closed
     val racing = snap.copy(committedAtMillis = snap.committedAtMillis + 1)
     intercept[SnapshotConflictException](ManifestIO.write(spark, dir, racing))
@@ -176,6 +212,7 @@ class ResumeSpec extends AnyFunSuite {
     val input = Fixtures.tokenTable(spark, 100L)
     val dir = java.nio.file.Files.createTempDirectory("graft_expire").toString
     val s1 = ResumableEncodeJob.run(input, dir, EncodeOptions(numParts = 2))
+    TableInvariants.assertSound(spark, dir)
     // stack three more metadata versions on top (same data, new snapshots)
     var cur = s1
     (1 to 3).foreach { i =>
@@ -212,14 +249,17 @@ class ResumeSpec extends AnyFunSuite {
       .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
     val input = rows(0, 2000)
     val s1 = ResumableEncodeJob.run(input, dir, opts, maxPartsPerRun = 4)
+    TableInvariants.assertSound(spark, dir)
     assert(s1.committed.size == 4)
     StreamingEncode.appendBatch(rows(2000, 2200), dir, opts, batchId = 0L)
+    TableInvariants.assertSound(spark, dir)
     val corpus = (0 until 32).map(i =>
       (i.toLong, Array.tabulate(8)(d => math.sin(i * 8 + d).toFloat)))
       .toDF("vec_id", "embedding")
     val cents = SimSearch.IvfIndex.build(corpus, dir, kCells = 4, iters = 2)
 
     val s2 = ResumableEncodeJob.run(input, dir, opts)
+    TableInvariants.assertSound(spark, dir)
     assert(s2.committed.size == s2.plan.numParts)
     assert(s2.streamBatchId.contains(0L), "the resumed run dropped the stream watermark")
     assert(s2.lineage.get(-1).exists(_.n_docs == 200L))
@@ -247,13 +287,16 @@ class ResumeSpec extends AnyFunSuite {
     val want = input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
     def migrated(dst: String) = {
       ResumableEncodeJob.migrate(spark, src, dst, EncodeOptions(codecPolicy = "plain"))
+      TableInvariants.assertSound(spark, dst)
       StreamingEncode.readDecoded(spark, dst).collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
     }
     StreamingEncode.appendBatch(input, src, opts, batchId = 0L)
+    TableInvariants.assertSound(spark, src)
     val tail = migrated(s"$root/dst_tail")
     assert(tail.size == 300, s"migrated ${tail.size} of 300 tail rows")
     assert(tail == want)
     StreamingEncode.compact(spark, src, opts)
+    TableInvariants.assertSound(spark, src)
     val run = migrated(s"$root/dst_run")
     assert(run.size == 300, s"migrated ${run.size} of 300 compacted rows")
     assert(run == want)
@@ -271,6 +314,7 @@ class ResumeSpec extends AnyFunSuite {
     val input = spark.range(0, 300)
       .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
     val snap = ResumableEncodeJob.run(input, dir, EncodeOptions(numParts = 4))
+    TableInvariants.assertSound(spark, dir)
     assert(snap.plan.numParts > 0 && snap.committed.size == snap.plan.numParts)
     assert(snap.ivfCentroids.exists(_.zip(cents).forall { case (a, b) => a.sameElements(b) }),
       "the first run dropped the IVF centroids")

@@ -21,6 +21,7 @@ class StreamingSpec extends AnyFunSuite {
     wave1.toDF().coalesce(1).write.mode("append").parquet(in)
     val q1 = StreamingEncode.start(spark, in, table, opts)
     q1.awaitTermination()
+    TableInvariants.assertSound(spark, table)
 
     // wave 2: rows 300..500 (distinct ids via a shifted seed-range trick)
     val wave2 = spark.range(300, 500)
@@ -28,6 +29,7 @@ class StreamingSpec extends AnyFunSuite {
     wave2.toDF().coalesce(1).write.mode("append").parquet(in)
     val q2 = StreamingEncode.start(spark, in, table, opts)
     q2.awaitTermination()
+    TableInvariants.assertSound(spark, table)
 
     val snap = ManifestIO.latest(spark, table).get
     assert(snap.streamBatchId.isDefined)
@@ -46,6 +48,7 @@ class StreamingSpec extends AnyFunSuite {
     // replayed batch id is a no-op (idempotence)
     val before = ManifestIO.latest(spark, table).get.version
     StreamingEncode.appendBatch(wave1, table, opts, batchId = 0L)
+    TableInvariants.assertSound(spark, table)
     assert(ManifestIO.latest(spark, table).get.version == before)
   }
 
@@ -56,6 +59,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // batch-encoded reference table over the identical input
     ResumableEncodeJob.run(input, s"$root/batch_table", opts)
+    TableInvariants.assertSound(spark, s"$root/batch_table")
     val batchLin = ManifestIO.latest(spark, s"$root/batch_table").get.lineage
       .values.filter(_.part_id >= 0)
 
@@ -63,6 +67,7 @@ class StreamingSpec extends AnyFunSuite {
     input.toDF().coalesce(1).write.mode("append").parquet(s"$root/in")
     StreamingEncode.start(spark, s"$root/in", s"$root/stream_table", opts)
       .awaitTermination()
+    TableInvariants.assertSound(spark, s"$root/stream_table")
     val sl = ManifestIO.latest(spark, s"$root/stream_table").get.lineage(-1)
 
     assert(sl.n_blocks == batchLin.map(_.n_blocks).sum)
@@ -89,6 +94,7 @@ class StreamingSpec extends AnyFunSuite {
     val opts = EncodeOptions(numParts = 12, blockTokens = 1 << 13, zdictBlocks = 2)
     val input = Fixtures.tokenTable(spark, 600L)
     val batchSnap = ResumableEncodeJob.run(input, s"$root/batch_table", opts)
+    TableInvariants.assertSound(spark, s"$root/batch_table")
     assert(batchSnap.plan.numParts == 12)
     val stream = s"$root/stream_table"
     // seed v0 with the batch table's plan so the append plans nothing
@@ -118,6 +124,7 @@ class StreamingSpec extends AnyFunSuite {
       sc.removeSparkListener(jobListener)
       spark.listenerManager.unregister(planListener)
     }
+    TableInvariants.assertSound(spark, stream)
     assert(jobs.get() <= 2, s"appendBatch ran ${jobs.get()} jobs")
     assert(!plans.isEmpty, "the batch write's plan must be observed")
     plans.forEach(p => assert(!p.contains("InMemory"), s"cached relation in write plan:\n$p"))
