@@ -249,11 +249,11 @@ object ManifestIO {
   /** The block files `snap` makes visible: its zone map or, for a snapshot
     * written before snapshots carried one (whose tables keep `part_id=K`
     * dirs), one listing per layout into the same entries with open doc_id
-    * bounds — batch data of the committed parts, each compacted run, and
-    * the stream tail's batch dirs with id in (compactedBatchId,
-    * streamBatchId]. Bounding by the snapshot keeps commit-then-visible
-    * either way: a file no snapshot names (a crashed attempt's) is never
-    * read.
+    * bounds — the files in `part_id=K` dirs of the committed parts and of
+    * each compacted run, and the stream tail's batch dirs with id in
+    * (compactedBatchId, streamBatchId]. Bounding by the snapshot keeps
+    * commit-then-visible either way: a file no snapshot names (a crashed
+    * attempt's, or a later commit's `data/version=V/` file) is never read.
     */
   def visible(spark: SparkSession, table: String, snap: Snapshot): Seq[ZoneFile] =
     snap.files.getOrElse {
@@ -270,11 +270,12 @@ object ManifestIO {
               rel(p).split('/').forall(c => !c.startsWith("_") && !c.startsWith(".")))
             .toSeq
         }
-      def partOf(p: Path) = p.getParent.getName.stripPrefix("part_id=").toInt
-      def inPart(p: Path) = ZoneFile(rel(p), partOf(p), partOf(p))
+      def inParts(ps: Seq[Path], keep: Int => Boolean): Seq[ZoneFile] = ps.flatMap(p =>
+        p.getParent.getName.stripPrefix("part_id=").toIntOption.filter(keep)
+          .map(k => ZoneFile(rel(p), k, k)))
       val data = if (snap.committed.isEmpty) Nil
-        else list(dataDir(table)).filter(p => snap.committed(partOf(p))).map(inPart)
-      val runs = snap.compactedRuns.flatMap(r => list(compactedDir(table, r)).map(inPart))
+        else inParts(list(dataDir(table)), snap.committed)
+      val runs = snap.compactedRuns.flatMap(r => inParts(list(compactedDir(table, r)), _ => true))
       val minBatch = snap.compactedBatchId.fold(0L)(_ + 1)
       val maxBatch = snap.streamBatchId.getOrElse(-1L)
       val tail = if (minBatch > maxBatch) Nil else list(new Path(table, TailRoot))
@@ -308,7 +309,7 @@ object ManifestIO {
       }
     (if (!files.exists(_.path.contains("/part_id="))) rel
      else rel.withColumn("part_id", coalesce(col("part_id"),
-       regexp_extract(col("_metadata.file_path"), "/part_id=(\\d+)/", 1).cast("int"))))
+       regexp_extract(col("_metadata.file_path"), "/part_id=(\\d+)/[^/]*$", 1).cast("int"))))
       .as(enc)
   }
 
