@@ -102,8 +102,7 @@ object Bench {
   private def encodeRun(s: SparkSession, inputPath: String, opts: EncodeOptions,
                         plan: PartitionPlan)
       : (Double, Long, Long, Long, Map[String, Long]) = {
-    import org.apache.spark.sql.Encoders
-    val ds = s.read.parquet(inputPath).as[TokenRow](Encoders.product[TokenRow])
+    val ds = s.read.parquet(inputPath).as[TokenRow](RowEncoders.tokenRow)
     val comp = TokenCompressor(opts)
     val t0 = System.nanoTime()
     val agg = comp.encodeWithPlan(ds, plan, None).toDF().groupBy("codec").agg(
@@ -541,12 +540,11 @@ object Bench {
       fixturePathRef(0) = fixturePath
       val s = session(cpus)
       try {
-        import org.apache.spark.sql.Encoders
         if (!new java.io.File(fixturePath, "_SUCCESS").exists()) {
           Fixtures.tokenTable(s, nDocs, partitions = 64)
             .write.mode("overwrite").parquet(fixturePath)
         }
-        val ds = s.read.parquet(fixturePath).as[TokenRow](Encoders.product[TokenRow])
+        val ds = s.read.parquet(fixturePath).as[TokenRow](RowEncoders.tokenRow)
         val tp = System.nanoTime()
         plan = Planner.plan(ds, opts)
         planSec = (System.nanoTime() - tp) / 1e9
@@ -772,10 +770,9 @@ object Bench {
     // 2c) decode throughput + partition-balance histogram (skew evidence)
     // at 24 — BEFORE the cluster section pollutes the page cache
     section("decode_skew", needSec = 60.0, capSec = 150.0) {
-      import org.apache.spark.sql.Encoders
       val s = session(24)
       try {
-        val ds = s.read.parquet(fixturePath).as[TokenRow](Encoders.product[TokenRow])
+        val ds = s.read.parquet(fixturePath).as[TokenRow](RowEncoders.tokenRow)
         val comp = TokenCompressor(opts)
         val blocksPath = s"$fixturePath.blocks"
         comp.encodeWithPlan(ds, plan, None).toDF()
@@ -788,10 +785,10 @@ object Bench {
           .collect().map(_.getAs[Long]("b"))
         put("part_tokens_max_over_avg",
           f"${perPart.max.toDouble / (perPart.sum.toDouble / perPart.length)}%.2f")
-        val cols = Encoders.product[EncodedBlock].schema.fieldNames.map(F.col)
+        val cols = RowEncoders.block.schema.fieldNames.map(F.col)
         def decodeOnce(): Double = {
           val blocks = s.read.parquet(blocksPath)
-            .select(cols.toIndexedSeq: _*).as[EncodedBlock](Encoders.product[EncodedBlock])
+            .select(cols.toIndexedSeq: _*).as[EncodedBlock](RowEncoders.block)
           val t0 = System.nanoTime()
           val n = comp.decode(blocks).toDF().agg(F.sum("n_tok")).head().getLong(0)
           n / ((System.nanoTime() - t0) / 1e9) / 1e6
@@ -811,7 +808,7 @@ object Bench {
         // narrow policy-migration path: decode + re-encode with NO exchange
         def recompressOnce(): Double = {
           val blocks = s.read.parquet(blocksPath)
-            .select(cols.toIndexedSeq: _*).as[EncodedBlock](Encoders.product[EncodedBlock])
+            .select(cols.toIndexedSeq: _*).as[EncodedBlock](RowEncoders.block)
           val t0 = System.nanoTime()
           val n = comp.recompress(blocks, verify = false).toDF()
             .agg(F.sum("n_tokens")).head().getLong(0)
@@ -836,7 +833,6 @@ object Bench {
     section("zdict", needSec = 45.0, capSec = 120.0) {
       val s = session(24)
       try {
-        import org.apache.spark.sql.Encoders
         val motifPath = s"${sys.props("java.io.tmpdir")}/graft_bench_motif_100k"
         if (!new java.io.File(motifPath, "_SUCCESS").exists()) {
           Fixtures.motifTable(s, 100000L, partitions = 32)
@@ -845,7 +841,7 @@ object Bench {
         val zBase = EncodeOptions(codecPolicy = "plain", numParts = 32,
           sampleMod = 4, blockTokens = 1 << 12)
         def ratio(o: EncodeOptions): Double = {
-          val ds = s.read.parquet(motifPath).as[TokenRow](Encoders.product[TokenRow])
+          val ds = s.read.parquet(motifPath).as[TokenRow](RowEncoders.tokenRow)
           val zPlan = Planner.plan(ds, o)
           val r = TokenCompressor(o).encodeWithPlan(ds, zPlan, None).toDF()
             .agg(F.sum("raw_bytes").as("raw"), F.sum("encoded_bytes").as("enc")).head()
@@ -856,7 +852,7 @@ object Bench {
         // zdictAuto probe decisions: must say YES on the motif fixture and
         // NO on the standard mixed fixture (else the heuristic is miscalibrated)
         val motifSample = s.read.parquet(motifPath)
-          .as[TokenRow](Encoders.product[TokenRow])
+          .as[TokenRow](RowEncoders.tokenRow)
           .limit(ZdictProbe.SampleDocs).collect()
         val (zaMotif, zwMotif) = ZdictProbe.decide(motifSample, zBase)
         put("zdict_auto_motif", zaMotif.toString)
@@ -877,14 +873,13 @@ object Bench {
     section("delta_leg", needSec = 40.0, capSec = 90.0) {
       val s = session(24)
       try {
-        import org.apache.spark.sql.Encoders
         val postPath = s"${sys.props("java.io.tmpdir")}/graft_bench_posting_50k"
         if (!new java.io.File(postPath, "_SUCCESS").exists()) {
           Fixtures.postingTable(s, 50000L, partitions = 32)
             .write.mode("overwrite").parquet(postPath)
         }
         val dOpts = EncodeOptions(numParts = 32, sampleMod = 4)
-        val ds = s.read.parquet(postPath).as[TokenRow](Encoders.product[TokenRow])
+        val ds = s.read.parquet(postPath).as[TokenRow](RowEncoders.tokenRow)
         val dPlan = Planner.plan(ds, dOpts)
         def run(): (Double, Long, Long, Long, Map[String, Long]) =
           encodeRun(s, postPath, dOpts, dPlan)

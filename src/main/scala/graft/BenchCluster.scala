@@ -76,12 +76,11 @@ object BenchCluster {
 
   private def encoder(s: SparkSession, fixturePath: String,
                       nParts: Int): () => (Double, Long) = {
-    import org.apache.spark.sql.Encoders
     // 64 planned parts ~= 3-8M tokens (12-30 MB) per encode task at the
     // parent-chosen >=200M-token job: few scheduling waves, real per-task
     // work — the shape a 1000-executor run would use per core
     val opts = EncodeOptions(numParts = nParts, sampleMod = 16)
-    val ds = s.read.parquet(fixturePath).as[TokenRow](Encoders.product[TokenRow])
+    val ds = s.read.parquet(fixturePath).as[TokenRow](RowEncoders.tokenRow)
     val plan = Planner.plan(ds, opts)
     val comp = TokenCompressor(opts)
     () => {

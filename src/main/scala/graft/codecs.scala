@@ -862,11 +862,13 @@ object FsstCodec extends TableCodec {
       }
       ci += 1
     }
-    require(outPos >= until,
-      s"fsst: range [$from,$until) of $n exhausted codes at $outPos")
+    if (outPos < until)
+      throw new InvalidCodecException(
+        s"fsst: range [$from,$until) of $n exhausted codes at $outPos")
     // a range ending at n must also use up every code and land exactly on n
-    require(until < n || (outPos == n && ci == codes.length),
-      s"fsst: expanded $outPos tokens from $ci of ${codes.length} codes, expected $n")
+    if (until == n && (outPos != n || ci != codes.length))
+      throw new InvalidCodecException(
+        s"fsst: expanded $outPos tokens from $ci of ${codes.length} codes, expected $n")
     out
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, element_at, lit}
 import org.apache.spark.TaskContext
 
@@ -317,7 +317,7 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
     routed.mapPartitions { it =>
       BlockEncoder.encodePartition(
         it.map(r => (r._1, TokenRow(r._2, r._3, r._4, r._5))), o)
-    }(Encoders.product[EncodedBlock])
+    }(RowEncoders.block)
   }
 
   /** Narrow re-encode of encoded blocks under this compressor's policy:
@@ -333,7 +333,7 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
       val rows = it.flatMap(b =>
         BlockEncoder.decodeBlock(b, verify).map(r => (b.part_id, r)))
       BlockEncoder.encodePartition(rows, o)
-    }(Encoders.product[EncodedBlock])
+    }(RowEncoders.block)
   }
 
   /** Inverse transform: blocks → rows, verifying the xxhash64 checksum of
@@ -343,7 +343,7 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
   def decode(blocks: Dataset[EncodedBlock], verify: Boolean = true): Dataset[TokenRow] = {
     blocks.flatMap { b =>
       BlockEncoder.decodeBlock(b, verify)
-    }(Encoders.product[TokenRow])
+    }(RowEncoders.tokenRow)
   }
 }
 
@@ -585,6 +585,7 @@ object BlockEncoder {
     * guards the at-rest bytes).
     */
   def decodeBlockRange(b: EncodedBlock, fromDoc: String, toDoc: String): Iterator[TokenRow] = {
+    checkRows(b)
     // doc_ids are sorted within a block (rows arrive part_id,doc_id-sorted)
     var lo = 0
     var hi = b.n_docs
@@ -633,6 +634,7 @@ object BlockEncoder {
   }
 
   def decodeBlock(b: EncodedBlock, verify: Boolean): Iterator[TokenRow] = {
+    checkRows(b)
     val flat = decodeTokens(b, 0, b.n_tokens.toInt)
     if (verify) {
       val ck = Checksum.blockChecksumFlat(b.n_toks, flat)
@@ -641,6 +643,32 @@ object BlockEncoder {
           s"stored ${b.checksum}, decoded $ck")
     }
     rows(b, flat, 0, 0, b.n_docs)
+  }
+
+  /** Fails closed, before any allocation, on a block whose row metadata
+    * disagrees with itself: `n_docs` must equal the lengths of `doc_ids`,
+    * `n_toks` and `sources`, and the non-negative `n_toks` must sum to
+    * `n_tokens`, which must fit an Int. A corrupt header then raises
+    * [[InvalidCodecException]] naming the block, never an AIOOBE or a
+    * token array sized by a bad count.
+    */
+  private def checkRows(b: EncodedBlock): Unit = {
+    def bad(why: String) =
+      throw new InvalidCodecException(s"block ${b.block_id} (part ${b.part_id}): $why")
+    def len(a: Array[_]) = if (a == null) -1 else a.length
+    if (b.n_docs < 0 || len(b.doc_ids) != b.n_docs || len(b.n_toks) != b.n_docs ||
+        len(b.sources) != b.n_docs)
+      bad(s"n_docs ${b.n_docs}, but ${len(b.doc_ids)} doc_ids, ${len(b.n_toks)} n_toks " +
+        s"and ${len(b.sources)} sources")
+    var sum = 0L
+    var i = 0
+    while (i < b.n_docs) {
+      if (b.n_toks(i) < 0) bad(s"row $i has n_tok ${b.n_toks(i)}")
+      sum += b.n_toks(i)
+      i += 1
+    }
+    if (sum != b.n_tokens || b.n_tokens > Int.MaxValue)
+      bad(s"n_toks sum to $sum, n_tokens is ${b.n_tokens}")
   }
 
   /** The one decode step: unframe the payload, dispatch on the block's

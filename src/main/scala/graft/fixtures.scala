@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Deterministic synthetic token-table generator (FIXTURES.md). Each row is
   * a pure function of (seed, global doc index), so the table is identical
@@ -132,7 +132,7 @@ object Fixtures {
     val p = if (partitions > 0) partitions
             else spark.sparkContext.defaultParallelism
     spark.range(0, nDocs, 1, p)
-      .mapPartitions(_.map(i => row(seed, i)))(Encoders.product[TokenRow])
+      .mapPartitions(_.map(i => row(seed, i)))(RowEncoders.tokenRow)
   }
 
   /** Local (driver-side) generation for unit tests without a session. */
@@ -159,7 +159,7 @@ object Fixtures {
           val m = motifs(((i * 33) % 64).toInt)
           TokenRow(f"motif-$i%010d", m, m.length, "motif")
         }
-      }(Encoders.product[TokenRow])
+      }(RowEncoders.tokenRow)
   }
 
   /** Posting-list-shaped table (delta bench leg): doc i carries a sorted
@@ -193,6 +193,6 @@ object Fixtures {
           j += 1
         }
         TokenRow(f"posting-$i%010d", tokens, n, "posting")
-      })(Encoders.product[TokenRow])
+      })(RowEncoders.tokenRow)
   }
 }

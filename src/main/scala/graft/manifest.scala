@@ -1,9 +1,15 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi.{and, binaryColumn, gtEq, ltEq}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.io.api.Binary
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import scala.jdk.CollectionConverters._
@@ -221,7 +227,7 @@ object ManifestIO {
     val spark = blocks.sparkSession
     val acc = new LineageAccumulator
     spark.sparkContext.register(acc, "graft.lineage")
-    blocks.mapPartitions(_.map { b => acc.add(b); b })(Encoders.product[EncodedBlock])
+    blocks.mapPartitions(_.map { b => acc.add(b); b })(RowEncoders.block)
       .toDF().write.mode(SaveMode.Overwrite).parquet(dir.toString)
     val tally = acc.value
     val rel = relativize(spark, table)
@@ -297,15 +303,13 @@ object ManifestIO {
     */
   def scanFiles(spark: SparkSession, table: String, snap: Snapshot,
                 files: Seq[ZoneFile]): Dataset[EncodedBlock] = {
-    val enc = Encoders.product[EncodedBlock]
+    val enc = RowEncoders.block
     if (files.isEmpty) return spark.emptyDataset(enc)
     val rel =
       try spark.read.schema(enc.schema).parquet(files.map(z => new Path(table, z.path).toString): _*)
       catch {
         case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
-          throw new IllegalStateException(s"snapshot v${snap.version} of $table names a " +
-            s"block file that no longer exists (a later compaction or run merge deletes the " +
-            s"files it folds): ${e.getMessage}", e)
+          throw fileGone(table, snap, e)
       }
     (if (!files.exists(_.path.contains("/part_id="))) rel
      else rel.withColumn("part_id", coalesce(col("part_id"),
@@ -313,26 +317,105 @@ object ManifestIO {
       .as(enc)
   }
 
+  private def fileGone(table: String, snap: Snapshot, e: Exception) =
+    new IllegalStateException(s"snapshot v${snap.version} of $table names a " +
+      s"block file that no longer exists (a later compaction or run merge deletes the " +
+      s"files it folds): ${e.getMessage}", e)
+
+  /** The zone entries of `snap` ([[visible]]) that can hold a block of
+    * `parts` (when given) with doc_id in `range` (when given, inclusive),
+    * by [[ZoneFile.overlaps]] — the one file-selection rule of [[blocks]]
+    * and [[pointBlocks]].
+    */
+  def select(spark: SparkSession, table: String, snap: Snapshot,
+             parts: Option[Seq[Int]], range: Option[(String, String)]): Seq[ZoneFile] =
+    visible(spark, table, snap).filter(_.overlaps(parts, range))
+
   /** Every block `snap` makes visible in `table` that can hold a doc of
     * `parts` (when given) with doc_id in `range` (when given, inclusive) —
-    * the one reader of a table's block files. The zone map selects the
-    * files ([[ZoneFile.overlaps]]), [[scanFiles]] reads exactly those, and
-    * a row filter finishes the job inside files: the block zone filter on
-    * [first_doc_id, last_doc_id] for a range (which implies the part
-    * filter: a part's blocks hold only its own bucket's doc_ids), else the
-    * part filter (a file holds a run of parts).
+    * the reader of a table's block files for every read whose result is
+    * unbounded. The zone map selects the files ([[select]]), [[scanFiles]]
+    * reads exactly those, and a row filter finishes the job inside files:
+    * the block zone filter on [first_doc_id, last_doc_id] for a range
+    * (which implies the part filter: a part's blocks hold only its own
+    * bucket's doc_ids), else the part filter (a file holds a run of parts).
     */
   def blocks(spark: SparkSession, table: String, snap: Snapshot,
              parts: Option[Seq[Int]] = None,
              range: Option[(String, String)] = None): Dataset[EncodedBlock] = {
-    val chosen = visible(spark, table, snap).filter(_.overlaps(parts, range))
-    val all = scanFiles(spark, table, snap, chosen)
+    val all = scanFiles(spark, table, snap, select(spark, table, snap, parts, range))
     (range, parts) match {
       case (Some((from, to)), _) =>
         all.where(col("last_doc_id") >= from && col("first_doc_id") <= to)
       case (None, Some(p)) => all.where(col("part_id").isin(p: _*))
       case _ => all
     }
+  }
+
+  /** The blocks of `snap` whose [first_doc_id, last_doc_id] brackets `id`,
+    * read on the driver with no Spark job — the point-lookup read. The
+    * files are [[blocks]]' for the range [id, id] of `parts` ([[select]]);
+    * each is read with parquet-mr under the block zone predicate
+    * `last_doc_id >= id AND first_doc_id <= id`, which skips row groups by
+    * their min/max stats (UTF-8 order, as [[DocIdOrder]]) and drops every
+    * other record. A file yields at most the blocks that bracket one id,
+    * so the result is small by construction; reads whose result is
+    * unbounded stay on [[blocks]]. A named file that is gone fails as in
+    * [[scanFiles]].
+    */
+  def pointBlocks(spark: SparkSession, table: String, snap: Snapshot,
+                  parts: Seq[Int], id: String): Seq[EncodedBlock] = {
+    val key = Binary.fromString(id)
+    val filter = FilterCompat.get(
+      and(gtEq(binaryColumn("last_doc_id"), key), ltEq(binaryColumn("first_doc_id"), key)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    select(spark, table, snap, Some(parts), Some((id, id))).flatMap { z =>
+      val out = Vector.newBuilder[EncodedBlock]
+      try {
+        val reader = ParquetReader.builder(new GroupReadSupport, new Path(table, z.path))
+          .withConf(conf).withFilter(filter).build()
+        try {
+          var g = reader.read()
+          while (g != null) { out += blockOf(g, z); g = reader.read() }
+        } finally reader.close()
+      } catch { case e: java.io.FileNotFoundException => throw fileGone(table, snap, e) }
+      out.result()
+    }
+  }
+
+  /** One block record of the zone entry `z`'s file, as Spark writes it
+    * (lists in the three-level `list`/`element` form). Columns are tested
+    * by the file's schema: a file in a `part_id=K` dir has no part_id, and
+    * takes K from its single-part entry; a file from before the `subsums`
+    * or `zdict` column existed reads it as null, as [[scanFiles]] does.
+    */
+  private def blockOf(g: Group, z: ZoneFile): EncodedBlock = {
+    val schema = g.getType
+    def has(f: String) = schema.containsField(f) && g.getFieldRepetitionCount(f) > 0
+    def int(f: String) = g.getInteger(f, 0)
+    def long(f: String) = g.getLong(f, 0)
+    def str(f: String) = g.getString(f, 0)
+    def bytes(f: String) = if (has(f)) g.getBinary(f, 0).getBytes else null
+    def list[A: scala.reflect.ClassTag](f: String)(
+        get: Group => A): Array[A] =
+      if (!has(f)) null
+      else {
+        val l = g.getGroup(f, 0)
+        Array.tabulate(l.getFieldRepetitionCount(0))(i => get(l.getGroup(0, i)))
+      }
+    val partId =
+      if (schema.containsField("part_id")) int("part_id")
+      else if (z.minPart == z.maxPart) z.minPart
+      else throw new IllegalStateException(
+        s"${z.path} has no part_id column and its zone entry spans parts ${z.minPart}..${z.maxPart}")
+    EncodedBlock(partId, long("block_id"), str("codec"), str("outer"), int("n_docs"),
+      long("n_tokens"), long("raw_bytes"), long("encoded_bytes"), str("first_doc_id"),
+      str("last_doc_id"),
+      list("doc_ids")(e => if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)),
+      list("n_toks")(_.getInteger(0, 0)),
+      list("sources")(e => if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)),
+      bytes("payload"), bytes("symtab"), bytes("zdict"), long("checksum"),
+      list("subsums")(_.getLong(0, 0)), long("enc_micros"))
   }
 
   private def snapshotPath(table: String, version: Int) =

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Encoder, Encoders}
+
 /** Core data model of the engine.
   *
   * The input table shape is fixed by BASELINE.json `input_hint`:
@@ -61,6 +63,14 @@ final case class EncodedBlock(
     subsums: Array[Long],
     enc_micros: Long
 )
+
+/** The Dataset encoders of the two row types, derived once:
+  * `Encoders.product` reflects over the case class on every call.
+  */
+object RowEncoders {
+  val tokenRow: Encoder[TokenRow] = Encoders.product[TokenRow]
+  val block: Encoder[EncodedBlock] = Encoders.product[EncodedBlock]
+}
 
 /** Engine options — the analog of `ConfiguredEncodingOptions` +
   * `DEFAULT_ENCODE_TOOLS_OPTIONS` (/root/reference/src/EncodeTools.ts:282-293,

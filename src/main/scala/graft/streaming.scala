@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming ingestion into the encoded table: a file stream of
@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object StreamingEncode {
 
   val tokenSchema: org.apache.spark.sql.types.StructType =
-    Encoders.product[TokenRow].schema
+    RowEncoders.tokenRow.schema
 
   /** Append one micro-batch of token rows as encoded blocks. Blocks are
     * routed with the table's persistent partition plan (from snapshot v0)
@@ -63,7 +63,7 @@ object StreamingEncode {
     val stream = spark.readStream
       .schema(tokenSchema)
       .parquet(inputDir)
-      .as[TokenRow](Encoders.product[TokenRow])
+      .as[TokenRow](RowEncoders.tokenRow)
     stream.writeStream
       .foreachBatch { (batch: Dataset[TokenRow], batchId: Long) =>
         appendBatch(batch, table, opts, batchId)
@@ -201,7 +201,7 @@ object StreamingEncode {
       val merged = Routing.pack(ManifestIO.scanFiles(spark, table, snap, src).toDF(),
           numParts, None, TokenCompressor.writeTasks(spark, numParts))
         .sortWithinPartitions("part_id", "first_doc_id")
-        .drop("route_key").as(Encoders.product[EncodedBlock])
+        .drop("route_key").as(RowEncoders.block)
       val (_, files) = ManifestIO.writeBlocks(merged, table, targetDir)
       snap = snap.next.copy(
         compactedRuns = snap.compactedRuns.dropRight(2) :+ target,

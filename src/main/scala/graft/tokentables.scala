@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Token tables derived deterministically from the driver's parquet data,
@@ -36,19 +36,19 @@ object TokenTables {
       ).as("tokens"),
       lit(8).as("n_tok"),
       col("l_returnflag").as("source")
-    ).as[TokenRow](Encoders.product[TokenRow])
+    ).as[TokenRow](RowEncoders.tokenRow)
   }
 
   /** Token-table schema fixed by BASELINE.json input_hint. */
   val tokenSchema: org.apache.spark.sql.types.StructType =
-    Encoders.product[TokenRow].schema
+    RowEncoders.tokenRow.schema
 
   /** JSONL source: one `{"doc_id":..,"tokens":[..],"n_tok":..,"source":..}`
     * object per line — the interchange format crawl/tokenizer pipelines
     * commonly emit. Schema-explicit (no inference pass over 100 TB).
     */
   def fromJsonl(spark: SparkSession, path: String): Dataset[TokenRow] =
-    spark.read.schema(tokenSchema).json(path).as[TokenRow](Encoders.product[TokenRow])
+    spark.read.schema(tokenSchema).json(path).as[TokenRow](RowEncoders.tokenRow)
 
   def toJsonl(ds: Dataset[TokenRow], path: String): Unit =
     ds.toDF().write.mode("overwrite").json(path)
@@ -73,7 +73,7 @@ object TokenTables {
         col("source"))
       .withColumn("n_tok", size(col("tokens")))
       .select("doc_id", "tokens", "n_tok", "source")
-      .as[TokenRow](Encoders.product[TokenRow])
+      .as[TokenRow](RowEncoders.tokenRow)
 
   def toCsv(ds: Dataset[TokenRow], path: String): Unit =
     ds.toDF()

@@ -213,6 +213,19 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  test("fsst2 fails closed with the typed error on an inflated token count") {
+    val rng = new scala.util.Random(17)
+    val toks = Array.fill(20000)(rng.nextInt(40))
+    val bytes = FsstCodec.encode(toks)
+    assert(FsstCodec.decode(bytes, toks.length).sameElements(toks))
+    for (n <- Seq(toks.length + 1, toks.length + 4096, toks.length * 3)) {
+      // the exact type: InvalidCodecException extends IllegalArgumentException
+      intercept[InvalidCodecException](FsstCodec.decode(bytes, n))
+      intercept[InvalidCodecException](FsstCodec.decodeRange(bytes, n, n - 10, n))
+      intercept[InvalidCodecException](FsstCodec.decodeRange(bytes, n, toks.length - 1, toks.length + 1))
+    }
+  }
+
   test("fsst legacy (pre-sync-table) bodies still decode, full and sliced") {
     // Blocks persisted by rounds ≤7 carry body = [mergedLen][DictCodec
     // bytes] under the pre-versioned name "fsst"; the structural detector

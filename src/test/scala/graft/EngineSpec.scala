@@ -213,6 +213,32 @@ class EngineSpec extends AnyFunSuite {
     assert(e.getMessage.contains("slice digest mismatch"), e.getMessage)
   }
 
+  test("decode fails closed on inconsistent block row metadata, before allocating") {
+    val rows = (0 until 8).map(i => TokenRow(f"doc$i%04d", Array.fill(10)(i), 10, "s")).toArray
+    val b = BlockEncoder.encodeBlock(3, 7L, rows, EncodeOptions(codecPolicy = "plain"))
+    assert(BlockEncoder.decodeBlock(b, verify = true).length == 8)
+    val bad = Seq(
+      "n_docs over the arrays" -> b.copy(n_docs = 9),
+      "short doc_ids" -> b.copy(doc_ids = b.doc_ids.take(7)),
+      "short n_toks" -> b.copy(n_toks = b.n_toks.take(7)),
+      "long sources" -> b.copy(sources = b.sources :+ "s"),
+      "missing sources" -> b.copy(sources = null),
+      "negative n_docs" -> b.copy(n_docs = -1, doc_ids = null, n_toks = null, sources = null),
+      "negative n_tok" -> b.copy(n_toks = b.n_toks.updated(2, -5).updated(3, 15)),
+      "n_toks sum under n_tokens" -> b.copy(n_toks = b.n_toks.updated(0, 9)),
+      // an inflated count would size the token array before any codec check
+      "n_tokens inflated" -> b.copy(n_tokens = 1L << 31,
+        n_toks = b.n_toks.updated(0, Int.MaxValue - 69)))
+    for ((what, x) <- bad) {
+      // the exact type: InvalidCodecException extends IllegalArgumentException
+      val full = intercept[InvalidCodecException](BlockEncoder.decodeBlock(x, verify = true))
+      val sliced = intercept[InvalidCodecException](
+        BlockEncoder.decodeBlockRange(x, "doc0002", "doc0003"))
+      Seq(full, sliced).foreach(e =>
+        assert(e.getMessage.contains("block 7 (part 3)"), s"$what: ${e.getMessage}"))
+    }
+  }
+
   test("every codec appears on the mixed fixture (per-block independence)") {
     import spark.implicits._
     val input = Fixtures.tokenTable(spark, NDocs)

@@ -185,24 +185,147 @@ class RangeReaderSpec extends AnyFunSuite {
     table
   }
 
+  /** Moves `files` (zone entries of `table`) aside while `body` runs. */
+  private def without[A](table: String, files: Seq[ZoneFile])(body: => A): A = {
+    import java.nio.file.Paths
+    val moved = files.map(z => Paths.get(table, z.path) -> Paths.get(table, z.path + ".aside"))
+    moved.foreach { case (p, q) => Files.move(p, q) }
+    try body
+    finally moved.foreach { case (p, q) => Files.move(q, p) }
+  }
+
   test("a point lookup discovers exactly the files the zone map selects") {
-    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val table = mixedTable("graft_zone_lookup")
     val snap = ManifestIO.latest(spark, table).get
     val named = snap.files.get
     assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
-    // one doc from each layout: batch data, the compacted run, the tail
-    Seq(17L, 850L, 930L, 990L).foreach { i =>
-      val id = Fixtures.row(42L, i).doc_id
-      val cands = RangeReader.candidateParts(snap.plan, id, id)
-      val selected = named.count(_.overlaps(Some(cands), Some((id, id))))
-      val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
-      val got = RangeReader.lookup(spark, table, id).collect()
-      val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
-      assert(got.length == 1 && got.head.doc_id == id)
-      assert(selected >= 1 && selected < named.size, s"doc $i: $selected of ${named.size} files")
-      assert(discovered == selected, s"doc $i: discovered $discovered files, zone map selects $selected")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      // one doc from each layout: batch data, the compacted run, the tail
+      Seq(17L, 850L, 930L, 990L).foreach { i =>
+        val id = Fixtures.row(42L, i).doc_id
+        val cands = RangeReader.candidateParts(snap.plan, id, id)
+        val (selected, rest) = named.partition(_.overlaps(Some(cands), Some((id, id))))
+        assert(selected.nonEmpty && rest.nonEmpty, s"doc $i: ${selected.size} of ${named.size} files")
+        // it opens no other file: the lookup runs with every other file gone ...
+        val got = without(table, rest)(RangeReader.lookup(spark, table, id).collect())
+        assert(got.length == 1 && got.head.doc_id == id, s"doc $i")
+        // ... and it opens each selected one: with any of them gone it fails
+        selected.foreach { z =>
+          val e = intercept[IllegalStateException](
+            without(table, Seq(z))(RangeReader.lookup(spark, table, id).collect()))
+          assert(e.getMessage.contains(s"snapshot v${snap.version} of $table names a block file " +
+            "that no longer exists"), e.getMessage)
+        }
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs for the lookups")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("lookup(id) equals readRange(id, id) for every doc_id, and an absent id returns " +
+    "empty, on current and part_id-dir tables with and without a zone map") {
+    val table = mixedTable("graft_lookup_equiv")
+    val ids = (0L until 1000L).map(Fixtures.row(42L, _).doc_id)
+    // doc_ids that no block holds: inside the table's id range, before and after it
+    val absent = (1000L until 1003L).map(Fixtures.row(42L, _).doc_id) ++ Seq("", "~")
+    def rowsOf(ds: org.apache.spark.sql.Dataset[TokenRow]) =
+      ds.collect().map(r => (r.doc_id, r.tokens.mkString(","), r.n_tok, r.source)).sorted.toSeq
+    def check(layout: String): Unit = {
+      val viaRange = rowsOf(RangeReader.readRange(spark, table, ids.min(DocIdOrder),
+        ids.max(DocIdOrder))).groupBy(_._1)
+      ids.foreach { id =>
+        val got = rowsOf(RangeReader.lookup(spark, table, id))
+        assert(got.size == 1 && got == viaRange(id), s"$layout: lookup $id")
+      }
+      // the literal point range on a sample of the ids
+      ids.indices.by(97).map(ids).foreach { id =>
+        assert(rowsOf(RangeReader.lookup(spark, table, id)) ==
+          rowsOf(RangeReader.readRange(spark, table, id, id)), s"$layout: readRange($id, $id)")
+      }
+      absent.foreach { id =>
+        assert(RangeReader.lookup(spark, table, id).collect().isEmpty, s"$layout: absent '$id'")
+      }
+    }
+    check("current layout")
+    LegacyTables.partitionedLayout(spark, table, keepZoneMap = true)
+    check("part_id dirs with a zone map")
+    LegacyTables.stripZoneMap(spark, table)
+    check("part_id dirs without a zone map")
+  }
+
+  test("a lookup of a file a compaction deleted fails with the snapshot's version") {
+    import org.apache.spark.sql.Encoders
+    val table = s"${Files.createTempDirectory("graft_lookup_gone")}/t"
+    val opts = EncodeOptions(numParts = 4)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    ResumableEncodeJob.run(rows(0, 400), table, opts)
+    StreamingEncode.appendBatch(rows(400, 500), table, opts, batchId = 0L)
+    val stale = ManifestIO.latest(spark, table).get
+    val id = Fixtures.row(42L, 450L).doc_id
+    assert(RangeReader.lookup(spark, table, id).collect().map(_.doc_id).toSeq == Seq(id))
+    // the compaction folds the tail batch into a run and deletes its dir;
+    // a reader that loaded the snapshot before the compaction committed
+    // still names the deleted file
+    StreamingEncode.compact(spark, table, opts)
+    val f = ManifestIO.fs(spark, table)
+    (stale.version + 1 to ManifestIO.latest(spark, table).get.version).foreach(v =>
+      f.delete(new org.apache.hadoop.fs.Path(ManifestIO.snapshotsDir(table), f"v$v%05d.json"), false))
+    assert(ManifestIO.latest(spark, table).get.version == stale.version)
+    val e = intercept[IllegalStateException](RangeReader.lookup(spark, table, id))
+    assert(e.getMessage.contains(s"snapshot v${stale.version} of $table names a block file " +
+      "that no longer exists"), e.getMessage)
+  }
+
+  test("a lookup of a block with a flipped payload byte fails the slice digest, never " +
+    "returns a wrong row") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.hadoop.fs.Path
+    val table = s"${Files.createTempDirectory("graft_lookup_flip")}/t"
+    // plain codec, no outer frame: a flipped byte decodes as a wrong token
+    // unless the digest catches it
+    val rows = (0 until 400).map(i => TokenRow(f"doc$i%04d", Array.tabulate(40)(j => i * 40 + j),
+      40, "s"))
+    ResumableEncodeJob.run(spark.createDataset(rows)(Encoders.product[TokenRow]), table,
+      EncodeOptions(codecPolicy = "plain", zstdLevel = 0, numParts = 4, blockTokens = 1000))
+    val snap = ManifestIO.latest(spark, table).get
+    val id = "doc0123"
+    assert(RangeReader.lookup(spark, table, id).collect().head.tokens.toSeq == rows(123).tokens.toSeq)
+    // rewrite the doc's file in place, under its own name, with one payload
+    // byte of the doc's tokens flipped
+    val z = snap.files.get.filter(_.overlaps(None, Some((id, id)))).head
+    val blocks = ManifestIO.scanFiles(spark, table, snap, Seq(z)).collect().map { b =>
+      val r = b.doc_ids.indexOf(id)
+      if (r < 0) b
+      else {
+        val p = b.payload.clone()
+        val at = 4 * b.n_toks.take(r).sum + 4 * 7 // token 7 of the doc
+        p(at) = (p(at) ^ 0x10).toByte
+        b.copy(payload = p)
+      }
+    }
+    val f = ManifestIO.fs(spark, table)
+    val tmp = new Path(table, "_rewrite")
+    spark.createDataset(blocks.toSeq)(Encoders.product[EncodedBlock]).coalesce(1)
+      .write.parquet(tmp.toString)
+    val written = f.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    assert(written.length == 1)
+    assert(f.delete(new Path(table, z.path), false))
+    assert(f.rename(written.head, new Path(table, z.path)))
+    f.delete(tmp, true)
+    val e = intercept[IllegalArgumentException](RangeReader.lookup(spark, table, id).collect())
+    assert(e.getMessage.contains("slice digest mismatch"), e.getMessage)
+    // a doc of another block of the file still reads back right
+    val other = blocks.find(!_.doc_ids.contains(id)).get.doc_ids.head
+    assert(RangeReader.lookup(spark, table, other).collect().map(_.doc_id).toSeq == Seq(other))
   }
 
   test("a snapshot without a zone map reads every row; its next commit writes one") {
