@@ -1,15 +1,28 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.mapred.JobConf
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteTaskStatsTracker, OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.AccumulatorV2
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi.{and, binaryColumn, gtEq, ltEq}
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import scala.jdk.CollectionConverters._
@@ -82,48 +95,6 @@ final case class ZoneFile(
     for ((a, b) <- bounds; (c, d) <- o.bounds) yield (DocIdOrder.min(a, c), DocIdOrder.max(b, d)))
 }
 
-/** What the tasks of one block write counted: lineage per part, and the
-  * zone entry (its path still unnamed) of each task partition id's file —
-  * Spark names a task's file `part-<partition id>-…`.
-  */
-final case class WriteTally(
-    lineage: Map[Int, PartLineage],
-    files: Map[Int, ZoneFile])
-
-/** Lineage and file spans counted by the tasks that write the blocks: each
-  * block folds into its part's [[PartLineage]] (per-codec block counts
-  * included) and its task's zone entry. Fed inside the write job's result
-  * stage ([[ManifestIO.writeBlocks]]), where Spark merges one update per
-  * output partition and drops failed attempts' updates (countFailedValues
-  * = false): a retried or speculative task counts exactly once.
-  */
-final class LineageAccumulator extends AccumulatorV2[EncodedBlock, WriteTally] {
-  private var parts = Map.empty[Int, PartLineage]
-  private var files = Map.empty[Int, ZoneFile]
-
-  private def fold(t: WriteTally): Unit = {
-    t.lineage.foreach { case (k, l) =>
-      parts = parts.updated(k, parts.get(k).fold(l)(_ merge l))
-    }
-    t.files.foreach { case (k, z) =>
-      files = files.updated(k, files.get(k).fold(z)(_ cover z))
-    }
-  }
-
-  def isZero: Boolean = parts.isEmpty && files.isEmpty
-  def copy(): LineageAccumulator = {
-    val c = new LineageAccumulator; c.parts = parts; c.files = files; c
-  }
-  def reset(): Unit = { parts = Map.empty; files = Map.empty }
-  def add(b: EncodedBlock): Unit = fold(WriteTally(
-    Map(b.part_id -> PartLineage(b.part_id, 1L, b.n_docs, b.n_tokens, b.raw_bytes,
-      b.encoded_bytes, b.checksum, Map(b.codec -> 1L), b.enc_micros)),
-    Map(org.apache.spark.TaskContext.getPartitionId() ->
-      ZoneFile("", b.part_id, b.part_id, Some((b.first_doc_id, b.last_doc_id))))))
-  def merge(o: AccumulatorV2[EncodedBlock, WriteTally]): Unit = fold(o.value)
-  def value: WriteTally = WriteTally(parts, files)
-}
-
 /** One committed snapshot of the encoded table. `streamBatchId` is the
   * highest streaming micro-batch folded in (None for pure-batch tables);
   * replayed foreachBatch invocations with id <= this are skipped.
@@ -187,8 +158,13 @@ object Snapshot {
   * dir named for its version V — `data/version=V/` (batch parts),
   * `compacted/run=V/` (compacted stream runs) or `stream_batches/batch=B/`
   * (the uncompacted stream tail) — beside `snapshots/vNNNNN.json`; each
-  * write task writes one file of a contiguous run of parts. The snapshot's
-  * zone map ([[visible]]) is the only partition index. This object owns
+  * write task writes one file of a contiguous run of parts,
+  * `part-<partition>-a<task attempt id>.<codec>.parquet`, straight into
+  * that dir ([[writeBlocks]]: no output committer, no `_SUCCESS`; the
+  * lineage and zone entries come back as the write job's results). A
+  * commit dir holds only the files the snapshot names (and their local
+  * checksum files), and the snapshot's zone map ([[visible]]) is what
+  * makes them visible: it is the only partition index. This object owns
   * that layout: which block files a snapshot makes visible, how they are
   * read ([[blocks]]) and how versions are listed, read and committed.
   * Older tables keep `data/part_id=K/` and `compacted/run=V/part_id=K/`
@@ -214,29 +190,97 @@ object ManifestIO {
   val DataRoot = "data"
   val TailRoot = "stream_batches"
 
-  /** Write `blocks` into the fresh dir `dir` in ONE job and return their
-    * lineage, counted by the writing tasks ([[LineageAccumulator]]), and
-    * the zone entries of the files written: each task folds its blocks'
-    * part and doc_id spans, and one listing of `dir` maps task partition
-    * ids to file names. No payload persist, no second pass, no footer
-    * read, no write-side sort. The tap fuses with the encode's typed map,
-    * in the write's result stage — `blocks` must not shuffle after it.
+  /** Write `blocks` into the fresh dir `dir` (an existing one is replaced)
+    * in ONE job and return their lineage per part and the zone entries of
+    * the files written. Each non-empty task writes its blocks straight into
+    * `dir` as `part-<partition>-a<task attempt id>.<ext>` with Spark's own
+    * Parquet writer (the session's WriteSupport, codec and footer
+    * metadata), folds its parts' lineage and its file's part and doc_id
+    * spans while writing, and returns them as its result. Spark keeps one
+    * successful result per partition, so a retried or speculative task
+    * counts once; a failed or killed attempt deletes its file, and one
+    * listing of `dir` after the job deletes any file no result names (an
+    * attempt whose executor was lost). No output committer, no
+    * `_temporary` dir, no `_SUCCESS`: the zone map of the commit that
+    * follows is what makes the files visible. The Hadoop conf ships once
+    * per job as a broadcast, read-only in the tasks. No payload persist, no
+    * second pass, no footer read, no write-side sort; the job runs as one
+    * SQL execution over `blocks`' plan.
     */
   def writeBlocks(blocks: Dataset[EncodedBlock], table: String,
                   dir: Path): (Map[Int, PartLineage], Seq[ZoneFile]) = {
     val spark = blocks.sparkSession
-    val acc = new LineageAccumulator
-    spark.sparkContext.register(acc, "graft.lineage")
-    blocks.mapPartitions(_.map { b => acc.add(b); b })(RowEncoders.block)
-      .toDF().write.mode(SaveMode.Overwrite).parquet(dir.toString)
-    val tally = acc.value
+    val f = fs(spark, table)
+    f.delete(dir, true)
+    f.mkdirs(dir)
+    val schema = RowEncoders.block.schema
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val jobConf = job.getConfiguration.asInstanceOf[JobConf]
+    val ext = factory.getFileExtension(new TaskAttemptContextImpl(jobConf, new TaskAttemptID))
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(jobConf))
+    // the encoder's column order, which the writer and the fold assume (a
+    // no-op projection, removed by the optimizer, when it already is)
+    val rows = blocks.select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    val target = dir.toString
+    val written =
+      try SQLExecution.withNewExecutionId(rows.queryExecution, Some("writeBlocks")) {
+        spark.sparkContext.runJob(rows.queryExecution.toRdd,
+          (tc: TaskContext, it: Iterator[InternalRow]) =>
+            writeFile(factory, conf.value.value, target, ext, schema, tc, it))
+      } finally conf.destroy()
+    val results = written.toSeq.flatten
+    val named = results.map(_._2.path).toSet
+    sweep(f, dir)(n => !named(n))
     val rel = relativize(spark, table)
-    val listed =
-      if (tally.files.isEmpty) Nil else fs(spark, table).listStatus(dir).toSeq.map(_.getPath)
-    val files = tally.files.toSeq.flatMap { case (split, z) =>
-      listed.filter(_.getName.startsWith(f"part-$split%05d-")).map(p => z.copy(path = rel(p)))
+    val lineage = results.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ merge _)
+    (lineage, results.map(r => r._2.copy(path = rel(new Path(dir, r._2.path)))).sortBy(_.path))
+  }
+
+  /** One write task of [[writeBlocks]]: `rows` (blocks in encoder order)
+    * into the file `dir/part-<partition>-a<attempt>ext`, returning its
+    * parts' lineage and its zone entry (named by the file name), or None
+    * for an empty task, which creates no file. The file is deleted unless
+    * the write completes.
+    */
+  private def writeFile(factory: OutputWriterFactory, conf: Configuration, dir: String,
+                        ext: String, schema: StructType, tc: TaskContext,
+                        rows: Iterator[InternalRow]): Option[(Map[Int, PartLineage], ZoneFile)] = {
+    if (!rows.hasNext) return None
+    val name = f"part-${tc.partitionId()}%05d-a${tc.taskAttemptId()}$ext"
+    val path = new Path(dir, name)
+    val file = path.toString
+    val at = schema.fieldNames.zipWithIndex.toMap
+    def str(r: InternalRow, f: String) = r.getUTF8String(at(f)).toString
+    // the task's output metrics (bytes and records written), as Spark's own writer reports them
+    val stats = new BasicWriteTaskStatsTracker(conf, None)
+    var writer: OutputWriter = null
+    var done = false
+    try {
+      writer = factory.newInstance(file, schema, new TaskAttemptContextImpl(conf, new TaskAttemptID))
+      stats.newFile(file)
+      var lineage = Map.empty[Int, PartLineage]
+      var zone: Option[ZoneFile] = None
+      rows.foreach { r =>
+        writer.write(r)
+        stats.newRow(file, r)
+        val part = r.getInt(at("part_id"))
+        val l = PartLineage(part, 1L, r.getInt(at("n_docs")), r.getLong(at("n_tokens")),
+          r.getLong(at("raw_bytes")), r.getLong(at("encoded_bytes")), r.getLong(at("checksum")),
+          Map(str(r, "codec") -> 1L), r.getLong(at("enc_micros")))
+        val z = ZoneFile(name, part, part, Some((str(r, "first_doc_id"), str(r, "last_doc_id"))))
+        lineage = lineage.updated(part, lineage.get(part).fold(l)(_ merge l))
+        zone = Some(zone.fold(z)(_ cover z))
+      }
+      writer.close()
+      stats.closeFile(file)
+      stats.getFinalStats(0L)
+      done = true
+      zone.map((lineage, _))
+    } finally if (!done) {
+      if (writer != null) try writer.close() catch { case NonFatal(_) => }
+      path.getFileSystem(conf).delete(path, false)
     }
-    (tally.lineage, files.sortBy(_.path))
   }
 
   /** Delete the entries of `dir` whose name `drop` accepts, from one
@@ -372,8 +416,12 @@ object ManifestIO {
     select(spark, table, snap, Some(parts), Some((id, id))).flatMap { z =>
       val out = Vector.newBuilder[EncodedBlock]
       try {
-        val reader = ParquetReader.builder(new GroupReadSupport, new Path(table, z.path))
-          .withConf(conf).withFilter(filter).build()
+        // over the session conf: `ParquetReader.builder` builds a fresh
+        // Configuration per file, re-reading the default resources
+        val file = HadoopInputFile.fromPath(new Path(table, z.path), conf)
+        val reader = new ParquetReader.Builder[Group](file, new HadoopParquetConfiguration(conf)) {
+          override protected def getReadSupport = new GroupReadSupport
+        }.withFilter(filter).build()
         try {
           var g = reader.read()
           while (g != null) { out += blockOf(g, z); g = reader.read() }

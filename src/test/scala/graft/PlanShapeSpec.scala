@@ -162,11 +162,10 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(roots.sorted == named.map(z => s"$table/${z.path}").sorted)
   }
 
-  test("table writes: no sort under WriteFiles in run, appendBatch, compact, mergeRuns or migrate") {
+  test("table writes: the block write adds no sort in run, appendBatch, compact, mergeRuns or migrate") {
     import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.datasources.WriteFilesExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val root = java.nio.file.Files.createTempDirectory("graft_write_plans").toString
     val (table, dst) = (s"$root/t", s"$root/m")
@@ -174,15 +173,15 @@ class PlanShapeSpec extends AnyFunSuite {
     def rows(from: Long, to: Long) = spark.range(from, to)
       .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
     object Plans extends AdaptiveSparkPlanHelper
-    // the node each write's WriteFiles consumes, codegen wrapper removed
-    def writeInputs[T](body: => T): Seq[SparkPlan] = {
-      val got = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    // per `writeBlocks` execution, the sort keys of each sort in its final
+    // plan, query stages included
+    def writeSorts[T](body: => T): Seq[Seq[String]] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
       val l = new QueryExecutionListener {
         def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-          Plans.collect(qe.executedPlan) { case w: WriteFilesExec => w.child }.foreach {
-            case c: WholeStageCodegenExec => got.add(c.child)
-            case c => got.add(c)
-          }
+          if (f == "writeBlocks") got.add(Plans.collect(qe.executedPlan) {
+            case s: SortExec => s.sortOrder.flatMap(_.child.references.map(_.name)).mkString(", ")
+          })
         def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
@@ -192,22 +191,25 @@ class PlanShapeSpec extends AnyFunSuite {
         org.apache.spark.ListenerBusDrain(spark.sparkContext)
         spark.listenerManager.unregister(l)
       }
-      got.toArray(Array.empty[SparkPlan]).toSeq
+      got.toArray(Array.empty[Seq[String]]).toSeq
     }
-    def assertUnsorted(what: String, writes: Int)(body: => Any): Unit = {
-      val in = writeInputs(body)
-      assert(in.length == writes, s"$what: ${in.length} writes")
-      in.foreach(p => assert(!p.isInstanceOf[SortExec], s"$what sorts before WriteFiles:\n$p"))
+    // each write's plan holds exactly the sort its input asks for: the
+    // encode's, below the block encoder, or the merge's own within-task
+    // order; the write itself adds none
+    val encode = Seq("part_id, doc_id")
+    def assertSorts(what: String, sorts: Seq[String]*)(body: => Any): Unit = {
+      val got = writeSorts(body)
+      assert(got == sorts, s"$what: the sorts of each write")
     }
-    assertUnsorted("run", 1)(ResumableEncodeJob.run(rows(0, 400), table, opts))
-    assertUnsorted("appendBatch", 1)(StreamingEncode.appendBatch(rows(400, 500), table, opts, 0L))
-    assertUnsorted("compact", 1)(StreamingEncode.compact(spark, table, opts))
+    assertSorts("run", encode)(ResumableEncodeJob.run(rows(0, 400), table, opts))
+    assertSorts("appendBatch", encode)(StreamingEncode.appendBatch(rows(400, 500), table, opts, 0L))
+    assertSorts("compact", encode)(StreamingEncode.compact(spark, table, opts))
     StreamingEncode.appendBatch(rows(500, 600), table, opts, 1L)
     // the second run is as large as the first: compaction, then the merge
-    assertUnsorted("compact + mergeRuns", 2) {
+    assertSorts("compact + mergeRuns", encode, Seq("part_id, first_doc_id")) {
       assert(StreamingEncode.compact(spark, table, opts).compactedRuns.length == 1)
     }
-    assertUnsorted("migrate", 1)(ResumableEncodeJob.migrate(spark, table, dst,
+    assertSorts("migrate", encode)(ResumableEncodeJob.migrate(spark, table, dst,
       EncodeOptions(codecPolicy = "plain")))
   }
 

@@ -52,6 +52,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(ManifestIO.latest(spark, table).get.version == before)
   }
 
+  test("an append rewrites its batch dir: a lost commit's leftovers go, an empty batch writes no file") {
+    val table = Files.createTempDirectory("graft_stream_rewrite").toString + "/table"
+    val opts = EncodeOptions(numParts = 4)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
+    def batchDir(b: Long) = new java.io.File(s"$table/${ManifestIO.TailRoot}/batch=$b")
+    StreamingEncode.appendBatch(rows(0, 200), table, opts, 0L)
+    // batch 1's dir as an earlier attempt whose commit was lost left it:
+    // output-committer leftovers and a block file no snapshot names
+    new java.io.File(batchDir(1), "_temporary/0").mkdirs()
+    new java.io.File(batchDir(1), "_SUCCESS").createNewFile()
+    val stale = batchDir(0).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(stale.toPath, new java.io.File(batchDir(1), stale.getName).toPath)
+    StreamingEncode.appendBatch(rows(200, 300), table, opts, 1L)
+    TableInvariants.assertSound(spark, table)
+    val named = ManifestIO.latest(spark, table).get.files.get.map(_.path)
+      .filter(_.startsWith(s"${ManifestIO.TailRoot}/batch=1/")).map(_.split('/').last)
+    assert(named.nonEmpty && !named.contains(stale.getName))
+    assert(batchDir(1).list().toSet == (named ++ named.map(n => s".$n.crc")).toSet)
+
+    // an empty batch commits its id with no file and no zone entry
+    StreamingEncode.appendBatch(rows(300, 300), table, opts, 2L)
+    val snap = ManifestIO.latest(spark, table).get
+    assert(snap.streamBatchId.contains(2L) && snap.lineage(-1).n_docs == 300L)
+    assert(!snap.files.get.exists(_.path.contains("batch=2/")))
+    assert(batchDir(2).isDirectory && batchDir(2).list().isEmpty)
+    TableInvariants.assertSound(spark, table)
+  }
+
   test("stream lineage carries the full batch fields (checksum_xor, codecs)") {
     val root = Files.createTempDirectory("graft_stream_lin").toString
     val opts = EncodeOptions(numParts = 4)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.scalatest.Assertions._
 
 /** Whole-table checks of an encoded table's latest snapshot, over every
@@ -15,6 +15,8 @@ import org.scalatest.Assertions._
   *    part-local block sequences, so runs are not checked);
   *  - every block lies inside its file's zone entry: its part in the
   *    entry's part span, its doc ids in the entry's doc_id span;
+  *  - every entry of a dir that holds a named file is a named file or its
+  *    `.crc`: no `_temporary`, no `_SUCCESS`, no unnamed `.parquet`;
   *  - each batch part's lineage equals the re-fold of its blocks
   *    ([[LineageOracle]]), and the stream lineage (part -1) equals the
   *    re-fold of the tail, or, once a compaction re-blocked the tail, keeps
@@ -31,6 +33,18 @@ object TableInvariants {
         input_file_name().as("_2"))
       .as(Encoders.tuple(enc, Encoders.STRING)).collect()
       .map { case (b, file) => (b, byPath(new Path(file).toUri.getPath)) }
+
+    val named = files.map(_.path).toSet
+    val raw = ManifestIO.fs(spark, table) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    named.map(p => p.take(p.lastIndexOf('/'))).foreach { dir =>
+      raw.listStatus(new Path(table, dir)).map(_.getPath.getName).foreach { n =>
+        val data = if (n.startsWith(".") && n.endsWith(".crc")) n.drop(1).dropRight(4) else n
+        assert(named(s"$dir/$data"), s"$dir/$n is in a dir of the snapshot but not named by it")
+      }
+    }
 
     blocks.foreach { case (b, z) =>
       val at = s"${z.path} block (${b.part_id}, ${b.block_id})"
