@@ -59,6 +59,22 @@ trait TokenCodec extends Serializable {
         s"$name: $count values at width $w take $size bytes, payload has ${bytes.length}")
     w
   }
+
+  /** The entry count of a symbol table, read at `cur`, after checking that
+    * it is at most `max` and that the bytes left can hold that many
+    * entries of at least `entryBytes` bytes each: a hostile count fails
+    * here, before anything is sized by it.
+    */
+  protected final def tableCount(bytes: Array[Byte], cur: Cursor, max: Int,
+                                 entryBytes: Int): Int = {
+    if (cur.pos >= bytes.length)
+      throw new InvalidCodecException(s"$name: no table in ${bytes.length} bytes")
+    val count = readVarint(bytes, cur)
+    if (count < 0 || count > max || count * entryBytes > bytes.length - cur.pos)
+      throw new InvalidCodecException(s"$name: table of $count entries (at most $max) " +
+        s"with ${bytes.length - cur.pos} bytes left")
+    count.toInt
+  }
 }
 
 /** Codecs whose encoding factors into (symbol table, body). The engine
@@ -415,7 +431,7 @@ object DictCodec extends TableCodec {
   }
 
   def readTable(bytes: Array[Byte], cur: Cursor): Array[Int] = {
-    val dictSize = readVarint(bytes, cur).toInt
+    val dictSize = tableCount(bytes, cur, MaxDict, 1)
     val dict = new Array[Int](dictSize)
     if (dictSize > 0) {
       dict(0) = unzigzag(readVarint(bytes, cur))
@@ -609,7 +625,7 @@ object FsstCodec extends TableCodec {
   }
 
   def readTable(bytes: Array[Byte], cur: Cursor): FsstTable = {
-    val nSym = readVarint(bytes, cur).toInt
+    val nSym = tableCount(bytes, cur, MaxRounds * PairsPerRound, 2)
     val left = new Array[Int](nSym)
     val right = new Array[Int](nSym)
     var s = 0

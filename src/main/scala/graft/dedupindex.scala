@@ -19,8 +19,7 @@ final case class MinhashIndexSnapshot(
     versions: Seq[Int],
     nDocs: Long,
     // per-version on-disk bytes (parallel to `versions`) so size-tiered
-    // merge decisions are metadata-only; recomputed from the filesystem
-    // for snapshots written before the field existed
+    // merge decisions are metadata-only
     versionBytes: Seq[Long] = Nil
 )
 
@@ -95,15 +94,21 @@ object MinhashIndex {
       try org.apache.commons.io.IOUtils.toByteArray(in)
       finally in.close()
     val root = mapper.readTree(bytes)
+    val versions = root.get("versions").elements().asScala.map(_.asInt).toSeq
+    val versionBytes = Option(root.get("version_bytes")).toSeq
+      .flatMap(_.elements().asScala.map(_.asLong))
+    // an older index format, without a size per version, is never read
+    if (versionBytes.length != versions.length)
+      throw new IllegalStateException(s"minhash index snapshot v$version of $table is in an " +
+        s"older format: ${versionBytes.length} version sizes for ${versions.length} versions")
     Some(MinhashIndexSnapshot(
       root.get("version").asInt,
       root.get("committed_at").asLong,
       root.get("k").asInt,
       root.get("bands").asInt,
-      root.get("versions").elements().asScala.map(_.asInt).toSeq,
+      versions,
       root.get("n_docs").asLong,
-      Option(root.get("version_bytes")).toSeq
-        .flatMap(_.elements().asScala.map(_.asLong))))
+      versionBytes))
   }
 
   private def write(spark: SparkSession, table: String, s: MinhashIndexSnapshot): Unit = {
@@ -164,24 +169,13 @@ object MinhashIndex {
       v, System.currentTimeMillis(), k, bands,
       prev.map(_.versions).getOrElse(Seq.empty) :+ v,
       prev.map(_.nDocs).getOrElse(0L) + nNew,
-      versionSizes(spark, table, prev) :+ dirBytes(spark, table, v))
+      prev.fold(Seq.empty[Long])(_.versionBytes) :+ dirBytes(spark, table, v))
     write(spark, table, snap)
     mergeVersions(spark, table, snap)
   }
 
   private def dirBytes(spark: SparkSession, table: String, v: Int): Long =
     fs(spark, table).getContentSummary(dataDir(table, v)).getLength
-
-  /** Per-version on-disk sizes: from the snapshot when recorded, from the
-    * filesystem for pre-field snapshots.
-    */
-  private def versionSizes(spark: SparkSession, table: String,
-                           snap: Option[MinhashIndexSnapshot]): Seq[Long] =
-    snap match {
-      case None => Nil
-      case Some(s) if s.versionBytes.length == s.versions.length => s.versionBytes
-      case Some(s) => s.versions.map(v => dirBytes(spark, table, v))
-    }
 
   /** Size-tiered version merging (same LSM law as the encoded table's
     * stream-run compaction, streaming.scala `mergeRuns`): while the newest
@@ -202,9 +196,8 @@ object MinhashIndex {
   private def mergeVersions(spark: SparkSession, table: String,
                             snap0: MinhashIndexSnapshot): MinhashIndexSnapshot = {
     var snap = snap0
-    var sizes = versionSizes(spark, table, Some(snap))
-    while (snap.versions.length >= 2 &&
-      sizes.last * 2 >= sizes(sizes.length - 2)) {
+    def sizes = snap.versionBytes
+    while (sizes.length >= 2 && sizes.last * 2 >= sizes(sizes.length - 2)) {
       val src = snap.versions.takeRight(2)
       val target = snap.version + 1
       val d = dataDir(table, target)
@@ -220,7 +213,6 @@ object MinhashIndex {
         versions = snap.versions.dropRight(2) :+ target,
         versionBytes = sizes.dropRight(2) :+ dirBytes(spark, table, target))
       write(spark, table, snap)
-      sizes = snap.versionBytes
     }
     snap
   }

@@ -580,9 +580,7 @@ object BlockEncoder {
     * 4 Ki-token digest intervals (see [[Checksum.sliceDigests]]), every
     * covered interval's XXH64 is checked, then the extension is trimmed —
     * ≤ 2 extra intervals per block buys the same decode-bug detection the
-    * full-block checksum gives full decodes. Blocks written before the
-    * `subsums` column existed decode unverified (Parquet page CRC still
-    * guards the at-rest bytes).
+    * full-block checksum gives full decodes.
     */
   def decodeBlockRange(b: EncodedBlock, fromDoc: String, toDoc: String): Iterator[TokenRow] = {
     checkRows(b)
@@ -608,27 +606,21 @@ object BlockEncoder {
     while (i < end) { tokUntil += b.n_toks(i); i += 1 }
 
     // extend the slice to digest-interval boundaries so every returned
-    // token sits in a fully-verified interval; legacy blocks (no subsums)
-    // decode the requested span unverified
-    val nAll = b.n_tokens.toInt
+    // token sits in a fully-verified interval
     val I = Checksum.SliceDigestInterval
-    val canVerify =
-      b.subsums != null && b.subsums.length == (nAll + I - 1) / I && tokUntil > tokFrom
-    val vFrom = if (canVerify) (tokFrom / I) * I else tokFrom
-    val vUntil = if (canVerify) math.min(nAll, ((tokUntil + I - 1) / I) * I) else tokUntil
+    val vFrom = (tokFrom / I) * I
+    val vUntil = math.min(b.n_tokens.toInt, ((tokUntil + I - 1) / I) * I)
     val flat = decodeTokens(b, vFrom, vUntil)
-    if (canVerify) {
-      var iv = vFrom / I
-      var p = 0
-      while (p < flat.length) {
-        val len = math.min(I, flat.length - p)
-        val d = Checksum.digestRange(flat, p, len)
-        require(d == b.subsums(iv),
-          s"slice digest mismatch in block ${b.block_id} (part ${b.part_id}), " +
-            s"interval $iv: stored ${b.subsums(iv)}, decoded $d")
-        iv += 1
-        p += len
-      }
+    var iv = vFrom / I
+    var p = 0
+    while (p < flat.length) {
+      val len = math.min(I, flat.length - p)
+      val d = Checksum.digestRange(flat, p, len)
+      require(d == b.subsums(iv),
+        s"slice digest mismatch in block ${b.block_id} (part ${b.part_id}), " +
+          s"interval $iv: stored ${b.subsums(iv)}, decoded $d")
+      iv += 1
+      p += len
     }
     rows(b, flat, tokFrom - vFrom, start, end)
   }
@@ -647,10 +639,11 @@ object BlockEncoder {
 
   /** Fails closed, before any allocation, on a block whose row metadata
     * disagrees with itself: `n_docs` must equal the lengths of `doc_ids`,
-    * `n_toks` and `sources`, and the non-negative `n_toks` must sum to
-    * `n_tokens`, which must fit an Int. A corrupt header then raises
-    * [[InvalidCodecException]] naming the block, never an AIOOBE or a
-    * token array sized by a bad count.
+    * `n_toks` and `sources`, the non-negative `n_toks` must sum to
+    * `n_tokens`, which must fit an Int, and `subsums` must hold one digest
+    * per 4 Ki-token interval of the `n_tokens`. A corrupt header then
+    * raises [[InvalidCodecException]] naming the block, never an AIOOBE, a
+    * token array sized by a bad count or an unverified slice.
     */
   private def checkRows(b: EncodedBlock): Unit = {
     def bad(why: String) =
@@ -669,6 +662,9 @@ object BlockEncoder {
     }
     if (sum != b.n_tokens || b.n_tokens > Int.MaxValue)
       bad(s"n_toks sum to $sum, n_tokens is ${b.n_tokens}")
+    val I = Checksum.SliceDigestInterval
+    if (len(b.subsums) != (b.n_tokens + I - 1) / I)
+      bad(s"${len(b.subsums)} subsums for ${b.n_tokens} tokens")
   }
 
   /** The one decode step: unframe the payload, dispatch on the block's

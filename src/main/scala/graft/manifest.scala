@@ -64,14 +64,14 @@ final case class PartLineage(
 /** One block file a snapshot makes visible — an entry of its zone map:
   * the path relative to the table root (tables copy as a directory tree),
   * the part_id span of its blocks and the [first, last] doc_id span (UTF-8
-  * order) of its blocks. `bounds` is None for a file listed from a table
-  * written before snapshots carried their files.
+  * order) of its blocks.
   */
 final case class ZoneFile(
     path: String,
     minPart: Int,
     maxPart: Int,
-    bounds: Option[(String, String)] = None
+    first: String,
+    last: String
 ) {
   /** The layout dir of the file: `data`, `compacted/run=V` or `stream_batches`. */
   def root: String = path.split('/') match {
@@ -81,18 +81,17 @@ final case class ZoneFile(
 
   def isTail: Boolean = root == ManifestIO.TailRoot
 
-  /** Whether the file can hold a block of one of `parts` whose doc_id span
-    * meets [from, to] (open bounds always can).
+  /** Whether the file can hold a block of one of `parts` (any part when
+    * None) whose doc_id span meets [from, to] (any span when None).
     */
   def overlaps(parts: Option[Seq[Int]], range: Option[(String, String)]): Boolean =
     parts.forall(_.exists(p => p >= minPart && p <= maxPart)) &&
-      (for ((from, to) <- range; (first, last) <- bounds)
-        yield DocIdOrder.lteq(first, to) && DocIdOrder.gteq(last, from)).getOrElse(true)
+      range.forall { case (from, to) => DocIdOrder.lteq(first, to) && DocIdOrder.gteq(last, from) }
 
   /** The entry of a file holding this entry's blocks and `o`'s. */
   def cover(o: ZoneFile): ZoneFile = ZoneFile(path,
     math.min(minPart, o.minPart), math.max(maxPart, o.maxPart),
-    for ((a, b) <- bounds; (c, d) <- o.bounds) yield (DocIdOrder.min(a, c), DocIdOrder.max(b, d)))
+    DocIdOrder.min(first, o.first), DocIdOrder.max(last, o.last))
 }
 
 /** One committed snapshot of the encoded table. `streamBatchId` is the
@@ -121,9 +120,8 @@ final case class Snapshot(
     compactedRuns: Seq[Int] = Nil,
     compactedRunBytes: Seq[Long] = Nil,
     // the zone map: every block file this version makes visible, written
-    // by the commit that adds or drops files (None = a snapshot from before
-    // the field existed; [[ManifestIO.visible]] lists such a table)
-    files: Option[Seq[ZoneFile]] = None
+    // by the commit that adds or drops files
+    files: Seq[ZoneFile]
 ) {
   /** `opts` with the table's recorded zdict probe decision replayed — the
     * one rule every writer (run, migrate, appendBatch, compact) applies.
@@ -145,7 +143,7 @@ object Snapshot {
   /** Version 0 of a table: its partition plan, no part committed yet. */
   def initial(plan: PartitionPlan, zdictEnabled: Option[Boolean] = None): Snapshot =
     Snapshot(0, System.currentTimeMillis(), plan, Set.empty, Map.empty,
-      zdictEnabled = zdictEnabled, files = Some(Nil))
+      zdictEnabled = zdictEnabled, files = Nil)
 }
 
 /** Iceberg-style append-only snapshot log over Parquet block files.
@@ -163,12 +161,11 @@ object Snapshot {
   * that dir ([[writeBlocks]]: no output committer, no `_SUCCESS`; the
   * lineage and zone entries come back as the write job's results). A
   * commit dir holds only the files the snapshot names (and their local
-  * checksum files), and the snapshot's zone map ([[visible]]) is what
+  * checksum files), and the snapshot's zone map (`Snapshot.files`) is what
   * makes them visible: it is the only partition index. This object owns
   * that layout: which block files a snapshot makes visible, how they are
-  * read ([[blocks]]) and how versions are listed, read and committed.
-  * Older tables keep `data/part_id=K/` and `compacted/run=V/part_id=K/`
-  * dirs of files without the column, read through the same relation.
+  * read ([[blocks]]) and how versions are listed, read and committed. A
+  * snapshot without a zone map fails to read ([[fromJson]]).
   *
   * Uses the Hadoop FileSystem API so the same code runs on HDFS/object
   * stores on a real cluster, not just local files.
@@ -268,7 +265,7 @@ object ManifestIO {
         val l = PartLineage(part, 1L, r.getInt(at("n_docs")), r.getLong(at("n_tokens")),
           r.getLong(at("raw_bytes")), r.getLong(at("encoded_bytes")), r.getLong(at("checksum")),
           Map(str(r, "codec") -> 1L), r.getLong(at("enc_micros")))
-        val z = ZoneFile(name, part, part, Some((str(r, "first_doc_id"), str(r, "last_doc_id"))))
+        val z = ZoneFile(name, part, part, str(r, "first_doc_id"), str(r, "last_doc_id"))
         lineage = lineage.updated(part, lineage.get(part).fold(l)(_ merge l))
         zone = Some(zone.fold(z)(_ cover z))
       }
@@ -296,69 +293,23 @@ object ManifestIO {
     p => p.toUri.getPath.stripPrefix(root)
   }
 
-  /** The block files `snap` makes visible: its zone map or, for a snapshot
-    * written before snapshots carried one (whose tables keep `part_id=K`
-    * dirs), one listing per layout into the same entries with open doc_id
-    * bounds — the files in `part_id=K` dirs of the committed parts and of
-    * each compacted run, and the stream tail's batch dirs with id in
-    * (compactedBatchId, streamBatchId]. Bounding by the snapshot keeps
-    * commit-then-visible either way: a file no snapshot names (a crashed
-    * attempt's, or a later commit's `data/version=V/` file) is never read.
-    */
-  def visible(spark: SparkSession, table: String, snap: Snapshot): Seq[ZoneFile] =
-    snap.files.getOrElse {
-      val f = fs(spark, table)
-      val rel = relativize(spark, table)
-      // like Spark's file index, skip hidden names at any level (a crashed
-      // write's `_temporary/` tree, checksum files)
-      def list(dir: Path): Seq[Path] =
-        if (!f.exists(dir)) Nil
-        else {
-          val it = f.listFiles(dir, true)
-          Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-            .filter(p => p.getName.endsWith(".parquet") &&
-              rel(p).split('/').forall(c => !c.startsWith("_") && !c.startsWith(".")))
-            .toSeq
-        }
-      def inParts(ps: Seq[Path], keep: Int => Boolean): Seq[ZoneFile] = ps.flatMap(p =>
-        p.getParent.getName.stripPrefix("part_id=").toIntOption.filter(keep)
-          .map(k => ZoneFile(rel(p), k, k)))
-      val data = if (snap.committed.isEmpty) Nil
-        else inParts(list(dataDir(table)), snap.committed)
-      val runs = snap.compactedRuns.flatMap(r => inParts(list(compactedDir(table, r)), _ => true))
-      val minBatch = snap.compactedBatchId.fold(0L)(_ + 1)
-      val maxBatch = snap.streamBatchId.getOrElse(-1L)
-      val tail = if (minBatch > maxBatch) Nil else list(new Path(table, TailRoot))
-        .filter(_.getParent.getName.stripPrefix("batch=").toLongOption
-          .exists(b => b >= minBatch && b <= maxBatch))
-        .map(p => ZoneFile(rel(p), 0, snap.plan.numParts - 1))
-      data ++ runs ++ tail
-    }
-
-  /** The blocks of exactly `files` (entries of `snap`'s [[visible]] set):
-    * ONE schema-explicit relation over the exact file paths — no listing,
-    * no `exists`, no dir walk. Files in `part_id=K` dirs (written before
-    * the zone map was the only partition index) lack the part_id column
-    * and take K from their path. The encoder schema lets an empty selection
-    * read back empty and surfaces a column that older files lack as null.
-    * A file the snapshot names that is gone (deleted by a later compaction
-    * or merge) fails the read with the snapshot's version — never a
-    * silently short result.
+  /** The blocks of exactly `files` (entries of `snap`'s zone map): ONE
+    * schema-explicit relation over the exact file paths — no listing, no
+    * `exists`, no dir walk. The encoder schema lets an empty selection read
+    * back empty. A file the snapshot names that is gone (deleted by a later
+    * compaction or merge) fails the read with the snapshot's version —
+    * never a silently short result.
     */
   def scanFiles(spark: SparkSession, table: String, snap: Snapshot,
                 files: Seq[ZoneFile]): Dataset[EncodedBlock] = {
     val enc = RowEncoders.block
     if (files.isEmpty) return spark.emptyDataset(enc)
-    val rel =
-      try spark.read.schema(enc.schema).parquet(files.map(z => new Path(table, z.path).toString): _*)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
-          throw fileGone(table, snap, e)
-      }
-    (if (!files.exists(_.path.contains("/part_id="))) rel
-     else rel.withColumn("part_id", coalesce(col("part_id"),
-       regexp_extract(col("_metadata.file_path"), "/part_id=(\\d+)/[^/]*$", 1).cast("int"))))
+    try spark.read.schema(enc.schema).parquet(files.map(z => new Path(table, z.path).toString): _*)
       .as(enc)
+    catch {
+      case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        throw fileGone(table, snap, e)
+    }
   }
 
   private def fileGone(table: String, snap: Snapshot, e: Exception) =
@@ -366,14 +317,14 @@ object ManifestIO {
       s"block file that no longer exists (a later compaction or run merge deletes the " +
       s"files it folds): ${e.getMessage}", e)
 
-  /** The zone entries of `snap` ([[visible]]) that can hold a block of
-    * `parts` (when given) with doc_id in `range` (when given, inclusive),
-    * by [[ZoneFile.overlaps]] — the one file-selection rule of [[blocks]]
-    * and [[pointBlocks]].
+  /** The zone entries of `snap` that can hold a block of `parts` (when
+    * given) with doc_id in `range` (when given, inclusive), by
+    * [[ZoneFile.overlaps]] — the one file-selection rule of [[blocks]] and
+    * [[pointBlocks]].
     */
-  def select(spark: SparkSession, table: String, snap: Snapshot,
-             parts: Option[Seq[Int]], range: Option[(String, String)]): Seq[ZoneFile] =
-    visible(spark, table, snap).filter(_.overlaps(parts, range))
+  def select(snap: Snapshot, parts: Option[Seq[Int]],
+             range: Option[(String, String)]): Seq[ZoneFile] =
+    snap.files.filter(_.overlaps(parts, range))
 
   /** Every block `snap` makes visible in `table` that can hold a doc of
     * `parts` (when given) with doc_id in `range` (when given, inclusive) —
@@ -387,7 +338,7 @@ object ManifestIO {
   def blocks(spark: SparkSession, table: String, snap: Snapshot,
              parts: Option[Seq[Int]] = None,
              range: Option[(String, String)] = None): Dataset[EncodedBlock] = {
-    val all = scanFiles(spark, table, snap, select(spark, table, snap, parts, range))
+    val all = scanFiles(spark, table, snap, select(snap, parts, range))
     (range, parts) match {
       case (Some((from, to)), _) =>
         all.where(col("last_doc_id") >= from && col("first_doc_id") <= to)
@@ -413,7 +364,7 @@ object ManifestIO {
     val filter = FilterCompat.get(
       and(gtEq(binaryColumn("last_doc_id"), key), ltEq(binaryColumn("first_doc_id"), key)))
     val conf = spark.sparkContext.hadoopConfiguration
-    select(spark, table, snap, Some(parts), Some((id, id))).flatMap { z =>
+    select(snap, Some(parts), Some((id, id))).flatMap { z =>
       val out = Vector.newBuilder[EncodedBlock]
       try {
         // over the session conf: `ParquetReader.builder` builds a fresh
@@ -424,39 +375,31 @@ object ManifestIO {
         }.withFilter(filter).build()
         try {
           var g = reader.read()
-          while (g != null) { out += blockOf(g, z); g = reader.read() }
+          while (g != null) { out += blockOf(g); g = reader.read() }
         } finally reader.close()
       } catch { case e: java.io.FileNotFoundException => throw fileGone(table, snap, e) }
       out.result()
     }
   }
 
-  /** One block record of the zone entry `z`'s file, as Spark writes it
-    * (lists in the three-level `list`/`element` form). Columns are tested
-    * by the file's schema: a file in a `part_id=K` dir has no part_id, and
-    * takes K from its single-part entry; a file from before the `subsums`
-    * or `zdict` column existed reads it as null, as [[scanFiles]] does.
+  /** One block record of a block file, as Spark writes it (lists in the
+    * three-level `list`/`element` form; a null value reads as null, as in
+    * [[scanFiles]]).
     */
-  private def blockOf(g: Group, z: ZoneFile): EncodedBlock = {
-    val schema = g.getType
-    def has(f: String) = schema.containsField(f) && g.getFieldRepetitionCount(f) > 0
+  private def blockOf(g: Group): EncodedBlock = {
+    def present(f: String) = g.getFieldRepetitionCount(f) > 0
     def int(f: String) = g.getInteger(f, 0)
     def long(f: String) = g.getLong(f, 0)
     def str(f: String) = g.getString(f, 0)
-    def bytes(f: String) = if (has(f)) g.getBinary(f, 0).getBytes else null
+    def bytes(f: String) = if (present(f)) g.getBinary(f, 0).getBytes else null
     def list[A: scala.reflect.ClassTag](f: String)(
         get: Group => A): Array[A] =
-      if (!has(f)) null
+      if (!present(f)) null
       else {
         val l = g.getGroup(f, 0)
         Array.tabulate(l.getFieldRepetitionCount(0))(i => get(l.getGroup(0, i)))
       }
-    val partId =
-      if (schema.containsField("part_id")) int("part_id")
-      else if (z.minPart == z.maxPart) z.minPart
-      else throw new IllegalStateException(
-        s"${z.path} has no part_id column and its zone entry spans parts ${z.minPart}..${z.maxPart}")
-    EncodedBlock(partId, long("block_id"), str("codec"), str("outer"), int("n_docs"),
+    EncodedBlock(int("part_id"), long("block_id"), str("codec"), str("outer"), int("n_docs"),
       long("n_tokens"), long("raw_bytes"), long("encoded_bytes"), str("first_doc_id"),
       str("last_doc_id"),
       list("doc_ids")(e => if (e.getFieldRepetitionCount(0) == 0) null else e.getString(0, 0)),
@@ -593,20 +536,33 @@ object ManifestIO {
       l.codecs.toSeq.sortBy(_._1).foreach { case (n, v) => c.put(n, v) }
       a.add(l.wall_micros)
     }
-    // zone entries as short arrays: [path, minPart, maxPart(, first, last)]
-    s.files.foreach { zs =>
-      val fa = root.putArray("files")
-      zs.foreach { z =>
-        val e = fa.addArray().add(z.path).add(z.minPart).add(z.maxPart)
-        z.bounds.foreach { case (first, last) => e.add(first).add(last) }
-      }
-    }
+    // zone entries as short arrays: [path, minPart, maxPart, first, last]
+    val fa = root.putArray("files")
+    s.files.foreach(z => fa.addArray().add(z.path).add(z.minPart).add(z.maxPart)
+      .add(z.first).add(z.last))
     root.toString
   }
 
+  /** The snapshot `root` holds. Only the current format reads: a zone map
+    * whose every entry carries its doc_id span, lineage as arrays in field
+    * order and one size per compacted run. A snapshot of an older table
+    * format fails with one [[IllegalStateException]] naming its version —
+    * never read as an empty or partial table.
+    */
   def fromJson(root: JsonNode): Snapshot = {
+    val version = root.get("version").asInt
+    def older(what: String) = new IllegalStateException(
+      s"snapshot v$version is in an older table format ($what); only snapshots whose " +
+        "zone map names every block file with its part and doc_id spans are read")
     def intArray(n: JsonNode): Array[Int] =
       n.elements().asScala.map(_.asInt).toArray
+    def seq[A](field: String)(f: JsonNode => A): Seq[A] =
+      Option(root.get(field)).toSeq.flatMap(_.elements().asScala.map(f))
+    val files = Option(root.get("files")).getOrElse(throw older("no zone map"))
+      .elements().asScala.map { e =>
+        if (e.size < 5) throw older(s"zone entry ${e.get(0)} has no doc_id span")
+        ZoneFile(e.get(0).asText, e.get(1).asInt, e.get(2).asInt, e.get(3).asText, e.get(4).asText)
+      }.toSeq
     val p = root.get("plan")
     val plan = PartitionPlan(
       p.get("boundaries").elements().asScala.map(_.asText).toArray,
@@ -616,24 +572,18 @@ object ManifestIO {
     )
     val lineage = root.get("lineage").fields().asScala.map { e =>
       val o = e.getValue
-      // an array in field order, or (older snapshots) an object by name
-      def f(i: Int, name: String): JsonNode = if (o.isArray) o.get(i) else o.get(name)
-      val codecs = f(7, "codecs").fields().asScala
+      if (!o.isArray) throw older(s"lineage of part ${e.getKey} is not an array")
+      val codecs = o.get(7).fields().asScala
         .map(c => c.getKey -> c.getValue.asLong).toMap
-      e.getKey.toInt -> PartLineage(
-        f(0, "part_id").asInt,
-        f(1, "n_blocks").asLong,
-        f(2, "n_docs").asLong,
-        f(3, "n_tokens").asLong,
-        f(4, "raw_bytes").asLong,
-        f(5, "encoded_bytes").asLong,
-        f(6, "checksum_xor").asLong,
-        codecs,
-        f(8, "wall_micros").asLong
-      )
+      e.getKey.toInt -> PartLineage(o.get(0).asInt, o.get(1).asLong, o.get(2).asLong,
+        o.get(3).asLong, o.get(4).asLong, o.get(5).asLong, o.get(6).asLong, codecs,
+        o.get(8).asLong)
     }.toMap
+    val runs = seq("compacted_runs")(_.asInt)
+    val runBytes = seq("compacted_run_bytes")(_.asLong)
+    if (runBytes.length != runs.length) throw older("compacted runs without their sizes")
     Snapshot(
-      root.get("version").asInt,
+      version,
       root.get("committed_at").asLong,
       plan,
       root.get("committed").elements().asScala.map(_.asInt).toSet,
@@ -643,14 +593,9 @@ object ManifestIO {
         .map(row => row.elements().asScala.map(_.asDouble).toArray).toArray),
       Option(root.get("zdict_enabled")).map(_.asBoolean),
       Option(root.get("compacted_batch_id")).map(_.asLong),
-      Option(root.get("compacted_runs")).toSeq
-        .flatMap(_.elements().asScala.map(_.asInt)),
-      Option(root.get("compacted_run_bytes")).toSeq
-        .flatMap(_.elements().asScala.map(_.asLong)),
-      Option(root.get("files")).map(_.elements().asScala.map { e =>
-        ZoneFile(e.get(0).asText, e.get(1).asInt, e.get(2).asInt,
-          if (e.size > 3) Some((e.get(3).asText, e.get(4).asText)) else None)
-      }.toSeq)
+      runs,
+      runBytes,
+      files
     )
   }
 }
@@ -727,16 +672,14 @@ object ResumableEncodeJob {
       Snapshot.initial(srcSnap.plan, srcSnap.zdictEnabled))
     // SRC's parts: the committed batch parts and every part a compacted run
     // or tail file can hold (a stream-only table commits no batch part)
-    val srcFiles = ManifestIO.visible(spark, srcTable, srcSnap)
-    val srcParts = srcSnap.committed ++ srcFiles.flatMap(z =>
+    val srcParts = srcSnap.committed ++ srcSnap.files.flatMap(z =>
       math.max(z.minPart, 0) to math.min(z.maxPart, srcSnap.plan.numParts - 1))
     val pending = srcParts.toSeq.sorted.filterNot(base.committed)
     if (pending.isEmpty) return base
     val batch = pending.take(maxPartsPerRun)
     val comp = TokenCompressor(base.replayZdict(opts))
     commitParts(spark, dstTable, base, batch.toSet)(comp.encodeWithPlan(
-      comp.decode(ManifestIO.blocks(spark, srcTable, srcSnap.copy(files = Some(srcFiles)),
-        Some(batch))),
+      comp.decode(ManifestIO.blocks(spark, srcTable, srcSnap, Some(batch))),
       base.plan, Some(batch.toSet), TokenCompressor.writeTasks(spark, batch.size)))
   }
 
@@ -750,13 +693,12 @@ object ResumableEncodeJob {
     */
   private def commitParts(spark: SparkSession, table: String, base: Snapshot,
                           batch: Set[Int])(blocks: => Dataset[EncodedBlock]): Snapshot = {
-    val kept = ManifestIO.visible(spark, table, base)
-    val live = kept.filter(_.root == ManifestIO.DataRoot).map(_.path.split('/')(1)).toSet
+    val live = base.files.filter(_.root == ManifestIO.DataRoot).map(_.path.split('/')(1)).toSet
     ManifestIO.sweep(ManifestIO.fs(spark, table), ManifestIO.dataDir(table))(n => !live(n))
     val (lineage, files) = ManifestIO.writeBlocks(blocks, table,
       new Path(ManifestIO.dataDir(table), s"version=${base.version + 1}"))
     val next = base.next.copy(committed = base.committed ++ batch,
-      lineage = base.lineage ++ lineage, files = Some(kept ++ files))
+      lineage = base.lineage ++ lineage, files = base.files ++ files)
     ManifestIO.write(spark, table, next)
     next
   }

@@ -59,7 +59,7 @@ final case class EncodedBlock(
     checksum: Long, // XXH64(seed=42) over the canonical block bytes
     // XXH64 per 4 Ki-token interval of the flat stream, so SLICED range
     // reads verify what they return (the block checksum needs the full
-    // stream); null/empty = legacy block, sliced reads skip verification
+    // stream)
     subsums: Array[Long],
     enc_micros: Long
 )

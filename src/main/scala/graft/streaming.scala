@@ -39,7 +39,6 @@ object StreamingEncode {
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
     val blocks = TokenCompressor(base.replayZdict(opts)).encodeWithPlan(batch, base.plan,
       None, TokenCompressor.writeTasks(spark, base.plan.numParts))
-    val kept = ManifestIO.visible(spark, table, base)
     // batch-scoped directory: deterministic overwrite on retry
     val (written, files) = ManifestIO.writeBlocks(blocks, table,
       new Path(table, s"${ManifestIO.TailRoot}/batch=$batchId"))
@@ -49,7 +48,7 @@ object StreamingEncode {
       PartLineage(-1, 0L, 0L, 0L, 0L, 0L, 0L, Map.empty, 0L))(_ merge _)
     ManifestIO.write(spark, table, base.next.copy(
       lineage = base.lineage.updated(-1, base.lineage.get(-1).fold(added)(_ merge added)),
-      streamBatchId = Some(batchId), files = Some(kept ++ files)))
+      streamBatchId = Some(batchId), files = base.files ++ files))
   }
 
   /** Start the ingestion stream over a directory of token parquet files. */
@@ -127,7 +126,7 @@ object StreamingEncode {
     // list un-merged — the tiering pass is idempotent and cheap when level
     if (maxBatch < minBatch) return mergeRuns(spark, table, base)
 
-    val (pending, kept) = ManifestIO.visible(spark, table, base).partition(_.isTail)
+    val (pending, kept) = base.files.partition(_.isTail)
     val tail = ManifestIO.scanFiles(spark, table, base, pending)
     val run = base.version + 1
     val runDir = ManifestIO.compactedDir(table, run)
@@ -140,8 +139,8 @@ object StreamingEncode {
     val next = base.next.copy(
       compactedBatchId = Some(maxBatch),
       compactedRuns = base.compactedRuns :+ run,
-      compactedRunBytes = runSizes(fs, table, base) :+ dirBytes(fs, runDir),
-      files = Some(kept ++ files))
+      compactedRunBytes = base.compactedRunBytes :+ dirBytes(fs, runDir),
+      files = kept ++ files)
     ManifestIO.write(spark, table, next)
     // post-commit cleanup; leftovers are invisible (watermark) and swept
     // by the next compaction if this delete dies mid-way
@@ -160,15 +159,6 @@ object StreamingEncode {
 
   private def dirBytes(fs: FileSystem, p: Path): Long =
     fs.getContentSummary(p).getLength
-
-  /** Per-run on-disk sizes, from the snapshot when recorded (every commit
-    * since the field existed) or from the filesystem for older tables.
-    */
-  private def runSizes(fs: FileSystem, table: String,
-                       snap: Snapshot): Seq[Long] =
-    if (snap.compactedRunBytes.length == snap.compactedRuns.length)
-      snap.compactedRunBytes
-    else snap.compactedRuns.map(r => dirBytes(fs, ManifestIO.compactedDir(table, r)))
 
   /** Size-tiered run merging (LSM/Lucene-style): while the newest run has
     * grown to at least HALF its predecessor's size, the two are folded
@@ -189,14 +179,14 @@ object StreamingEncode {
                         snap0: Snapshot): Snapshot = {
     val fs = ManifestIO.fs(spark, table)
     var snap = snap0
-    var sizes = runSizes(fs, table, snap)
-    while (snap.compactedRuns.length >= 2 &&
-      sizes.last * 2 >= sizes(sizes.length - 2)) {
+    // the recorded run sizes, one per run (ManifestIO.fromJson checks it)
+    def sizes = snap.compactedRunBytes
+    while (sizes.length >= 2 && sizes.last * 2 >= sizes(sizes.length - 2)) {
       val srcRuns = snap.compactedRuns.takeRight(2)
       val target = snap.version + 1
       val targetDir = ManifestIO.compactedDir(table, target)
       val srcRoots = srcRuns.map(ManifestIO.runRoot).toSet
-      val (src, kept) = ManifestIO.visible(spark, table, snap).partition(z => srcRoots(z.root))
+      val (src, kept) = snap.files.partition(z => srcRoots(z.root))
       val numParts = snap.plan.numParts
       val merged = Routing.pack(ManifestIO.scanFiles(spark, table, snap, src).toDF(),
           numParts, None, TokenCompressor.writeTasks(spark, numParts))
@@ -206,11 +196,10 @@ object StreamingEncode {
       snap = snap.next.copy(
         compactedRuns = snap.compactedRuns.dropRight(2) :+ target,
         compactedRunBytes = sizes.dropRight(2) :+ dirBytes(fs, targetDir),
-        files = Some(kept ++ files))
+        files = kept ++ files)
       ManifestIO.write(spark, table, snap)
       srcRuns.foreach(r =>
         fs.delete(ManifestIO.compactedDir(table, r), true))
-      sizes = snap.compactedRunBytes
     }
     snap
   }

@@ -226,6 +226,20 @@ class CodecSpec extends AnyFunSuite {
     }
   }
 
+  test("table codecs reject a hostile table entry count before allocating") {
+    // counts that would size the table's arrays: -1 once read as an Int,
+    // and 2^24 entries over a 3-byte table
+    for (count <- Seq(0xffffffffL, 1L << 24)) {
+      val head = new Array[Byte](10)
+      val bytes = head.take(Bits.writeVarint(head, 0, count)) ++ Array[Byte](1, 2, 3)
+      for (c <- Seq[TableCodec](DictCodec, FsstCodec)) {
+        // the exact type: InvalidCodecException extends IllegalArgumentException
+        intercept[InvalidCodecException](c.tableFromBytes(bytes))
+        intercept[InvalidCodecException](c.decode(bytes, 4))
+      }
+    }
+  }
+
   test("fsst legacy (pre-sync-table) bodies still decode, full and sliced") {
     // Blocks persisted by rounds ≤7 carry body = [mergedLen][DictCodec
     // bytes] under the pre-versioned name "fsst"; the structural detector

@@ -94,7 +94,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(s2.compactedRuns != s1.compactedRuns)
     assert(s2.compactedRunBytes.length == 1)
     // the merged run: one contiguous part span per file, none overlapping
-    val spans = s2.files.get.map(z => (z.minPart, z.maxPart)).sorted
+    val spans = s2.files.map(z => (z.minPart, z.maxPart)).sorted
     assert(spans.length <= TokenCompressor.writeTasks(spark, 4) &&
       spans.zip(spans.drop(1)).forall { case (a, b) => a._2 < b._1 }, s"merged run spans $spans")
     assert(!fs(table).exists(batchDir(table, 1L)))
@@ -125,6 +125,11 @@ class CompactionSpec extends AnyFunSuite {
     // geometric invariant: every run > 2x the next newer one
     val sizes = snap.compactedRunBytes
     assert(sizes.length == snap.compactedRuns.length)
+    // each recorded size is its run dir's size on disk
+    snap.compactedRuns.zip(sizes).foreach { case (r, size) =>
+      val onDisk = fs(table).getContentSummary(ManifestIO.compactedDir(table, r)).getLength
+      assert(size == onDisk, s"run $r: recorded $size, on disk $onDisk")
+    }
     assert(sizes.init.zip(sizes.tail).forall { case (older, newer) => older > 2 * newer },
       s"run sizes not geometric: $sizes")
     assert(snap.compactedRuns.length <= 2, s"runs: ${snap.compactedRuns}")

@@ -225,6 +225,8 @@ class EngineSpec extends AnyFunSuite {
       "missing sources" -> b.copy(sources = null),
       "negative n_docs" -> b.copy(n_docs = -1, doc_ids = null, n_toks = null, sources = null),
       "negative n_tok" -> b.copy(n_toks = b.n_toks.updated(2, -5).updated(3, 15)),
+      "missing subsums" -> b.copy(subsums = null),
+      "short subsums" -> b.copy(subsums = Array.empty),
       "n_toks sum under n_tokens" -> b.copy(n_toks = b.n_toks.updated(0, 9)),
       // an inflated count would size the token array before any codec check
       "n_tokens inflated" -> b.copy(n_tokens = 1L << 31,

@@ -65,7 +65,7 @@ class LineageRetrySpec extends AnyFunSuite {
 
     def assertRetryNamed(table: String, failedPath: String): Snapshot = {
       val snap = ManifestIO.latest(spark, table).get
-      val task0 = snap.files.get.filter(_.path.split('/').last.startsWith("part-00000-"))
+      val task0 = snap.files.filter(_.path.split('/').last.startsWith("part-00000-"))
       assert(task0.length == 1, s"task 0's files: $task0")
       assert(!failedPath.endsWith(task0.head.path), s"zone map names the failed file $failedPath")
       assert(new java.io.File(table, task0.head.path).exists())
@@ -75,7 +75,7 @@ class LineageRetrySpec extends AnyFunSuite {
     // the batch write is packed: task 0, the one that failed, wrote one
     // file holding several parts
     val batch = assertRetryNamed(s"$dir/batch", batchFailed)
-    val task0 = batch.files.get.filter(_.path.split('/').last.startsWith("part-00000-")).head
+    val task0 = batch.files.filter(_.path.split('/').last.startsWith("part-00000-")).head
     assert(task0.minPart < task0.maxPart, s"task 0's file: $task0")
 
     val schema = Encoders.product[EncodedBlock].schema

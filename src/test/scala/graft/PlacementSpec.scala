@@ -91,7 +91,7 @@ class PlacementSpec extends AnyFunSuite {
     val (snap, jobs, writes) = watchWrites(ResumableEncodeJob.run(input, packed, opts))
     TableInvariants.assertSound(spark, packed)
     assert(snap.committed.size == plan.numParts)
-    assertPacked("run", jobs, writes, snap.files.get)
+    assertPacked("run", jobs, writes, snap.files)
     assertSame("packed run", blocksOf(packed))
 
     // resumed in batches of 5, 5 and 2 parts, each packed on its own
@@ -113,7 +113,7 @@ class PlacementSpec extends AnyFunSuite {
     val (compacted, cJobs, cWrites) = watchWrites(StreamingEncode.compact(spark, stream, opts))
     TableInvariants.assertSound(spark, stream)
     assert(compacted.compactedRuns.length == 1)
-    assertPacked("compact", cJobs, cWrites, compacted.files.get.filterNot(_.isTail))
+    assertPacked("compact", cJobs, cWrites, compacted.files.filterNot(_.isTail))
     assertSame("compaction", blocksOf(stream))
   }
 }

@@ -153,7 +153,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val df = RangeReader.rangeBlocks(spark, table, "", "￿").toDF()
     val scans = df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
     // one scan over every layout (a full span selects every file)
-    val named = snap.files.get
+    val named = snap.files
     assert(named.map(_.root).distinct.size == 3)
     assert(scans.size == 1, s"expected one scan:\n${df.queryExecution.sparkPlan}")
     // its roots are exactly the .parquet files the snapshot names

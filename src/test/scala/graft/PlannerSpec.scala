@@ -93,7 +93,7 @@ class PlannerSpec extends AnyFunSuite {
     val plan = Planner.fromSample(sample, 8)
     val snap = Snapshot(3, 1234567L, plan, Set(1, 2),
       Map(1 -> PartLineage(1, 2, 10, 1000, 4000, 900, 0x123L,
-        Map("rle" -> 1L, "dict" -> 1L), 555L)))
+        Map("rle" -> 1L, "dict" -> 1L), 555L)), files = Nil)
     val back = ManifestIO.fromJson(
       new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(ManifestIO.toJson(snap)))

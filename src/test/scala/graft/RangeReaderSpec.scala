@@ -198,7 +198,7 @@ class RangeReaderSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val table = mixedTable("graft_zone_lookup")
     val snap = ManifestIO.latest(spark, table).get
-    val named = snap.files.get
+    val named = snap.files
     assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -230,35 +230,27 @@ class RangeReaderSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("lookup(id) equals readRange(id, id) for every doc_id, and an absent id returns " +
-    "empty, on current and part_id-dir tables with and without a zone map") {
+  test("lookup equals readRange(id, id) for every doc_id; absent ids return empty") {
     val table = mixedTable("graft_lookup_equiv")
     val ids = (0L until 1000L).map(Fixtures.row(42L, _).doc_id)
     // doc_ids that no block holds: inside the table's id range, before and after it
     val absent = (1000L until 1003L).map(Fixtures.row(42L, _).doc_id) ++ Seq("", "~")
     def rowsOf(ds: org.apache.spark.sql.Dataset[TokenRow]) =
       ds.collect().map(r => (r.doc_id, r.tokens.mkString(","), r.n_tok, r.source)).sorted.toSeq
-    def check(layout: String): Unit = {
-      val viaRange = rowsOf(RangeReader.readRange(spark, table, ids.min(DocIdOrder),
-        ids.max(DocIdOrder))).groupBy(_._1)
-      ids.foreach { id =>
-        val got = rowsOf(RangeReader.lookup(spark, table, id))
-        assert(got.size == 1 && got == viaRange(id), s"$layout: lookup $id")
-      }
-      // the literal point range on a sample of the ids
-      ids.indices.by(97).map(ids).foreach { id =>
-        assert(rowsOf(RangeReader.lookup(spark, table, id)) ==
-          rowsOf(RangeReader.readRange(spark, table, id, id)), s"$layout: readRange($id, $id)")
-      }
-      absent.foreach { id =>
-        assert(RangeReader.lookup(spark, table, id).collect().isEmpty, s"$layout: absent '$id'")
-      }
+    val viaRange = rowsOf(RangeReader.readRange(spark, table, ids.min(DocIdOrder),
+      ids.max(DocIdOrder))).groupBy(_._1)
+    ids.foreach { id =>
+      val got = rowsOf(RangeReader.lookup(spark, table, id))
+      assert(got.size == 1 && got == viaRange(id), s"lookup $id")
     }
-    check("current layout")
-    LegacyTables.partitionedLayout(spark, table, keepZoneMap = true)
-    check("part_id dirs with a zone map")
-    LegacyTables.stripZoneMap(spark, table)
-    check("part_id dirs without a zone map")
+    // the literal point range on a sample of the ids
+    ids.indices.by(97).map(ids).foreach { id =>
+      assert(rowsOf(RangeReader.lookup(spark, table, id)) ==
+        rowsOf(RangeReader.readRange(spark, table, id, id)), s"readRange($id, $id)")
+    }
+    absent.foreach { id =>
+      assert(RangeReader.lookup(spark, table, id).collect().isEmpty, s"absent '$id'")
+    }
   }
 
   test("a lookup of a file a compaction deleted fails with the snapshot's version") {
@@ -301,7 +293,7 @@ class RangeReaderSpec extends AnyFunSuite {
     assert(RangeReader.lookup(spark, table, id).collect().head.tokens.toSeq == rows(123).tokens.toSeq)
     // rewrite the doc's file in place, under its own name, with one payload
     // byte of the doc's tokens flipped
-    val z = snap.files.get.filter(_.overlaps(None, Some((id, id)))).head
+    val z = snap.files.filter(_.overlaps(None, Some((id, id)))).head
     val blocks = ManifestIO.scanFiles(spark, table, snap, Seq(z)).collect().map { b =>
       val r = b.doc_ids.indexOf(id)
       if (r < 0) b
@@ -328,39 +320,6 @@ class RangeReaderSpec extends AnyFunSuite {
     assert(RangeReader.lookup(spark, table, other).collect().map(_.doc_id).toSeq == Seq(other))
   }
 
-  test("a snapshot without a zone map reads every row; its next commit writes one") {
-    import org.apache.spark.sql.Encoders
-    val table = mixedTable("graft_zone_legacy")
-    // tables from before the zone map keep the part_id dir layout
-    LegacyTables.partitionedLayout(spark, table, keepZoneMap = false)
-    def check(step: String, n: Long): Unit = {
-      val want = (0L until n).map(i => Fixtures.row(42L, i).doc_id).sorted
-      val viaBlocks = ResumableEncodeJob.readBlocks(spark, table)
-        .collect().flatMap(_.doc_ids).sorted.toSeq
-      val viaDecoded = StreamingEncode.readDecoded(spark, table)
-        .collect().map(_.doc_id).sorted.toSeq
-      val viaRange = RangeReader.readRange(spark, table, want.head, want.last)
-        .collect().map(_.doc_id).sorted.toSeq
-      val wrong = Seq("readBlocks" -> viaBlocks, "readDecoded" -> viaDecoded,
-        "readRange" -> viaRange).collect { case (n, got) if got != want => s"$n ${got.size}" }
-      assert(wrong.isEmpty, s"$step: ${wrong.mkString(", ")} rows of ${want.size}")
-      val id = want(want.size / 3)
-      assert(RangeReader.lookup(spark, table, id).collect().map(_.doc_id).toSeq == Seq(id))
-    }
-    check("legacy snapshot", 1000)
-    // the first commit on the table lists its files once and records them
-    StreamingEncode.appendBatch(spark.range(1000, 1050)
-      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow]),
-      table, EncodeOptions(numParts = 8), batchId = 3L)
-    TableInvariants.assertSound(spark, table)
-    val snap = ManifestIO.latest(spark, table).get
-    assert(snap.files.exists(_.exists(_.bounds.isEmpty)), "listed entries keep open bounds")
-    check("first commit after", 1050)
-    StreamingEncode.compact(spark, table, EncodeOptions(numParts = 8))
-    TableInvariants.assertSound(spark, table)
-    check("compaction after", 1050)
-  }
-
   test("zone entries of packed writes match the blocks in each file") {
     import org.apache.spark.sql.Encoders
     val table = s"${Files.createTempDirectory("graft_zone_packed")}/t"
@@ -375,7 +334,7 @@ class RangeReaderSpec extends AnyFunSuite {
     sound(table)(StreamingEncode.compact(spark, table, opts))
     sound(table)(StreamingEncode.appendBatch(rows(1000, 1050), table, opts, batchId = 2L))
     val snap = ManifestIO.latest(spark, table).get
-    val named = snap.files.get
+    val named = snap.files
     assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
     assert(named.filterNot(_.isTail).exists(z => z.minPart < z.maxPart),
       s"no file spans two parts: ${named.map(_.path)}")
@@ -388,7 +347,8 @@ class RangeReaderSpec extends AnyFunSuite {
       val first = bs.map(_.getString(1)).min(DocIdOrder)
       val last = bs.map(_.getString(2)).max(DocIdOrder)
       assert((z.minPart, z.maxPart) == ((parts.min, parts.max)), s"${z.path} part span")
-      assert(z.bounds.contains((first, last)), s"${z.path}: ${z.bounds} vs ($first, $last)")
+      assert((z.first, z.last) == ((first, last)),
+        s"${z.path}: (${z.first}, ${z.last}) vs ($first, $last)")
     }
     (0L until 1050L by 50).foreach { i =>
       val want = Fixtures.row(42L, i)

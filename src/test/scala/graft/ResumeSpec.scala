@@ -82,7 +82,7 @@ class ResumeSpec extends AnyFunSuite {
     val staleDir = new java.io.File(s"$dir/t/data/version=${s1.version + 1}")
     staleDir.mkdirs()
     val stale = new java.io.File(staleDir, "part-stale.parquet")
-    val src = new java.io.File(s"$dir/t/${s1.files.get.head.path}")
+    val src = new java.io.File(s"$dir/t/${s1.files.head.path}")
     Files.copy(src.toPath, stale.toPath)
 
     val s2 = ResumableEncodeJob.run(input, s"$dir/t", opts)
@@ -91,7 +91,7 @@ class ResumeSpec extends AnyFunSuite {
     val dec = TokenCompressor(opts).decode(ResumableEncodeJob.readBlocks(spark, s"$dir/t"))
     assert(dec.count() == 200L, "stale file must not produce duplicate rows")
     // the data dirs are exactly those the zone map names
-    val named = s2.files.get.map(_.path.split('/')(1)).toSet
+    val named = s2.files.map(_.path.split('/')(1)).toSet
     assert(new java.io.File(s"$dir/t/data").list().toSet == named)
     assert(!stale.exists())
   }
@@ -164,35 +164,6 @@ class ResumeSpec extends AnyFunSuite {
     val missed = (0L until 1200L).map(Fixtures.row(42L, _).doc_id).par
       .filterNot(id => RangeReader.lookup(spark, dst, id).collect().map(_.doc_id).toSeq == Seq(id))
     assert(missed.isEmpty, s"${missed.size} of 1200 lookups missed, e.g. ${missed.take(3)}")
-  }
-
-  test("pre-zdict block tables (no zdict column) read back and decode") {
-    // Tables written before EncodedBlock gained `zdict` lack the column on
-    // disk; every reader passes the explicit encoder schema, so the column
-    // must surface as null and decode must treat that as dict-less.
-    val input = Fixtures.tokenTable(spark, 300L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_prezdict").toString
-    ResumableEncodeJob.run(input, dir, EncodeOptions(numParts = 3))
-    // strip the zdict column in place, emulating the legacy layout
-    val dataDir = ManifestIO.dataDir(dir).toString
-    val legacy = spark.read.parquet(dataDir).drop("zdict")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prezdict_tmp").toString
-    legacy.write.partitionBy("part_id").parquet(s"$tmp/data")
-    val f = ManifestIO.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(dataDir), true)
-    f.rename(new org.apache.hadoop.fs.Path(s"$tmp/data"),
-      new org.apache.hadoop.fs.Path(dataDir))
-    assert(!spark.read.parquet(dataDir).columns.contains("zdict"))
-    // a table that old also predates the snapshot zone map (the rewrite
-    // above renamed every file the zone map names)
-    LegacyTables.stripZoneMap(spark, dir)
-    val blocks = ResumableEncodeJob.readBlocks(spark, dir)
-    val back = TokenCompressor(EncodeOptions(numParts = 3)).decode(blocks)
-      .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
-    assert(back == input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
-    // range reads share the explicit-schema path
-    val some = RangeReader.readRange(spark, dir, "", "￿").collect()
-    assert(some.length == 300)
   }
 
   test("concurrent snapshot commit loses cleanly (no silent clobber)") {
@@ -324,22 +295,25 @@ class ResumeSpec extends AnyFunSuite {
     assert(back == input.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap)
   }
 
-  test("snapshot JSON: the compact form round-trips; the older pretty form still reads") {
+  test("snapshot JSON: the compact form round-trips; an older form fails closed") {
+    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val plan = PartitionPlan(Array("m"), Array(1, 1), Array(0, 1), 2)
     val lin = PartLineage(1, 2, 10, 1000, 4000, 900, -7L, Map("rle" -> 1L, "dict" -> 1L), 555L)
     val zones = Seq(
-      ZoneFile("data/part_id=1/part-00001-a.c000.snappy.parquet", 1, 1, Some(("n", "q"))),
-      ZoneFile("stream_batches/batch=0/part-00000-b.c000.snappy.parquet", 0, 1))
+      ZoneFile("data/version=1/part-00001-a7.snappy.parquet", 1, 1, "n", "q"),
+      ZoneFile("stream_batches/batch=0/part-00000-a9.snappy.parquet", 0, 1, "b", "x"))
     val snap = Snapshot(3, 1234567L, plan, Set(1), Map(1 -> lin), streamBatchId = Some(0L),
-      files = Some(zones))
+      files = zones)
     val json = ManifestIO.toJson(snap)
     assert(!json.contains("\n"), "snapshots are written compact")
     val back = ManifestIO.fromJson(mapper.readTree(json))
-    assert(back.lineage == Map(1 -> lin) && back.files.contains(zones))
+    assert(back.lineage == Map(1 -> lin) && back.files == zones)
     assert(back.streamBatchId.contains(0L) && back.committed == Set(1))
-    // the pretty-printed form with lineage objects, as older tables have it
-    val older = """{
+    // the older forms: the pretty-printed one with lineage objects and no
+    // zone map, and the current one without a zone map, with a zone entry
+    // that has no doc_id span, with lineage objects or without run sizes
+    val pretty = """{
       |  "version" : 3, "committed_at" : 1234567,
       |  "plan" : { "boundaries" : [ "m" ], "saltOf" : [ 1, 1 ],
       |    "partOffset" : [ 0, 1 ], "numParts" : 2 },
@@ -349,7 +323,25 @@ class ResumeSpec extends AnyFunSuite {
       |    "checksum_xor" : -7, "wall_micros" : 555,
       |    "codecs" : { "dict" : 1, "rle" : 1 } } }
       |}""".stripMargin
-    val old = ManifestIO.fromJson(mapper.readTree(older))
-    assert(old.lineage == Map(1 -> lin) && old.files.isEmpty && old.plan.numParts == 2)
+    def edited(edit: ObjectNode => Unit): String = {
+      val o = mapper.readTree(json).asInstanceOf[ObjectNode]
+      edit(o)
+      o.toString
+    }
+    val older = Seq(
+      "pretty, lineage objects, no zone map" -> pretty,
+      "no zone map" -> edited(_.remove("files")),
+      "zone entry without its doc_id span" -> edited { o =>
+        val e = o.get("files").get(0).asInstanceOf[ArrayNode]
+        e.remove(4); e.remove(3)
+      },
+      "lineage objects" -> edited(
+        _.get("lineage").asInstanceOf[ObjectNode].putObject("1").put("part_id", 1)),
+      "runs without sizes" -> edited(_.putArray("compacted_runs").add(2)))
+    for ((what, j) <- older) {
+      val e = intercept[IllegalStateException](ManifestIO.fromJson(mapper.readTree(j)))
+      assert(e.getMessage.startsWith("snapshot v3 is in an older table format"),
+        s"$what: ${e.getMessage}")
+    }
   }
 }

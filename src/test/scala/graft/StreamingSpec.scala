@@ -67,7 +67,7 @@ class StreamingSpec extends AnyFunSuite {
     Files.copy(stale.toPath, new java.io.File(batchDir(1), stale.getName).toPath)
     StreamingEncode.appendBatch(rows(200, 300), table, opts, 1L)
     TableInvariants.assertSound(spark, table)
-    val named = ManifestIO.latest(spark, table).get.files.get.map(_.path)
+    val named = ManifestIO.latest(spark, table).get.files.map(_.path)
       .filter(_.startsWith(s"${ManifestIO.TailRoot}/batch=1/")).map(_.split('/').last)
     assert(named.nonEmpty && !named.contains(stale.getName))
     assert(batchDir(1).list().toSet == (named ++ named.map(n => s".$n.crc")).toSet)
@@ -76,7 +76,7 @@ class StreamingSpec extends AnyFunSuite {
     StreamingEncode.appendBatch(rows(300, 300), table, opts, 2L)
     val snap = ManifestIO.latest(spark, table).get
     assert(snap.streamBatchId.contains(2L) && snap.lineage(-1).n_docs == 300L)
-    assert(!snap.files.get.exists(_.path.contains("batch=2/")))
+    assert(!snap.files.exists(_.path.contains("batch=2/")))
     assert(batchDir(2).isDirectory && batchDir(2).list().isEmpty)
     TableInvariants.assertSound(spark, table)
   }
@@ -128,7 +128,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = s"$root/stream_table"
     // seed v0 with the batch table's plan so the append plans nothing
     ManifestIO.write(spark, stream,
-      Snapshot(0, System.currentTimeMillis(), batchSnap.plan, Set.empty, Map.empty))
+      Snapshot.initial(batchSnap.plan))
 
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()

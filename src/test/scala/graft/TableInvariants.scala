@@ -25,7 +25,7 @@ import org.scalatest.Assertions._
 object TableInvariants {
   def assertSound(spark: SparkSession, table: String): Unit = {
     val snap = ManifestIO.latest(spark, table).getOrElse(fail(s"no snapshot in $table"))
-    val files = ManifestIO.visible(spark, table, snap)
+    val files = snap.files
     val enc = Encoders.product[EncodedBlock]
     val byPath = files.map(z => new Path(table, z.path).toUri.getPath -> z).toMap
     val blocks = ManifestIO.scanFiles(spark, table, snap, files).toDF()
@@ -60,10 +60,8 @@ object TableInvariants {
       assert(b.n_tokens == b.n_toks.map(_.toLong).sum, s"$at: n_tokens ${b.n_tokens}")
       assert(b.part_id >= z.minPart && b.part_id <= z.maxPart,
         s"$at: part outside the entry's [${z.minPart}, ${z.maxPart}]")
-      z.bounds.foreach { case (first, last) =>
-        assert(DocIdOrder.lteq(first, b.first_doc_id) && DocIdOrder.lteq(b.last_doc_id, last),
-          s"$at: doc ids outside the entry's [$first, $last]")
-      }
+      assert(DocIdOrder.lteq(z.first, b.first_doc_id) && DocIdOrder.lteq(b.last_doc_id, z.last),
+        s"$at: doc ids outside the entry's [${z.first}, ${z.last}]")
     }
 
     blocks.filterNot(_._2.root.startsWith("compacted/"))
