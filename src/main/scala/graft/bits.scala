@@ -53,15 +53,43 @@ object Bits {
     */
   final class Cursor(var pos: Int)
 
+  /** Reads the varint at `cur.pos` and advances past it. A varint that
+    * runs past the end of `in`, or past 64 bits (ten bytes), raises
+    * [[InvalidCodecException]]: every decoder reads its payload through
+    * here, so a hostile or truncated payload fails typed.
+    */
   def readVarint(in: Array[Byte], cur: Cursor): Long = {
+    var pos = cur.pos
+    if (pos > in.length - 10) return readVarintNearEnd(in, cur)
+    // ten bytes are left, so only the 64-bit limit needs a check
+    var b = in(pos); pos += 1
     var shift = 0; var x = 0L
-    var b = in(cur.pos); cur.pos += 1
-    while ((b & 0x80) != 0) {
+    while (b < 0) { // continuation bit set
       x |= (b & 0x7fL) << shift; shift += 7
-      b = in(cur.pos); cur.pos += 1
+      if (shift > 63) throw badVarint(in, cur.pos, pos)
+      b = in(pos); pos += 1
     }
+    cur.pos = pos
     x | ((b & 0x7fL) << shift)
   }
+
+  /** [[readVarint]] with fewer than ten bytes left: every read is checked
+    * against the end (which also bounds the varint below 64 bits).
+    */
+  private def readVarintNearEnd(in: Array[Byte], cur: Cursor): Long = {
+    var pos = cur.pos; var shift = 0; var x = 0L
+    while (pos < in.length) {
+      val b = in(pos); pos += 1
+      x |= (b & 0x7fL) << shift
+      if (b >= 0) { cur.pos = pos; return x } // no continuation bit
+      shift += 7
+    }
+    throw badVarint(in, cur.pos, pos)
+  }
+
+  private def badVarint(in: Array[Byte], at: Int, pos: Int) = new InvalidCodecException(
+    s"varint at byte $at of ${in.length} " +
+      (if (pos >= in.length) "runs past the payload" else "is longer than 64 bits"))
 
   def zigzag(v: Int): Long = ((v.toLong << 1) ^ (v.toLong >> 31)) & 0xffffffffL
   def unzigzag(z: Long): Int = (((z >>> 1) ^ -(z & 1)).toInt)

@@ -786,7 +786,7 @@ object FsstCodec extends TableCodec {
       if (dictFits(body, cur.pos, mergedLen))
         Some(new BodyHeader(mergedLen, sm, so, cur.pos))
       else None
-    } catch { case _: ArrayIndexOutOfBoundsException => None }
+    } catch { case _: InvalidCodecException => None }
 
   private def parseLegacy(body: Array[Byte], start: Int): Option[BodyHeader] =
     try {
@@ -796,7 +796,7 @@ object FsstCodec extends TableCodec {
         Some(new BodyHeader(mergedLen,
           Array.emptyIntArray, Array.emptyIntArray, cur.pos))
       else None
-    } catch { case _: ArrayIndexOutOfBoundsException => None }
+    } catch { case _: InvalidCodecException => None }
 
   /** Byte-exact structural check that `off` begins a DictCodec stream of
     * exactly `mergedLen` codes that ends exactly at the body's last byte:
@@ -814,7 +814,7 @@ object FsstCodec extends TableCodec {
       if (cur.pos >= body.length) return false
       val w = body(cur.pos) & 0xff
       w <= 32 && cur.pos + 1 + packedSize(mergedLen, w) == body.length
-    } catch { case _: ArrayIndexOutOfBoundsException => false }
+    } catch { case _: InvalidCodecException => false }
 
   def decodeBody(t: FsstTable, bytes: Array[Byte], off: Int, n: Int,
                  from: Int, until: Int): Array[Int] =

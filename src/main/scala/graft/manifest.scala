@@ -9,7 +9,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{BasicWriteTaskStatsTracker, OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.{BasicWriteTaskStats, BasicWriteTaskStatsTracker, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -63,15 +63,17 @@ final case class PartLineage(
 
 /** One block file a snapshot makes visible — an entry of its zone map:
   * the path relative to the table root (tables copy as a directory tree),
-  * the part_id span of its blocks and the [first, last] doc_id span (UTF-8
-  * order) of its blocks.
+  * the part_id span of its blocks, the [first, last] doc_id span (UTF-8
+  * order) of its blocks and its stored size in bytes, which places a read
+  * ([[RangeReader.readRange]]).
   */
 final case class ZoneFile(
     path: String,
     minPart: Int,
     maxPart: Int,
     first: String,
-    last: String
+    last: String,
+    bytes: Long
 ) {
   /** The layout dir of the file: `data`, `compacted/run=V` or `stream_batches`. */
   def root: String = path.split('/') match {
@@ -88,10 +90,12 @@ final case class ZoneFile(
     parts.forall(_.exists(p => p >= minPart && p <= maxPart)) &&
       range.forall { case (from, to) => DocIdOrder.lteq(first, to) && DocIdOrder.gteq(last, from) }
 
-  /** The entry of a file holding this entry's blocks and `o`'s. */
+  /** The entry of a file holding this entry's blocks and `o`'s (its size
+    * stays this entry's: both name the one file).
+    */
   def cover(o: ZoneFile): ZoneFile = ZoneFile(path,
     math.min(minPart, o.minPart), math.max(maxPart, o.maxPart),
-    DocIdOrder.min(first, o.first), DocIdOrder.max(last, o.last))
+    DocIdOrder.min(first, o.first), DocIdOrder.max(last, o.last), bytes)
 }
 
 /** One committed snapshot of the encoded table. `streamBatchId` is the
@@ -157,15 +161,17 @@ object Snapshot {
   * `compacted/run=V/` (compacted stream runs) or `stream_batches/batch=B/`
   * (the uncompacted stream tail) — beside `snapshots/vNNNNN.json`; each
   * write task writes one file of a contiguous run of parts,
-  * `part-<partition>-a<task attempt id>.<codec>.parquet`, straight into
-  * that dir ([[writeBlocks]]: no output committer, no `_SUCCESS`; the
-  * lineage and zone entries come back as the write job's results). A
+  * `part-<partition>-s<stage attempt>-a<attempt>.<codec>.parquet`,
+  * straight into that dir ([[writeBlocks]]: no output committer, no
+  * `_SUCCESS`; the lineage and zone entries come back as the write job's
+  * results). A
   * commit dir holds only the files the snapshot names (and their local
   * checksum files), and the snapshot's zone map (`Snapshot.files`) is what
   * makes them visible: it is the only partition index. This object owns
   * that layout: which block files a snapshot makes visible, how they are
-  * read ([[blocks]]) and how versions are listed, read and committed. A
-  * snapshot without a zone map fails to read ([[fromJson]]).
+  * read (in a Spark job by [[blocks]], on the driver by [[driverBlocks]])
+  * and how versions are listed, read and committed. A snapshot without a
+  * zone map fails to read ([[fromJson]]).
   *
   * Uses the Hadoop FileSystem API so the same code runs on HDFS/object
   * stores on a real cluster, not just local files.
@@ -190,10 +196,12 @@ object ManifestIO {
   /** Write `blocks` into the fresh dir `dir` (an existing one is replaced)
     * in ONE job and return their lineage per part and the zone entries of
     * the files written. Each non-empty task writes its blocks straight into
-    * `dir` as `part-<partition>-a<task attempt id>.<ext>` with Spark's own
-    * Parquet writer (the session's WriteSupport, codec and footer
-    * metadata), folds its parts' lineage and its file's part and doc_id
-    * spans while writing, and returns them as its result. Spark keeps one
+    * `dir` as `part-<partition>-s<stage attempt>-a<attempt>.<ext>` (unique
+    * across retries, speculation and stage re-runs, and the same in every
+    * run over one input) with Spark's own Parquet writer (the session's
+    * WriteSupport, codec and footer metadata), folds its parts' lineage
+    * and its file's part and doc_id spans while writing, and returns them,
+    * with the file's stored size, as its result. Spark keeps one
     * successful result per partition, so a retried or speculative task
     * counts once; a failed or killed attempt deletes its file, and one
     * listing of `dir` after the job deletes any file no result names (an
@@ -235,16 +243,18 @@ object ManifestIO {
   }
 
   /** One write task of [[writeBlocks]]: `rows` (blocks in encoder order)
-    * into the file `dir/part-<partition>-a<attempt>ext`, returning its
-    * parts' lineage and its zone entry (named by the file name), or None
-    * for an empty task, which creates no file. The file is deleted unless
-    * the write completes.
+    * into the file `dir/part-<partition>-s<stage attempt>-a<attempt>ext`,
+    * returning its parts' lineage and its zone entry (named by the file
+    * name, sized by the writer's output metrics), or None
+    * for an empty task, which creates no file. A file the metrics size as
+    * 0 bytes (its status unreadable after close) fails the task. The file
+    * is deleted unless the write completes.
     */
   private def writeFile(factory: OutputWriterFactory, conf: Configuration, dir: String,
                         ext: String, schema: StructType, tc: TaskContext,
                         rows: Iterator[InternalRow]): Option[(Map[Int, PartLineage], ZoneFile)] = {
     if (!rows.hasNext) return None
-    val name = f"part-${tc.partitionId()}%05d-a${tc.taskAttemptId()}$ext"
+    val name = f"part-${tc.partitionId()}%05d-s${tc.stageAttemptNumber()}-a${tc.attemptNumber()}$ext"
     val path = new Path(dir, name)
     val file = path.toString
     val at = schema.fieldNames.zipWithIndex.toMap
@@ -265,15 +275,19 @@ object ManifestIO {
         val l = PartLineage(part, 1L, r.getInt(at("n_docs")), r.getLong(at("n_tokens")),
           r.getLong(at("raw_bytes")), r.getLong(at("encoded_bytes")), r.getLong(at("checksum")),
           Map(str(r, "codec") -> 1L), r.getLong(at("enc_micros")))
-        val z = ZoneFile(name, part, part, str(r, "first_doc_id"), str(r, "last_doc_id"))
+        val z = ZoneFile(name, part, part, str(r, "first_doc_id"), str(r, "last_doc_id"), 0L)
         lineage = lineage.updated(part, lineage.get(part).fold(l)(_ merge l))
         zone = Some(zone.fold(z)(_ cover z))
       }
       writer.close()
       stats.closeFile(file)
-      stats.getFinalStats(0L)
+      // a file the tracker cannot stat (not yet visible) reports 0 bytes:
+      // fail the task rather than record a size that would misplace reads
+      val bytes = stats.getFinalStats(0L).asInstanceOf[BasicWriteTaskStats].numBytes
+      if (bytes <= 0L)
+        throw new IllegalStateException(s"block file $file reports no stored size after its write")
       done = true
-      zone.map((lineage, _))
+      zone.map(z => (lineage, z.copy(bytes = bytes)))
     } finally if (!done) {
       if (writer != null) try writer.close() catch { case NonFatal(_) => }
       path.getFileSystem(conf).delete(path, false)
@@ -320,7 +334,7 @@ object ManifestIO {
   /** The zone entries of `snap` that can hold a block of `parts` (when
     * given) with doc_id in `range` (when given, inclusive), by
     * [[ZoneFile.overlaps]] — the one file-selection rule of [[blocks]] and
-    * [[pointBlocks]].
+    * [[driverBlocks]].
     */
   def select(snap: Snapshot, parts: Option[Seq[Int]],
              range: Option[(String, String)]): Seq[ZoneFile] =
@@ -328,10 +342,12 @@ object ManifestIO {
 
   /** Every block `snap` makes visible in `table` that can hold a doc of
     * `parts` (when given) with doc_id in `range` (when given, inclusive) —
-    * the reader of a table's block files for every read whose result is
-    * unbounded. The zone map selects the files ([[select]]), [[scanFiles]]
-    * reads exactly those, and a row filter finishes the job inside files:
-    * the block zone filter on [first_doc_id, last_doc_id] for a range
+    * the reader of a table's block files, in a Spark job, for every read
+    * but a lookup and a bounded range read ([[driverBlocks]]). The zone
+    * map selects the files ([[select]]), [[scanFiles]] reads exactly
+    * those, and a row filter
+    * finishes the job inside files: the block zone filter on
+    * [first_doc_id, last_doc_id] for a range
     * (which implies the part filter: a part's blocks hold only its own
     * bucket's doc_ids), else the part filter (a file holds a run of parts).
     */
@@ -347,24 +363,23 @@ object ManifestIO {
     }
   }
 
-  /** The blocks of `snap` whose [first_doc_id, last_doc_id] brackets `id`,
-    * read on the driver with no Spark job — the point-lookup read. The
-    * files are [[blocks]]' for the range [id, id] of `parts` ([[select]]);
-    * each is read with parquet-mr under the block zone predicate
-    * `last_doc_id >= id AND first_doc_id <= id`, which skips row groups by
-    * their min/max stats (UTF-8 order, as [[DocIdOrder]]) and drops every
-    * other record. A file yields at most the blocks that bracket one id,
-    * so the result is small by construction; reads whose result is
-    * unbounded stay on [[blocks]]. A named file that is gone fails as in
-    * [[scanFiles]].
+  /** The blocks of `files` (entries of `snap`'s zone map, chosen by
+    * [[select]]) whose [first_doc_id, last_doc_id] meets [from, to], read
+    * on the driver with no Spark job — the read of a point lookup and of a
+    * bounded range ([[RangeReader]]). Each file is read with parquet-mr
+    * under the block zone predicate `last_doc_id >= from AND first_doc_id
+    * <= to`, which skips row groups by their min/max stats (UTF-8 order,
+    * as [[DocIdOrder]]) and drops every other record. The caller bounds
+    * the selection; larger reads stay on [[blocks]]. A named file that is
+    * gone fails as in [[scanFiles]].
     */
-  def pointBlocks(spark: SparkSession, table: String, snap: Snapshot,
-                  parts: Seq[Int], id: String): Seq[EncodedBlock] = {
-    val key = Binary.fromString(id)
-    val filter = FilterCompat.get(
-      and(gtEq(binaryColumn("last_doc_id"), key), ltEq(binaryColumn("first_doc_id"), key)))
+  def driverBlocks(spark: SparkSession, table: String, snap: Snapshot,
+                   files: Seq[ZoneFile], from: String, to: String): Seq[EncodedBlock] = {
+    val filter = FilterCompat.get(and(
+      gtEq(binaryColumn("last_doc_id"), Binary.fromString(from)),
+      ltEq(binaryColumn("first_doc_id"), Binary.fromString(to))))
     val conf = spark.sparkContext.hadoopConfiguration
-    select(snap, Some(parts), Some((id, id))).flatMap { z =>
+    files.flatMap { z =>
       val out = Vector.newBuilder[EncodedBlock]
       try {
         // over the session conf: `ParquetReader.builder` builds a fresh
@@ -536,24 +551,25 @@ object ManifestIO {
       l.codecs.toSeq.sortBy(_._1).foreach { case (n, v) => c.put(n, v) }
       a.add(l.wall_micros)
     }
-    // zone entries as short arrays: [path, minPart, maxPart, first, last]
+    // zone entries as short arrays: [path, minPart, maxPart, first, last, bytes]
     val fa = root.putArray("files")
     s.files.foreach(z => fa.addArray().add(z.path).add(z.minPart).add(z.maxPart)
-      .add(z.first).add(z.last))
+      .add(z.first).add(z.last).add(z.bytes))
     root.toString
   }
 
   /** The snapshot `root` holds. Only the current format reads: a zone map
-    * whose every entry carries its doc_id span, lineage as arrays in field
-    * order and one size per compacted run. A snapshot of an older table
-    * format fails with one [[IllegalStateException]] naming its version —
+    * whose every entry carries its doc_id span and stored size, lineage as
+    * arrays in field order and one size per compacted run. A snapshot of
+    * an older table format fails with one [[IllegalStateException]]
+    * naming its version —
     * never read as an empty or partial table.
     */
   def fromJson(root: JsonNode): Snapshot = {
     val version = root.get("version").asInt
     def older(what: String) = new IllegalStateException(
       s"snapshot v$version is in an older table format ($what); only snapshots whose " +
-        "zone map names every block file with its part and doc_id spans are read")
+        "zone map names every block file with its part and doc_id spans and its size are read")
     def intArray(n: JsonNode): Array[Int] =
       n.elements().asScala.map(_.asInt).toArray
     def seq[A](field: String)(f: JsonNode => A): Seq[A] =
@@ -561,7 +577,9 @@ object ManifestIO {
     val files = Option(root.get("files")).getOrElse(throw older("no zone map"))
       .elements().asScala.map { e =>
         if (e.size < 5) throw older(s"zone entry ${e.get(0)} has no doc_id span")
-        ZoneFile(e.get(0).asText, e.get(1).asInt, e.get(2).asInt, e.get(3).asText, e.get(4).asText)
+        if (e.size < 6) throw older(s"zone entry ${e.get(0)} has no stored size")
+        ZoneFile(e.get(0).asText, e.get(1).asInt, e.get(2).asInt, e.get(3).asText, e.get(4).asText,
+          e.get(5).asLong)
       }.toSeq
     val p = root.get("plan")
     val plan = PartitionPlan(

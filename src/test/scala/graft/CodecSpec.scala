@@ -73,6 +73,36 @@ class CodecSpec extends AnyFunSuite {
     intercept[InvalidCodecException](RleCodec.decodeRange(overrun, 4, 0, 4))
   }
 
+  test("varint reads fail closed past the payload's end and past 64 bits") {
+    import Bits.{Cursor, readVarint, writeVarint}
+    val buf = new Array[Byte](10)
+    // Long.MinValue takes the longest varint a 64-bit value has: ten bytes
+    assert(writeVarint(buf, 0, Long.MinValue) == 10)
+    assert(readVarint(buf, new Cursor(0)) == Long.MinValue)
+    // the exact type: InvalidCodecException extends IllegalArgumentException
+    (0 until 10).foreach(k => intercept[InvalidCodecException](readVarint(buf.take(k), new Cursor(0))))
+    intercept[InvalidCodecException](readVarint(buf, new Cursor(10)))
+    // an eleventh byte would shift past bit 63
+    val overlong = Array.fill(10)(0x80.toByte) :+ 1.toByte
+    intercept[InvalidCodecException](readVarint(overlong, new Cursor(0)))
+  }
+
+  test("rle fails closed on a truncated payload and on an inflated n") {
+    val toks = Array.tabulate(3000)(i => (i / 7) % 50 + (i / 1000) * 70000)
+    val bytes = RleCodec.encode(toks)
+    val n = toks.length
+    assert(RleCodec.decode(bytes, n).sameElements(toks))
+    // the exact type: InvalidCodecException extends IllegalArgumentException
+    (0 until bytes.length by 3).foreach { k =>
+      intercept[InvalidCodecException](RleCodec.decode(bytes.take(k), n))
+      intercept[InvalidCodecException](RleCodec.decodeRange(bytes.take(k), n, n - 1, n))
+    }
+    for (inflated <- Seq(n + 1, n * 4 + 7)) {
+      intercept[InvalidCodecException](RleCodec.decode(bytes, inflated))
+      intercept[InvalidCodecException](RleCodec.decodeRange(bytes, inflated, n, n + 1))
+    }
+  }
+
   test("fixed-stride decoders fail closed on a truncated payload or a width over 32") {
     val toks = Array.tabulate(1000)(i => (i * 37) % 5000)
     // codec -> offset of its width byte (plain has none)

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.ListenerBusDrain
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.spark.{ListenerBusDrain, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
@@ -116,4 +117,59 @@ class PlacementSpec extends AnyFunSuite {
     assertPacked("compact", cJobs, cWrites, compacted.files.filterNot(_.isTail))
     assertSame("compaction", blocksOf(stream))
   }
+
+  test("every write names its files the same in each run over one input") {
+    val root = java.nio.file.Files.createTempDirectory("graft_names").toString
+    val opts = EncodeOptions(numParts = 8)
+    val input = Fixtures.tokenTable(spark, 400L)
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .mapPartitions(_.map(i => Fixtures.row(42L, i)))(org.apache.spark.sql.Encoders.product[TokenRow])
+    // a run, an append, a compaction and a second append
+    def build(table: String): Seq[ZoneFile] = {
+      ResumableEncodeJob.run(input, table, opts)
+      StreamingEncode.appendBatch(rows(400, 500), table, opts, batchId = 0L)
+      StreamingEncode.compact(spark, table, opts)
+      StreamingEncode.appendBatch(rows(500, 550), table, opts, batchId = 1L)
+      TableInvariants.assertSound(spark, table)
+      ManifestIO.latest(spark, table).get.files
+    }
+    val first = build(s"$root/a")
+    // other jobs in between: the session's task attempt ids move on
+    (1 to 3).foreach(i => spark.range(0, 1000, 1, 4 * i).count())
+    val second = build(s"$root/b")
+    assert(first.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
+    assert(first.map(_.path) == second.map(_.path),
+      s"${first.map(_.path).diff(second.map(_.path))} vs ${second.map(_.path).diff(first.map(_.path))}")
+  }
+
+  test("a block file its writer cannot size fails the write instead of recording 0 bytes") {
+    val root = java.nio.file.Files.createTempDirectory("graft_nostat").toString
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${NoStatFileSystem.Scheme}.impl", classOf[NoStatFileSystem].getName)
+    val table = s"${NoStatFileSystem.Scheme}:$root/t"
+    val e = intercept[Exception](
+      ResumableEncodeJob.run(Fixtures.tokenTable(spark, 200L), table, EncodeOptions(numParts = 4)))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("reports no stored size")),
+      causes.map(_.toString).mkString("\n"))
+    // only the plan's snapshot (v0) is committed: no zone map names a file
+    assert(ManifestIO.latest(spark, table).forall(_.files.isEmpty), "a snapshot committed the write")
+  }
+}
+
+/** The local file system under the `nostat:` scheme, where a task cannot
+  * read the status of a `.parquet` file (as on a store that does not list
+  * a new object yet): the write's output metrics then size it as 0 bytes.
+  */
+class NoStatFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${NoStatFileSystem.Scheme}:///")
+  override def getScheme: String = NoStatFileSystem.Scheme
+  override def getFileStatus(f: Path): FileStatus =
+    if (TaskContext.get() != null && f.getName.endsWith(".parquet"))
+      throw new java.io.FileNotFoundException(s"not visible yet: $f")
+    else super.getFileStatus(f)
+}
+
+object NoStatFileSystem {
+  val Scheme = "nostat"
 }

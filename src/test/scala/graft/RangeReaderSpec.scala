@@ -185,6 +185,12 @@ class RangeReaderSpec extends AnyFunSuite {
     table
   }
 
+  /** A row as a comparable tuple. */
+  private def key(r: TokenRow) = (r.doc_id, r.tokens.mkString(","), r.n_tok, r.source)
+
+  /** The rows of `ds`, sorted, as comparable tuples. */
+  private def rowsOf(ds: org.apache.spark.sql.Dataset[TokenRow]) = ds.collect().map(key).sorted.toSeq
+
   /** Moves `files` (zone entries of `table`) aside while `body` runs. */
   private def without[A](table: String, files: Seq[ZoneFile])(body: => A): A = {
     import java.nio.file.Paths
@@ -194,12 +200,9 @@ class RangeReaderSpec extends AnyFunSuite {
     finally moved.foreach { case (p, q) => Files.move(q, p) }
   }
 
-  test("a point lookup discovers exactly the files the zone map selects") {
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsIn[A](body: => A): (A, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val table = mixedTable("graft_zone_lookup")
-    val snap = ManifestIO.latest(spark, table).get
-    val named = snap.files
-    assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -208,6 +211,18 @@ class RangeReaderSpec extends AnyFunSuite {
     org.apache.spark.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a point lookup discovers exactly the files the zone map selects") {
+    val table = mixedTable("graft_zone_lookup")
+    val snap = ManifestIO.latest(spark, table).get
+    val named = snap.files
+    assert(named.map(_.root).distinct.size == 3, "data, a compacted run and the tail")
+    val (_, jobs) = jobsIn {
       // one doc from each layout: batch data, the compacted run, the tail
       Seq(17L, 850L, 930L, 990L).foreach { i =>
         val id = Fixtures.row(42L, i).doc_id
@@ -225,9 +240,8 @@ class RangeReaderSpec extends AnyFunSuite {
             "that no longer exists"), e.getMessage)
         }
       }
-      org.apache.spark.ListenerBusDrain(sc)
-      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs for the lookups")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs for the lookups")
   }
 
   test("lookup equals readRange(id, id) for every doc_id; absent ids return empty") {
@@ -235,8 +249,6 @@ class RangeReaderSpec extends AnyFunSuite {
     val ids = (0L until 1000L).map(Fixtures.row(42L, _).doc_id)
     // doc_ids that no block holds: inside the table's id range, before and after it
     val absent = (1000L until 1003L).map(Fixtures.row(42L, _).doc_id) ++ Seq("", "~")
-    def rowsOf(ds: org.apache.spark.sql.Dataset[TokenRow]) =
-      ds.collect().map(r => (r.doc_id, r.tokens.mkString(","), r.n_tok, r.source)).sorted.toSeq
     val viaRange = rowsOf(RangeReader.readRange(spark, table, ids.min(DocIdOrder),
       ids.max(DocIdOrder))).groupBy(_._1)
     ids.foreach { id =>
@@ -253,37 +265,49 @@ class RangeReaderSpec extends AnyFunSuite {
     }
   }
 
-  test("a lookup of a file a compaction deleted fails with the snapshot's version") {
+  /** A table of batch data and one tail batch whose latest snapshot is
+    * the one before a compaction that folded the tail into a run and
+    * deleted its dir: that snapshot names the deleted file, as it does
+    * for a reader that loaded it before the compaction committed. Returns
+    * the table, that snapshot's version and the ids of the tail's docs.
+    */
+  private def staleTable(name: String): (String, Int, Seq[String]) = {
     import org.apache.spark.sql.Encoders
-    val table = s"${Files.createTempDirectory("graft_lookup_gone")}/t"
+    val table = s"${Files.createTempDirectory(name)}/t"
     val opts = EncodeOptions(numParts = 4)
     def rows(from: Long, to: Long) = spark.range(from, to)
       .mapPartitions(_.map(i => Fixtures.row(42L, i)))(Encoders.product[TokenRow])
     ResumableEncodeJob.run(rows(0, 400), table, opts)
     StreamingEncode.appendBatch(rows(400, 500), table, opts, batchId = 0L)
     val stale = ManifestIO.latest(spark, table).get
-    val id = Fixtures.row(42L, 450L).doc_id
+    val tail = (400L until 500L).map(Fixtures.row(42L, _).doc_id)
+    val id = tail(50)
     assert(RangeReader.lookup(spark, table, id).collect().map(_.doc_id).toSeq == Seq(id))
-    // the compaction folds the tail batch into a run and deletes its dir;
-    // a reader that loaded the snapshot before the compaction committed
-    // still names the deleted file
     StreamingEncode.compact(spark, table, opts)
     val f = ManifestIO.fs(spark, table)
     (stale.version + 1 to ManifestIO.latest(spark, table).get.version).foreach(v =>
       f.delete(new org.apache.hadoop.fs.Path(ManifestIO.snapshotsDir(table), f"v$v%05d.json"), false))
     assert(ManifestIO.latest(spark, table).get.version == stale.version)
-    val e = intercept[IllegalStateException](RangeReader.lookup(spark, table, id))
-    assert(e.getMessage.contains(s"snapshot v${stale.version} of $table names a block file " +
+    (table, stale.version, tail)
+  }
+
+  test("a lookup of a file a compaction deleted fails with the snapshot's version") {
+    val (table, version, tail) = staleTable("graft_lookup_gone")
+    val e = intercept[IllegalStateException](RangeReader.lookup(spark, table, tail(50)))
+    assert(e.getMessage.contains(s"snapshot v$version of $table names a block file " +
       "that no longer exists"), e.getMessage)
   }
 
-  test("a lookup of a block with a flipped payload byte fails the slice digest, never " +
-    "returns a wrong row") {
+  /** A plain-codec table (no outer frame, so a flipped byte decodes as a
+    * wrong token unless the digest catches it) whose doc "doc0123" has one
+    * payload byte flipped: its file is rewritten in place, under its own
+    * name. Returns the table, the doc's id, the rows written and the
+    * blocks of the rewritten file.
+    */
+  private def flippedTable(name: String): (String, String, Seq[TokenRow], Seq[EncodedBlock]) = {
     import org.apache.spark.sql.Encoders
     import org.apache.hadoop.fs.Path
-    val table = s"${Files.createTempDirectory("graft_lookup_flip")}/t"
-    // plain codec, no outer frame: a flipped byte decodes as a wrong token
-    // unless the digest catches it
+    val table = s"${Files.createTempDirectory(name)}/t"
     val rows = (0 until 400).map(i => TokenRow(f"doc$i%04d", Array.tabulate(40)(j => i * 40 + j),
       40, "s"))
     ResumableEncodeJob.run(spark.createDataset(rows)(Encoders.product[TokenRow]), table,
@@ -291,8 +315,6 @@ class RangeReaderSpec extends AnyFunSuite {
     val snap = ManifestIO.latest(spark, table).get
     val id = "doc0123"
     assert(RangeReader.lookup(spark, table, id).collect().head.tokens.toSeq == rows(123).tokens.toSeq)
-    // rewrite the doc's file in place, under its own name, with one payload
-    // byte of the doc's tokens flipped
     val z = snap.files.filter(_.overlaps(None, Some((id, id)))).head
     val blocks = ManifestIO.scanFiles(spark, table, snap, Seq(z)).collect().map { b =>
       val r = b.doc_ids.indexOf(id)
@@ -313,11 +335,99 @@ class RangeReaderSpec extends AnyFunSuite {
     assert(f.delete(new Path(table, z.path), false))
     assert(f.rename(written.head, new Path(table, z.path)))
     f.delete(tmp, true)
+    (table, id, rows, blocks.toSeq)
+  }
+
+  test("a lookup of a block with a flipped payload byte fails the slice digest, never " +
+    "returns a wrong row") {
+    val (table, id, _, blocks) = flippedTable("graft_lookup_flip")
     val e = intercept[IllegalArgumentException](RangeReader.lookup(spark, table, id).collect())
     assert(e.getMessage.contains("slice digest mismatch"), e.getMessage)
     // a doc of another block of the file still reads back right
     val other = blocks.find(!_.doc_ids.contains(id)).get.doc_ids.head
     assert(RangeReader.lookup(spark, table, other).collect().map(_.doc_id).toSeq == Seq(other))
+  }
+
+  /** Ranges over `mixedTable`'s docs, by their index in doc_id order. */
+  private def mixedRanges(sorted: IndexedSeq[String]): Seq[(String, String)] =
+    Seq((5, 60), (400, 420), (700, 999), (0, 999), (333, 333))
+      .map { case (a, b) => (sorted(a), sorted(b)) }
+
+  test("a bounded range read runs no Spark job and opens exactly the files the zone map selects") {
+    val table = mixedTable("graft_zone_range")
+    val snap = ManifestIO.latest(spark, table).get
+    val named = snap.files
+    val all = (0L until 1000L).map(Fixtures.row(42L, _))
+    val sorted = all.map(_.doc_id).sorted(DocIdOrder).toIndexedSeq
+    val (_, jobs) = jobsIn {
+      mixedRanges(sorted).filter { case (a, b) => a != sorted(0) || b != sorted(999) }
+        .foreach { case (from, to) =>
+          val want = all.filter(r => DocIdOrder.lteq(from, r.doc_id) && DocIdOrder.lteq(r.doc_id, to))
+            .map(key).sorted
+          val cands = RangeReader.candidateParts(snap.plan, from, to)
+          val (selected, rest) = named.partition(_.overlaps(Some(cands), Some((from, to))))
+          assert(selected.nonEmpty && rest.nonEmpty, s"[$from, $to]: ${selected.size} of " +
+            s"${named.size} files")
+          // it opens no other file: the read runs with every other file gone ...
+          val got = without(table, rest)(rowsOf(RangeReader.readRange(spark, table, from, to)))
+          assert(got == want, s"[$from, $to]: ${got.size} rows of ${want.size}")
+          // ... and it opens each selected one: with any of them gone it fails
+          selected.foreach { z =>
+            val e = intercept[IllegalStateException](
+              without(table, Seq(z))(RangeReader.readRange(spark, table, from, to)))
+            assert(e.getMessage.contains(s"snapshot v${snap.version} of $table names a block " +
+              "file that no longer exists"), e.getMessage)
+          }
+        }
+      // the whole table reads on the driver too
+      assert(RangeReader.readRange(spark, table, sorted.head, sorted.last).collect().length == 1000)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs for the bounded range reads")
+  }
+
+  test("a bounded range read of a file a compaction deleted fails with the snapshot's version") {
+    val (table, version, tail) = staleTable("graft_range_gone")
+    val sorted = tail.sorted(DocIdOrder)
+    for ((from, to) <- Seq((sorted(10), sorted(60)), (tail(50), tail(50)))) {
+      val e = intercept[IllegalStateException](RangeReader.readRange(spark, table, from, to))
+      assert(e.getMessage.contains(s"snapshot v$version of $table names a block file " +
+        "that no longer exists"), s"[$from, $to]: ${e.getMessage}")
+    }
+  }
+
+  test("a bounded range read of a block with a flipped payload byte fails the slice digest") {
+    val (table, id, rows, blocks) = flippedTable("graft_range_flip")
+    val block = blocks.find(_.doc_ids.contains(id)).get
+    for ((from, to) <- Seq((id, id), ("doc0100", "doc0150"), (block.first_doc_id, block.last_doc_id),
+      ("", "~"))) {
+      val e = intercept[IllegalArgumentException](RangeReader.readRange(spark, table, from, to))
+      assert(e.getMessage.contains("slice digest mismatch"), s"[$from, $to]: ${e.getMessage}")
+    }
+    // a range that misses the flipped doc's block still reads back right
+    val other = blocks.find(!_.doc_ids.contains(id)).get
+    val got = rowsOf(RangeReader.readRange(spark, table, other.first_doc_id, other.last_doc_id))
+    assert(got == rows.filter(r => other.doc_ids.contains(r.doc_id)).map(key).sorted)
+  }
+
+  test("a range read over a selection larger than its driver bound runs in Spark and returns " +
+    "the driver placement's rows") {
+    val table = mixedTable("graft_range_placement")
+    val snap = ManifestIO.latest(spark, table).get
+    val sorted = (0L until 1000L).map(Fixtures.row(42L, _).doc_id).sorted(DocIdOrder).toIndexedSeq
+    val ranges = mixedRanges(sorted) ++ Seq(("", "~"), ("~", "~~"))
+    val (onDriver, driverJobs) = jobsIn(ranges.map { case (a, b) =>
+      rowsOf(RangeReader.readRange(spark, table, a, b)) })
+    assert(driverJobs == 0, s"$driverJobs Spark jobs on the driver placement")
+    // a bound one byte below the smallest file: every selection that names
+    // a file is over it
+    val (inSpark, sparkJobs) = jobsIn(ranges.map { case (a, b) =>
+      rowsOf(RangeReader.readRange(spark, table, a, b, snap.files.map(_.bytes).min - 1)) })
+    assert(sparkJobs >= ranges.size - 1, s"$sparkJobs Spark jobs for ${ranges.size} range reads")
+    ranges.indices.foreach { i =>
+      assert(inSpark(i) == onDriver(i), s"${ranges(i)}: ${inSpark(i).size} rows in Spark, " +
+        s"${onDriver(i).size} on the driver")
+    }
+    assert(onDriver(3).size == 1000 && onDriver(5).size == 1000 && onDriver(6).isEmpty)
   }
 
   test("zone entries of packed writes match the blocks in each file") {

@@ -301,8 +301,8 @@ class ResumeSpec extends AnyFunSuite {
     val plan = PartitionPlan(Array("m"), Array(1, 1), Array(0, 1), 2)
     val lin = PartLineage(1, 2, 10, 1000, 4000, 900, -7L, Map("rle" -> 1L, "dict" -> 1L), 555L)
     val zones = Seq(
-      ZoneFile("data/version=1/part-00001-a7.snappy.parquet", 1, 1, "n", "q"),
-      ZoneFile("stream_batches/batch=0/part-00000-a9.snappy.parquet", 0, 1, "b", "x"))
+      ZoneFile("data/version=1/part-00001-s0-a0.snappy.parquet", 1, 1, "n", "q", 4096L),
+      ZoneFile("stream_batches/batch=0/part-00000-s0-a1.snappy.parquet", 0, 1, "b", "x", 517L))
     val snap = Snapshot(3, 1234567L, plan, Set(1), Map(1 -> lin), streamBatchId = Some(0L),
       files = zones)
     val json = ManifestIO.toJson(snap)

@@ -60,17 +60,23 @@ class StreamingSpec extends AnyFunSuite {
     def batchDir(b: Long) = new java.io.File(s"$table/${ManifestIO.TailRoot}/batch=$b")
     StreamingEncode.appendBatch(rows(0, 200), table, opts, 0L)
     // batch 1's dir as an earlier attempt whose commit was lost left it:
-    // output-committer leftovers and a block file no snapshot names
+    // output-committer leftovers and a block file no snapshot names, under
+    // a name the rewrite gives one of its own files (names are the same in
+    // every run)
     new java.io.File(batchDir(1), "_temporary/0").mkdirs()
     new java.io.File(batchDir(1), "_SUCCESS").createNewFile()
     val stale = batchDir(0).listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.copy(stale.toPath, new java.io.File(batchDir(1), stale.getName).toPath)
     StreamingEncode.appendBatch(rows(200, 300), table, opts, 1L)
     TableInvariants.assertSound(spark, table)
-    val named = ManifestIO.latest(spark, table).get.files.map(_.path)
-      .filter(_.startsWith(s"${ManifestIO.TailRoot}/batch=1/")).map(_.split('/').last)
-    assert(named.nonEmpty && !named.contains(stale.getName))
+    val latest = ManifestIO.latest(spark, table).get
+    val batch1 = latest.files.filter(_.path.startsWith(s"${ManifestIO.TailRoot}/batch=1/"))
+    val named = batch1.map(_.path.split('/').last)
+    assert(named.nonEmpty)
     assert(batchDir(1).list().toSet == (named ++ named.map(n => s".$n.crc")).toSet)
+    // the named files hold batch 1's docs, not the leftover's
+    assert(ManifestIO.scanFiles(spark, table, latest, batch1).collect().flatMap(_.doc_ids).sorted
+      .toSeq == (200L until 300L).map(Fixtures.row(42L, _).doc_id).sorted)
 
     // an empty batch commits its id with no file and no zone entry
     StreamingEncode.appendBatch(rows(300, 300), table, opts, 2L)

@@ -4,15 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoders
 import org.apache.hadoop.fs.Path
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The engine reads one table format: snapshots whose zone map names every
-  * block file with its part and doc_id spans ([[ManifestIO.fromJson]]). A
-  * table whose latest snapshot has no zone map fails every reader and
-  * writer with the typed error naming the version, before a row is
-  * returned or anything is written.
+  * block file with its part and doc_id spans and stored size
+  * ([[ManifestIO.fromJson]]). A table whose latest snapshot has no zone
+  * map, or zone entries without their size, fails every reader and writer
+  * with the typed error naming the version, before a row is returned or
+  * anything is written.
   */
 class TableFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -29,8 +30,13 @@ class TableFormatSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  test("a zone-map-less snapshot fails every read and write with its version") {
-    val root = Files.createTempDirectory("graft_format").toString
+  /** Rewrites a table's latest snapshot with `edit` and checks that every
+    * reader and writer then fails with the typed error naming its version
+    * and giving `what` as the reason, and leaves every file of the table
+    * unchanged.
+    */
+  private def failsClosed(name: String, what: String)(edit: ObjectNode => Unit): Unit = {
+    val root = Files.createTempDirectory(name).toString
     val (table, dst) = (s"$root/t", s"$root/m")
     val opts = EncodeOptions(numParts = 8)
     // 5 of 8 parts committed and one tail batch: run, appendBatch, compact
@@ -40,15 +46,15 @@ class TableFormatSpec extends AnyFunSuite {
     val v = ManifestIO.latest(spark, table).get.version
     val id = Fixtures.row(42L, 17L).doc_id
     assert(RangeReader.lookup(spark, table, id).collect().length == 1)
-    // rewrite the latest snapshot in place without its zone map (through
-    // the Hadoop FS, so the local checksum file stays valid)
+    // rewrite the latest snapshot in place (through the Hadoop FS, so the
+    // local checksum file stays valid)
     val f = ManifestIO.fs(spark, table)
     val path = new Path(ManifestIO.snapshotsDir(table), f"v$v%05d.json")
     val in = f.open(path)
     val json =
       try new ObjectMapper().readTree(in).asInstanceOf[ObjectNode]
       finally in.close()
-    json.remove("files")
+    edit(json)
     val out = f.create(path, true)
     try out.write(json.toString.getBytes("UTF-8"))
     finally out.close()
@@ -63,12 +69,23 @@ class TableFormatSpec extends AnyFunSuite {
       "appendBatch" -> (() => StreamingEncode.appendBatch(rows(900, 950), table, opts, 1L)),
       "compact" -> (() => StreamingEncode.compact(spark, table, opts)),
       "migrate" -> (() => ResumableEncodeJob.migrate(spark, table, dst, opts)))
-    for ((what, call) <- calls) {
+    for ((op, call) <- calls) {
       val e = intercept[IllegalStateException](call())
-      assert(e.getMessage.startsWith(s"snapshot v$v is in an older table format (no zone map)"),
-        s"$what: ${e.getMessage}")
-      assert(tree(table) == before, s"$what changed the table")
+      assert(e.getMessage.startsWith(s"snapshot v$v is in an older table format (") &&
+        e.getMessage.contains(what), s"$op: ${e.getMessage}")
+      assert(tree(table) == before, s"$op changed the table")
     }
     assert(!Files.exists(Paths.get(dst)), "migrate wrote to its destination")
+  }
+
+  test("a zone-map-less snapshot fails every read and write with its version") {
+    failsClosed("graft_format", "(no zone map)")(_.remove("files"))
+  }
+
+  test("a snapshot whose zone entries have five fields fails every read and write with its " +
+    "version") {
+    failsClosed("graft_format_five", "has no stored size)") { json =>
+      json.get("files").elements().asScala.foreach(_.asInstanceOf[ArrayNode].remove(5))
+    }
   }
 }

@@ -17,6 +17,7 @@ import org.scalatest.Assertions._
   *    entry's part span, its doc ids in the entry's doc_id span;
   *  - every entry of a dir that holds a named file is a named file or its
   *    `.crc`: no `_temporary`, no `_SUCCESS`, no unnamed `.parquet`;
+  *  - every entry's stored size is its file's length;
   *  - each batch part's lineage equals the re-fold of its blocks
   *    ([[LineageOracle]]), and the stream lineage (part -1) equals the
   *    re-fold of the tail, or, once a compaction re-blocked the tail, keeps
@@ -44,6 +45,10 @@ object TableInvariants {
         val data = if (n.startsWith(".") && n.endsWith(".crc")) n.drop(1).dropRight(4) else n
         assert(named(s"$dir/$data"), s"$dir/$n is in a dir of the snapshot but not named by it")
       }
+    }
+    files.foreach { z =>
+      val len = raw.getFileStatus(new Path(table, z.path)).getLen
+      assert(z.bytes == len, s"${z.path}: entry size ${z.bytes}, file length $len")
     }
 
     blocks.foreach { case (b, z) =>
