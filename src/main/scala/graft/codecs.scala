@@ -502,15 +502,24 @@ object DictCodec extends TableCodec {
     Some(out)
   }
 
-  /** Fixed-stride codes: seek to `from`, map only [from, until). */
+  /** Fixed-stride codes: seek to `from`, map only [from, until). The body
+    * `[width:u8][n codes]` must run exactly to the end of `bytes`
+    * ([[packedWidth]]), and a code outside the dict fails closed.
+    */
   def decodeBody(dict: Array[Int], bytes: Array[Byte], off: Int, n: Int,
                  from: Int, until: Int): Array[Int] = {
     checkRange(n, from, until)
-    val w = bytes(off) & 0xff
+    val w = packedWidth(bytes, off + 1, n)
     val out = new Array[Int](until - from)
     unpackRange(bytes, off + 1, w, from, until - from, out, 0)
     var i = 0
-    while (i < out.length) { out(i) = dict(out(i)); i += 1 }
+    while (i < out.length) {
+      val c = out(i)
+      if (c < 0 || c >= dict.length)
+        throw new InvalidCodecException(s"dict: code $c outside a ${dict.length}-entry dict")
+      out(i) = dict(c)
+      i += 1
+    }
     out
   }
 
@@ -637,20 +646,31 @@ object FsstCodec extends TableCodec {
     FsstTable(left, right)
   }
 
-  /** Per-symbol expanded token counts; symbols only reference EARLIER
-    * symbols (training invariant), so one forward pass suffices.
+  /** The deepest symbol nesting a table may have (training nests at most
+    * MaxRounds deep): it sizes [[bodyRange]]'s expansion stack and keeps a
+    * symbol's expanded length at most 2^MaxDepth.
+    */
+  private val MaxDepth = 30
+
+  /** Per-symbol expanded token counts, after checking the training
+    * invariants: a symbol references only tokens and EARLIER symbols (so
+    * one forward pass suffices) and nests at most [[MaxDepth]] deep.
     */
   private def lengthsOf(t: FsstTable): Array[Int] = {
     val len = new Array[Int](t.size)
+    val depth = new Array[Int](t.size)
     var s = 0
     while (s < t.size) {
-      def l(x: Int): Int =
-        if (x < SymbolBase) 1
-        else {
-          val r = x - SymbolBase
-          require(r < s, s"fsst: symbol $s references later symbol $r")
-          len(r)
-        }
+      def sym(x: Int): Int = {
+        val r = x - SymbolBase
+        if (r >= s) throw new InvalidCodecException(s"fsst: symbol $s references later symbol $r")
+        r
+      }
+      def d(x: Int): Int = if (x < SymbolBase) 0 else depth(sym(x))
+      def l(x: Int): Int = if (x < SymbolBase) 1 else len(sym(x))
+      depth(s) = 1 + math.max(d(t.left(s)), d(t.right(s)))
+      if (depth(s) > MaxDepth)
+        throw new InvalidCodecException(s"fsst: symbol $s nests ${depth(s)} deep (at most $MaxDepth)")
       len(s) = l(t.left(s)) + l(t.right(s))
       s += 1
     }
@@ -823,8 +843,9 @@ object FsstCodec extends TableCodec {
   /** Sync-point range decode, shared with [[FsstLegacyCodec]]: last sync
     * ≤ `from` bounds where expansion starts, first sync ≥ `until` bounds
     * which merged codes are dict-decoded at all; symbols straddling the
-    * range edges expand with clipping (an explicit stack; symbols reference
-    * earlier symbols, depth bounded by MaxRounds).
+    * range edges expand with clipping (an explicit stack; [[lengthsOf]]
+    * bounds symbol depth by MaxDepth). A code naming no symbol of the
+    * table, or one expanding past token n, fails closed.
     */
   private[graft] def bodyRange(t: FsstTable, bytes: Array[Byte], off: Int,
                                n: Int, from: Int, until: Int,
@@ -853,12 +874,19 @@ object FsstCodec extends TableCodec {
     val dict = DictCodec.readTable(bytes, dictCur)
     val codes = DictCodec.decodeBody(dict, bytes, dictCur.pos, h.mergedLen, m0, mEnd)
     val symLen = lengthsOf(t)
-    val stack = new Array[Int](64)
+    val stack = new Array[Int](MaxDepth + 1)
     var outPos = out0
     var ci = 0
     while (outPos < until && ci < codes.length) {
       val v = codes(ci)
-      val len = if (v >= SymbolBase) symLen(v - SymbolBase) else 1
+      val len =
+        if (v < SymbolBase) 1
+        else if (v - SymbolBase < t.size) symLen(v - SymbolBase)
+        else throw new InvalidCodecException(
+          s"fsst: code $v names symbol ${v - SymbolBase} of a ${t.size}-symbol table")
+      if (len > n - outPos)
+        throw new InvalidCodecException(
+          s"fsst: code $ci expands $len tokens at token $outPos of $n")
       if (outPos + len <= from) outPos += len // fully before the range: skip
       else {
         var top = 0

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 
 /** One committed version of the minhash dedup index. `versions` lists every
@@ -30,9 +30,11 @@ final case class MinhashIndexSnapshot(
   * already-committed corpus, not within one batch: recomputing the old
   * corpus's signatures per batch would make ingestion O(corpus) forever.
   * This index persists the banded minhash state of everything committed so
-  * far, with the same snapshot-commit discipline as the encoded table
-  * ([[ManifestIO]]): immutable versioned metadata made visible by one
+  * far, through the same snapshot log as the encoded table
+  * ([[VersionLog]]): immutable versioned metadata made visible by one
   * atomic rename, fail-closed on version conflicts, time-travel reads.
+  * Each snapshot records its data versions and their on-disk sizes, which
+  * drive the size-tiered merge ([[mergeVersions]]).
   *
   * Layout (two SLIM tables per data version — neither carries text):
   * {{{
@@ -67,33 +69,20 @@ final case class MinhashIndexSnapshot(
   *    probed today.
   */
 object MinhashIndex {
-  private def mapper = new ObjectMapper()
-
-  private def snapshotsDir(table: String) = new Path(table, "snapshots")
   private def dataDir(table: String, v: Int) = new Path(table, f"data/v$v%05d")
 
-  private def fs(spark: SparkSession, table: String) =
-    new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The index's snapshot log, `snapshots/vNNNNN.json` ([[VersionLog]]). */
+  private def log(spark: SparkSession, table: String) =
+    new VersionLog(ManifestIO.fs(spark, table), new Path(table, "snapshots"), "minhash index snapshot")
 
-  def latest(spark: SparkSession, table: String): Option[MinhashIndexSnapshot] = {
-    val f = fs(spark, table)
-    val dir = snapshotsDir(table)
-    if (!f.exists(dir)) return None
-    val versions = f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
-    if (versions.isEmpty) None else at(spark, table, versions.max)
-  }
+  def latest(spark: SparkSession, table: String): Option[MinhashIndexSnapshot] =
+    log(spark, table).latest.map(fromJson(table))
 
-  def at(spark: SparkSession, table: String, version: Int): Option[MinhashIndexSnapshot] = {
-    val f = fs(spark, table)
-    val p = new Path(snapshotsDir(table), f"v$version%05d.json")
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val bytes =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    val root = mapper.readTree(bytes)
+  def at(spark: SparkSession, table: String, version: Int): Option[MinhashIndexSnapshot] =
+    log(spark, table).at(version).map(fromJson(table))
+
+  private def fromJson(table: String)(root: JsonNode): MinhashIndexSnapshot = {
+    val version = root.get("version").asInt
     val versions = root.get("versions").elements().asScala.map(_.asInt).toSeq
     val versionBytes = Option(root.get("version_bytes")).toSeq
       .flatMap(_.elements().asScala.map(_.asLong))
@@ -101,21 +90,21 @@ object MinhashIndex {
     if (versionBytes.length != versions.length)
       throw new IllegalStateException(s"minhash index snapshot v$version of $table is in an " +
         s"older format: ${versionBytes.length} version sizes for ${versions.length} versions")
-    Some(MinhashIndexSnapshot(
-      root.get("version").asInt,
+    MinhashIndexSnapshot(
+      version,
       root.get("committed_at").asLong,
       root.get("k").asInt,
       root.get("bands").asInt,
       versions,
       root.get("n_docs").asLong,
-      versionBytes))
+      versionBytes)
   }
 
+  /** Commit `s` as its version, pretty-printed; one that exists fails with
+    * [[SnapshotConflictException]].
+    */
   private def write(spark: SparkSession, table: String, s: MinhashIndexSnapshot): Unit = {
-    val f = fs(spark, table)
-    val dir = snapshotsDir(table)
-    f.mkdirs(dir)
-    val root = mapper.createObjectNode()
+    val root = new ObjectMapper().createObjectNode()
     root.put("version", s.version)
     root.put("committed_at", s.committedAtMillis)
     root.put("k", s.k)
@@ -125,19 +114,7 @@ object MinhashIndex {
     if (s.versionBytes.nonEmpty) {
       val vb = root.putArray("version_bytes"); s.versionBytes.foreach(vb.add)
     }
-    val tmp = new Path(dir, f".v${s.version}%05d.json.tmp")
-    val dst = new Path(dir, f"v${s.version}%05d.json")
-    // same optimistic-concurrency law as ManifestIO.write: a version is
-    // immutable once committed; the local FS rename overwrites, so fail
-    // closed on an existing version instead
-    if (f.exists(dst))
-      throw new SnapshotConflictException(
-        s"minhash index snapshot v${s.version} already committed in $table")
-    val out = f.create(tmp, true)
-    try out.write(root.toPrettyString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(s"index snapshot commit failed: $tmp -> $dst")
+    log(spark, table).commit(s.version, root.toPrettyString)
   }
 
   /** Append a batch of documents (doc_id, text) to the index as a new
@@ -175,17 +152,18 @@ object MinhashIndex {
   }
 
   private def dirBytes(spark: SparkSession, table: String, v: Int): Long =
-    fs(spark, table).getContentSummary(dataDir(table, v)).getLength
+    ManifestIO.fs(spark, table).getContentSummary(dataDir(table, v)).getLength
 
-  /** Size-tiered version merging (same LSM law as the encoded table's
-    * stream-run compaction, streaming.scala `mergeRuns`): while the newest
-    * version has grown to at least HALF its predecessor, fold the two into
-    * one — a pure parquet PASSTHROUGH of the two slim tables (no text, no
-    * re-hashing; signatures are already expression-identical across runs).
-    * The invariant afterwards is geometric version sizes, so the live
-    * version count — and with it every probe's union fan-out and
-    * file-listing cost — stays O(log corpus/batch) under unbounded
-    * ingest instead of one dir per commit forever.
+  /** Size-tiered version merging ([[VersionLog.tiered]], the rule of the
+    * encoded table's stream-run compaction, streaming.scala `mergeRuns`):
+    * while the newest version has grown to at least HALF its predecessor,
+    * fold the two into one — a pure parquet PASSTHROUGH of the two slim
+    * tables (no text, no re-hashing; signatures are already
+    * expression-identical across runs). The invariant afterwards is
+    * geometric version sizes, so the live version count — and with it
+    * every probe's union fan-out and file-listing cost — stays
+    * O(log corpus/batch) under unbounded ingest instead of one dir per
+    * commit forever.
     *
     * Iceberg-style safety: a merge is a LOGICAL rewrite — the merged
     * snapshot stops referencing the source versions but their directories
@@ -194,10 +172,8 @@ object MinhashIndex {
     * mid-merge leaves an unreferenced target dir, swept by [[expire]].
     */
   private def mergeVersions(spark: SparkSession, table: String,
-                            snap0: MinhashIndexSnapshot): MinhashIndexSnapshot = {
-    var snap = snap0
-    def sizes = snap.versionBytes
-    while (sizes.length >= 2 && sizes.last * 2 >= sizes(sizes.length - 2)) {
+                            snap0: MinhashIndexSnapshot): MinhashIndexSnapshot =
+    VersionLog.tiered(snap0)(_.versionBytes) { snap =>
       val src = snap.versions.takeRight(2)
       val target = snap.version + 1
       val d = dataDir(table, target)
@@ -207,15 +183,14 @@ object MinhashIndex {
           .write.mode(SaveMode.Overwrite)
           .parquet(new Path(d, sub).toString)
       }
-      snap = snap.copy(
+      val next = snap.copy(
         version = target,
         committedAtMillis = System.currentTimeMillis(),
         versions = snap.versions.dropRight(2) :+ target,
-        versionBytes = sizes.dropRight(2) :+ dirBytes(spark, table, target))
-      write(spark, table, snap)
+        versionBytes = snap.versionBytes.dropRight(2) :+ dirBytes(spark, table, target))
+      write(spark, table, next)
+      next
     }
-    snap
-  }
 
   /** Physically reclaim everything not referenced by the LATEST snapshot:
     * data version dirs merged away (or orphaned by a crashed merge) and
@@ -224,25 +199,11 @@ object MinhashIndex {
     * Iceberg expire-snapshots. Returns the number of paths deleted.
     */
   def expire(spark: SparkSession, table: String): Int = {
-    val f = fs(spark, table)
     val snap = latest(spark, table).getOrElse(
       throw new IllegalStateException(s"no index snapshot in $table"))
     val live = snap.versions.map(v => f"v$v%05d").toSet
-    var deleted = 0
-    val dataRoot = new Path(table, "data")
-    if (f.exists(dataRoot)) {
-      f.listStatus(dataRoot).foreach { st =>
-        if (!live(st.getPath.getName)) { f.delete(st.getPath, true); deleted += 1 }
-      }
-    }
-    f.listStatus(snapshotsDir(table)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("v") && n.endsWith(".json") &&
-        n.stripPrefix("v").stripSuffix(".json").toInt < snap.version) {
-        f.delete(st.getPath, false); deleted += 1
-      }
-    }
-    deleted
+    ManifestIO.sweep(ManifestIO.fs(spark, table), new Path(table, "data"))(n => !live(n)) +
+      log(spark, table).expire(keepLast = 1)
   }
 
   private def readUnion(spark: SparkSession, table: String,

@@ -107,9 +107,7 @@ object Zframe {
   def unframe(bytes: Array[Byte], outer: String,
               zdict: Array[Byte] = Array.emptyByteArray): Array[Byte] = outer match {
     case "none" => bytes
-    case "zstd" =>
-      val n = com.github.luben.zstd.Zstd.getFrameContentSize(bytes)
-      plainDctx.get().decompress(bytes, n.toInt)
+    case "zstd" => plainDctx.get().decompress(bytes, contentSize(bytes))
     case "zstdd" =>
       require(zdict != null && zdict.nonEmpty,
         "outer frame 'zstdd' requires the block's zdict column")
@@ -121,9 +119,20 @@ object Zframe {
         e = (zdict, ctx)
         dctxCache.set(e)
       }
-      val n = com.github.luben.zstd.Zstd.getFrameContentSize(bytes)
-      e._2.decompress(bytes, n.toInt)
+      e._2.decompress(bytes, contentSize(bytes))
     case other => throw new InvalidCodecException(s"unknown outer frame '$other'")
+  }
+
+  /** The content size a frame declares, checked before it sizes the
+    * output: a frame that declares none (negative: unknown, or not a
+    * frame) or more than an array holds fails closed.
+    */
+  private[graft] def contentSize(frame: Array[Byte]): Int = {
+    val n = com.github.luben.zstd.Zstd.getFrameContentSize(frame)
+    if (n < 0 || n > Int.MaxValue)
+      throw new InvalidCodecException(s"zstd frame of ${frame.length} bytes declares content " +
+        s"size $n")
+    n.toInt
   }
 }
 

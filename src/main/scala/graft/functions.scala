@@ -160,10 +160,8 @@ object Encodings {
 object Compression {
   def zstdCompress(data: Array[Byte], level: Int = 3): Array[Byte] =
     com.github.luben.zstd.Zstd.compress(data, level)
-  def zstdDecompress(data: Array[Byte]): Array[Byte] = {
-    val n = com.github.luben.zstd.Zstd.getFrameContentSize(data)
-    com.github.luben.zstd.Zstd.decompress(data, n.toInt)
-  }
+  def zstdDecompress(data: Array[Byte]): Array[Byte] =
+    com.github.luben.zstd.Zstd.decompress(data, Zframe.contentSize(data))
   def lzmaCompress(data: Array[Byte], level: Int = 6): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val opts = new org.tukaani.xz.LZMA2Options(level)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
@@ -24,14 +24,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import scala.jdk.CollectionConverters._
-
-/** Committing a snapshot version that already exists — the loser of a
-  * concurrent commit race must reload and retry, never clobber.
-  */
-final class SnapshotConflictException(msg: String)
-    extends java.io.IOException(msg)
 
 /** Per-partition lineage + metrics recorded in every snapshot. */
 final case class PartLineage(
@@ -114,15 +107,10 @@ final case class Snapshot(
     streamBatchId: Option[Long] = None,
     ivfCentroids: Option[Array[Array[Double]]] = None,
     zdictEnabled: Option[Boolean] = None, // ZdictProbe decision at v0 (None = not probed)
-    // stream-batch compaction state: batches <= compactedBatchId have been
-    // re-encoded into compacted/run=V dirs (one entry per compaction run)
-    // and their batch dirs deleted; readers union the runs with the
-    // still-uncompacted batch tail. compactedRunBytes records each run
-    // dir's on-disk size (parallel to compactedRuns) so the size-tiered
-    // merge policy never has to walk the filesystem
+    // stream-batch compaction watermark: batches <= compactedBatchId have
+    // been re-encoded into compacted/run=V dirs and their batch dirs
+    // deleted; the runs themselves are the zone map's (compactedRunSizes)
     compactedBatchId: Option[Long] = None,
-    compactedRuns: Seq[Int] = Nil,
-    compactedRunBytes: Seq[Long] = Nil,
     // the zone map: every block file this version makes visible, written
     // by the commit that adds or drops files
     files: Seq[ZoneFile]
@@ -141,6 +129,17 @@ final case class Snapshot(
     */
   def next: Snapshot =
     copy(version = version + 1, committedAtMillis = System.currentTimeMillis())
+
+  /** The compacted runs V, oldest first, with their sizes: the zone map's
+    * `compacted/run=V` roots sorted by V (each run and merge target takes
+    * the next version), each sized by the sum of its entries' bytes.
+    */
+  def compactedRunSizes: Seq[(Int, Long)] =
+    files.filter(_.root.startsWith("compacted/"))
+      .groupMapReduce(_.root.stripPrefix("compacted/run=").toInt)(_.bytes)(_ + _)
+      .toSeq.sortBy(_._1)
+
+  def compactedRuns: Seq[Int] = compactedRunSizes.map(_._1)
 }
 
 object Snapshot {
@@ -170,8 +169,8 @@ object Snapshot {
   * makes them visible: it is the only partition index. This object owns
   * that layout: which block files a snapshot makes visible, how they are
   * read (in a Spark job by [[blocks]], on the driver by [[driverBlocks]])
-  * and how versions are listed, read and committed. A snapshot without a
-  * zone map fails to read ([[fromJson]]).
+  * and the snapshot JSON, whose versions [[VersionLog]] lists, reads and
+  * commits. A snapshot without a zone map fails to read ([[fromJson]]).
   *
   * Uses the Hadoop FileSystem API so the same code runs on HDFS/object
   * stores on a real cluster, not just local files.
@@ -295,11 +294,14 @@ object ManifestIO {
   }
 
   /** Delete the entries of `dir` whose name `drop` accepts, from one
-    * listing (none when `dir` is absent).
+    * listing (none when `dir` is absent); returns how many.
     */
-  def sweep(f: FileSystem, dir: Path)(drop: String => Boolean): Unit =
-    if (f.exists(dir)) f.listStatus(dir).filter(st => drop(st.getPath.getName))
-      .foreach(st => f.delete(st.getPath, true))
+  def sweep(f: FileSystem, dir: Path)(drop: String => Boolean): Int = {
+    val gone = if (f.exists(dir)) f.listStatus(dir).filter(st => drop(st.getPath.getName))
+      else Array.empty[FileStatus]
+    gone.foreach(st => f.delete(st.getPath, true))
+    gone.length
+  }
 
   /** A file's path relative to the table root, as zone entries name it. */
   private def relativize(spark: SparkSession, table: String): Path => String = {
@@ -424,32 +426,12 @@ object ManifestIO {
       list("subsums")(_.getLong(0, 0)), long("enc_micros"))
   }
 
-  private def snapshotPath(table: String, version: Int) =
-    new Path(snapshotsDir(table), f"v$version%05d.json")
+  /** The table's snapshot log, `snapshots/vNNNNN.json` ([[VersionLog]]). */
+  private def log(spark: SparkSession, table: String) =
+    new VersionLog(fs(spark, table), snapshotsDir(table), "snapshot")
 
-  /** Committed snapshot versions, from one listing (none when absent). */
-  private def versions(f: FileSystem, table: String): Seq[Int] = {
-    val dir = snapshotsDir(table)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
-  }
-
-  private def read(f: FileSystem, table: String, version: Int): Snapshot = {
-    val in = f.open(snapshotPath(table, version))
-    val bytes =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    fromJson(mapper.readTree(bytes))
-  }
-
-  def latest(spark: SparkSession, table: String): Option[Snapshot] = {
-    val f = fs(spark, table)
-    val vs = versions(f, table)
-    if (vs.isEmpty) None else Some(read(f, table, vs.max))
-  }
+  def latest(spark: SparkSession, table: String): Option[Snapshot] =
+    log(spark, table).latest.map(fromJson)
 
   /** The latest snapshot that has a partition plan. When there is none,
     * `init`'s plan and zdict decision are committed — as v0 of a new table,
@@ -479,45 +461,23 @@ object ManifestIO {
     */
   def expireSnapshots(spark: SparkSession, table: String, keepLast: Int = 1): Int = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val f = fs(spark, table)
-    val expired = versions(f, table).sorted.dropRight(keepLast)
-    expired.foreach(v => f.delete(snapshotPath(table, v), false))
-    expired.length
+    log(spark, table).expire(keepLast)
   }
 
   /** Time travel: load a specific committed snapshot version. */
-  def at(spark: SparkSession, table: String, version: Int): Option[Snapshot] = {
-    val f = fs(spark, table)
-    if (f.exists(snapshotPath(table, version))) Some(read(f, table, version))
-    else None
-  }
+  def at(spark: SparkSession, table: String, version: Int): Option[Snapshot] =
+    log(spark, table).at(version).map(fromJson)
 
   /** `asOfVersion`'s snapshot when given, else the latest. */
   def resolve(spark: SparkSession, table: String,
               asOfVersion: Option[Int]): Option[Snapshot] =
     asOfVersion.fold(latest(spark, table))(at(spark, table, _))
 
-  def write(spark: SparkSession, table: String, s: Snapshot): Unit = {
-    val f = fs(spark, table)
-    val dir = snapshotsDir(table)
-    f.mkdirs(dir)
-    val tmp = new Path(dir, f".v${s.version}%05d.json.tmp")
-    val dst = snapshotPath(table, s.version)
-    // optimistic concurrency: a snapshot version is immutable once
-    // committed. On HDFS/object stores rename-to-existing fails atomically;
-    // the local filesystem's rename OVERWRITES, so a losing concurrent
-    // committer would silently clobber — fail closed on an existing
-    // version instead (Iceberg's commit-conflict semantics).
-    if (f.exists(dst))
-      throw new SnapshotConflictException(
-        s"snapshot v${s.version} already committed in $table — " +
-          "reload the latest snapshot and retry the commit")
-    val out = f.create(tmp, true)
-    try out.write(toJson(s).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(s"snapshot commit failed: $tmp -> $dst")
-  }
+  /** Commit `s` as its version; one that exists fails with
+    * [[SnapshotConflictException]].
+    */
+  def write(spark: SparkSession, table: String, s: Snapshot): Unit =
+    log(spark, table).commit(s.version, toJson(s))
 
   def toJson(s: Snapshot): String = {
     val m = mapper
@@ -527,11 +487,6 @@ object ManifestIO {
     s.streamBatchId.foreach(b => root.put("stream_batch_id", b))
     s.zdictEnabled.foreach(z => root.put("zdict_enabled", z))
     s.compactedBatchId.foreach(b => root.put("compacted_batch_id", b))
-    if (s.compactedRuns.nonEmpty) {
-      val ca = root.putArray("compacted_runs"); s.compactedRuns.foreach(ca.add)
-      val cb = root.putArray("compacted_run_bytes")
-      s.compactedRunBytes.foreach(cb.add)
-    }
     val p = root.putObject("plan")
     val ba = p.putArray("boundaries"); s.plan.boundaries.foreach(ba.add)
     val sa = p.putArray("saltOf"); s.plan.saltOf.foreach(sa.add)
@@ -559,11 +514,12 @@ object ManifestIO {
   }
 
   /** The snapshot `root` holds. Only the current format reads: a zone map
-    * whose every entry carries its doc_id span and stored size, lineage as
-    * arrays in field order and one size per compacted run. A snapshot of
-    * an older table format fails with one [[IllegalStateException]]
-    * naming its version —
-    * never read as an empty or partial table.
+    * whose every entry carries its doc_id span and stored size, and
+    * lineage as arrays in field order. A snapshot of an older table format
+    * fails with one [[IllegalStateException]] naming its version — never
+    * read as an empty or partial table. Fields the format no longer has
+    * are ignored (the `compacted_runs` and `compacted_run_bytes` of
+    * snapshots that recorded the runs beside the zone map).
     */
   def fromJson(root: JsonNode): Snapshot = {
     val version = root.get("version").asInt
@@ -572,8 +528,6 @@ object ManifestIO {
         "zone map names every block file with its part and doc_id spans and its size are read")
     def intArray(n: JsonNode): Array[Int] =
       n.elements().asScala.map(_.asInt).toArray
-    def seq[A](field: String)(f: JsonNode => A): Seq[A] =
-      Option(root.get(field)).toSeq.flatMap(_.elements().asScala.map(f))
     val files = Option(root.get("files")).getOrElse(throw older("no zone map"))
       .elements().asScala.map { e =>
         if (e.size < 5) throw older(s"zone entry ${e.get(0)} has no doc_id span")
@@ -597,9 +551,6 @@ object ManifestIO {
         o.get(3).asLong, o.get(4).asLong, o.get(5).asLong, o.get(6).asLong, codecs,
         o.get(8).asLong)
     }.toMap
-    val runs = seq("compacted_runs")(_.asInt)
-    val runBytes = seq("compacted_run_bytes")(_.asLong)
-    if (runBytes.length != runs.length) throw older("compacted runs without their sizes")
     Snapshot(
       version,
       root.get("committed_at").asLong,
@@ -611,8 +562,6 @@ object ManifestIO {
         .map(row => row.elements().asScala.map(_.asDouble).toArray).toArray),
       Option(root.get("zdict_enabled")).map(_.asBoolean),
       Option(root.get("compacted_batch_id")).map(_.asLong),
-      runs,
-      runBytes,
       files
     )
   }

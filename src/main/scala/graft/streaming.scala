@@ -117,8 +117,8 @@ object StreamingEncode {
     val maxBatch = base.streamBatchId.getOrElse(-1L)
     val minBatch = base.compactedBatchId.map(_ + 1).getOrElse(0L)
     val fs = ManifestIO.fs(spark, table)
-    // sweep leftovers from crashed predecessors: run dirs no snapshot
-    // references, and batch dirs already below the watermark
+    // sweep leftovers from crashed predecessors: run dirs the zone map does
+    // not name, and batch dirs already below the watermark
     val live = base.compactedRuns.map(r => s"run=$r").toSet
     ManifestIO.sweep(fs, new Path(table, "compacted"))(n => !live(n))
     sweepBatches(fs, table, minBatch)
@@ -126,21 +126,16 @@ object StreamingEncode {
     // list un-merged — the tiering pass is idempotent and cheap when level
     if (maxBatch < minBatch) return mergeRuns(spark, table, base)
 
+    // a tail of empty batches writes no run: every run dir the zone map
+    // does not name is swept as a crash leftover
     val (pending, kept) = base.files.partition(_.isTail)
-    val tail = ManifestIO.scanFiles(spark, table, base, pending)
-    val run = base.version + 1
-    val runDir = ManifestIO.compactedDir(table, run)
     val comp = TokenCompressor(base.replayZdict(opts))
-    val (_, files) = ManifestIO.writeBlocks(
-      comp.encodeWithPlan(comp.decode(tail), base.plan, None,
-        TokenCompressor.writeTasks(spark, base.plan.numParts)),
-      table, runDir)
+    val files = if (pending.isEmpty) Nil else ManifestIO.writeBlocks(
+      comp.encodeWithPlan(comp.decode(ManifestIO.scanFiles(spark, table, base, pending)),
+        base.plan, None, TokenCompressor.writeTasks(spark, base.plan.numParts)),
+      table, ManifestIO.compactedDir(table, base.version + 1))._2
 
-    val next = base.next.copy(
-      compactedBatchId = Some(maxBatch),
-      compactedRuns = base.compactedRuns :+ run,
-      compactedRunBytes = base.compactedRunBytes :+ dirBytes(fs, runDir),
-      files = kept ++ files)
+    val next = base.next.copy(compactedBatchId = Some(maxBatch), files = kept ++ files)
     ManifestIO.write(spark, table, next)
     // post-commit cleanup; leftovers are invisible (watermark) and swept
     // by the next compaction if this delete dies mid-way
@@ -157,34 +152,25 @@ object StreamingEncode {
     ManifestIO.sweep(fs, new Path(table, ManifestIO.TailRoot))(n =>
       n.startsWith("batch=") && n.stripPrefix("batch=").toLongOption.exists(_ < watermark))
 
-  private def dirBytes(fs: FileSystem, p: Path): Long =
-    fs.getContentSummary(p).getLength
-
-  /** Size-tiered run merging (LSM/Lucene-style): while the newest run has
-    * grown to at least HALF its predecessor's size, the two are folded
-    * into one — a pure block PASSTHROUGH (one shuffle of already-encoded
-    * payload bytes, placed like an encode's parts ([[Routing.pack]]:
-    * contiguous runs of parts, at most one task per core) and sorted by
-    * (part_id, first_doc_id) within each task; no decode, no codec CPU), so
-    * each merged file holds one contiguous part span. The invariant
-    * afterwards is geometric run sizes (each run >2x the next newer), so
-    * the run count — and with it the reader's zone-map size and file
-    * count — stays O(log table/ingest) instead of growing one per
-    * compaction forever, and each byte is rewritten O(log N) times total.
-    * Each merge is its own atomic snapshot commit; a crash leaves either
-    * an unreferenced target dir (swept) or committed-but-undeleted source
-    * dirs (orphaned by the new run list, swept likewise).
+  /** Size-tiered run merging ([[VersionLog.tiered]]) over the zone map's
+    * runs ([[Snapshot.compactedRunSizes]]): while the newest run is at
+    * least HALF its predecessor's size, the two fold into one — a pure
+    * block PASSTHROUGH (one shuffle of already-encoded payload bytes,
+    * placed like an encode's parts ([[Routing.pack]]: contiguous runs of
+    * parts, at most one task per core) and sorted by (part_id,
+    * first_doc_id) within each task; no decode, no codec CPU), so each
+    * merged file holds one contiguous part span, and each part's blocks
+    * are renumbered `(part_id << 40) | seq` as an encode numbers them
+    * (block ids lie outside the payload and its checksum). Geometric run
+    * sizes keep the run count — and the reader's zone-map size and file
+    * count — O(log table/ingest), and each byte is rewritten O(log N)
+    * times. Each merge is its own atomic commit; a crash leaves either an
+    * unreferenced target dir or committed-but-undeleted source dirs, both
+    * swept by the next compaction.
     */
-  private def mergeRuns(spark: SparkSession, table: String,
-                        snap0: Snapshot): Snapshot = {
-    val fs = ManifestIO.fs(spark, table)
-    var snap = snap0
-    // the recorded run sizes, one per run (ManifestIO.fromJson checks it)
-    def sizes = snap.compactedRunBytes
-    while (sizes.length >= 2 && sizes.last * 2 >= sizes(sizes.length - 2)) {
+  private def mergeRuns(spark: SparkSession, table: String, snap0: Snapshot): Snapshot =
+    VersionLog.tiered(snap0)(_.compactedRunSizes.map(_._2)) { snap =>
       val srcRuns = snap.compactedRuns.takeRight(2)
-      val target = snap.version + 1
-      val targetDir = ManifestIO.compactedDir(table, target)
       val srcRoots = srcRuns.map(ManifestIO.runRoot).toSet
       val (src, kept) = snap.files.partition(z => srcRoots(z.root))
       val numParts = snap.plan.numParts
@@ -192,15 +178,27 @@ object StreamingEncode {
           numParts, None, TokenCompressor.writeTasks(spark, numParts))
         .sortWithinPartitions("part_id", "first_doc_id")
         .drop("route_key").as(RowEncoders.block)
-      val (_, files) = ManifestIO.writeBlocks(merged, table, targetDir)
-      snap = snap.next.copy(
-        compactedRuns = snap.compactedRuns.dropRight(2) :+ target,
-        compactedRunBytes = sizes.dropRight(2) :+ dirBytes(fs, targetDir),
-        files = kept ++ files)
-      ManifestIO.write(spark, table, snap)
-      srcRuns.foreach(r =>
-        fs.delete(ManifestIO.compactedDir(table, r), true))
+        .mapPartitions(renumber)(RowEncoders.block)
+      val (_, files) = ManifestIO.writeBlocks(merged, table,
+        ManifestIO.compactedDir(table, snap.version + 1))
+      val next = snap.next.copy(files = kept ++ files)
+      ManifestIO.write(spark, table, next)
+      val fs = ManifestIO.fs(spark, table)
+      srcRuns.foreach(r => fs.delete(ManifestIO.compactedDir(table, r), true))
+      next
     }
-    snap
+
+  /** Blocks sorted by part_id numbered `(part_id << 40) | seq`, the
+    * sequence restarting at each part.
+    */
+  private def renumber(blocks: Iterator[EncodedBlock]): Iterator[EncodedBlock] = {
+    var part = Int.MinValue
+    var seq = 0L
+    blocks.map { b =>
+      if (b.part_id != part) { part = b.part_id; seq = 0L }
+      val id = (b.part_id.toLong << 40) | seq
+      seq += 1
+      b.copy(block_id = id)
+    }
   }
 }

@@ -329,4 +329,109 @@ class CodecSpec extends AnyFunSuite {
     assert(CodecRegistry.byName("fsst2") eq FsstCodec)
     assert(CodecRegistry.forPolicy("fsst") eq FsstCodec)
   }
+
+  /** Decoding `bytes` as `n` tokens, in full and its last token, either
+    * returns the tokens asked for or fails with exactly the typed error:
+    * any other exception escapes and fails the test.
+    */
+  private def typedOrDecodes(c: TokenCodec, bytes: Array[Byte], n: Int): Unit =
+    for ((from, until) <- Seq((0, n), (n - 1, n)))
+      try assert(c.decodeRange(bytes, n, from, until).length == until - from)
+      catch { case _: InvalidCodecException => () }
+
+  /** Every single-bit flip of `bytes`. */
+  private def bitFlips(bytes: Array[Byte]): Iterator[Array[Byte]] =
+    Iterator.range(0, bytes.length * 8).map { bit =>
+      val b = bytes.clone(); b(bit / 8) = (b(bit / 8) ^ (1 << (bit % 8))).toByte; b
+    }
+
+  test("dict fails closed on a truncated, inflated-n or bit-flipped payload") {
+    // 5 dict entries at width 3, 1000 codes = exactly 375 body bytes, so
+    // any larger n needs more bytes than the body has
+    val toks = Array.tabulate(1000)(i => Seq(3, 70, 900, 50256, 7)(i * 7 % 5))
+    val n = toks.length
+    val bytes = DictCodec.encode(toks)
+    assert(DictCodec.decode(bytes, n).sameElements(toks))
+    val body = bytes.length - 375 - 1 // offset of the width byte
+    assert(bytes(body) == 3)
+    def rejects(b: Array[Byte], n: Int): Unit = {
+      intercept[InvalidCodecException](DictCodec.decode(b, n))
+      intercept[InvalidCodecException](DictCodec.decodeRange(b, n, 0, 1))
+      intercept[InvalidCodecException](DictCodec.decodeWith(b.take(body), b.drop(body), n))
+    }
+    (0 until bytes.length).foreach(k => rejects(bytes.take(k), n))
+    Seq(n + 1, n * 4 + 7).foreach(rejects(bytes, _))
+    // a width over 32, a width one wider than the body, and the first code
+    // set to 7, past the 5-entry dict
+    for (edit <- Seq[Array[Byte] => Unit](_(body) = 33, _(body) = 4,
+        b => b(body + 1) = (b(body + 1) | 7).toByte)) {
+      val b = bytes.clone(); edit(b); rejects(b, n)
+    }
+    bitFlips(bytes).foreach(typedOrDecodes(DictCodec, _, n))
+  }
+
+  test("fsst2 fails closed on a truncated, inflated-n, bit-flipped or hostile payload") {
+    import FsstCodec.{FsstTable, SymbolBase}
+    val rng = new scala.util.Random(23)
+    val motifs = Array.tabulate(4)(m => Array.tabulate(8)(i => 100 + m * 17 + i))
+    val toks = Array.fill(80)(motifs(rng.nextInt(4))).flatten
+    val n = toks.length
+    val bytes = FsstCodec.encode(toks)
+    assert(FsstCodec.decode(bytes, n).sameElements(toks))
+    assert(FsstCodec.tableFromBytes(bytes).size > 0, "fixture must train symbols")
+    (0 until bytes.length).foreach { k =>
+      intercept[InvalidCodecException](FsstCodec.decode(bytes.take(k), n))
+      intercept[InvalidCodecException](FsstCodec.decodeRange(bytes.take(k), n, n - 1, n))
+    }
+    intercept[InvalidCodecException](FsstCodec.decode(bytes, n + 1))
+    bitFlips(bytes).foreach(typedOrDecodes(FsstCodec, _, n))
+
+    // hand-built tables over a body of merged codes (no sync points)
+    def body(merged: Int*): Array[Byte] = {
+      val head = new Array[Byte](20)
+      val at = Bits.writeVarint(head, Bits.writeVarint(head, 0, merged.length.toLong), 0L)
+      head.take(at) ++ DictCodec.encode(merged.toArray)
+    }
+    def table(pairs: (Int, Int)*) =
+      FsstCodec.tableBytes(FsstTable(pairs.map(_._1).toArray, pairs.map(_._2).toArray))
+    def sym(s: Int) = SymbolBase + s
+    val chain = table((5, 6) +: (1 until 70).map(s => (sym(s - 1), 6)): _*)
+    val doubling = table((5, 6) +: (1 until 30).map(s => (sym(s - 1), sym(s - 1))): _*)
+    val hostile = Seq(
+      // a symbol that references a later one
+      (table((sym(1), 5), (5, 6)), body(sym(0)), 3),
+      // a merged code past the table's last symbol
+      (table((5, 6)), body(sym(1)), 2),
+      // a chain 70 symbols deep, past the expansion stack
+      (chain, body(sym(69)), 71),
+      // a symbol that expands past n: 2^30 tokens, or 11 of a 5-token block
+      (doubling, body(sym(29)), 1000),
+      (table((5, 6) +: (1 until 10).map(s => (sym(s - 1), 6)): _*), body(sym(9)), 5))
+    for ((t, b, n) <- hostile) {
+      intercept[InvalidCodecException](FsstCodec.decodeWith(t, b, n))
+      intercept[InvalidCodecException](FsstCodec.decodeWithRange(t, b, n, 0, 1))
+      intercept[InvalidCodecException](FsstCodec.decode(t ++ b, n))
+    }
+    // a chain as deep as training allows still decodes
+    val shallow = table((5, 6) +: (1 until 6).map(s => (sym(s - 1), 6)): _*)
+    assert(FsstCodec.decodeWith(shallow, body(sym(5)), 7).toSeq == (5 +: Seq.fill(6)(6)))
+  }
+
+  test("zstd frames that declare no content size, or more than an array holds, fail closed") {
+    val data = Array.tabulate[Byte](4096)(i => (i % 13).toByte)
+    val (frame, outer) = Zframe.frame(data, 3)
+    assert(outer == "zstd" && Zframe.unframe(frame, "zstd").sameElements(data))
+    val ctx = new com.github.luben.zstd.ZstdCompressCtx()
+    val unsized = try ctx.setLevel(3).setContentSize(false).compress(data) finally ctx.close()
+    // magic, a single-segment header with an 8-byte content size of 2^32,
+    // then one empty last raw block
+    val huge = Array[Byte](0x28, 0xb5.toByte, 0x2f, 0xfd.toByte, 0xe0.toByte,
+      0, 0, 0, 0, 1, 0, 0, 0, 1, 0, 0)
+    val notAFrame = Array.fill[Byte](64)(7)
+    for (bad <- Seq(unsized, huge, notAFrame)) {
+      intercept[InvalidCodecException](Zframe.unframe(bad, "zstd"))
+      intercept[InvalidCodecException](Zframe.unframe(bad, "zstdd", Array.fill[Byte](256)(3)))
+      intercept[InvalidCodecException](Compression.zstdDecompress(bad))
+    }
+  }
 }

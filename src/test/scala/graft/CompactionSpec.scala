@@ -92,7 +92,7 @@ class CompactionSpec extends AnyFunSuite {
     // with s1's run into ONE passthrough-merged run
     assert(s2.compactedRuns.length == 1)
     assert(s2.compactedRuns != s1.compactedRuns)
-    assert(s2.compactedRunBytes.length == 1)
+    assert(s2.compactedRunSizes.length == 1)
     // the merged run: one contiguous part span per file, none overlapping
     val spans = s2.files.map(z => (z.minPart, z.maxPart)).sorted
     assert(spans.length <= TokenCompressor.writeTasks(spark, 4) &&
@@ -122,14 +122,20 @@ class CompactionSpec extends AnyFunSuite {
       from += 100; batch += 1
     }
     val snap = ManifestIO.latest(spark, table).get
-    // geometric invariant: every run > 2x the next newer one
-    val sizes = snap.compactedRunBytes
-    assert(sizes.length == snap.compactedRuns.length)
-    // each recorded size is its run dir's size on disk
-    snap.compactedRuns.zip(sizes).foreach { case (r, size) =>
-      val onDisk = fs(table).getContentSummary(ManifestIO.compactedDir(table, r)).getLength
-      assert(size == onDisk, s"run $r: recorded $size, on disk $onDisk")
+    // the run sizes come from the zone map: each run's size is the sum of
+    // its entries' stored bytes, and each entry's is its file's length
+    val runs = snap.compactedRunSizes
+    runs.foreach { case (r, size) =>
+      val entries = snap.files.filter(_.root == ManifestIO.runRoot(r))
+      assert(entries.nonEmpty && size == entries.map(_.bytes).sum,
+        s"run $r: size $size, entries ${entries.map(_.bytes)}")
+      entries.foreach { z =>
+        val len = fs(table).getFileStatus(new org.apache.hadoop.fs.Path(table, z.path)).getLen
+        assert(z.bytes == len, s"${z.path}: entry size ${z.bytes}, file length $len")
+      }
     }
+    // geometric invariant: every run > 2x the next newer one
+    val sizes = runs.map(_._2)
     assert(sizes.init.zip(sizes.tail).forall { case (older, newer) => older > 2 * newer },
       s"run sizes not geometric: $sizes")
     assert(snap.compactedRuns.length <= 2, s"runs: ${snap.compactedRuns}")

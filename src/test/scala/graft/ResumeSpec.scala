@@ -312,7 +312,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(back.streamBatchId.contains(0L) && back.committed == Set(1))
     // the older forms: the pretty-printed one with lineage objects and no
     // zone map, and the current one without a zone map, with a zone entry
-    // that has no doc_id span, with lineage objects or without run sizes
+    // that has no doc_id span or with lineage objects
     val pretty = """{
       |  "version" : 3, "committed_at" : 1234567,
       |  "plan" : { "boundaries" : [ "m" ], "saltOf" : [ 1, 1 ],
@@ -336,8 +336,7 @@ class ResumeSpec extends AnyFunSuite {
         e.remove(4); e.remove(3)
       },
       "lineage objects" -> edited(
-        _.get("lineage").asInstanceOf[ObjectNode].putObject("1").put("part_id", 1)),
-      "runs without sizes" -> edited(_.putArray("compacted_runs").add(2)))
+        _.get("lineage").asInstanceOf[ObjectNode].putObject("1").put("part_id", 1)))
     for ((what, j) <- older) {
       val e = intercept[IllegalStateException](ManifestIO.fromJson(mapper.readTree(j)))
       assert(e.getMessage.startsWith("snapshot v3 is in an older table format"),

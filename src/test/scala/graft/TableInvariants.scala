@@ -10,9 +10,8 @@ import org.scalatest.Assertions._
   *  - each block's doc_ids are sorted and its first/last doc ids are their
   *    head and last;
   *  - n_docs, n_toks and n_tokens agree;
-  *  - (part_id, block_id) is unique within the batch data and within each
-  *    stream batch (a merged compacted run concatenates two runs'
-  *    part-local block sequences, so runs are not checked);
+  *  - (part_id, block_id) is unique within the batch data, within each
+  *    compacted run and within each stream batch;
   *  - every block lies inside its file's zone entry: its part in the
   *    entry's part span, its doc ids in the entry's doc_id span;
   *  - every entry of a dir that holds a named file is a named file or its
@@ -69,8 +68,7 @@ object TableInvariants {
         s"$at: doc ids outside the entry's [${z.first}, ${z.last}]")
     }
 
-    blocks.filterNot(_._2.root.startsWith("compacted/"))
-      .groupBy { case (_, z) => if (z.isTail) z.path.split('/')(1) else z.root }
+    blocks.groupBy { case (_, z) => if (z.isTail) z.path.split('/')(1) else z.root }
       .foreach { case (scope, bs) =>
         val ids = bs.map { case (b, _) => (b.part_id, b.block_id) }
         assert(ids.distinct.length == ids.length,
