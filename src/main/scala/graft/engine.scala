@@ -228,18 +228,28 @@ object Routing {
     keys
   }
 
-  /** `df` (which has a part_id column) in `tasks` shuffle partitions
-    * (`tasks` <= 0: one per part), `parts` (default: all `numParts`) in
-    * contiguous runs: part slot k of the sorted parts lands exactly on
-    * partition k * tasks / parts, via a `route_key` column of probe keys.
+  /** The one packing rule of the table writers: `parts` (default: all
+    * `numParts`) in `tasks` write tasks (`tasks` <= 0: one per part), in
+    * contiguous runs — part slot k of the sorted parts goes to task
+    * k * tasks / parts. Returns the task count and the task of each part id
+    * (-1 for a part outside `parts`).
     */
-  def pack(df: DataFrame, numParts: Int, parts: Option[Set[Int]], tasks: Int): DataFrame = {
+  def slots(numParts: Int, parts: Option[Set[Int]], tasks: Int): (Int, Array[Int]) = {
     val targetIds = parts.map(_.toArray.sorted).getOrElse((0 until numParts).toArray)
     val nTasks = if (tasks <= 0) targetIds.length else math.min(tasks, targetIds.length)
-    val probes = probeKeys(nTasks)
     val slotOf = targetIds.zipWithIndex.toMap
-    val keyOfPart: Array[Int] = Array.tabulate(numParts)(p =>
-      slotOf.get(p).fold(0)(k => probes((k.toLong * nTasks / targetIds.length).toInt)))
+    (nTasks, Array.tabulate(numParts)(p =>
+      slotOf.get(p).fold(-1)(k => (k.toLong * nTasks / targetIds.length).toInt)))
+  }
+
+  /** `df` (which has a part_id column) in the shuffle partitions of
+    * [[slots]]: task t of a part is exactly shuffle partition t, via a
+    * `route_key` column of probe keys.
+    */
+  def pack(df: DataFrame, numParts: Int, parts: Option[Set[Int]], tasks: Int): DataFrame = {
+    val (nTasks, taskOf) = slots(numParts, parts, tasks)
+    val probes = probeKeys(nTasks)
+    val keyOfPart = taskOf.map(t => if (t < 0) 0 else probes(t))
     df.withColumn("route_key", element_at(lit(keyOfPart), col("part_id") + 1))
       .repartition(nTasks, col("route_key"))
   }
@@ -327,6 +337,22 @@ class TokenCompressor(val opts: EncodeOptions) extends Serializable {
       BlockEncoder.encodePartition(
         it.map(r => (r._1, TokenRow(r._2, r._3, r._4, r._5))), o)
     }(RowEncoders.block)
+  }
+
+  /** [[encodeWithPlan]] of `rows` over every part, run on the driver with
+    * no Spark job: each row routed by `plan.partIdOf` (the [[PlanRouting]]
+    * law of `PartIdOf`), sorted by (part_id, doc_id) in [[DocIdOrder]] and
+    * packed by [[Routing.slots]], so each task's blocks, block ids
+    * included, are the ones the Spark encode's task of that index encodes.
+    * Returns the non-empty tasks in order, each with its (lazy) blocks.
+    */
+  def encodeLocal(rows: Seq[TokenRow], plan: PartitionPlan,
+                  tasks: Int): Seq[(Int, Iterator[EncodedBlock])] = {
+    val (_, taskOf) = Routing.slots(plan.numParts, None, tasks)
+    val byKey = Ordering.Tuple2(Ordering.Int, DocIdOrder)
+    rows.map(r => (plan.partIdOf(r.doc_id), r)).sortBy(p => (p._1, p._2.doc_id))(byKey)
+      .groupBy(p => taskOf(p._1)).toSeq.sortBy(_._1)
+      .map { case (task, routed) => task -> BlockEncoder.encodePartition(routed.iterator, opts) }
   }
 
   /** Narrow re-encode of encoded blocks under this compressor's policy:

@@ -8,6 +8,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{BasicWriteTaskStats, BasicWriteTaskStatsTracker, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -192,48 +193,99 @@ object ManifestIO {
   val DataRoot = "data"
   val TailRoot = "stream_batches"
 
+  /** The most bytes a range read or a tail commit handles on the driver
+    * (4 MiB) — the one bound of the driver placements: a range read's
+    * selected stored bytes ([[RangeReader.readRange]]) and a compaction's
+    * tail, stored and decoded, which then run no Spark job, and an
+    * append's raw input bytes, which then runs one collect job
+    * (StreamingEncode). Measured on `local[4]`: a 5.4 MB range selection
+    * read faster on the driver than as a Spark scan (125-215 ms against
+    * 156-244 ms) and a 9.0 MB one no faster (270-321 ms against 264-281
+    * ms), past which the scan's parallel decode wins. Warm medians of
+    * nine writes per size: a driver append took 114 ms against Spark's
+    * 131 ms at 4 MB of raw token bytes, 155 ms against 159 ms at 8 MB and
+    * 264 ms against 197 ms at 16 MB; a driver compaction of the same
+    * tails took 84, 136 and 218 ms against 145, 171 and 238 ms. A driver
+    * placement costs less CPU at every measured size, but it holds its
+    * rows in the driver heap; the bound caps that too.
+    */
+  val DriverBytes: Long = 4L << 20
+
   /** Write `blocks` into the fresh dir `dir` (an existing one is replaced)
     * in ONE job and return their lineage per part and the zone entries of
-    * the files written. Each non-empty task writes its blocks straight into
-    * `dir` as `part-<partition>-s<stage attempt>-a<attempt>.<ext>` (unique
-    * across retries, speculation and stage re-runs, and the same in every
-    * run over one input) with Spark's own Parquet writer (the session's
-    * WriteSupport, codec and footer metadata), folds its parts' lineage
-    * and its file's part and doc_id spans while writing, and returns them,
-    * with the file's stored size, as its result. Spark keeps one
-    * successful result per partition, so a retried or speculative task
-    * counts once; a failed or killed attempt deletes its file, and one
-    * listing of `dir` after the job deletes any file no result names (an
-    * attempt whose executor was lost). No output committer, no
-    * `_temporary` dir, no `_SUCCESS`: the zone map of the commit that
-    * follows is what makes the files visible. The Hadoop conf ships once
-    * per job as a broadcast, read-only in the tasks. No payload persist, no
-    * second pass, no footer read, no write-side sort; the job runs as one
-    * SQL execution over `blocks`' plan.
+    * the files written — the Spark placement of a table write. Each
+    * non-empty task writes its blocks straight into `dir` with
+    * [[writeFile]] as `part-<partition>-s<stage attempt>-a<attempt>.<ext>`
+    * (unique across retries, speculation and stage re-runs, and the same in
+    * every run over one input), folds its parts' lineage and its file's part
+    * and doc_id spans while writing, and returns them, with the file's
+    * stored size, as its result. Spark keeps one successful result per
+    * partition, so a retried or speculative task counts once; a failed or
+    * killed attempt deletes its file, and one listing of `dir` after the job
+    * deletes any file no result names (an attempt whose executor was lost).
+    * No output committer, no `_temporary` dir, no `_SUCCESS`: the zone map
+    * of the commit that follows is what makes the files visible. The Hadoop
+    * conf ships once per job as a broadcast, read-only in the tasks. No
+    * payload persist, no second pass, no footer read, no write-side sort;
+    * the job runs as one SQL execution over `blocks`' plan.
     */
   def writeBlocks(blocks: Dataset[EncodedBlock], table: String,
                   dir: Path): (Map[Int, PartLineage], Seq[ZoneFile]) = {
     val spark = blocks.sparkSession
+    writeInto(spark, table, dir) { (factory, jobConf, ext) =>
+      val conf = spark.sparkContext.broadcast(new SerializableConfiguration(jobConf))
+      // the encoder's column order, which the writer and the fold assume (a
+      // no-op projection, removed by the optimizer, when it already is)
+      val rows = blocks.select(BlockSchema.fieldNames.toIndexedSeq.map(col): _*)
+      val target = dir.toString
+      try SQLExecution.withNewExecutionId(rows.queryExecution, Some("writeBlocks")) {
+        spark.sparkContext.runJob(rows.queryExecution.toRdd,
+          (tc: TaskContext, it: Iterator[InternalRow]) => writeFile(factory, conf.value.value,
+            target, fileName(tc.partitionId(), tc.stageAttemptNumber(), tc.attemptNumber(), ext), it))
+      }.toSeq.flatten finally conf.destroy()
+    }
+  }
+
+  /** [[writeBlocks]] on the driver, with no Spark job — the driver
+    * placement of a table write: the blocks of each write task index
+    * `task` go through the same [[writeFile]] into the file the Spark
+    * write's task `task` names on its first attempt,
+    * `part-<task>-s0-a0.<ext>`, so both placements of one input write the
+    * same files. A failed file is deleted and fails the write.
+    */
+  def writeLocal(spark: SparkSession, table: String, dir: Path,
+                 tasks: Seq[(Int, Iterator[EncodedBlock])]): (Map[Int, PartLineage], Seq[ZoneFile]) =
+    writeInto(spark, table, dir) { (factory, jobConf, ext) =>
+      val toRow = BlockRows.createSerializer()
+      tasks.flatMap { case (task, blocks) =>
+        writeFile(factory, jobConf, dir.toString, fileName(task, 0, 0, ext), blocks.map(toRow))
+      }
+    }
+
+  private val BlockSchema: StructType = RowEncoders.block.schema
+  private lazy val BlockRows = encoderFor(RowEncoders.block)
+
+  private def fileName(task: Int, stage: Int, attempt: Int, ext: String): String =
+    f"part-$task%05d-s$stage-a$attempt$ext"
+
+  /** The set-up and fold both placements of a table write share: replace
+    * `dir` with a fresh one, prepare Spark's Parquet writer once (the
+    * session's WriteSupport, codec and footer metadata) and its file
+    * extension, run `write`, delete every file of `dir` no result names,
+    * and fold the results into the lineage per part and the zone entries,
+    * named relative to the table root.
+    */
+  private def writeInto(spark: SparkSession, table: String, dir: Path)(
+      write: (OutputWriterFactory, JobConf, String) => Seq[(Map[Int, PartLineage], ZoneFile)]
+  ): (Map[Int, PartLineage], Seq[ZoneFile]) = {
     val f = fs(spark, table)
     f.delete(dir, true)
     f.mkdirs(dir)
-    val schema = RowEncoders.block.schema
     val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, BlockSchema)
     val jobConf = job.getConfiguration.asInstanceOf[JobConf]
     val ext = factory.getFileExtension(new TaskAttemptContextImpl(jobConf, new TaskAttemptID))
-    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(jobConf))
-    // the encoder's column order, which the writer and the fold assume (a
-    // no-op projection, removed by the optimizer, when it already is)
-    val rows = blocks.select(schema.fieldNames.toIndexedSeq.map(col): _*)
-    val target = dir.toString
-    val written =
-      try SQLExecution.withNewExecutionId(rows.queryExecution, Some("writeBlocks")) {
-        spark.sparkContext.runJob(rows.queryExecution.toRdd,
-          (tc: TaskContext, it: Iterator[InternalRow]) =>
-            writeFile(factory, conf.value.value, target, ext, schema, tc, it))
-      } finally conf.destroy()
-    val results = written.toSeq.flatten
+    val results = write(factory, jobConf, ext)
     val named = results.map(_._2.path).toSet
     sweep(f, dir)(n => !named(n))
     val rel = relativize(spark, table)
@@ -241,29 +293,26 @@ object ManifestIO {
     (lineage, results.map(r => r._2.copy(path = rel(new Path(dir, r._2.path)))).sortBy(_.path))
   }
 
-  /** One write task of [[writeBlocks]]: `rows` (blocks in encoder order)
-    * into the file `dir/part-<partition>-s<stage attempt>-a<attempt>ext`,
-    * returning its parts' lineage and its zone entry (named by the file
-    * name, sized by the writer's output metrics), or None
-    * for an empty task, which creates no file. A file the metrics size as
-    * 0 bytes (its status unreadable after close) fails the task. The file
-    * is deleted unless the write completes.
+  /** One file of a table write: `rows` (blocks in encoder order) into
+    * `dir/name`, returning its parts' lineage and its zone entry (named
+    * `name`, sized by the writer's output metrics), or None for no rows,
+    * which creates no file. A file the metrics size as 0 bytes (its status
+    * unreadable after close) fails the write. The file is deleted unless
+    * the write completes.
     */
   private def writeFile(factory: OutputWriterFactory, conf: Configuration, dir: String,
-                        ext: String, schema: StructType, tc: TaskContext,
-                        rows: Iterator[InternalRow]): Option[(Map[Int, PartLineage], ZoneFile)] = {
+                        name: String, rows: Iterator[InternalRow]): Option[(Map[Int, PartLineage], ZoneFile)] = {
     if (!rows.hasNext) return None
-    val name = f"part-${tc.partitionId()}%05d-s${tc.stageAttemptNumber()}-a${tc.attemptNumber()}$ext"
     val path = new Path(dir, name)
     val file = path.toString
-    val at = schema.fieldNames.zipWithIndex.toMap
+    val at = BlockSchema.fieldNames.zipWithIndex.toMap
     def str(r: InternalRow, f: String) = r.getUTF8String(at(f)).toString
-    // the task's output metrics (bytes and records written), as Spark's own writer reports them
+    // the file's output metrics (bytes and records written), as Spark's own writer reports them
     val stats = new BasicWriteTaskStatsTracker(conf, None)
     var writer: OutputWriter = null
     var done = false
     try {
-      writer = factory.newInstance(file, schema, new TaskAttemptContextImpl(conf, new TaskAttemptID))
+      writer = factory.newInstance(file, BlockSchema, new TaskAttemptContextImpl(conf, new TaskAttemptID))
       stats.newFile(file)
       var lineage = Map.empty[Int, PartLineage]
       var zone: Option[ZoneFile] = None
@@ -281,7 +330,7 @@ object ManifestIO {
       writer.close()
       stats.closeFile(file)
       // a file the tracker cannot stat (not yet visible) reports 0 bytes:
-      // fail the task rather than record a size that would misplace reads
+      // fail the write rather than record a size that would misplace reads
       val bytes = stats.getFinalStats(0L).asInstanceOf[BasicWriteTaskStats].numBytes
       if (bytes <= 0L)
         throw new IllegalStateException(s"block file $file reports no stored size after its write")
@@ -366,20 +415,24 @@ object ManifestIO {
   }
 
   /** The blocks of `files` (entries of `snap`'s zone map, chosen by
-    * [[select]]) whose [first_doc_id, last_doc_id] meets [from, to], read
-    * on the driver with no Spark job — the read of a point lookup and of a
-    * bounded range ([[RangeReader]]). Each file is read with parquet-mr
-    * under the block zone predicate `last_doc_id >= from AND first_doc_id
-    * <= to`, which skips row groups by their min/max stats (UTF-8 order,
-    * as [[DocIdOrder]]) and drops every other record. The caller bounds
-    * the selection; larger reads stay on [[blocks]]. A named file that is
-    * gone fails as in [[scanFiles]].
+    * [[select]]) whose [first_doc_id, last_doc_id] meets `range` (when
+    * given, inclusive; every block when None), read on the driver with no
+    * Spark job — the read of a point lookup, of a bounded range
+    * ([[RangeReader]]) and of a bounded compaction tail
+    * (StreamingEncode.compact). Each file is read with parquet-mr, for a
+    * range under the block zone predicate `last_doc_id >= from AND
+    * first_doc_id <= to`, which skips row groups by their min/max stats
+    * (UTF-8 order, as [[DocIdOrder]]) and drops every other record. The
+    * caller bounds the selection; larger reads stay on [[blocks]]. A named
+    * file that is gone fails as in [[scanFiles]].
     */
   def driverBlocks(spark: SparkSession, table: String, snap: Snapshot,
-                   files: Seq[ZoneFile], from: String, to: String): Seq[EncodedBlock] = {
-    val filter = FilterCompat.get(and(
-      gtEq(binaryColumn("last_doc_id"), Binary.fromString(from)),
-      ltEq(binaryColumn("first_doc_id"), Binary.fromString(to))))
+                   files: Seq[ZoneFile], range: Option[(String, String)]): Seq[EncodedBlock] = {
+    val filter = range.fold(FilterCompat.NOOP) { case (from, to) =>
+      FilterCompat.get(and(
+        gtEq(binaryColumn("last_doc_id"), Binary.fromString(from)),
+        ltEq(binaryColumn("first_doc_id"), Binary.fromString(to))))
+    }
     val conf = spark.sparkContext.hadoopConfiguration
     files.flatMap { z =>
       val out = Vector.newBuilder[EncodedBlock]

@@ -13,10 +13,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *  3. per-row post-decode filter.
   * At 100 TB this turns a range read into a handful of block reads instead
   * of a table scan. The zone map also places the read: a point lookup, and
-  * a range read whose selected files hold at most [[DriverReadBytes]]
-  * stored bytes, run no Spark job — their blocks are read and decoded on
-  * the driver ([[ManifestIO.driverBlocks]]); a larger selection is one
-  * Spark scan ([[rangeBlocks]]).
+  * a range read whose selected files hold at most
+  * [[ManifestIO.DriverBytes]] stored bytes, run no Spark job — their
+  * blocks are read and decoded on the driver
+  * ([[ManifestIO.driverBlocks]]); a larger selection is one Spark scan
+  * ([[rangeBlocks]]).
   */
 object RangeReader {
 
@@ -28,18 +29,6 @@ object RangeReader {
       plan.partOffset(b) until (plan.partOffset(b) + plan.saltOf(b))
     }
   }
-
-  /** The most stored bytes of selected block files that a range read
-    * reads and decodes on the driver (4 MiB). Measured on `local[4]`
-    * over a 17 MB, 40,000-doc table, collecting each range: a 5.4 MB
-    * selection ran faster on the driver than as a Spark scan (125-215 ms
-    * against 156-244 ms) and a 9.0 MB one no faster (270-321 ms against
-    * 264-281 ms); past that the scan's parallel decode wins. A driver read
-    * costs less CPU at every size, but it holds its decoded rows in the
-    * driver heap (twice while it builds the local Dataset); the bound
-    * caps that too.
-    */
-  val DriverReadBytes: Long = 4L << 20
 
   private def latestSnapshot(spark: SparkSession, table: String): Snapshot =
     ManifestIO.latest(spark, table)
@@ -71,7 +60,7 @@ object RangeReader {
     */
   private def onDriver(spark: SparkSession, table: String, snap: Snapshot,
                        files: Seq[ZoneFile], fromDoc: String, toDoc: String): Dataset[TokenRow] = {
-    val blocks = ManifestIO.driverBlocks(spark, table, snap, files, fromDoc, toDoc)
+    val blocks = ManifestIO.driverBlocks(spark, table, snap, files, Some((fromDoc, toDoc)))
     spark.createDataset(blocks.flatMap(b => BlockEncoder.decodeBlockRange(b, fromDoc, toDoc)))(
       RowEncoders.tokenRow)
   }
@@ -107,7 +96,7 @@ object RangeReader {
     * O(result), not O(blockTokens).
     *
     * The zone map places the read. When the stored bytes of the files it
-    * selects ([[ManifestIO.select]]) sum to at most [[DriverReadBytes]],
+    * selects ([[ManifestIO.select]]) sum to at most [[ManifestIO.DriverBytes]],
     * the read runs on the driver as a lookup does, with no Spark job, and
     * its errors (a deleted file, a digest mismatch) surface here. A larger
     * selection is one Spark scan ([[rangeBlocks]]) whose tasks decode in
@@ -118,10 +107,10 @@ object RangeReader {
       table: String,
       fromDoc: String,
       toDoc: String
-  ): Dataset[TokenRow] = readRange(spark, table, fromDoc, toDoc, DriverReadBytes)
+  ): Dataset[TokenRow] = readRange(spark, table, fromDoc, toDoc, ManifestIO.DriverBytes)
 
   /** [[readRange]] with the driver placement bounded by `driverBytes`
-    * stored bytes instead of [[DriverReadBytes]].
+    * stored bytes instead of [[ManifestIO.DriverBytes]].
     */
   private[graft] def readRange(spark: SparkSession, table: String, fromDoc: String,
                                toDoc: String, driverBytes: Long): Dataset[TokenRow] = {

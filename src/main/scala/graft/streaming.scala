@@ -2,6 +2,10 @@ package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming ingestion into the encoded table: a file stream of
@@ -26,22 +30,36 @@ object StreamingEncode {
     * so stream and batch writes cluster identically, packed into at most
     * `defaultParallelism` write tasks ([[TokenCompressor.writeTasks]]; same
     * blocks, far fewer tasks/files).
+    *
+    * Two placements write the same files. A batch of at most
+    * [[ManifestIO.DriverBytes]] raw bytes (4 per token plus 4 per row) is
+    * collected in one job with no exchange, then encoded and written on the
+    * driver ([[TokenCompressor.encodeLocal]], [[ManifestIO.writeLocal]]); a
+    * larger one is encoded by Spark in one routing exchange
+    * ([[TokenCompressor.encodeWithPlan]], [[ManifestIO.writeBlocks]]), its
+    * input read again.
     */
   def appendBatch(
       batch: Dataset[TokenRow],
       table: String,
       opts: EncodeOptions,
       batchId: Long
-  ): Unit = {
+  ): Unit = appendBatch(batch, table, opts, batchId, ManifestIO.DriverBytes)
+
+  /** [[appendBatch]] with the driver placement bounded by `driverBytes`
+    * raw bytes instead of [[ManifestIO.DriverBytes]] (0: the Spark
+    * placement for any non-empty batch).
+    */
+  private[graft] def appendBatch(batch: Dataset[TokenRow], table: String, opts: EncodeOptions,
+                                 batchId: Long, driverBytes: Long): Unit = {
     val spark = batch.sparkSession
     val base = ManifestIO.latestPlanned(spark, table)(
       Snapshot.initial(Planner.plan(batch, opts)))
     if (base.streamBatchId.exists(_ >= batchId)) return // replayed batch
-    val blocks = TokenCompressor(base.replayZdict(opts)).encodeWithPlan(batch, base.plan,
-      None, TokenCompressor.writeTasks(spark, base.plan.numParts))
     // batch-scoped directory: deterministic overwrite on retry
-    val (written, files) = ManifestIO.writeBlocks(blocks, table,
-      new Path(table, s"${ManifestIO.TailRoot}/batch=$batchId"))
+    val (written, files) = writeTail(spark, table,
+      new Path(table, s"${ManifestIO.TailRoot}/batch=$batchId"), base, opts,
+      collectBounded(batch, driverBytes))(batch)
     // stream lineage folds every batch into part -1 (an empty micro-batch,
     // e.g. a replay after checkpoint recovery, adds zeros)
     val added = written.values.foldLeft(
@@ -49,6 +67,54 @@ object StreamingEncode {
     ManifestIO.write(spark, table, base.next.copy(
       lineage = base.lineage.updated(-1, base.lineage.get(-1).fold(added)(_ merge added)),
       streamBatchId = Some(batchId), files = base.files ++ files))
+  }
+
+  /** Encode a tail commit's rows with `base`'s plan into `dir`: on the
+    * driver when `local` holds them, else `rows` through Spark — the two
+    * placements of [[appendBatch]] and [[compact]], which write the same
+    * blocks, file names, zone spans and lineage (timings aside).
+    */
+  private def writeTail(spark: SparkSession, table: String, dir: Path, base: Snapshot,
+                        opts: EncodeOptions, local: Option[Seq[TokenRow]])(
+      rows: => Dataset[TokenRow]): (Map[Int, PartLineage], Seq[ZoneFile]) = {
+    val comp = TokenCompressor(base.replayZdict(opts))
+    val tasks = TokenCompressor.writeTasks(spark, base.plan.numParts)
+    local match {
+      case Some(rs) => ManifestIO.writeLocal(spark, table, dir, comp.encodeLocal(rs, base.plan, tasks))
+      case None => ManifestIO.writeBlocks(comp.encodeWithPlan(rows, base.plan, None, tasks), table, dir)
+    }
+  }
+
+  /** The rows of `batch` when it holds at most `bytes` raw bytes, else
+    * None — one job, no exchange, as one SQL execution named `appendBatch`
+    * over the batch projected to the [[TokenRow]] encoder's columns. Each
+    * task returns copies of its rows while their raw bytes (4 per token
+    * plus 4) stay within its even share of `bytes`, and stops reading at
+    * the first row past it.
+    */
+  private def collectBounded(batch: Dataset[TokenRow], bytes: Long): Option[Seq[TokenRow]] = {
+    val spark = batch.sparkSession
+    val rows = batch.select(tokenSchema.fieldNames.toIndexedSeq.map(col): _*)
+    val rdd = rows.queryExecution.toRdd
+    val share = bytes / math.max(1, rdd.getNumPartitions)
+    val tokens = tokenSchema.fieldIndex("tokens")
+    val got = SQLExecution.withNewExecutionId(rows.queryExecution, Some("appendBatch")) {
+      spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+        val out = Array.newBuilder[InternalRow]
+        var raw = 0L
+        while (raw <= share && it.hasNext) {
+          val r = it.next()
+          raw += 4L * r.getArray(tokens).numElements() + 4L
+          out += r.copy()
+        }
+        if (raw <= share) Some(out.result()) else None
+      })
+    }
+    if (got.exists(_.isEmpty)) None
+    else {
+      val toRow = encoderFor(RowEncoders.tokenRow).resolveAndBind().createDeserializer()
+      Some(got.toSeq.flatMap(_.get.map(toRow)))
+    }
   }
 
   /** Start the ingestion stream over a directory of token parquet files. */
@@ -86,10 +152,10 @@ object StreamingEncode {
     * paid thousands of times over). Compaction decodes the batches at or
     * below the current streamBatchId and re-encodes them with the table's
     * PERSISTENT plan (same routing law as every batch write → identical
-    * clustering, one exchange over just the compacted span into at most
-    * one task per core ([[TokenCompressor.writeTasks]]), doc_id-sorted
-    * full-size blocks with table reuse re-amortized), writes the result to
-    * an immutable `compacted/run=V` directory, then commits a snapshot
+    * clustering, packed into at most one task per core
+    * ([[TokenCompressor.writeTasks]]), doc_id-sorted full-size blocks with
+    * table reuse re-amortized), writes the result to an immutable
+    * `compacted/run=V` directory, then commits a snapshot
     * whose `compactedBatchId` watermark makes the run visible and the
     * source batches invisible in the same atomic rename. Batch dirs are
     * deleted only after that commit; a crash anywhere leaves either an
@@ -104,6 +170,14 @@ object StreamingEncode {
     * batch data; the run COUNT is kept logarithmic in table size by
     * [[mergeRuns]]'s size-tiered policy.
     *
+    * Two placements write the same files, as [[appendBatch]]'s do. A tail
+    * whose zone entries' stored bytes, and then whose blocks' `raw_bytes`,
+    * are at most [[ManifestIO.DriverBytes]] is read
+    * ([[ManifestIO.driverBlocks]]), digest-verified, decoded, re-encoded
+    * and written on the driver with no Spark job (stored bytes alone can
+    * under-state the decoded size many times over); a larger one is one
+    * Spark scan and one routing exchange.
+    *
     * @return the committed snapshot, or the current one when there is
     *         nothing to compact
     */
@@ -111,7 +185,14 @@ object StreamingEncode {
       spark: SparkSession,
       table: String,
       opts: EncodeOptions = EncodeOptions.default
-  ): Snapshot = {
+  ): Snapshot = compact(spark, table, opts, ManifestIO.DriverBytes)
+
+  /** [[compact]] with the driver placement bounded by `driverBytes` instead
+    * of [[ManifestIO.DriverBytes]] (0: the Spark placement for any
+    * non-empty tail).
+    */
+  private[graft] def compact(spark: SparkSession, table: String, opts: EncodeOptions,
+                             driverBytes: Long): Snapshot = {
     val base = ManifestIO.latest(spark, table)
       .getOrElse(throw new IllegalStateException(s"no snapshot in $table"))
     val maxBatch = base.streamBatchId.getOrElse(-1L)
@@ -129,11 +210,13 @@ object StreamingEncode {
     // a tail of empty batches writes no run: every run dir the zone map
     // does not name is swept as a crash leftover
     val (pending, kept) = base.files.partition(_.isTail)
-    val comp = TokenCompressor(base.replayZdict(opts))
-    val files = if (pending.isEmpty) Nil else ManifestIO.writeBlocks(
-      comp.encodeWithPlan(comp.decode(ManifestIO.scanFiles(spark, table, base, pending)),
-        base.plan, None, TokenCompressor.writeTasks(spark, base.plan.numParts)),
-      table, ManifestIO.compactedDir(table, base.version + 1))._2
+    val local = Some(pending).filter(_.map(_.bytes).sum <= driverBytes)
+      .map(ManifestIO.driverBlocks(spark, table, base, _, None))
+      .filter(_.map(_.raw_bytes).sum <= driverBytes)
+      .map(_.flatMap(BlockEncoder.decodeBlock(_, verify = true)))
+    val files = if (pending.isEmpty) Nil else writeTail(spark, table,
+      ManifestIO.compactedDir(table, base.version + 1), base, opts, local)(
+      TokenCompressor().decode(ManifestIO.scanFiles(spark, table, base, pending)))._2
 
     val next = base.next.copy(compactedBatchId = Some(maxBatch), files = kept ++ files)
     ManifestIO.write(spark, table, next)

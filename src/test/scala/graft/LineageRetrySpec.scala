@@ -88,6 +88,30 @@ class LineageRetrySpec extends AnyFunSuite {
     assert(stream.lineage(-1) == LineageOracle.ofStream(
       ResumableEncodeJob.readBlocks(spark, s"$dir/stream").toDF()))
   }
+
+  test("a driver write whose file fails on close leaves no file, and its retry counts lineage once") {
+    val root = Files.createTempDirectory("graft_driver_retry").toString
+    System.setProperty(FailOnceFileSystem.MarkerDirProperty, s"$root/marks")
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${FailOnceFileSystem.Scheme}.impl", classOf[FailOnceFileSystem].getName)
+    val table = s"${FailOnceFileSystem.Scheme}:$root/${FailOnceFileSystem.OnDriver}/t"
+    val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 13)
+    val input = Fixtures.tokenTable(spark, LineageRetryChild.Docs)
+    val e = intercept[Exception](StreamingEncode.appendBatch(input, table, opts, 0L))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("injected close failure")),
+      causes.map(_.toString).mkString("\n"))
+    val local = s"$root/${FailOnceFileSystem.OnDriver}/t"
+    assert(new java.io.File(s"$local/${ManifestIO.TailRoot}/batch=0").list().isEmpty,
+      "the failed driver write left a file")
+    assert(ManifestIO.latest(spark, table).forall(_.streamBatchId.isEmpty), "the failed write committed")
+    // the same batch id again: its files are written once, its lineage counted once
+    StreamingEncode.appendBatch(input, table, opts, 0L)
+    TableInvariants.assertSound(spark, table)
+    val snap = ManifestIO.latest(spark, table).get
+    assert(snap.streamBatchId.contains(0L) && snap.lineage(-1).n_docs == LineageRetryChild.Docs)
+    assert(snap.lineage(-1) == LineageOracle.ofStream(ResumableEncodeJob.readBlocks(spark, table).toDF()))
+  }
 }
 
 /** Child-JVM body of [[LineageRetrySpec]]: one batch `run` and one stream
@@ -115,7 +139,9 @@ object LineageRetryChild {
       val opts = EncodeOptions(numParts = 4, blockTokens = 1 << 13)
       val input = Fixtures.tokenTable(spark, Docs)
       ResumableEncodeJob.run(input, s"${FailOnceFileSystem.Scheme}:$dir/batch", opts)
-      StreamingEncode.appendBatch(input, s"${FailOnceFileSystem.Scheme}:$dir/stream", opts, 0L)
+      // bound 0: the Spark placement, whose write task the failure hits
+      StreamingEncode.appendBatch(input, s"${FailOnceFileSystem.Scheme}:$dir/stream", opts, 0L,
+        driverBytes = 0L)
     } finally spark.stop()
   }
 }
@@ -123,6 +149,9 @@ object LineageRetryChild {
 /** The local file system under the `failonce:` scheme, failing attempt 0
   * of partition 0 of every write job: the stream of the `.parquet` file
   * that attempt creates throws once on close, after its bytes are on disk.
+  * On the driver, under a dir named [[FailOnceFileSystem.OnDriver]], the
+  * first file of a write (`part-00000-…`) fails the same way, once per
+  * path.
   * A delete from inside a task is recorded; under a `/stream/` path it is
   * refused, as if the attempt's executor were lost before cleaning up.
   * Every failure and task-side delete leaves a marker file holding the
@@ -140,8 +169,11 @@ class FailOnceFileSystem extends RawLocalFileSystem {
 
   private def failing(f: Path, out: OutputStream): OutputStream = {
     val tc = TaskContext.get()
-    if (tc == null || tc.partitionId() != 0 || tc.attemptNumber() != 0 ||
-        !f.getName.endsWith(".parquet")) out
+    val fails =
+      if (tc != null) tc.partitionId() == 0 && tc.attemptNumber() == 0
+      else f.toUri.getPath.contains(s"/${FailOnceFileSystem.OnDriver}/") &&
+        f.getName.startsWith("part-00000-") && FailOnceFileSystem.failedOnDriver.add(f.toUri.getPath)
+    if (!fails || !f.getName.endsWith(".parquet")) out
     else new FilterOutputStream(out) {
       private var thrown = false
       override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
@@ -171,4 +203,7 @@ class FailOnceFileSystem extends RawLocalFileSystem {
 object FailOnceFileSystem {
   val Scheme = "failonce"
   val MarkerDirProperty = "graft.test.failMarkerDir"
+  val OnDriver = "failonce-on-driver"
+  /** The driver-side paths that have failed once. */
+  val failedOnDriver: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }

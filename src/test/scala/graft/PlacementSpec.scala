@@ -11,8 +11,9 @@ import scala.jdk.CollectionConverters._
 /** Blocks do not depend on task placement. Part-local block ids and the
   * per-part table cache make a packed `run`, a `run` resumed in batches and
   * the unpacked [[TokenCompressor.encode]] write the same blocks, ids
-  * included, while `run` and `compact` write in one job of at most one task
-  * per core.
+  * included, while `run` and a Spark `compact` write in one job of at most
+  * one task per core. A tail commit's two placements, on the driver and in
+  * Spark, write the same blocks into the same files.
   */
 class PlacementSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -106,16 +107,117 @@ class PlacementSpec extends AnyFunSuite {
     assert(last.plan.boundaries.toSeq == plan.boundaries.toSeq)
     assertSame("resumed run", blocksOf(resumed))
 
-    // compaction re-encodes the one appended batch into the same blocks
-    val stream = s"$root/stream"
-    ManifestIO.write(spark, stream, Snapshot.initial(plan))
-    StreamingEncode.appendBatch(input, stream, opts, 0L)
-    TableInvariants.assertSound(spark, stream)
-    val (compacted, cJobs, cWrites) = watchWrites(StreamingEncode.compact(spark, stream, opts))
+    // compaction re-encodes the one appended batch into the same blocks,
+    // through Spark (bound 0) and on the driver
+    def appended(name: String): String = {
+      val stream = s"$root/$name"
+      ManifestIO.write(spark, stream, Snapshot.initial(plan))
+      StreamingEncode.appendBatch(input, stream, opts, 0L)
+      TableInvariants.assertSound(spark, stream)
+      stream
+    }
+    val stream = appended("stream")
+    val (compacted, cJobs, cWrites) =
+      watchWrites(StreamingEncode.compact(spark, stream, opts, driverBytes = 0L))
     TableInvariants.assertSound(spark, stream)
     assert(compacted.compactedRuns.length == 1)
     assertPacked("compact", cJobs, cWrites, compacted.files.filterNot(_.isTail))
     assertSame("compaction", blocksOf(stream))
+
+    val local = appended("stream_local")
+    val (localCompacted, lJobs, _) = watchWrites(StreamingEncode.compact(spark, local, opts))
+    TableInvariants.assertSound(spark, local)
+    assert(lJobs == 0, s"the driver compaction ran $lJobs jobs")
+    val spans = localCompacted.files.map(z => (z.minPart, z.maxPart)).sorted
+    assert(spans.length == math.min(plan.numParts, cores), s"driver compaction wrote $spans")
+    assert(spans.zip(spans.drop(1)).forall { case (a, b) => a._2 < b._1 },
+      s"driver compaction: overlapping part spans $spans")
+    assertSame("driver compaction", blocksOf(local))
+  }
+
+  test("tail commits: the driver and the Spark placement write the same blocks, files, spans and lineage") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = java.nio.file.Files.createTempDirectory("graft_tail_placement").toString
+    // as the packed tests: 12 parts on local[4], several blocks per part
+    val opts = EncodeOptions(numParts = 12, blockTokens = 1 << 13, zdictBlocks = 2)
+    val input = Fixtures.tokenTable(spark, 600L)
+    val plan = Planner.plan(input, opts)
+    object Plans extends AdaptiveSparkPlanHelper
+    // `body`'s result, its job count and the names of its SQL executions,
+    // each with whether its final plan holds an exchange
+    def watch[T](body: => T): (T, Int, Seq[(String, Boolean)]) = {
+      val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+          execs.add(f -> Plans.collect(qe.executedPlan) { case e: Exchange => e }.nonEmpty); ()
+        }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.register(l)
+      val (out, jobs, _) =
+        try watchWrites(body)
+        finally {
+          ListenerBusDrain(spark.sparkContext)
+          spark.listenerManager.unregister(l)
+        }
+      (out, jobs, execs.asScala.toSeq)
+    }
+    def table(name: String): String = {
+      val t = s"$root/$name"
+      ManifestIO.write(spark, t, Snapshot.initial(plan))
+      t
+    }
+    // everything a commit writes but its timings
+    def written(t: String) = {
+      val snap = ManifestIO.latest(spark, t).get
+      (fingerprint(ResumableEncodeJob.readBlocks(spark, t).collect()),
+        snap.files.map(z => (z.path, z.minPart, z.maxPart, z.first, z.last)),
+        snap.lineage.map { case (p, l) => p -> l.copy(wall_micros = 0L) })
+    }
+    def assertSameWrites(what: String, a: String, b: String): Unit = {
+      val (wa, wb) = (written(a), written(b))
+      assert(wa._1 == wb._1, s"$what: blocks differ")
+      assert(wa._2 == wb._2, s"$what: files or zone spans differ: ${wa._2} vs ${wb._2}")
+      assert(wa._3 == wb._3, s"$what: lineage differs")
+    }
+
+    val (driver, spark0) = (table("driver"), table("spark"))
+    val (_, aJobs, aExecs) = watch(StreamingEncode.appendBatch(input, driver, opts, 0L))
+    TableInvariants.assertSound(spark, driver)
+    assert(aJobs == 1, s"the driver append ran $aJobs jobs")
+    assert(aExecs == Seq("appendBatch" -> false), s"the driver append's executions: $aExecs")
+    val (_, _, sExecs) = watch(StreamingEncode.appendBatch(input, spark0, opts, 0L, driverBytes = 0L))
+    TableInvariants.assertSound(spark, spark0)
+    assert(sExecs.map(_._1).contains("writeBlocks"), s"bound 0 append's executions: $sExecs")
+    assertSameWrites("append", driver, spark0)
+    assert(ManifestIO.latest(spark, driver).get.files.length == math.min(plan.numParts,
+      spark.sparkContext.defaultParallelism))
+
+    val (_, cJobs, _) = watch(StreamingEncode.compact(spark, driver, opts))
+    TableInvariants.assertSound(spark, driver)
+    assert(cJobs == 0, s"the driver compaction ran $cJobs jobs")
+    StreamingEncode.compact(spark, spark0, opts, driverBytes = 0L)
+    TableInvariants.assertSound(spark, spark0)
+    assertSameWrites("compaction", driver, spark0)
+
+    // an input over the bound, and a tail whose blocks' raw bytes are over
+    // it while their stored bytes are not: both commit through Spark
+    val over = table("over")
+    val raw = input.collect().map(r => 4L * r.tokens.length + 4L).sum
+    val (_, _, oExecs) = watch(StreamingEncode.appendBatch(input, over, opts, 0L, raw - 1))
+    TableInvariants.assertSound(spark, over)
+    assert(oExecs.map(_._1) == Seq("appendBatch", "writeBlocks"), s"append over the bound: $oExecs")
+    val stored = ManifestIO.latest(spark, over).get.files.map(_.bytes).sum
+    assert(stored < raw)
+    val (_, tJobs, tExecs) = watch(StreamingEncode.compact(spark, over, opts, stored))
+    TableInvariants.assertSound(spark, over)
+    assert(tJobs > 0 && tExecs.map(_._1).contains("writeBlocks"),
+      s"compaction of a tail over the bound: $tJobs jobs, $tExecs")
+    assertSameWrites("over the bound", driver, over)
   }
 
   test("every write names its files the same in each run over one input") {
@@ -146,30 +248,40 @@ class PlacementSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_nostat").toString
     spark.sparkContext.hadoopConfiguration
       .set(s"fs.${NoStatFileSystem.Scheme}.impl", classOf[NoStatFileSystem].getName)
+    def assertFailsClosed(table: String)(write: => Any): Unit = {
+      val e = intercept[Exception](write)
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("reports no stored size")),
+        causes.map(_.toString).mkString("\n"))
+      // only the plan's snapshot (v0) is committed: no zone map names a file
+      assert(ManifestIO.latest(spark, table).forall(_.files.isEmpty), "a snapshot committed the write")
+    }
+    val input = Fixtures.tokenTable(spark, 200L)
     val table = s"${NoStatFileSystem.Scheme}:$root/t"
-    val e = intercept[Exception](
-      ResumableEncodeJob.run(Fixtures.tokenTable(spark, 200L), table, EncodeOptions(numParts = 4)))
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(c => String.valueOf(c.getMessage).contains("reports no stored size")),
-      causes.map(_.toString).mkString("\n"))
-    // only the plan's snapshot (v0) is committed: no zone map names a file
-    assert(ManifestIO.latest(spark, table).forall(_.files.isEmpty), "a snapshot committed the write")
+    assertFailsClosed(table)(ResumableEncodeJob.run(input, table, EncodeOptions(numParts = 4)))
+    // the driver placement's writer (a small append), on the driver
+    val local = s"${NoStatFileSystem.Scheme}:$root/${NoStatFileSystem.OnDriver}/t"
+    assertFailsClosed(local)(StreamingEncode.appendBatch(input, local, EncodeOptions(numParts = 4), 0L))
   }
 }
 
 /** The local file system under the `nostat:` scheme, where a task cannot
   * read the status of a `.parquet` file (as on a store that does not list
-  * a new object yet): the write's output metrics then size it as 0 bytes.
+  * a new object yet), nor the driver one under a dir named
+  * [[NoStatFileSystem.OnDriver]]: the write's output metrics then size it
+  * as 0 bytes.
   */
 class NoStatFileSystem extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create(s"${NoStatFileSystem.Scheme}:///")
   override def getScheme: String = NoStatFileSystem.Scheme
   override def getFileStatus(f: Path): FileStatus =
-    if (TaskContext.get() != null && f.getName.endsWith(".parquet"))
+    if (f.getName.endsWith(".parquet") && (TaskContext.get() != null ||
+        f.toUri.getPath.contains(s"/${NoStatFileSystem.OnDriver}/")))
       throw new java.io.FileNotFoundException(s"not visible yet: $f")
     else super.getFileStatus(f)
 }
 
 object NoStatFileSystem {
   val Scheme = "nostat"
+  val OnDriver = "nostat-on-driver"
 }

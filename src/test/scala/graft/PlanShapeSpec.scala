@@ -202,12 +202,14 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(got == sorts, s"$what: the sorts of each write")
     }
     assertSorts("run", encode)(ResumableEncodeJob.run(rows(0, 400), table, opts))
-    assertSorts("appendBatch", encode)(StreamingEncode.appendBatch(rows(400, 500), table, opts, 0L))
-    assertSorts("compact", encode)(StreamingEncode.compact(spark, table, opts))
-    StreamingEncode.appendBatch(rows(500, 600), table, opts, 1L)
+    // the tail commits through their Spark placement (bound 0)
+    assertSorts("appendBatch", encode)(
+      StreamingEncode.appendBatch(rows(400, 500), table, opts, 0L, driverBytes = 0L))
+    assertSorts("compact", encode)(StreamingEncode.compact(spark, table, opts, driverBytes = 0L))
+    StreamingEncode.appendBatch(rows(500, 600), table, opts, 1L, driverBytes = 0L)
     // the second run is as large as the first: compaction, then the merge
     assertSorts("compact + mergeRuns", encode, Seq("part_id, first_doc_id")) {
-      assert(StreamingEncode.compact(spark, table, opts).compactedRuns.length == 1)
+      assert(StreamingEncode.compact(spark, table, opts, driverBytes = 0L).compactedRuns.length == 1)
     }
     assertSorts("migrate", encode)(ResumableEncodeJob.migrate(spark, table, dst,
       EncodeOptions(codecPolicy = "plain")))
