@@ -12,7 +12,8 @@ import org.apache.spark.sql.{SparkSession, functions => F}
   * Two modes:
   *
   *  - ONE-SHOT (`args: fixturePath numWorkers maxReps [nParts]`):
-  *    start the cluster, warm, run convergence reps, print one
+  *    start the cluster, warm, run convergence reps within the rep
+  *    budget the parent passes as `-Dgraft.repBudgetSec`, print one
   *    GRAFT_CLUSTER_RESULT marker line, exit. Used by the parent as the
   *    fallback path.
   *
@@ -56,10 +57,10 @@ object BenchCluster {
       // vs 6.88, 5.33 vs 5.74 s) — its partition coalescing merges the 64
       // ~25 MB routed shuffle partitions into fewer right-sized tasks,
       // which outweighs the re-plan pause; leg2 was neutral (20.2 vs
-      // 19.3 s under heavier load). Knob kept for future A/Bs.
-      .config("spark.sql.adaptive.enabled", sys.props.getOrElse("graft.aqe", "true"))
+      // 19.3 s under heavier load).
+      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
-    s.sparkContext.setLogLevel(sys.props.getOrElse("graft.loglevel", "ERROR"))
+    s.sparkContext.setLogLevel("ERROR")
     s
   }
 

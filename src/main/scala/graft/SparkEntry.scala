@@ -19,22 +19,27 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
+  /** Base dir for the bench's shuffle dir (Bench.shuffleDir) and the
+    * oracle queries' scratch tables: `/dev/shm` when the box has it, else
+    * `java.io.tmpdir`. Where the root disk throttles under sustained
+    * writeback, writes through /tmp measure the disk's burst-credit
+    * budget, not the engine (a production table's storage tier is
+    * provisioned; this data is per-process and throwaway).
+    */
+  private[graft] def tmpfsOrTmpdir: java.io.File = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory) shm else new java.io.File(sys.props("java.io.tmpdir"))
+  }
+
   /** Scratch roots for the table-shaped oracle queries (stream ingest /
-    * compaction, range reads, the incremental-dedup index): tmpfs when the
-    * box has one, for the same reason the bench pins its shuffle dir there
-    * (Bench.shuffleDir) — the sandbox root disk throttles under sustained
-    * writeback, so scratch-table writes through /tmp measure the disk's
-    * burst-credit budget, not the engine (a production table's storage
-    * tier is provisioned; this scratch data is per-query and tiny). One
-    * per-process root, deleted on JVM exit; every query invocation still
-    * creates a FRESH directory under it and recomputes from its inputs.
+    * compaction, range reads, the incremental-dedup index), under
+    * [[tmpfsOrTmpdir]]. One per-process root, deleted on JVM exit; every
+    * query invocation still creates a FRESH directory under it and
+    * recomputes from its inputs.
     */
   private lazy val scratchRoot: java.nio.file.Path = {
-    val base =
-      if (new java.io.File("/dev/shm").isDirectory)
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    val root = java.nio.file.Files.createTempDirectory(base, "graft_q_scratch_")
+    val root = java.nio.file.Files.createTempDirectory(
+      tmpfsOrTmpdir.toPath, "graft_q_scratch_")
     def deleteRec(f: java.io.File): Unit = {
       val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRec)
       f.delete(): Unit

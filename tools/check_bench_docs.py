@@ -111,10 +111,28 @@ for doc in docs:
         if name not in mains:
             bad.append(f"{doc}: `runMain graft.{name}` names no object with a main "
                        "under src/main/scala")
+# knob inventory: every env var and system property the main sources read
+# (JVM standard `java.*` properties aside) must be documented in BENCH.md
+# or the verify skill, so a switch nobody can find in the docs cannot hide
+# in the code.
+knob_docs = open(root / "BENCH.md").read() + open(
+    root / ".claude/skills/verify/SKILL.md").read()
+knob_re = re.compile(r'(?:sys\.(?:env|props)(?:\.(?:get|getOrElse|contains))?'
+                     r'|System\.(?:getenv|getProperty))\(\s*"([^"]+)"')
+knobs = set()
+for f in sorted((root / "src/main").rglob("*.scala")):
+    for name in knob_re.findall(f.read_text()):
+        if name.startswith("java."):
+            continue
+        knobs.add(name)
+        if name not in knob_docs:
+            bad.append(f"{f.relative_to(root)}: reads `{name}`, which neither "
+                       "BENCH.md nor the verify skill mentions")
 if bad:
-    print("STALE BENCH.md/BASELINE.md/entry points:\n  " + "\n  ".join(bad))
+    print("STALE BENCH.md/BASELINE.md/entry points/knobs:\n  " + "\n  ".join(bad))
     sys.exit(1)
 print(f"BENCH.md matches BENCH_LOCAL.json ({len(checks)} fields, "
       f"{oracle_n} queries); BASELINE.md citations verified "
       f"({len(baseline_checks)} fields); {n_runmain} runMain usages name "
-      f"existing mains")
+      f"existing mains; {len(knobs)} env/property names documented: "
+      f"{', '.join(sorted(knobs))}")
